@@ -45,9 +45,12 @@ URL = re.compile(r"https?://([A-Za-z0-9.-]+)")
 BUCKET = re.compile(r"\b(s3|s3a|gs|abfss|wasbs)://[^\s\"']+")
 API_KEY = re.compile(r"(?i)(api[_-]?key|secret|token)\W{0,3}[A-Za-z0-9+/_-]{24,}")
 CHAT = re.compile(r"(?i)(slack\.com|\bgo/[a-z][a-z0-9-]{2,})")
-ENV = re.compile(r"(?:sys\.env|getenv)\([\"']([A-Z0-9_]+)[\"']\)")
+# sys.env("X"), sys.env.getOrElse("X", ...), .get/.contains("X"), getenv("X")
+ENV = re.compile(
+    r"(?:sys\.env(?:\.(?:getOrElse|get|contains))?|getenv)\(\s*[\"']([A-Z0-9_]+)[\"']")
 PUBLIC_ENV = {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_REPS",
-              "SPARK_GRAFT_SCALING", "SPARK_DRIVER_MEM"}
+              "SPARK_GRAFT_SCALING", "SPARK_GRAFT_QUIET_WAIT_SEC",
+              "SPARK_DRIVER_MEM"}
 
 
 def scan(path, text):

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Benchmark main: JSON lines with per-query wall seconds — a full
   * detail line (also persisted to target/bench_last.json), then a
@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   * noise at two thirds the wall) and reports the per-query MINIMUM —
   * this host shows 3-4x phantom-load timing noise, and the minimum is
   * the run least polluted by contention; all runs are recorded under
-  * "runs" so the spread itself is auditable.
+  * "runs" so the spread itself is auditable, and each run's
+  * build_s/exec_s/build_jobs split under "phases".
   *
   * The artifact is written INCREMENTALLY (r16 verdict #1): every
   * completed materialization appends one line to
@@ -43,6 +44,16 @@ import org.apache.spark.sql.SparkSession
   * entries worth a manual quiet-host rerun.
   */
 object Bench {
+  private val BuildTagKey = "graft.bench.build"
+
+  /** One materialization: wall `sec` (-1.0 when the query failed) =
+    * build + exec, and the number of jobs the build started. */
+  private final case class Run(sec: Double, buildS: Double, execS: Double,
+                               buildJobs: Int) {
+    def phaseFields: String =
+      s""""build_s":$buildS,"exec_s":$execS,"build_jobs":$buildJobs"""
+  }
+
   def main(args: Array[String]): Unit = {
     // pre-run 1-minute load average, captured BEFORE the bench loads
     // the host itself — dev/update_baseline.py's quiet-host gate reads
@@ -90,46 +101,48 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL surface incl. might_contain
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Static per-JVM codegen class cache (default 100 entries): this
-      // suite's 241 plans hold far more distinct codegen units than
-      // that, so every rep recompiles via Janino INSIDE tasks (charged
-      // to executorRunTime — ProfilePhases measured 264 compiles per
-      // WARM pq_residual_trained_recall rep). Scale-independent: on a
-      // cluster the same cache lives in every executor JVM.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // AQE parallelism-first coalescing floors its target at
-      // minPartitionSize (1 MiB default): a compute-dense stage of
-      // NARROW rows (16-byte candidate pairs probing broadcast hash
-      // maps of KB-sized shingle/vector arrays) collapses to 1-2 tasks
-      // because the bytes-proportional-to-work assumption breaks. At
-      // cluster totals targetSize = min(advisory, total/parallelism)
-      // dominates and the floor never binds, so 64 KiB is scale-neutral
-      // and only restores parallelism where totals are tiny.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "65536"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Sessions.local(cpus.toInt, "graft-bench")
 
-    def materialize(name: String, dir: String = sfDir): Double = {
+    // Phase split of every materialization: build is the
+    // SparkEntry.queries(name) call, where iterative operators run their
+    // checkpoint jobs eagerly; exec is the noop write (Catalyst planning
+    // lands in exec — forcing executedPlan on its own would plan twice
+    // and move the walls). Build jobs carry a per-run local property
+    // that one listener counts; the bus is drained after the run,
+    // outside the timed region.
+    val sc = spark.sparkContext
+    @volatile var buildTag = ""
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(BuildTagKey) == buildTag)
+          buildJobs.incrementAndGet()
+    })
+    var nRuns = 0
+
+    def materialize(name: String, dir: String = sfDir): Run = {
+      nRuns += 1
+      buildTag = s"$name#$nRuns"
       val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+      val walls = try {
+        sc.setLocalProperty(BuildTagKey, buildTag)
+        val df = try SparkEntry.queries(name)(spark, dir)
+          finally sc.setLocalProperty(BuildTagKey, null)
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        Some((t1 - t0, System.nanoTime() - t1))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
+          None
       } finally spark.catalog.clearCache() // multi-pass ops persist intermediates
+      org.apache.spark.GraftBusDrain.drain(spark)
+      val jobs = buildJobs.getAndSet(0)
+      walls match {
+        case Some((build, exec)) =>
+          Run((build + exec) / 1e9, build / 1e9, exec / 1e9, jobs)
+        case None => Run(-1.0, -1.0, -1.0, jobs)
+      }
     }
 
     // Incremental artifact (r16 verdict #1 — the driver killed the
@@ -150,10 +163,11 @@ object Bench {
     val acc = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     def suiteWall: Double =
       ((System.nanoTime() - suiteT0) / 1e7).round / 100.0
-    def timed(stage: String, name: String, dir: String = sfDir): Double = {
-      val v = materialize(name, dir)
+    def timed(stage: String, name: String, dir: String = sfDir): Run = {
+      val run = materialize(name, dir)
+      val v = run.sec
       java.nio.file.Files.write(progressPath,
-        (s"""{"stage":"$stage","query":"$name","sec":$v}""" + "\n")
+        (s"""{"stage":"$stage","query":"$name","sec":$v,${run.phaseFields}}""" + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
@@ -167,7 +181,7 @@ object Bench {
           .collect { case ok if ok.nonEmpty => ok.min }.sum
         writeLast(s"""{"metric":"total","partial":true,"stage":"$stage","value":$tot,"unit":"sec","queries":$qs,"n_done":${acc.size},"reps":$reps,"failed":${acc.values.count(_.forall(_ < 0))},"load1_start":$load1Json,"load_gate":"$loadGate","quiet_wait_sec":$quietWaited,"suite_wall_sec":$suiteWall,"sf":"$sfDir"}""")
       }
-      v
+      run
     }
 
     // warmup: run the flagship once, discard the timing
@@ -186,7 +200,7 @@ object Bench {
     val runs = (1 to reps).map(rep =>
       names.map(n => n -> timed(s"main-rep$rep", n)).toMap)
     val best0 = names.map { n =>
-      val ts = runs.map(_(n))
+      val ts = runs.map(_(n).sec)
       n -> (if (ts.exists(_ >= 0)) ts.filter(_ >= 0).min else -1.0)
     }
 
@@ -233,7 +247,7 @@ object Bench {
         // survives single-sample noise (a 1.3x inflated sample cannot
         // turn a ≈10 ratio into the super-linear red flag this table
         // exists to catch)
-        Some(names.map(n => n -> timed("scaling-sf001", n, smallDir)).toMap)
+        Some(names.map(n => n -> timed("scaling-sf001", n, smallDir).sec).toMap)
       } else None
 
     // Self-adjudication (round-10 verdict #1): the driver's bench can
@@ -251,7 +265,7 @@ object Bench {
       val v = best0.toMap.apply(n)
       b > 0 && v > 1.5 * b
     }
-    val recheck = flagged.map(n => n -> timed("adjudication", n)).toMap
+    val recheck = flagged.map(n => n -> timed("adjudication", n).sec).toMap
     val best = best0.map { case (n, v) =>
       n -> recheck.get(n).filter(r => r >= 0 && r < v).getOrElse(v)
     }
@@ -267,7 +281,10 @@ object Bench {
     val qs = best.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val allRuns = names.map { n =>
-      "\"" + n + "\":[" + runs.map(_(n)).mkString(",") + "]"
+      "\"" + n + "\":[" + runs.map(_(n).sec).mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    val phases = names.map { n =>
+      "\"" + n + "\":" + runs.map("{" + _(n).phaseFields + "}").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = best.map(_._2).filter(_ >= 0).sum
     val failed = best.count(_._2 < 0)
@@ -321,9 +338,9 @@ object Bench {
     // time the suite grows toward the driver's timeout the pressure is
     // visible in the file, not discovered as an rc-124 wrapper
     val repSums = runs.map(r =>
-      (r.values.filter(_ >= 0).sum * 100).round / 100.0)
+      (r.values.map(_.sec).filter(_ >= 0).sum * 100).round / 100.0)
       .mkString("[", ",", "]")
-    val json = s"""{"metric":"total","partial":false,"value":$total,"unit":"sec","queries":$qs,"runs":$allRuns,"reps":$reps,"rep_sums":$repSums,"failed":$failed,"load1_start":$load1Json,"load_gate":"$loadGate","quiet_wait_sec":$quietWaited,"suite_wall_sec":$suiteWall$adjJson$scaling${vsBaseline._1},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","partial":false,"value":$total,"unit":"sec","queries":$qs,"runs":$allRuns,"phases":$phases,"reps":$reps,"rep_sums":$repSums,"failed":$failed,"load1_start":$load1Json,"load_gate":"$loadGate","quiet_wait_sec":$quietWaited,"suite_wall_sec":$suiteWall$adjJson$scaling${vsBaseline._1},"sf":"$sfDir"}"""
     writeLast(json)
     println(json)
     // LAST stdout line: the driver contract's one-line summary —

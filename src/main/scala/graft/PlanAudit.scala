@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps formatted physical plans for the headline queries to PLANS.md
@@ -22,16 +21,8 @@ object PlanAudit {
     val only = args.drop(2)
     val unknown = only.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-plan-audit")
 
     val sb = new StringBuilder
     sb ++= s"# Plan audit (`$sfDir`)\n\n"

@@ -111,15 +111,7 @@ object ScaleProbe {
     val (factorArgs, nameFilter) = args.partition(_.forall(_.isDigit))
     val factors = if (factorArgs.nonEmpty) factorArgs.map(_.toInt).toSeq
                   else Seq(1, 4, 16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = core.Sessions.local(32, "graft-scale-probe")
 
     val probes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "dedup_ngram_jaccard" -> (operators.Dedup.ngramJaccardQuery _),

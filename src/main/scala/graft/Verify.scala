@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -73,30 +73,8 @@ object Verify {
     val sqlOnly = args.drop(2).headOption.contains("--sql-only")
     val only: Option[Set[String]] =
       args.drop(2).headOption.filterNot(_ == "--sql-only").map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL surface incl. might_contain
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: the 100-entry default recompiles generated
-      // classes inside tasks under a 241-query workload
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // AQE parallelism-first coalescing floors its target at
-      // minPartitionSize (1 MiB default): a compute-dense stage of
-      // NARROW rows (16-byte candidate pairs probing broadcast hash
-      // maps of KB-sized shingle/vector arrays) collapses to 1-2 tasks
-      // because the bytes-proportional-to-work assumption breaks. At
-      // cluster totals targetSize = min(advisory, total/parallelism)
-      // dominates and the floor never binds, so 64 KiB is scale-neutral
-      // and only restores parallelism where totals are tiny.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "65536"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => !sqlOnly && only.forall(_.contains(name)) }

@@ -39,8 +39,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** events.ts has shipped as two physical types across testdata
     * generations: parquet TIMESTAMP(NANOS) (read as LONG under
-    * spark.sql.legacy.parquet.nanosAsLong, which Sessions.local /
-    * Verify / Bench set) and parquet timestamp[us] without UTC
+    * spark.sql.legacy.parquet.nanosAsLong, which Sessions.local
+    * sets) and parquet timestamp[us] without UTC
     * adjustment (read as TIMESTAMP_NTZ). Branch on the loaded dtype so
     * every downstream consumer sees one canonical TimestampType column
     * regardless of generation — the session is pinned to UTC, so the

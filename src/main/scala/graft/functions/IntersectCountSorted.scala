@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * set AND materializes the intersection array per candidate pair just
   * to count it — the dedup verify stage evaluates this once per
   * candidate pair, the hottest per-row site after shingling
-  * (ProfileJobs: 8.45 CPU-s in tau_sweep's verify stage alone at
+  * (a per-job profile: 8.45 CPU-s in tau_sweep's verify stage alone at
   * sf0.1). On the docShingleSets contract (sort_array(array_distinct(
   * shingles)) — every caller's input) a two-pointer merge counts the
   * intersection with zero allocation.

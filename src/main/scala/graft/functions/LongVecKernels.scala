@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `aggregate(zip_with(a, b, f), 0L, _+_)` and friends — which Spark
   * evaluates as an INTERPRETED lambda per element plus a materialized
   * intermediate array per row (ZipWith/ArrayAggregate are
-  * CodegenFallback). ProfileJobs traced the PQ encode/train argmin jobs
+  * CodegenFallback). A per-job profile traced the PQ encode/train argmin jobs
   * (320k (vec, sub, code) rows at sf0.1) to exactly these folds. The
   * native forms emit one primitive loop into whole-stage codegen, no
   * per-row allocation.

@@ -674,7 +674,6 @@ object Dedup {
     // in the batch — the exact fixpoint. `stats` records per-BATCH
     // changed-row counts.
     while (frontierN > 0 && it < maxIters) {
-      val tRound = System.nanoTime()
       val subRounds = math.min(2, maxIters - it)
       var lab = labels.select(col("v"), col("l"), lit(false).as("chg"))
       var front = labels.filter(col("chg")).select(col("v"), col("l"))
@@ -707,9 +706,6 @@ object Dedup {
       labels = localCheckpointFlat(lab)
       frontierN = labels.filter(col("chg")).count()
       stats += frontierN
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc-debug] round=$it subRounds=$subRounds " +
-          f"frontier=$frontierN wall=${(System.nanoTime() - tRound) / 1e9}%.2fs")
       it += subRounds
     }
     require(frontierN == 0,

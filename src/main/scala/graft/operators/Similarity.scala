@@ -2849,7 +2849,7 @@ object Similarity {
     * the plan (w referenced once), so the whole recurrence composes
     * into ONE declarative plan with zero per-step jobs — the r18
     * per-step localCheckpoint form paid a materialization + a count +
-    * a broadcast job per step (ProfilePhases: 123 build-phase jobs for
+    * a broadcast job per step (measured: 123 build-phase jobs for
     * topComponents2, 16.4s of pure scheduling on 64-row frames). Same
     * arithmetic, same values; only the execution shape changes. */
   private def powerIterate(gram: DataFrame, seed: DataFrame,

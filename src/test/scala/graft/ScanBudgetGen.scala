@@ -73,15 +73,7 @@ object ScanBudgetGen {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1)
       else "src/test/resources/scan_budgets.txt"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = core.Sessions.local(4, "graft-scan-budget")
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val n = totalScanCount(spark, fn(spark, sfDir))
       println(s"[scan-budget] $name $n")

@@ -9,26 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * afterAll would kill it under every other suite. The JVM exit cleans
   * up. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // see Bench.scala: the 100-entry default recompiles generated
-    // classes inside tasks under a many-query workload (the 241-plan
-    // gate suites replan every query in this one JVM)
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-    // see Bench.scala: keep the AQE coalescing floor below the 1 MiB
-    // default so compute-dense narrow-row stages stay parallel
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "65536"))
-    .getOrCreate()
-
-  spark.sparkContext.setLogLevel("WARN")
+  val spark: SparkSession = core.Sessions.local(4, "graft-test")
 
   /** Rows actually READ by the parquet scans of `df`'s executed plan
     * (i.e. post row-group / partition pruning) — runs the query, then
