@@ -421,20 +421,7 @@ object QualityModels {
       .select(col("bg"),
         round((log(col("pcnt") + col("v")) - log(col("cnt") + 1))
           * lit(1000000.0d)).cast("long").as("s"))
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .join(smodel, "bg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"))
-      .withColumn("mean_micro",
-        when(col("n_bigrams") > 0,
-          expr("surprisal_micro div n_bigrams")))
+    knPerDoc(docs, 2, smodel)
       .withColumn("keep",
         coalesce(col("mean_micro") >= minKeepMicro &&
           col("mean_micro") <= maxKeepMicro, lit(false)))
@@ -443,82 +430,269 @@ object QualityModels {
   def bigramSurprisalQuery(spark: SparkSession, dir: String): DataFrame =
     bigramSurprisal(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
-  /** Interpolated ABSOLUTE-DISCOUNT backoff bigram LM (the Kneser-Ney
-    * direction; Chen & Goodman 1999 §2.7) — r13 verdict #4: add-1
-    * steals far too much mass from seen bigrams (every unseen
-    * continuation gets a full pseudo-count, so on real text the model
-    * over-penalizes fluent-but-rare continuations; CCNet's actual
-    * gate is a KenLM model built on exactly this smoothing family).
-    * Per seen bigram (t1 t2), with discount D = 3/4 as an EXACT
-    * rational:
+  // ------------------------------------------------- the Kneser-Ney ladder
+  //
+  // Every KN query below (bigram_surprisal_kn … lm_heldout_fivegram) is a
+  // composition of the same parts, each defined once here: the model
+  // frames (trigramModelFrames, prunedFrames), the exact rationals (Kn,
+  // knBase, knRung, prunedRung, trigramKn), the int64 guard (knGuarded),
+  // the per-doc scorer (knPerDoc) and the held-out aggregate
+  // (knHeldoutMeans). Two FORMS share the rationals:
+  //  - the TYPE form scores every seen n-gram type of the corpus it was
+  //    built on: inner joins, every statistic present;
+  //  - the POSITION form scores held-out sites against train-split
+  //    statistics: left joins, so a statistic may be absent (NULL), and
+  //    the rational is branch-wise — a rung whose context is unseen
+  //    falls back to the rung below it.
+
+  /** One exact KN probability num/den as int64 columns, held
+    * branch-wise: (d, n) holds where the fallback's condition is true
+    * (always, without a fallback), the fallback rational elsewhere.
+    * `den`/`num` collapse the branches into one when-chain each;
+    * `micro` is the per-row surprisal round((ln den − ln num)·10⁶)
+    * taken branch by branch — two ln of exact integers in pinned
+    * order, so both engines round bit-identically (exact-integer ln
+    * args stay below 2⁵³ for corpora to ~5·10⁷ tokens; past that the
+    * same 1-ulp libm caveat as the rest of the ln family applies). */
+  private final case class Kn(d: Column, n: Column,
+      fallback: Option[(Column, Kn)] = None) {
+    private def branches(f: (Column, Column) => Column): Column = {
+      def chain(w: Column, k: Kn): Column = k.fallback match {
+        case None => w.otherwise(f(k.d, k.n))
+        case Some((seen, lower)) => chain(w.when(seen, f(k.d, k.n)), lower)
+      }
+      fallback match {
+        case None => f(d, n)
+        case Some((seen, lower)) => chain(when(seen, f(d, n)), lower)
+      }
+    }
+    def den: Column = branches((d, _) => d)
+    def num: Column = branches((_, n) => n)
+    def collapsed: Kn = Kn(den, num)
+    def micro: Column =
+      round(branches((d, n) => log(d) - log(n)) * lit(1000000.0d))
+  }
+
+  /** The bottom of every ladder: the add-one lower-order distribution
+    * (lower + 1)/norm — p_uni = (u+1)/(N+V) for plain absolute
+    * discounting, the KN continuation unigram p_cont = (cont+1)/(B+V)
+    * (cont = distinct left contexts, B = bigram types) otherwise. A
+    * held-out site's count may be absent and reads as 0. */
+  private def knBase(norm: Column, lower: Column, positions: Boolean): Kn =
+    Kn(norm, (if (positions) coalesce(lower, lit(0L)) else lower) + 1)
+
+  /** THE interpolated Kneser-Ney rung (Chen & Goodman 1999 §4.1.6), with
+    * discount D = 3/4 as an exact rational. For an n-gram with count c
+    * whose context (its first n−1 tokens) occurs ctx times as a prefix
+    * with `types` distinct continuations, over the lower-order
+    * probability num'/den':
     *
-    *   p(t2|t1) = (c12 − D)/c1 + D·T1/c1 · p_uni(t2)
-    *   p_uni(t2) = (u2 + 1)/(N + V)   (add-1 unigram backstop)
+    *   p = (c − D)/ctx + D·types/ctx · num'/den'
+    *     ⇒ den = 4·ctx·den',  num = (4·c − 3)·den' + 3·types·num'
     *
-    * where c1 = t1's prefix occurrences, T1 = its distinct
-    * continuation types (the interpolation weight D·T1/c1 is exactly
-    * the mass discounting freed), u2 = t2's unigram count, N/V =
-    * token/type totals. The whole probability is ONE rational:
-    *   num = (4·c12 − 3)·(N + V) + 3·T1·(u2 + 1),  den = 4·c1·(N + V)
-    * and the per-TYPE surprisal rounds ONCE to micro-nats as
-    * round((ln(den) − ln(num))·10⁶) — two ln of exact integers in
-    * pinned order (the row-162 discipline; exact-integer ln args stay
-    * below 2⁵³ for corpora to ~5·10⁷ tokens — beyond that the same
-    * 1-ulp libm caveat as the rest of the ln family applies).
+    * — the interpolation weight D·types/ctx is exactly the mass the
+    * discount freed. Stacking rungs gives every order's probability as
+    * ONE exact rational, rounded once (Kn.micro).
     *
-    * Scale shape — the TRIGRAM ladder's, one order down (r17 verdict
-    * #1: the old whole-model `map_from_entries(collect_list)` →
-    * broadcast fold was this repo's one registered 100-TB
-    * scale-killer — a bigram TYPE table is effectively unbounded on
-    * web corpora, so collapsing it into one driver-sized map row is
-    * an OOM at scale and was GC-hypersensitive already at sf0.1):
-    * three vocab-sized map-side-combined aggregates (bigram, prefix,
-    * unigram) build a per-TYPE model FRAME, the exploded doc-bigram
-    * stream equi-joins it on `bg` (inner — every doc bigram is a seen
-    * type by construction), and ONE per-doc aggregate collapses it.
-    * Every stage is keyed and map-side-combinable; nothing
-    * model-sized crosses a driver or a broadcast. Docs with < 2
-    * tokens carry 0/NULL via the left join back (no evidence). */
-  def bigramSurprisalKn(docs: DataFrame): DataFrame = {
-    val bigs = docs.select(
-      explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-    // bcnt feeds pstats AND the model select; ucnt feeds tot AND the
-    // model join — checkpoint each so the corpus is scanned once per
-    // count frame (the trigramModelFrames discipline)
-    val bcnt = bigs.groupBy("bg").agg(count(lit(1)).as("cnt"))
+    * Position form: an unseen n-gram enters as max(4·c − 3, 0) = 0 (the
+    * interpolation weight alone), and an unseen context falls back to
+    * the lower rung (a seen context implies the lower context is
+    * seen, so the rung stacks on the lower rung's top branch). */
+  private def knRung(ctx: Column, c: Column, types: Column, lower: Kn,
+                     positions: Boolean): Kn =
+    if (positions)
+      Kn(lit(4L) * ctx * lower.d,
+        greatest(lit(4L) * coalesce(c, lit(0L)) - 3, lit(0L)) * lower.d +
+          lit(3L) * types * lower.n,
+        Some(ctx.isNotNull -> lower))
+    else
+      Kn(lit(4L) * ctx * lower.d,
+        (lit(4L) * c - 3) * lower.d + lit(3L) * types * lower.n)
+
+  /** The top-order bigram rung: [[knRung]] over the bigram (c12) with
+    * prefix count c1 and t1types continuations, on [[knBase]]. */
+  private def bigramKn(c1: Column, c12: Column, t1types: Column,
+      lower: Column, norm: Column, positions: Boolean): Kn =
+    knRung(c1, c12, t1types, knBase(norm, lower, positions), positions)
+
+  /** The trigram-KN rational over the columns of [[trigramModelFrames]]:
+    * two [[knRung]]s on the continuation base (cont, B+V). The middle
+    * rung is KN's defining move one order up — the backoff bigram
+    * distribution counts distinct LEFT CONTEXTS in the trigram table,
+    * m23 = N1+(·t2t3) out of m2 = N1+(·t2·), not raw bigram frequency. */
+  private def trigramKn(positions: Boolean): Kn = {
+    val base = knBase(col("b") + col("v"), col("cont"), positions)
+    knRung(col("c12"), col("c123"), col("t12types"),
+      knRung(col("m2"), col("m23"), col("t2types"), base, positions),
+      positions)
+  }
+
+  /** The COUNT-PRUNED rung for order n ∈ {4, 5} (KenLM's discipline:
+    * keep the n-gram types with c ≥ θ, recompute the context stats —
+    * `c<1..n−1>k` = Σ kept counts, `t<1..n−1>types` = kept
+    * continuations — over the retained set only). Over the lower order's
+    * COLLAPSED rational:
+    *   kept:                   [[knRung]] — (4·c−3)·den' + 3·types·num'
+    *   pruned, context kept:   num = 3·types·num' (the interpolation
+    *                           weight alone — interpolated KN's
+    *                           zero-count branch), den = 4·ctx·den'
+    *   context entirely pruned: num'/den' (pure backoff)
+    * `kept` is c ≥ θ in the type form and c IS NOT NULL in the position
+    * form (its sites join the kept table only). */
+  private def prunedRung(n: Int, kept: Column, lower: Kn): Kn = {
+    val (ctx, c, types) = (col(s"c${knIds(n - 1)}k"), col(s"c${knIds(n)}"),
+      col(s"t${knIds(n - 1)}types"))
+    val (den, num) = (lower.den, lower.num)
+    Kn(lit(4L) * ctx * den,
+      when(kept, (lit(4L) * c - 3) * den + lit(3L) * types * num)
+        .otherwise(lit(3L) * types * num),
+      Some(ctx.isNotNull -> Kn(den, num)))
+  }
+
+  /** "12…n" — the column-name suffix of order n's statistics. */
+  private def knIds(n: Int): String = (1 to n).mkString
+
+  /** Per order: the n-gram column and the counted unit. */
+  private def knGram(n: Int): String = Seq("bg", "tg", "qg", "pg")(n - 2)
+  private def knUnit(n: Int): String =
+    Seq("bigrams", "trigrams", "quadgrams", "fivegrams")(n - 2)
+
+  /** The int64 headroom of each order's rational: every branch has
+    * num ≤ den (a probability ≤ 1), and den is 4^(n−1) times the
+    * product of the stacked context counts and B+V, so bounding that
+    * product (as a double — it has headroom where the longs would WRAP
+    * silently, log(negative) → NULL → sum() dropping the type while
+    * the count still counts it; the oracle engine fails loudly) bounds
+    * the whole rational. Measured max den at sf0.1: ≈3.4e11 (order 4),
+    * ≈1.4e12 (order 5) — orders of magnitude of headroom. */
+  private val knInt64Bounds: Map[Int, (String, Double)] = Map(
+    3 -> ("c12*m2*(B+V) >= 5.7e17", 5.7e17),
+    4 -> ("c123k*c12*m2*(B+V) >= 1.4e17", 1.4e17),
+    5 -> ("c1234k*c123k*c12*m2*(B+V) >= 3.5e16", 3.5e16))
+
+  /** The product of the guard factors, each as a double. */
+  private def knBound(factors: Seq[Column]): Column =
+    factors.map(_.cast("double")).reduce(_ * _)
+
+  /** The one in-plan int64 guard of the KN ladder: `micro` as a long,
+    * unless the bound product of `factors` reaches order n's limit —
+    * then the job fails with the operator's name (and, in the type
+    * form, the offending n-gram type; a held-out position row names
+    * none). Past the limit, rescale the rational (divide both sides by
+    * B+V, round once more). */
+  private[graft] def knGuarded(n: Int, heldout: Boolean,
+      factors: Seq[Column], micro: Column, hint: String = ""): Column = {
+    val (what, limit) = knInt64Bounds(n)
+    val msg = s"${knUnit(n).stripSuffix("s")} KN" +
+      (if (heldout) " heldout" else "") + s": $what overflows the exact " +
+      s"int64 rational — rescale the rational ${hint}before corpora " +
+      "this size"
+    val site = knGram(n)
+    when(knBound(factors) >= lit(limit), raise_error(
+        if (heldout) lit(msg)
+        else concat(lit(s"$msg ($site="), col(site), lit(")"))))
+      .otherwise(micro).cast("long")
+  }
+
+  /** The per-doc scorer of the type form: the exploded order-n stream
+    * equi-joins the per-TYPE model `smodel` (n-gram column, s) on its
+    * key — inner: every doc n-gram is a seen type by construction —
+    * and ONE per-doc aggregate collapses it. Docs with < n tokens
+    * carry 0/NULL via the left join back (no evidence). */
+  private def knPerDoc(docs: DataFrame, n: Int,
+                       smodel: DataFrame): DataFrame = {
+    val (g, cnt) = (knGram(n), s"n_${knUnit(n)}")
+    val perDoc = docs
+      .select(col("doc_id"),
+        explode(wordShingles(tokens(col("text")), n)).as(g))
+      .join(smodel, g)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as(cnt), sum(col("s")).as("surprisal_micro"))
+    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col(cnt), lit(0L)).as(cnt),
+        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
+        when(coalesce(col(cnt), lit(0L)) > 0,
+          expr(s"surprisal_micro div $cnt")).as("mean_micro"))
+  }
+
+  /** (doc_id, text and the md5 holdout split label; its train rows). */
+  private def heldoutTagged(docs: DataFrame, trainPct: Int,
+                            valPct: Int): (DataFrame, DataFrame) = {
+    val tagged = docs.select(col("doc_id"), col("text"),
+      TextAnalysis.splitColumn(trainPct, valPct).as("split"))
+    (tagged, tagged.filter(col("split") === "train"))
+  }
+
+  /** The held-out comparison of several models on the SAME order-n
+    * sites: per split, the site count, the `unseen` sites and each
+    * model's mean micro-nats (exact trunc division) — one aggregate,
+    * one row per (model, split). */
+  private def knHeldoutMeans(scored: DataFrame, n: Int, unseen: Column,
+                             models: Seq[(String, Column)]): DataFrame = {
+    val (sites, miss) = (s"n_${knUnit(n)}", s"unseen_${knUnit(n)}")
+    val agg = scored
+      .select(col("split") +: unseen.as("unseen") +:
+        models.zipWithIndex.map { case ((_, s), i) => s.as(s"s$i") }: _*)
+      .groupBy("split")
+      .agg(count(lit(1)).as(sites),
+        sum(when(col("unseen"), 1L).otherwise(0L)).as(miss) +:
+          models.indices.map(i => sum(col(s"s$i")).as(s"sum$i")): _*)
+    models.zipWithIndex.map { case ((model, _), i) =>
+      agg.select(lit(model).as("model"), col("split"), col(sites),
+        col(miss), expr(s"sum$i div $sites").as("mean_micro"))
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The bigram-KN model frames over a (possibly split-filtered)
+    * corpus: bigram types (bg → c12), their prefix stats (t1 → c1,
+    * t1types), unigram counts (t → u) and the token/type totals (n_tok,
+    * v). bcnt and ucnt are checkpointed — each feeds a stats frame AND
+    * a model join, so the corpus is scanned once per count frame. */
+  private def bigramModelFrames(corpus: DataFrame):
+      (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val bcnt = corpus
+      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
+      .groupBy("bg").agg(count(lit(1)).as("c12"))
       .localCheckpoint()
     val pstats = bcnt
       .groupBy(ngTok(col("bg"), 0).as("t1"))
-      .agg(sum(col("cnt")).as("pcnt"), count(lit(1)).as("t1types"))
-    val ucnt = docs.select(explode(tokens(col("text"))).as("t"))
+      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("t1types"))
+    val ucnt = corpus.select(explode(tokens(col("text"))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("u"))
       .localCheckpoint()
-    val tot = ucnt.agg(sum(col("u")).as("n_tok"),
-      count(lit(1)).as("v"))
+    val tot = ucnt.agg(sum(col("u")).as("n_tok"), count(lit(1)).as("v"))
+    (bcnt, pstats, ucnt, tot)
+  }
+
+  /** Interpolated ABSOLUTE-DISCOUNT backoff bigram LM (the Kneser-Ney
+    * direction; Chen & Goodman 1999 §2.7) — add-1 steals far too much
+    * mass from seen bigrams (every unseen continuation gets a full
+    * pseudo-count, so on real text the model over-penalizes
+    * fluent-but-rare continuations; CCNet's actual gate is a KenLM
+    * model built on exactly this smoothing family). Per seen bigram
+    * the probability is [[bigramKn]] over the add-one unigram backstop
+    * p_uni(t2) = (u2+1)/(N+V) (N/V = token/type totals).
+    *
+    * Scale shape — three vocab-sized map-side-combined aggregates
+    * (bigram, prefix, unigram) build a per-TYPE model FRAME and
+    * [[knPerDoc]] scores it: every stage is keyed and
+    * map-side-combinable; nothing model-sized crosses a driver or a
+    * broadcast (a bigram TYPE table is effectively unbounded on web
+    * corpora — collapsing it into one driver-sized map row would be an
+    * OOM at scale). */
+  def bigramSurprisalKn(docs: DataFrame): DataFrame = {
+    val (bcnt, pstats, ucnt, tot) = bigramModelFrames(docs)
     val smodel = bcnt
       .withColumn("t1", ngTok(col("bg"), 0))
       .withColumn("t2", ngTok(col("bg"), 1))
       .join(pstats, "t1")
       .join(ucnt, col("t2") === col("t"))
       .crossJoin(broadcast(tot))
-      .select(col("bg"),
-        round((log(lit(4L) * col("pcnt") * (col("n_tok") + col("v")))
-          - log((lit(4L) * col("cnt") - 3) * (col("n_tok") + col("v"))
-            + lit(3L) * col("t1types") * (col("u") + 1)))
-          * lit(1000000.0d)).cast("long").as("s"))
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .join(smodel, "bg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_bigrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_bigrams")).as("mean_micro"))
+      .select(col("bg"), bigramKn(col("c1"), col("c12"), col("t1types"),
+        col("u"), col("n_tok") + col("v"), positions = false)
+        .micro.cast("long").as("s"))
+    knPerDoc(docs, 2, smodel)
   }
 
   def bigramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
@@ -526,29 +700,18 @@ object QualityModels {
 
   /** Held-out add-1 vs absolute-discount-backoff vs KNESER-NEY bigram
     * comparison — lm_heldout_eval's train/test discipline pointed at
-    * the SMOOTHER (r13 verdict #4's "Done" clause): the three models
-    * train on the md5 TRAIN split only, every split is scored by all,
-    * and the test-split mean is the measured answer to "does backoff
-    * beat add-1 where it matters — on data the model has not seen?"
-    * (In-corpus scoring can't show this: every bigram is seen there.)
-    *
-    * Fallback ladder per scored bigram, one formula per model:
-    *   add-1:  s = ln(c1 + V) − ln(c12 + 1)            (c1, c12 ⟂ 0)
-    *   backoff, t1 seen:   num = max(4·c12−3, 0)·(N+V) + 3·T1·(u2+1),
-    *                       den = 4·c1·(N+V)
-    *   backoff, t1 unseen: num = u2 + 1, den = N + V   (pure unigram)
-    *   kn_cont: the same discounted interpolation with the TRUE
-    *     Kneser-Ney lower-order distribution (Kneser & Ney 1995) —
-    *     the CONTINUATION probability (cont2 + 1)/(B + V), cont2 =
-    *     distinct left-contexts of t2, B = distinct bigram types: a
-    *     word frequent only inside one collocation ("francisco")
-    *     backs off LOW however high its raw count, which is the whole
-    *     point of KN over plain absolute discounting —
-    *     num = max(4·c12−3, 0)·(B+V) + 3·T1·(cont2+1), den = 4·c1·(B+V)
-    *     (t1 unseen: num = cont2 + 1, den = B + V)
-    * rounded once to micro-nats per ROW in pinned ln order — unseen
-    * pairs share inputs, so identical rows round identically in both
-    * engines.
+    * the SMOOTHER: the three models train on the md5 TRAIN split only,
+    * every split is scored by all, and the test-split mean is the
+    * measured answer to "does backoff beat add-1 where it matters — on
+    * data the model has not seen?" (In-corpus scoring can't show this:
+    * every bigram is seen there.) Per scored bigram:
+    *   add1:    s = ln(c1 + V) − ln(c12 + 1)   (absent counts read 0)
+    *   backoff: [[bigramKn]] over p_uni(t2) = (u2+1)/(N+V)
+    *   kn_cont: [[bigramKn]] over the TRUE Kneser-Ney lower order, the
+    *     continuation probability (cont2+1)/(B+V) (Kneser & Ney 1995):
+    *     a word frequent only inside one collocation ("francisco")
+    *     backs off LOW however high its raw count
+    * in the position form (t1 unseen ⇒ the lower order alone).
     *
     * Scale shape: the scoring side EXPLODES the split-tagged bigram
     * stream and left-joins the four vocab-sized model tables (bigram,
@@ -557,33 +720,13 @@ object QualityModels {
     * 9-row aggregate. */
   def lmHeldoutBigram(docs: DataFrame, trainPct: Int = 80,
                       valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    // bcnt feeds pstats, cstats, btot AND the scored-stream join; ucnt
-    // feeds tot and the join — checkpoint each (the
-    // trigramModelFrames discipline: one corpus scan per count frame)
-    val bcnt = train
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val pstats = bcnt
-      .groupBy(ngTok(col("bg"), 0).as("t1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("t1types"))
+    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
+    val (bcnt, pstats, ucnt, tot) = bigramModelFrames(train)
     val cstats = bcnt
       .groupBy(ngTok(col("bg"), 1).as("t2"))
       .agg(count(lit(1)).as("cont"))
-    val ucnt = train.select(explode(tokens(col("text"))).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("u"))
-      .localCheckpoint()
-    val tot = ucnt.agg(sum(col("u")).as("n_tok"), count(lit(1)).as("v"))
     val btot = bcnt.agg(count(lit(1)).as("b"))
-    val scoredRows = tagged
+    val scored = tagged
       .select(col("split"),
         explode(wordShingles(tokens(col("text")), 2)).as("bg"))
       .withColumn("bt1", ngTok(col("bg"), 0))
@@ -594,62 +737,38 @@ object QualityModels {
       .join(ucnt, col("bt2") === col("t"), "left")
       .crossJoin(broadcast(tot))
       .crossJoin(broadcast(btot))
-      .select(col("split"),
-        col("c12").isNull.as("unseen"),
-        round((log(coalesce(col("c1"), lit(0L)) + col("v"))
-          - log(coalesce(col("c12"), lit(0L)) + 1))
-          * lit(1000000.0d)).cast("long").as("s_add1"),
-        round((when(col("c1").isNotNull,
-            log(lit(4L) * col("c1") * (col("n_tok") + col("v")))
-              - log(greatest(lit(4L) * coalesce(col("c12"), lit(0L)) - 3,
-                  lit(0L)) * (col("n_tok") + col("v"))
-                + lit(3L) * col("t1types")
-                  * (coalesce(col("u"), lit(0L)) + 1)))
-          .otherwise(log(col("n_tok") + col("v"))
-            - log(coalesce(col("u"), lit(0L)) + 1)))
-          * lit(1000000.0d)).cast("long").as("s_kn"),
-        round((when(col("c1").isNotNull,
-            log(lit(4L) * col("c1") * (col("b") + col("v")))
-              - log(greatest(lit(4L) * coalesce(col("c12"), lit(0L)) - 3,
-                  lit(0L)) * (col("b") + col("v"))
-                + lit(3L) * col("t1types")
-                  * (coalesce(col("cont"), lit(0L)) + 1)))
-          .otherwise(log(col("b") + col("v"))
-            - log(coalesce(col("cont"), lit(0L)) + 1)))
-          * lit(1000000.0d)).cast("long").as("s_knc"))
-    val agg = scoredRows.groupBy("split")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_bigrams"),
-        sum(col("s_add1")).as("sa"), sum(col("s_kn")).as("sk"),
-        sum(col("s_knc")).as("skc"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_bigrams"),
-        col("unseen_bigrams"),
-        expr(s"$sumCol div n_bigrams").as("mean_micro"))
-    side("add1", "sa").unionByName(side("backoff", "sk"))
-      .unionByName(side("kn_cont", "skc"))
+    def backoff(lower: String, norm: Column) = bigramKn(col("c1"),
+      col("c12"), col("t1types"), col(lower), norm, positions = true)
+    knHeldoutMeans(scored, 2, col("c12").isNull, Seq(
+      "add1" -> Kn(coalesce(col("c1"), lit(0L)) + col("v"),
+        coalesce(col("c12"), lit(0L)) + 1).micro.cast("long"),
+      "backoff" -> backoff("u", col("n_tok") + col("v")).micro.cast("long"),
+      "kn_cont" -> backoff("cont", col("b") + col("v")).micro.cast("long")))
   }
 
   def lmHeldoutBigramQuery(spark: SparkSession, dir: String): DataFrame =
     lmHeldoutBigram(Tables.documents(spark, dir))
       .orderBy(col("model"), col("split"))
 
-  // ---------------------------------------------------- trigram Kneser-Ney
+  /** The trigram-KN model frames over a (possibly split-filtered)
+    * corpus, with the column names [[trigramKn]] reads: trigram types
+    * (tg, c123), (t1 t2) prefix stats (p12 → c12, t12types), the
+    * middle-order continuation table (s23 → m23) and its stats (mt2 →
+    * m2, t2types), the continuation-unigram stats (ct3 → cont), the
+    * bigram-type total (b) and the vocabulary size (v). Every frame
+    * is a map-side-combined keyed aggregate. */
+  private final case class TrigramFrames(tcnt: DataFrame,
+      pstats: DataFrame, mid: DataFrame, mstats: DataFrame,
+      cstats: DataFrame, btot: DataFrame, vtot: DataFrame) {
+    def map(g: DataFrame => DataFrame): TrigramFrames = TrigramFrames(
+      g(tcnt), g(pstats), g(mid), g(mstats), g(cstats), g(btot), g(vtot))
+  }
 
-  /** Shared trigram-KN model frames over a (possibly split-filtered)
-    * corpus: trigram types, (t1 t2) prefix stats, the MIDDLE-order
-    * continuation table (Kneser-Ney's defining move one order up: the
-    * backoff bigram distribution counts distinct LEFT CONTEXTS in the
-    * trigram table, N1+(·t2t3), not raw bigram frequency), and the
-    * continuation-unigram stats the bigram KN ladder already uses.
-    * Every frame is a map-side-combined keyed aggregate. */
-  private def trigramModelFrames(corpus: DataFrame):
-      (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-       DataFrame, DataFrame) = {
+  private def trigramModelFrames(corpus: DataFrame): TrigramFrames = {
     // the two corpus-scan count frames are REUSED (tcnt feeds pstats,
     // mid and the scorer join; bcnt feeds cstats and btot) — without a
-    // checkpoint each reference replays the corpus scan (r17 verdict
-    // #4: lm_heldout_fivegram planned 48 physical scans because every
+    // checkpoint each reference replays the corpus scan
+    // (lm_heldout_fivegram once planned 48 physical scans because every
     // order re-derived its counts). localCheckpoint materializes each
     // ONCE; all derived stats frames are vocab-sized aggregates over
     // the checkpointed RDD, scan-free.
@@ -676,93 +795,72 @@ object QualityModels {
     val btot = bcnt.agg(count(lit(1)).as("b"))
     val vtot = corpus.select(explode(tokens(col("text"))).as("t"))
       .agg(countDistinct(col("t")).as("v"))
-    (tcnt, pstats, mid, mstats, cstats, btot, vtot)
+    TrigramFrames(tcnt, pstats, mid, mstats, cstats, btot, vtot)
+  }
+
+  /** Order-n type counts (g, c<1..n>) — checkpointed: they feed the
+    * kept-prefix stats AND the scorer join, one corpus scan. */
+  private def ngramCounts(corpus: DataFrame, n: Int): DataFrame =
+    corpus
+      .select(explode(wordShingles(tokens(col("text")), n)).as(knGram(n)))
+      .groupBy(knGram(n)).agg(count(lit(1)).as(s"c${knIds(n)}"))
+      .localCheckpoint()
+
+  /** The kept-context stats of the pruned order n over the RETAINED
+    * types only: p<1..n−1> → c<1..n−1>k, t<1..n−1>types — see
+    * [[prunedRung]]. */
+  private def keptPrefixStats(kept: DataFrame, n: Int): DataFrame = {
+    val ids = knIds(n - 1)
+    kept.groupBy(ngHead(col(knGram(n)), n - 1).as(s"p$ids"))
+      .agg(sum(col(s"c${knIds(n)}")).as(s"c${ids}k"),
+        count(lit(1)).as(s"t${ids}types"))
+  }
+
+  /** The pruned order-n model frames (n ∈ {4, 5}): ALL types with
+    * counts (needed to score seen-but-pruned positions), the kept types
+    * (c ≥ minCount) and their context stats. */
+  private def prunedFrames(corpus: DataFrame, n: Int, minCount: Long):
+      (DataFrame, DataFrame, DataFrame) = {
+    val all = ngramCounts(corpus, n)
+    val kept = all.filter(col(s"c${knIds(n)}") >= minCount)
+    (all, kept, keptPrefixStats(kept, n))
   }
 
   /** Trigram-LM cross-entropy with INTERPOLATED KNESER-NEY smoothing
-    * (Chen & Goodman 1999 §4.1.6) — the LM family one Markov order up
-    * from bigram_surprisal_kn, the next honest step toward the 5-gram
-    * KenLM gate CCNet actually ships. Per seen trigram (t1 t2 t3),
-    * D = 3/4 exact:
-    *
-    *   p(t3|t1t2) = (c123−D)/c12 + D·T12/c12 · p_kn(t3|t2)
-    *   p_kn(t3|t2) = (m23−D)/m2 + D·T2/m2 · p_cont(t3)   (KN middle
-    *     order: m23 = N1+(·t2t3) distinct left contexts, m2 = N1+(·t2·),
-    *     T2 = distinct continuations of t2 in the trigram table)
-    *   p_cont(t3) = (cont3+1)/(B+V)   (the bigram-KN continuation
-    *     unigram — lm_heldout_bigram's kn_cont backstop, verbatim)
-    *
-    * which collapses to ONE exact rational per trigram TYPE:
-    *   denmid = 4·m2·(B+V)
-    *   nummid = (4·m23−3)·(B+V) + 3·T2·(cont3+1)
-    *   den = 4·c12·denmid,  num = (4·c123−3)·denmid + 3·T12·nummid
-    * and the per-type surprisal rounds ONCE to micro-nats as
-    * round((ln(den)−ln(num))·10⁶), two ln of exact BIGINTs in pinned
-    * order.
+    * — the LM family one Markov order up from bigram_surprisal_kn, the
+    * next honest step toward the 5-gram KenLM gate CCNet actually
+    * ships. Per seen trigram TYPE the probability is [[trigramKn]],
+    * rounded once to micro-nats.
     *
     * Integer bound (the vocab²-context size question, documented):
-    * den = 16·c12·m2·(B+V). Both engines stay EXACT to 2⁶³ (the ln
-    * arg is the same integer, cast to the same IEEE double even past
-    * 2⁵³, so parity holds to int64's edge; DuckDB overflows LOUDLY
-    * past it). Realistic skew keeps c12·m2·(B+V) < 5·10¹⁷ through
-    * ~10⁸-token corpora; past that, rescale the rational (divide both
-    * sides by B+V and round once more) before going to 5-gram.
+    * den = 16·c12·m2·(B+V). Both engines stay EXACT to 2⁶³ (the ln arg
+    * is the same integer, cast to the same IEEE double even past 2⁵³,
+    * so parity holds to int64's edge); [[knGuarded]] fails loudly
+    * before it. Realistic skew keeps c12·m2·(B+V) < 5·10¹⁷ through
+    * ~10⁸-token corpora.
     *
-    * Scale shape — deliberately NOT bigram_surprisal_kn's broadcast
-    * map: the trigram-type model is vocab³-bounded (Heaps keeps it ≪
-    * positions but ≫ the bigram vocab — at 100 TB it is billions of
-    * rows and cannot broadcast). Scoring is the lm_heldout shape
-    * instead: the exploded trigram stream equi-joins the model on its
-    * key and ONE per-doc aggregate collapses it — every stage keyed,
-    * map-side-combinable, nothing model-sized crosses a driver or a
-    * broadcast. Docs with < 3 tokens carry 0/NULL (no evidence). */
+    * Scale shape — deliberately NOT a broadcast map: the trigram-type
+    * model is vocab³-bounded (Heaps keeps it ≪ positions but ≫ the
+    * bigram vocab — at 100 TB it is billions of rows and cannot
+    * broadcast). The model is keyed joins over [[trigramModelFrames]],
+    * scored by [[knPerDoc]]. */
   def trigramSurprisalKn(docs: DataFrame): DataFrame = {
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(docs)
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = (lit(4L) * col("m23") - 3) * bv +
-      lit(3L) * col("t2types") * (col("cont") + 1)
-    val den = lit(4L) * col("c12") * denmid
-    val num = (lit(4L) * col("c123") - 3) * denmid +
-      lit(3L) * col("t12types") * nummid
-    val smodel = tcnt
+    val f = trigramModelFrames(docs)
+    val smodel = f.tcnt
       .withColumn("p12", ngHead(col("tg"), 2))
       .withColumn("s23", ngTail(col("tg"), 2))
-      .join(pstats, "p12")
-      .join(mid, "s23")
-      .join(mstats, ngTok(col("s23"), 0) === col("mt2"))
+      .join(f.pstats, "p12")
+      .join(f.mid, "s23")
+      .join(f.mstats, ngTok(col("s23"), 0) === col("mt2"))
       // every seen trigram's (t2,t3) is a seen bigram, so the
       // continuation join is inner by construction
-      .join(cstats, ngTok(col("tg"), 2) === col("ct3"))
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-      // the exact-rational bound, enforced in-plan: past 2⁶³/16 the
-      // long products would WRAP silently on this side (log(negative)
-      // → NULL → sum() drops the type while n_trigrams still counts
-      // it) where the oracle engine fails loudly — fail loudly here
-      // too (r16 review; the double product has headroom vs 5.76e17)
-      .select(col("tg"),
-        when(col("c12").cast("double") * col("m2").cast("double")
-            * bv.cast("double") >= lit(5.7e17d),
-          raise_error(concat(lit("trigram KN: c12*m2*(B+V) >= 5.7e17 " +
-            "overflows the exact int64 rational — rescale the rational " +
-            "(divide both sides by B+V, round once more) before " +
-            "corpora this size (tg="), col("tg"), lit(")"))))
-          .otherwise(round((log(den) - log(num)) * lit(1000000.0d)))
-          .cast("long").as("s"))
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 3)).as("tg"))
-      .join(smodel, "tg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_trigrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_trigrams")).as("mean_micro"))
+      .join(f.cstats, ngTok(col("tg"), 2) === col("ct3"))
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+      .select(col("tg"), knGuarded(3, heldout = false,
+        Seq(col("c12"), col("m2"), col("b") + col("v")),
+        trigramKn(positions = false).micro,
+        hint = "(divide both sides by B+V, round once more) ").as("s"))
+    knPerDoc(docs, 3, smodel)
   }
 
   def trigramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
@@ -775,31 +873,15 @@ object QualityModels {
     * every (t1 t2 → t3) prediction site, so the mean_micro gap IS the
     * value of the extra order of context on unseen data.
     *
-    * Fallback ladder per scored trigram (train-split stats):
-    *   kn_trigram, (t1 t2) seen as a context:
-    *     num = max(4·c123−3,0)·denmid + 3·T12·nummid, den = 4·c12·denmid
-    *     (a seen context forces m2 ≥ 1, so nummid is always defined;
-    *      unseen (t2,t3) middles enter via max(4·m23−3,0) = 0)
-    *   context unseen, t2 seen as a MIDDLE context:
-    *     num = nummid, den = denmid      (pure middle order)
-    *   t2 unseen:
-    *     num = cont3+1, den = B+V        (pure continuation unigram)
-    *   kn_bigram: lm_heldout_bigram's kn_cont ladder on (t2, t3),
-    *     verbatim.
-    * Every branch rounds ONCE to micro-nats; unseen rows share exact
-    * integer inputs, so both engines round identically. */
+    * kn_trigram is [[trigramKn]] in the position form (context seen ⇒
+    * the full ladder; else t2 seen as a middle ⇒ the middle order
+    * alone; else the continuation unigram); kn_bigram is
+    * lm_heldout_bigram's kn_cont ladder on (t2, t3). Unseen rows share
+    * exact integer inputs, so both engines round identically. */
   def lmHeldoutTrigram(docs: DataFrame, trainPct: Int = 80,
                        valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(train)
+    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
+    val f = trigramModelFrames(train)
     // bigram-KN stats for the comparison model (train split)
     val btr = train
       .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
@@ -815,57 +897,21 @@ object QualityModels {
       .withColumn("s23", ngTail(col("tg"), 2))
       .withColumn("t2", ngTok(col("tg"), 1))
       .withColumn("t3", ngTok(col("tg"), 2))
-      .join(tcnt, Seq("tg"), "left")
-      .join(pstats, Seq("p12"), "left")
-      .join(mid, Seq("s23"), "left")
-      .join(mstats, col("t2") === col("mt2"), "left")
-      .join(cstats, col("t3") === col("ct3"), "left")
+      .join(f.tcnt, Seq("tg"), "left")
+      .join(f.pstats, Seq("p12"), "left")
+      .join(f.mid, Seq("s23"), "left")
+      .join(f.mstats, col("t2") === col("mt2"), "left")
+      .join(f.cstats, col("t3") === col("ct3"), "left")
       .join(btr, col("s23") === col("bg"), "left")
       .join(bpstats, col("t2") === col("bt1"), "left")
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = greatest(lit(4L) * coalesce(col("m23"), lit(0L)) - 3,
-      lit(0L)) * bv +
-      lit(3L) * col("t2types") * (coalesce(col("cont"), lit(0L)) + 1)
-    val rows = scored.select(col("split"),
-      col("c123").isNull.as("unseen"),
-      // same in-plan int64 bound as trigramSurprisalKn (r16 review)
-      when(col("c12").isNotNull &&
-          col("c12").cast("double") * col("m2").cast("double")
-            * bv.cast("double") >= lit(5.7e17d),
-        raise_error(lit("trigram KN heldout: c12*m2*(B+V) >= 5.7e17 " +
-          "overflows the exact int64 rational — rescale the rational " +
-          "before corpora this size")))
-        .otherwise(
-      round((when(col("c12").isNotNull,
-          log(lit(4L) * col("c12") * denmid)
-            - log(greatest(lit(4L) * coalesce(col("c123"), lit(0L)) - 3,
-                lit(0L)) * denmid
-              + lit(3L) * col("t12types") * nummid))
-        .when(col("m2").isNotNull, log(denmid) - log(nummid))
-        .otherwise(log(bv)
-          - log(coalesce(col("cont"), lit(0L)) + 1)))
-        * lit(1000000.0d)))
-        .cast("long").as("s_tri"),
-      round((when(col("bc1").isNotNull,
-          log(lit(4L) * col("bc1") * bv)
-            - log(greatest(lit(4L) * coalesce(col("cb2"), lit(0L)) - 3,
-                lit(0L)) * bv
-              + lit(3L) * col("bt1types")
-                * (coalesce(col("cont"), lit(0L)) + 1)))
-        .otherwise(log(bv)
-          - log(coalesce(col("cont"), lit(0L)) + 1)))
-        * lit(1000000.0d)).cast("long").as("s_big"))
-    val agg = rows.groupBy("split")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_trigrams"),
-        sum(col("s_tri")).as("st"), sum(col("s_big")).as("sb"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_trigrams"),
-        col("unseen_trigrams"),
-        expr(s"$sumCol div n_trigrams").as("mean_micro"))
-    side("kn_bigram", "sb").unionByName(side("kn_trigram", "st"))
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+    knHeldoutMeans(scored, 3, col("c123").isNull, Seq(
+      "kn_bigram" -> bigramKn(col("bc1"), col("cb2"), col("bt1types"),
+        col("cont"), col("b") + col("v"), positions = true)
+        .micro.cast("long"),
+      "kn_trigram" -> knGuarded(3, heldout = true,
+        Seq(col("c12"), col("m2"), col("b") + col("v")),
+        trigramKn(positions = true).micro)))
   }
 
   def lmHeldoutTrigramQuery(spark: SparkSession, dir: String): DataFrame =
@@ -907,160 +953,64 @@ object QualityModels {
     // asc_nulls_last: the NULL bucket (docs with < 3 tokens) must sort
     // where the oracle's ORDER BY puts it — DuckDB defaults NULLS LAST
     // while Spark defaults NULLS FIRST, a positional row-order mismatch
-    // the moment a short doc exists (r16 ADVICE #1)
+    // the moment a short doc exists
     pplHistogram(Tables.documents(spark, dir))
       .orderBy(col("lang"), col("bucket").asc_nulls_last)
 
-  // ------------------------------------------- pruned quadgram Kneser-Ney
-
-  /** The pruned order-4 model frames over a (possibly split-filtered)
-    * corpus: ALL quadgram types with counts (qall — needed to score
-    * seen-but-pruned positions), and the kept-prefix stats computed
-    * over the PRUNED table only (c123k = Σ kept c1234 per (t1 t2 t3),
-    * T123 = kept continuation types) — KenLM's discipline: discounts
-    * and interpolation weights are recomputed over the retained set,
-    * so the pruned model is self-consistent, not a truncated copy. */
-  private def quadgramModelFrames(corpus: DataFrame, minCount: Long):
-      (DataFrame, DataFrame) = {
-    val qall = corpus
-      .select(explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .groupBy("qg").agg(count(lit(1)).as("c1234"))
-      .localCheckpoint() // reused by qpstats + the scorer join — one scan
-    val qpstats = qall.filter(col("c1234") >= minCount)
-      .groupBy(ngHead(col("qg"), 3).as("p123"))
-      .agg(sum(col("c1234")).as("c123k"), count(lit(1)).as("t123types"))
-    (qall, qpstats)
-  }
-
-  /** Quadgram-LM cross-entropy with COUNT-PRUNED interpolated
-    * Kneser-Ney — the order-4 rung of the LM ladder, and the first
-    * one where the model table CANNOT ship whole: at web scale the
-    * raw quadgram-type table outgrows vocab³ by another Heaps factor,
-    * so the standard KenLM move applies — keep only types with
-    * c1234 ≥ minCount (singleton pruning at θ=2 drops ~82% of types
-    * on the test corpus) and let pruned positions back off. The
-    * BACKOFF DISTRIBUTION is the existing unpruned trigram-KN
-    * rational (trigramModelFrames — vocab³-bounded tables keep their
-    * own keyed-join shape), so pruning bites exactly where the blowup
-    * is: the top order.
-    *
-    * Per seen quadgram type (t1 t2 t3 t4), with D = 3/4 exact and
-    * p3 = num3/den3 the trigram-KN conditional of (t2 t3 → t4)
-    * (trigramSurprisalKn's rational, joined on the SUFFIX trigram):
-    *
-    *   kept (c1234 ≥ θ):
-    *     p4 = (c1234−D)/c123k + D·T123/c123k · p3
-    *        ⇒ num = (4·c1234−3)·den3 + 3·T123·num3, den = 4·c123k·den3
-    *   pruned type, prefix kept (c123k ≥ 1):
-    *     p4 = D·T123/c123k · p3   (the interpolation weight alone —
-    *       interpolated KN's zero-count branch)
-    *        ⇒ num = 3·T123·num3,                  den = 4·c123k·den3
-    *   prefix entirely pruned:
-    *     p4 = p3                 ⇒ num = num3,    den = den3
-    *
-    * and the per-type surprisal rounds ONCE to micro-nats as
-    * round((ln(den)−ln(num))·10⁶) — two ln of exact BIGINTs in pinned
-    * order, both engines bit-identical.
-    *
-    * Integer bound: every branch's probability is ≤ 1 so num ≤ den,
-    * and den = 64·c123k·c12·m2·(B+V); the in-plan guard raises when
-    * c123k·c12·m2·(B+V) ≥ 1.4e17 (den would pass 9e18 and WRAP here
-    * while the oracle engine fails loudly). Measured headroom at
-    * sf0.1: max den ≈ 3.4e11.
-    *
-    * Scale shape — the trigram discipline one order up: the model is
-    * keyed equi-joins end to end (the quadgram table is exactly what
-    * must NEVER broadcast), one exploded position stream, ONE per-doc
-    * aggregate. Docs with < 4 tokens carry 0/NULL (no evidence). */
-  def quadgramSurprisalKn(docs: DataFrame,
-                          minCount: Long = 2L): DataFrame = {
-    require(minCount >= 1)
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(docs)
-    val (qall, qpstats) = quadgramModelFrames(docs, minCount)
-    val smodel = scoreQuadgramTypes(qall, qpstats, minCount,
-      tcnt, pstats, mid, mstats, cstats, btot, vtot)
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .join(smodel, "qg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_quadgrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_quadgrams"), lit(0L)).as("n_quadgrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_quadgrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_quadgrams")).as("mean_micro"))
-  }
-
   /** The pruned quadgram-KN EXACT RATIONAL per seen quadgram type —
-    * (qg, c1234, den4, num4, bound4): [[scoreQuadgramTypes]]'s
-    * three-branch ladder with the rounding deferred, so the order-5
-    * scorer can stack its own rational on the same integers (exactly
-    * how the trigram rational feeds this one). The prefix-unkept
-    * branch folds to (den3, num3) here, so log(den4)−log(num4) is the
-    * complete ladder. bound4 carries the guard product
-    * c123k·c12·m2·(B+V) as a double for the callers' int64 checks.
-    * The suffix-trigram joins are inner by construction (a seen
-    * quadgram's suffix is a seen trigram, its (t2 t3) a seen trigram
-    * prefix, its (t3 t4) a seen middle pair); only qpstats is outer —
-    * a prefix with no kept types falls to the pure-backoff branch. */
+    * (qg, c1234, den4, num4, bound4): [[prunedRung]] on the suffix
+    * trigram's [[trigramKn]], unrounded, so the order-5 scorer can
+    * stack its own rung on the same integers. bound4 carries the guard
+    * product c123k·c12·m2·(B+V) as a double. The suffix-trigram joins
+    * are inner by construction (a seen quadgram's suffix is a seen
+    * trigram, its (t2 t3) a seen trigram prefix, its (t3 t4) a seen
+    * middle pair); only qpstats is outer — a prefix with no kept types
+    * falls to the pure-backoff branch. */
   private def quadgramRationalTypes(qall: DataFrame, qpstats: DataFrame,
-      minCount: Long, tcnt: DataFrame, pstats: DataFrame, mid: DataFrame,
-      mstats: DataFrame, cstats: DataFrame, btot: DataFrame,
-      vtot: DataFrame): DataFrame = {
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = (lit(4L) * col("m23") - 3) * bv +
-      lit(3L) * col("t2types") * (col("cont") + 1)
-    val den3 = lit(4L) * col("c12") * denmid
-    val num3 = (lit(4L) * col("c123") - 3) * denmid +
-      lit(3L) * col("t12types") * nummid
-    val den4 = lit(4L) * col("c123k") * den3
-    val num4 = when(col("c1234") >= minCount,
-        (lit(4L) * col("c1234") - 3) * den3 +
-          lit(3L) * col("t123types") * num3)
-      .otherwise(lit(3L) * col("t123types") * num3)
+      minCount: Long, f: TrigramFrames): DataFrame = {
+    val quad = prunedRung(4, col("c1234") >= minCount,
+      trigramKn(positions = false))
     qall
       .withColumn("p123", ngHead(col("qg"), 3))
       .withColumn("sfx", ngTail(col("qg"), 3))
       .join(qpstats, Seq("p123"), "left")
-      .join(tcnt, col("sfx") === col("tg"))
-      .join(pstats, ngHead(col("sfx"), 2) === col("p12"))
-      .join(mid, ngTail(col("sfx"), 2) === col("s23"))
-      .join(mstats, ngTok(col("sfx"), 1) === col("mt2"))
-      .join(cstats, ngTok(col("sfx"), 2) === col("ct3"))
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-      .select(col("qg"), col("c1234"),
-        when(col("c123k").isNotNull, den4).otherwise(den3).as("den4"),
-        when(col("c123k").isNotNull, num4).otherwise(num3).as("num4"),
-        (coalesce(col("c123k"), lit(1L)).cast("double")
-          * col("c12").cast("double") * col("m2").cast("double")
-          * bv.cast("double")).as("bound4"))
+      .join(f.tcnt, col("sfx") === col("tg"))
+      .join(f.pstats, ngHead(col("sfx"), 2) === col("p12"))
+      .join(f.mid, ngTail(col("sfx"), 2) === col("s23"))
+      .join(f.mstats, ngTok(col("sfx"), 1) === col("mt2"))
+      .join(f.cstats, ngTok(col("sfx"), 2) === col("ct3"))
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+      .select(col("qg"), col("c1234"), quad.den.as("den4"),
+        quad.num.as("num4"), knBound(Seq(coalesce(col("c123k"), lit(1L)),
+          col("c12"), col("m2"), col("b") + col("v"))).as("bound4"))
   }
 
   /** The per-type scorer shared by quadgramSurprisalKn and
-    * knPruneCurve: every SEEN quadgram type → (qg, c1234, s) — the
-    * deferred rational above, rounded ONCE to micro-nats.
-    * num ≤ den on every branch (probabilities ≤ 1), so guarding den
-    * = 64·c123k·c12·m2·(B+V) < 2⁶³ guards the whole rational. */
-  private def scoreQuadgramTypes(qall: DataFrame, qpstats: DataFrame,
-      minCount: Long, tcnt: DataFrame, pstats: DataFrame, mid: DataFrame,
-      mstats: DataFrame, cstats: DataFrame, btot: DataFrame,
-      vtot: DataFrame): DataFrame =
-    quadgramRationalTypes(qall, qpstats, minCount, tcnt, pstats, mid,
-      mstats, cstats, btot, vtot)
-      .select(col("qg"), col("c1234"),
-        when(col("bound4") >= lit(1.4e17d),
-          raise_error(concat(lit("quadgram KN: c123k*c12*m2*(B+V) >= " +
-            "1.4e17 overflows the exact int64 rational — rescale the " +
-            "rational before corpora this size (qg="), col("qg"),
-            lit(")"))))
-          .otherwise(round(
-            (log(col("den4")) - log(col("num4"))) * lit(1000000.0d)))
-          .cast("long").as("s"))
+    * knPruneCurve: every SEEN quadgram type → (qg, c1234, s). */
+  private def scoreQuadgramTypes(qrat: DataFrame): DataFrame =
+    qrat.select(col("qg"), col("c1234"), knGuarded(4, heldout = false,
+      Seq(col("bound4")), Kn(col("den4"), col("num4")).micro).as("s"))
+
+  /** Quadgram-LM cross-entropy with COUNT-PRUNED interpolated
+    * Kneser-Ney — the order-4 rung of the LM ladder, and the first one
+    * where the model table CANNOT ship whole: at web scale the raw
+    * quadgram-type table outgrows vocab³ by another Heaps factor, so
+    * the standard KenLM move applies — keep only types with c1234 ≥
+    * minCount (singleton pruning at θ=2 drops ~82% of types on the test
+    * corpus) and let pruned positions back off ([[prunedRung]]). The
+    * backoff distribution is the unpruned [[trigramKn]], so pruning
+    * bites exactly where the blowup is: the top order. Keyed joins end
+    * to end (the quadgram table is exactly what must NEVER broadcast),
+    * scored by [[knPerDoc]]; den = 64·c123k·c12·m2·(B+V) is guarded by
+    * [[knGuarded]]. */
+  def quadgramSurprisalKn(docs: DataFrame,
+                          minCount: Long = 2L): DataFrame = {
+    require(minCount >= 1)
+    val f = trigramModelFrames(docs)
+    val (qall, _, qpstats) = prunedFrames(docs, 4, minCount)
+    knPerDoc(docs, 4,
+      scoreQuadgramTypes(quadgramRationalTypes(qall, qpstats, minCount, f)))
+  }
 
   def quadgramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
     quadgramSurprisalKn(Tables.documents(spark, dir)).orderBy(col("doc_id"))
@@ -1076,23 +1026,14 @@ object QualityModels {
   def knPruneCurve(docs: DataFrame,
                    thetas: Seq[Long] = Seq(1L, 2L, 4L)): DataFrame = {
     require(thetas.nonEmpty && thetas.forall(_ >= 1))
-    val (tcnt0, pstats0, mid0, mstats0, cstats0, btot0, vtot0) =
-      trigramModelFrames(docs)
+    val f0 = trigramModelFrames(docs)
     // model-sized frames reused |thetas| times — checkpoint so the
     // corpus scans don't replicate per threshold
-    val qall = docs
-      .select(explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .groupBy("qg").agg(count(lit(1)).as("c1234"))
-      .localCheckpoint()
-    val Seq(tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      Seq(tcnt0, pstats0, mid0, mstats0, cstats0, btot0, vtot0)
-        .map(_.localCheckpoint())
+    val qall = ngramCounts(docs, 4)
+    val f = f0.map(_.localCheckpoint())
     thetas.map { th =>
-      val qpstats = qall.filter(col("c1234") >= th)
-        .groupBy(ngHead(col("qg"), 3).as("p123"))
-        .agg(sum(col("c1234")).as("c123k"), count(lit(1)).as("t123types"))
-      scoreQuadgramTypes(qall, qpstats, th,
-        tcnt, pstats, mid, mstats, cstats, btot, vtot)
+      scoreQuadgramTypes(quadgramRationalTypes(qall,
+          keptPrefixStats(qall.filter(col("c1234") >= th), 4), th, f))
         .agg(
           sum(when(col("c1234") >= th, 1L).otherwise(0L)).as("kept_types"),
           count(lit(1)).as("total_types"),
@@ -1107,39 +1048,36 @@ object QualityModels {
   def knPruneCurveQuery(spark: SparkSession, dir: String): DataFrame =
     knPruneCurve(Tables.documents(spark, dir)).orderBy(col("theta"))
 
+  /** Left-joins the train-split trigram frames onto held-out sites whose
+    * last three tokens are (a, b, c), already concatenated in column
+    * `sfx` — the position-form inputs of [[trigramKn]] — plus the
+    * broadcast totals. */
+  private def joinTrigramSites(sites: DataFrame, f: TrigramFrames,
+      sfx: String, a: Column, b: Column, c: Column): DataFrame =
+    sites
+      .join(f.tcnt, col(sfx) === col("tg"), "left")
+      .join(f.pstats, concat_ws(" ", a, b) === col("p12"), "left")
+      .join(f.mid, concat_ws(" ", b, c) === col("s23"), "left")
+      .join(f.mstats, b === col("mt2"), "left")
+      .join(f.cstats, c === col("ct3"), "left")
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+
   /** Held-out quadgram-KN (pruned) vs trigram-KN on the SAME quadgram
     * positions — lmHeldoutTrigram's frame one order up: both models
     * score every (t1 t2 t3 → t4) prediction site from train-split
     * statistics, so the mean_micro gap IS the value of the fourth
     * order net of pruning, and `unseen_quadgrams` counts kept-model
     * misses (pruned types score as misses — they are misses, that is
-    * what shipping a pruned model means).
-    *
-    * Fallback ladder per scored position: the trigram leg is
-    * lmHeldoutTrigram's three-branch ladder on the SUFFIX (t2 t3 t4)
-    * verbatim, producing its branch-dependent exact rational
-    * num3/den3; the quadgram leg stacks on top —
-    *   kept type:      num = (4·c1234−3)·den3 + 3·T123·num3,
-    *                   den = 4·c123k·den3
-    *   prefix kept:    num = 3·T123·num3, den = 4·c123k·den3
-    *   prefix unkept:  num = num3, den = den3  (pure backoff)
-    * Every branch rounds ONCE to micro-nats from exact BIGINTs. */
+    * what shipping a pruned model means). kn_trigram is the
+    * position-form [[trigramKn]] on the suffix (t2 t3 t4); kn_quadgram
+    * stacks [[prunedRung]] on it. */
   def lmHeldoutQuadgram(docs: DataFrame, minCount: Long = 2L,
                         trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     require(minCount >= 1)
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(train)
-    val (qall, qpstats) = quadgramModelFrames(train, minCount)
-    val qkept = qall.filter(col("c1234") >= minCount)
-    val scored = tagged
+    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
+    val f = trigramModelFrames(train)
+    val (_, qkept, qpstats) = prunedFrames(train, 4, minCount)
+    val sites = tagged
       .select(col("split"),
         explode(wordShingles(tokens(col("text")), 4)).as("qg"))
       .withColumn("p123", ngHead(col("qg"), 3))
@@ -1149,163 +1087,55 @@ object QualityModels {
       .withColumn("sfx", concat_ws(" ", col("t2"), col("t3"), col("t4")))
       .join(qkept, Seq("qg"), "left")
       .join(qpstats, Seq("p123"), "left")
-      .join(tcnt, col("sfx") === col("tg"), "left")
-      .join(pstats, concat_ws(" ", col("t2"), col("t3")) === col("p12"),
-        "left")
-      .join(mid, concat_ws(" ", col("t3"), col("t4")) === col("s23"), "left")
-      .join(mstats, col("t3") === col("mt2"), "left")
-      .join(cstats, col("t4") === col("ct3"), "left")
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = greatest(lit(4L) * coalesce(col("m23"), lit(0L)) - 3,
-      lit(0L)) * bv +
-      lit(3L) * col("t2types") * (coalesce(col("cont"), lit(0L)) + 1)
-    // the trigram ladder's branch-dependent exact rational on the
-    // suffix — lmHeldoutTrigram's three branches, as reusable columns
-    val den3 = when(col("c12").isNotNull, lit(4L) * col("c12") * denmid)
-      .when(col("m2").isNotNull, denmid)
-      .otherwise(bv)
-    val num3 = when(col("c12").isNotNull,
-        greatest(lit(4L) * coalesce(col("c123"), lit(0L)) - 3, lit(0L))
-          * denmid + lit(3L) * col("t12types") * nummid)
-      .when(col("m2").isNotNull, nummid)
-      .otherwise(coalesce(col("cont"), lit(0L)) + 1)
-    val rows = scored.select(col("split"),
-      col("c1234").isNull.as("unseen"),
-      // the same den-only int64 guard as quadgramSurprisalKn, with
-      // absent branch components coalesced to their bound-neutral 1
-      when(coalesce(col("c123k"), lit(1L)).cast("double")
-          * coalesce(col("c12"), lit(1L)).cast("double")
-          * coalesce(col("m2"), lit(1L)).cast("double")
-          * bv.cast("double") >= lit(1.4e17d),
-        raise_error(lit("quadgram KN heldout: c123k*c12*m2*(B+V) >= " +
-          "1.4e17 overflows the exact int64 rational — rescale the " +
-          "rational before corpora this size")))
-        .otherwise(round((log(den3) - log(num3)) * lit(1000000.0d)))
-        .cast("long").as("s_tri"),
-      round((when(col("c123k").isNotNull,
-          log(lit(4L) * col("c123k") * den3)
-            - log(when(col("c1234").isNotNull,
-                (lit(4L) * col("c1234") - 3) * den3 +
-                  lit(3L) * col("t123types") * num3)
-              .otherwise(lit(3L) * col("t123types") * num3)))
-        .otherwise(log(den3) - log(num3)))
-        * lit(1000000.0d)).cast("long").as("s_quad"))
-    val agg = rows.groupBy("split")
-      .agg(count(lit(1)).as("n_quadgrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_quadgrams"),
-        sum(col("s_tri")).as("st"), sum(col("s_quad")).as("sq"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_quadgrams"),
-        col("unseen_quadgrams"),
-        expr(s"$sumCol div n_quadgrams").as("mean_micro"))
-    side("kn_trigram", "st").unionByName(side("kn_quadgram", "sq"))
+    val tri = trigramKn(positions = true).collapsed
+    knHeldoutMeans(
+      joinTrigramSites(sites, f, "sfx", col("t2"), col("t3"), col("t4")),
+      4, col("c1234").isNull, Seq(
+        // the den-only guard of both legs, absent branch components
+        // coalesced to their bound-neutral 1
+        "kn_trigram" -> knGuarded(4, heldout = true,
+          Seq(coalesce(col("c123k"), lit(1L)), coalesce(col("c12"), lit(1L)),
+            coalesce(col("m2"), lit(1L)), col("b") + col("v")), tri.micro),
+        "kn_quadgram" -> prunedRung(4, col("c1234").isNotNull, tri)
+          .micro.cast("long")))
   }
 
   def lmHeldoutQuadgramQuery(spark: SparkSession, dir: String): DataFrame =
     lmHeldoutQuadgram(Tables.documents(spark, dir))
       .orderBy(col("model"), col("split"))
 
-  // ---------------------------------------- pruned fivegram Kneser-Ney
-
-  /** The pruned order-5 model frames: ALL fivegram types with counts
-    * (needed to score seen-but-pruned positions) and the kept-prefix
-    * stats over the RETAINED set only (c1234k = Σ kept c12345 per
-    * (t1..t4), T1234 = kept continuation types) — the same KenLM
-    * recompute-over-retained discipline as [[quadgramModelFrames]]. */
-  private def fivegramModelFrames(corpus: DataFrame, minCount: Long):
-      (DataFrame, DataFrame) = {
-    val pall = corpus
-      .select(explode(wordShingles(tokens(col("text")), 5)).as("pg"))
-      .groupBy("pg").agg(count(lit(1)).as("c12345"))
-      .localCheckpoint() // reused by ppstats + the scorer join — one scan
-    val ppstats = pall.filter(col("c12345") >= minCount)
-      .groupBy(ngHead(col("pg"), 4).as("p1234"))
-      .agg(sum(col("c12345")).as("c1234k"), count(lit(1)).as("t1234types"))
-    (pall, ppstats)
-  }
-
-  /** Per-type order-5 scorer: every SEEN fivegram type → (pg, s),
-    * stacking the pruned ladder on the deferred quadgram rational
-    * exactly as the quadgram scorer stacks on the trigram one —
-    *   kept (c12345 ≥ θ₅):
-    *     num = (4·c12345−3)·den4 + 3·T1234·num4, den = 4·c1234k·den4
-    *   pruned type, prefix kept: num = 3·T1234·num4, den = 4·c1234k·den4
-    *   prefix entirely pruned:   num = num4,          den = den4
-    * The suffix-quadgram join is inner by construction (a seen
-    * fivegram's suffix is a seen quadgram). num ≤ den on every branch,
-    * so the den-only bound covers the rational: den = 256·c1234k·
-    * c123k·c12·m2·(B+V), guarded at c1234k·bound4 ≥ 3.5e16 ≈ 2⁶³/256. */
-  private def scoreFivegramTypes(pall: DataFrame, ppstats: DataFrame,
-      minCount: Long, qrat: DataFrame): DataFrame = {
-    val den5 = lit(4L) * col("c1234k") * col("den4")
-    val num5 = when(col("c12345") >= minCount,
-        (lit(4L) * col("c12345") - 3) * col("den4") +
-          lit(3L) * col("t1234types") * col("num4"))
-      .otherwise(lit(3L) * col("t1234types") * col("num4"))
-    pall
-      .withColumn("pfx4", ngHead(col("pg"), 4))
-      .withColumn("sfx4", ngTail(col("pg"), 4))
-      .join(ppstats, col("pfx4") === col("p1234"), "left")
-      .join(qrat, col("sfx4") === col("qg"))
-      .select(col("pg"),
-        when(coalesce(col("c1234k"), lit(1L)).cast("double")
-            * col("bound4") >= lit(3.5e16d),
-          raise_error(concat(lit("fivegram KN: c1234k*c123k*c12*m2*(B+V) " +
-            ">= 3.5e16 overflows the exact int64 rational — rescale the " +
-            "rational before corpora this size (pg="), col("pg"),
-            lit(")"))))
-          .otherwise(round(
-            (when(col("c1234k").isNotNull, log(den5) - log(num5))
-              .otherwise(log(col("den4")) - log(col("num4"))))
-              * lit(1000000.0d)))
-          .cast("long").as("s"))
-  }
-
   /** Fivegram-LM cross-entropy with count-pruned interpolated
     * Kneser-Ney — the order CCNet's KenLM gate actually ships (Wenzek
     * et al. 2020 train a 5-gram model; KenLM's own pruning keeps it
     * storable). Both top orders are pruned (θ₄ for the quadgram
-    * backoff, θ₅ for the top) with interpolation weights recomputed
-    * over the retained sets; pruned positions back off through the
-    * pruned quadgram rational to the unpruned trigram-KN rational —
-    * the full ladder from [[trigramSurprisalKn]] up, every branch one
-    * exact int64 rational rounded ONCE to micro-nats.
+    * backoff, θ₅ for the top): [[prunedRung]] on the pruned quadgram
+    * rational on [[trigramKn]] — the full ladder, every branch one exact
+    * int64 rational rounded ONCE to micro-nats.
     *
     * Scale shape — the trigram discipline two orders up: the
     * fivegram-type table is the most explosive frame in the repo and
-    * must NEVER broadcast; every model join is a keyed equi-join, the
-    * position stream explodes once, ONE per-doc aggregate collapses
-    * it. Docs with < 5 tokens carry 0/NULL (no evidence).
-    *
-    * Integer bound: den = 256·c1234k·c123k·c12·m2·(B+V), guarded
-    * in-plan at 3.5e16 ≈ 2⁶³/256 (measured max at sf0.1 ≈ 1.4e12 —
-    * four orders of headroom; past it, rescale the rational by B+V
-    * and round once more, the documented trigram discipline). */
+    * must NEVER broadcast; every model join is a keyed equi-join
+    * (the suffix-quadgram join is inner by construction: a seen
+    * fivegram's suffix is a seen quadgram), scored by [[knPerDoc]].
+    * den = 256·c1234k·c123k·c12·m2·(B+V) is guarded by [[knGuarded]]. */
   def fivegramSurprisalKn(docs: DataFrame, minCount4: Long = 2L,
                           minCount5: Long = 2L): DataFrame = {
     require(minCount4 >= 1 && minCount5 >= 1)
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(docs)
-    val (qall, qpstats) = quadgramModelFrames(docs, minCount4)
-    val qrat = quadgramRationalTypes(qall, qpstats, minCount4,
-      tcnt, pstats, mid, mstats, cstats, btot, vtot)
-    val (pall, ppstats) = fivegramModelFrames(docs, minCount5)
-    val smodel = scoreFivegramTypes(pall, ppstats, minCount5, qrat)
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 5)).as("pg"))
-      .join(smodel, "pg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_fivegrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_fivegrams"), lit(0L)).as("n_fivegrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_fivegrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_fivegrams")).as("mean_micro"))
+    val f = trigramModelFrames(docs)
+    val (qall, _, qpstats) = prunedFrames(docs, 4, minCount4)
+    val qrat = quadgramRationalTypes(qall, qpstats, minCount4, f)
+    val (pall, _, ppstats) = prunedFrames(docs, 5, minCount5)
+    val five = prunedRung(5, col("c12345") >= minCount5,
+      Kn(col("den4"), col("num4")))
+    val smodel = pall
+      .withColumn("pfx4", ngHead(col("pg"), 4))
+      .withColumn("sfx4", ngTail(col("pg"), 4))
+      .join(ppstats, col("pfx4") === col("p1234"), "left")
+      .join(qrat, col("sfx4") === col("qg"))
+      .select(col("pg"), knGuarded(5, heldout = false,
+        Seq(coalesce(col("c1234k"), lit(1L)), col("bound4")),
+        five.micro).as("s"))
+    knPerDoc(docs, 5, smodel)
   }
 
   def fivegramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1317,34 +1147,17 @@ object QualityModels {
     * models score every (t1..t4 → t5) site from train-split stats, so
     * the mean_micro gap IS the value of the fifth order net of
     * pruning, and `unseen_fivegrams` counts kept-model misses.
-    *
-    * Fallback ladder per scored site (train-split stats): the
-    * quadgram leg is lmHeldoutQuadgram's full ladder on the SUFFIX
-    * quadgram (t2..t5) — its own trigram ladder on (t3 t4 t5) at the
-    * bottom — producing the branch-dependent exact rational
-    * num4/den4; the fivegram leg stacks the pruned three-branch
-    * ladder on top (kept / pruned-with-kept-prefix / prefix-unkept
-    * ⇒ pure backoff). Every branch rounds ONCE to micro-nats from
-    * exact int64s; the den-only guard covers both legs. */
+    * kn_quadgram is lmHeldoutQuadgram's ladder on the suffix quadgram
+    * (t2..t5); kn_fivegram stacks [[prunedRung]] on it. */
   def lmHeldoutFivegram(docs: DataFrame, minCount4: Long = 2L,
                         minCount5: Long = 2L, trainPct: Int = 80,
                         valPct: Int = 10): DataFrame = {
     require(minCount4 >= 1 && minCount5 >= 1)
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(train)
-    val (qall, qpstats) = quadgramModelFrames(train, minCount4)
-    val qkept = qall.filter(col("c1234") >= minCount4)
-    val (pall, ppstats) = fivegramModelFrames(train, minCount5)
-    val pkept = pall.filter(col("c12345") >= minCount5)
-    val scored = tagged
+    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
+    val f = trigramModelFrames(train)
+    val (_, qkept, qpstats) = prunedFrames(train, 4, minCount4)
+    val (_, pkept, ppstats) = prunedFrames(train, 5, minCount5)
+    val sites = tagged
       .select(col("split"),
         explode(wordShingles(tokens(col("text")), 5)).as("pg"))
       .withColumn("t2", ngTok(col("pg"), 1))
@@ -1360,69 +1173,18 @@ object QualityModels {
       .join(qkept, col("sfx4") === col("qg"), "left")
       .join(qpstats, concat_ws(" ", col("t2"), col("t3"), col("t4"))
         === col("p123"), "left")
-      .join(tcnt, col("sfx3") === col("tg"), "left")
-      .join(pstats, concat_ws(" ", col("t3"), col("t4")) === col("p12"),
-        "left")
-      .join(mid, concat_ws(" ", col("t4"), col("t5")) === col("s23"), "left")
-      .join(mstats, col("t4") === col("mt2"), "left")
-      .join(cstats, col("t5") === col("ct3"), "left")
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = greatest(lit(4L) * coalesce(col("m23"), lit(0L)) - 3,
-      lit(0L)) * bv +
-      lit(3L) * col("t2types") * (coalesce(col("cont"), lit(0L)) + 1)
-    // the trigram ladder's branch-dependent rational on (t3 t4 t5) —
-    // lmHeldoutTrigram's three branches, as reusable columns
-    val den3 = when(col("c12").isNotNull, lit(4L) * col("c12") * denmid)
-      .when(col("m2").isNotNull, denmid)
-      .otherwise(bv)
-    val num3 = when(col("c12").isNotNull,
-        greatest(lit(4L) * coalesce(col("c123"), lit(0L)) - 3, lit(0L))
-          * denmid + lit(3L) * col("t12types") * nummid)
-      .when(col("m2").isNotNull, nummid)
-      .otherwise(coalesce(col("cont"), lit(0L)) + 1)
-    // the quadgram ladder stacked on it — lmHeldoutQuadgram's three
-    // branches on the suffix quadgram, as reusable columns
-    val den4 = when(col("c123k").isNotNull, lit(4L) * col("c123k") * den3)
-      .otherwise(den3)
-    val num4 = when(col("c123k").isNotNull,
-        when(col("c1234").isNotNull,
-          (lit(4L) * col("c1234") - 3) * den3 +
-            lit(3L) * col("t123types") * num3)
-          .otherwise(lit(3L) * col("t123types") * num3))
-      .otherwise(num3)
-    val rows = scored.select(col("split"),
-      col("c12345").isNull.as("unseen"),
-      // the fivegram guard with absent branch components coalesced to
-      // their bound-neutral 1 (den ≤ 256·c1234k·c123k·c12·m2·(B+V))
-      when(coalesce(col("c1234k"), lit(1L)).cast("double")
-          * coalesce(col("c123k"), lit(1L)).cast("double")
-          * coalesce(col("c12"), lit(1L)).cast("double")
-          * coalesce(col("m2"), lit(1L)).cast("double")
-          * bv.cast("double") >= lit(3.5e16d),
-        raise_error(lit("fivegram KN heldout: c1234k*c123k*c12*m2*(B+V) " +
-          ">= 3.5e16 overflows the exact int64 rational — rescale the " +
-          "rational before corpora this size")))
-        .otherwise(round((log(den4) - log(num4)) * lit(1000000.0d)))
-        .cast("long").as("s_quad"),
-      round((when(col("c1234k").isNotNull,
-          log(lit(4L) * col("c1234k") * den4)
-            - log(when(col("c12345").isNotNull,
-                (lit(4L) * col("c12345") - 3) * den4 +
-                  lit(3L) * col("t1234types") * num4)
-              .otherwise(lit(3L) * col("t1234types") * num4)))
-        .otherwise(log(den4) - log(num4)))
-        * lit(1000000.0d)).cast("long").as("s_five"))
-    val agg = rows.groupBy("split")
-      .agg(count(lit(1)).as("n_fivegrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_fivegrams"),
-        sum(col("s_quad")).as("sq"), sum(col("s_five")).as("sf"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_fivegrams"),
-        col("unseen_fivegrams"),
-        expr(s"$sumCol div n_fivegrams").as("mean_micro"))
-    side("kn_quadgram", "sq").unionByName(side("kn_fivegram", "sf"))
+    val quad = prunedRung(4, col("c1234").isNotNull,
+      trigramKn(positions = true))
+    knHeldoutMeans(
+      joinTrigramSites(sites, f, "sfx3", col("t3"), col("t4"), col("t5")),
+      5, col("c12345").isNull, Seq(
+        "kn_quadgram" -> knGuarded(5, heldout = true,
+          Seq(coalesce(col("c1234k"), lit(1L)),
+            coalesce(col("c123k"), lit(1L)), coalesce(col("c12"), lit(1L)),
+            coalesce(col("m2"), lit(1L)), col("b") + col("v")),
+          quad.collapsed.micro),
+        "kn_fivegram" -> prunedRung(5, col("c12345").isNotNull, quad)
+          .micro.cast("long")))
   }
 
   def lmHeldoutFivegramQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1678,15 +1440,8 @@ object QualityModels {
     * doc, then a 3-row split aggregate. */
   def lmHeldoutEval(docs: DataFrame, trainPct: Int = 80,
                     valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val toks = tagged.filter(col("split") === "train")
-      .select(explode(tokens(col("text"))).as("t"))
+    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
+    val toks = train.select(explode(tokens(col("text"))).as("t"))
     val vocab = toks.groupBy("t").agg(count(lit(1)).as("cnt"))
     val model = vocab
       .agg(sum(col("cnt")).as("total"),
@@ -2267,7 +2022,8 @@ object QualityModels {
 
   /** Kept-prefix stats + per-type pruned order-5 surprisal at one
     * threshold (ppre_θ, smap5_θ) — the three branches mirror
-    * scoreFivegramTypes exactly, stacked on qsc_θ₄'s rational. */
+    * fivegramSurprisalKn's prunedRung exactly, stacked on qsc_θ₄'s
+    * rational. */
   private def fivegramScoreCtes(theta: Long, theta4: Long): String =
     s"""ppre_$theta AS (
        | SELECT string_split(pg, ' ')[1] || ' ' || string_split(pg, ' ')[2] ||

@@ -2161,7 +2161,7 @@ object Similarity {
     * alone, and only the top-m shortlist touches fp32 vectors (the
     * primary store, joined by id) for the exact rerank. The plan must
     * serve EXACTLY what the rebuild-everything plan serves —
-    * Batch14Spec pins the equality, and the oracle is the SAME
+    * SimilaritySpec pins the equality, and the oracle is the SAME
     * replay ann_ivf_pq_residual pins. */
   def annIvfPqResidualFromIndex(index: DataFrame, queries: DataFrame,
                                 corpus: DataFrame, cents: DataFrame,

@@ -784,15 +784,21 @@ object TextAnalysis {
     * of RNG state. Thresholds are integer floor(pct·2^32/100) so both
     * engines cut at exactly the same bucket. */
   def holdoutSplit(docs: DataFrame, trainPct: Int = 80,
-                   valPct: Int = 10): DataFrame = {
+                   valPct: Int = 10): DataFrame =
+    docs.select(col("doc_id"), col("lang"), col("source"),
+      splitColumn(trainPct, valPct).as("split"))
+
+  /** The "train"/"val"/"test" label of [[holdoutSplit]] as a reusable
+    * expression over doc_id — the one split rule every held-out
+    * evaluation (lm_heldout_eval, the KN heldout ladder) tags with. */
+  private[operators] def splitColumn(trainPct: Int, valPct: Int): Column = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100,
       s"invalid split $trainPct/$valPct")
     val trainT = 4294967296L * trainPct / 100
     val valT = 4294967296L * (trainPct + valPct) / 100
-    docs.select(col("doc_id"), col("lang"), col("source"),
-      when(sampleBucket < trainT, "train")
-        .when(sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
+    when(sampleBucket < trainT, "train")
+      .when(sampleBucket < valT, "val")
+      .otherwise("test")
   }
 
   def holdoutSplitQuery(spark: SparkSession, dir: String): DataFrame =

@@ -463,84 +463,96 @@ class QualityModelsSpec extends SparkSpec {
       "order 5 must beat order 4 on its own training split")
   }
 
+  /** An independent straight-line replay of the DOCUMENTED KN ladder
+    * (not the DataFrame code): n-gram stats of a training corpus as
+    * plain maps, every rung's exact rational in BigInt. Each rational
+    * comes with the ladder branch it took. Absent stats read as
+    * unseen, so the same replay serves the type form (every scored
+    * n-gram is a seen type) and the position form (held-out sites). */
+  private class KnReplay(train: Seq[String], theta4: Long, theta5: Long) {
+    private val toks = train.map(_.split(" "))
+    def counts(n: Int): Map[String, Long] =
+      toks.flatMap(grams(_, n)).groupBy(identity)
+        .map { case (g, o) => g -> o.size.toLong }
+    private def head(g: String, m: Int) = g.split(" ").take(m).mkString(" ")
+    private def tail(g: String, m: Int) = g.split(" ").takeRight(m).mkString(" ")
+    /** prefix -> (Σ counts, types) over the retained n-grams */
+    private def prefixStats(kept: Map[String, Long], m: Int) =
+      kept.groupBy(e => head(e._1, m))
+        .map { case (p, e) => p -> ((e.values.sum, e.size.toLong)) }
+    private val tcnt = counts(3)
+    private val pstats = prefixStats(tcnt, 2)
+    private val mid = tcnt.keys.groupBy(tail(_, 2))
+      .map { case (s, o) => s -> o.size.toLong }
+    private val mstats = prefixStats(mid, 1)
+    private val bcnt = counts(2)
+    private val cstats = bcnt.keys.groupBy(_.split(" ")(1))
+      .map { case (t, o) => t -> o.size.toLong }
+    private val bv = BigInt(bcnt.size) + BigInt(toks.flatten.distinct.size)
+    val kept4: Map[String, Long] = counts(4).filter(_._2 >= theta4)
+    val kept5: Map[String, Long] = counts(5).filter(_._2 >= theta5)
+    private def disc(c: Long) = (BigInt(4) * c - 3).max(BigInt(0))
+
+    def rat3(tg: String): (BigInt, BigInt, String) = {
+      val Array(_, t2, t3) = tg.split(" ")
+      val cont1 = BigInt(cstats.getOrElse(t3, 0L)) + 1
+      mstats.get(t2) match {
+        case None => (bv, cont1, "continuation only")
+        case Some((m2, t2types)) =>
+          val denmid = BigInt(4) * m2 * bv
+          val nummid = disc(mid.getOrElse(tail(tg, 2), 0L)) * bv +
+            BigInt(3) * t2types * cont1
+          pstats.get(head(tg, 2)) match {
+            case None => (denmid, nummid, "middle only")
+            case Some((c12, t12types)) =>
+              (BigInt(4) * c12 * denmid,
+                disc(tcnt.getOrElse(tg, 0L)) * denmid +
+                  BigInt(3) * t12types * nummid, "seen context")
+          }
+      }
+    }
+    private def pruned(g: String, kept: Map[String, Long],
+        lower: (BigInt, BigInt, String)): (BigInt, BigInt, String) = {
+      val n = g.split(" ").length
+      val (den, num, _) = lower
+      prefixStats(kept, n - 1).get(head(g, n - 1)) match {
+        case None => (den, num, "unkept prefix")
+        case Some((ck, types)) => kept.get(g) match {
+          case Some(c) => (BigInt(4) * ck * den,
+            (BigInt(4) * c - 3) * den + BigInt(3) * types * num, "kept")
+          case None => (BigInt(4) * ck * den,
+            BigInt(3) * types * num, "pruned, prefix kept")
+        }
+      }
+    }
+    def rat4(qg: String): (BigInt, BigInt, String) =
+      pruned(qg, kept4, rat3(tail(qg, 3)))
+    def rat5(pg: String): (BigInt, BigInt, String) =
+      pruned(pg, kept5, rat4(tail(pg, 4)))
+  }
+
+  private def grams(toks: Array[String], n: Int): Seq[String] =
+    if (toks.length < n) Seq.empty
+    else toks.sliding(n).map(_.mkString(" ")).toSeq
+
+  private def micro(r: (BigInt, BigInt, String)): Long =
+    math.round((math.log(r._1.toDouble) - math.log(r._2.toDouble)) * 1e6)
+
   test("fivegramSurprisalKn: the order-5 pruned ladder replayed " +
        "independently with BigInt rationals") {
-    // An independent straight-line replay of the DOCUMENTED math (not
-    // the DataFrame code): n-gram stats as plain maps, every branch's
-    // exact rational in BigInt, one round to micro-nats — on a corpus
-    // that exercises all three order-5 branches (kept, pruned with
-    // kept prefix, prefix entirely pruned) plus the no-evidence doc.
+    // a corpus that exercises all three order-5 branches (kept, pruned
+    // with kept prefix, prefix entirely pruned) plus the no-evidence doc
     val corpus = Seq((1L, "a b c d e"), (2L, "a b c d e"),
       (3L, "a b c d f"), (4L, "b c d e f"), (5L, "x y"))
-    def grams(toks: Array[String], n: Int): Seq[String] =
-      if (toks.length < n) Seq.empty
-      else toks.sliding(n).map(_.mkString(" ")).toSeq
-    val docToks = corpus.map { case (id, t) => id -> t.split(" ") }
-    def counts(n: Int): Map[String, Long] = docToks
-      .flatMap { case (_, t) => grams(t, n) }
-      .groupBy(identity).map { case (g, o) => g -> o.size.toLong }
     val (theta4, theta5) = (2L, 2L)
-    val tcnt = counts(3)
-    val pstats = tcnt.groupBy(_._1.split(" ").take(2).mkString(" "))
-      .map { case (p, m) => p -> ((m.values.sum, m.size.toLong)) }
-    val mid = tcnt.keys.groupBy(_.split(" ").drop(1).mkString(" "))
-      .map { case (s, o) => s -> o.size.toLong }
-    val mstats = mid.groupBy(_._1.split(" ").head)
-      .map { case (t, m) => t -> ((m.values.sum, m.size.toLong)) }
-    val bcnt = counts(2)
-    val cstats = bcnt.keys.groupBy(_.split(" ")(1))
-      .map { case (t, o) => t -> o.size.toLong }
-    val bv = BigInt(bcnt.size) +
-      BigInt(docToks.flatMap(_._2).distinct.size)
-    def rat3(tg: String): (BigInt, BigInt) = {
-      val Array(_, t2, t3) = tg.split(" ")
-      val (c12, t12types) = pstats(tg.split(" ").take(2).mkString(" "))
-      val m23 = mid(tg.split(" ").drop(1).mkString(" "))
-      val (m2, t2types) = mstats(t2)
-      val denmid = BigInt(4) * m2 * bv
-      val nummid = (BigInt(4) * m23 - 3) * bv +
-        BigInt(3) * t2types * (cstats(t3) + 1)
-      (BigInt(4) * c12 * denmid,
-        (BigInt(4) * tcnt(tg) - 3) * denmid + BigInt(3) * t12types * nummid)
-    }
-    val qall = counts(4)
-    val qpre = qall.filter(_._2 >= theta4)
-      .groupBy(_._1.split(" ").take(3).mkString(" "))
-      .map { case (p, m) => p -> ((m.values.sum, m.size.toLong)) }
-    def rat4(qg: String): (BigInt, BigInt) = {
-      val (den3, num3) = rat3(qg.split(" ").drop(1).mkString(" "))
-      qpre.get(qg.split(" ").take(3).mkString(" ")) match {
-        case Some((c123k, t123types)) =>
-          (BigInt(4) * c123k * den3,
-            if (qall(qg) >= theta4)
-              (BigInt(4) * qall(qg) - 3) * den3 + BigInt(3) * t123types * num3
-            else BigInt(3) * t123types * num3)
-        case None => (den3, num3)
-      }
-    }
-    val pall = counts(5)
-    val ppre = pall.filter(_._2 >= theta5)
-      .groupBy(_._1.split(" ").take(4).mkString(" "))
-      .map { case (p, m) => p -> ((m.values.sum, m.size.toLong)) }
-    def s5(pg: String): Long = {
-      val (den4, num4) = rat4(pg.split(" ").drop(1).mkString(" "))
-      val (den, num) = ppre.get(pg.split(" ").take(4).mkString(" ")) match {
-        case Some((c1234k, t1234types)) =>
-          (BigInt(4) * c1234k * den4,
-            if (pall(pg) >= theta5)
-              (BigInt(4) * pall(pg) - 3) * den4 +
-                BigInt(3) * t1234types * num4
-            else BigInt(3) * t1234types * num4)
-        case None => (den4, num4)
-      }
-      math.round((math.log(den.toDouble) - math.log(num.toDouble)) * 1e6)
-    }
+    val kn = new KnReplay(corpus.map(_._2), theta4, theta5)
     // the corpus hits all three branches — assert that, so a corpus
     // edit can't silently hollow the test out
-    assert(ppre.contains("a b c d") && pall("a b c d f") < theta5 &&
-      !ppre.contains("b c d e"), "branch coverage lost")
-    val expected = docToks.map { case (id, toks) =>
-      val ss = grams(toks, 5).map(s5)
+    assert(kn.counts(5).keys.map(kn.rat5(_)._3).toSet ===
+      Set("kept", "pruned, prefix kept", "unkept prefix"),
+      "branch coverage lost")
+    val expected = corpus.map { case (id, t) =>
+      val ss = grams(t.split(" "), 5).map(g => micro(kn.rat5(g)))
       id -> ((ss.size.toLong, ss.sum,
         if (ss.nonEmpty) Some(ss.sum / ss.size) else None))
     }.toMap
@@ -551,6 +563,58 @@ class QualityModelsSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(out === expected)
     assert(out(5L) === ((0L, 0L, None)))
+  }
+
+  test("lmHeldoutFivegram / lmHeldoutQuadgram: the position-form ladder " +
+       "replayed with BigInt rationals on a split-controlled corpus") {
+    // md5-bucket rule: doc_ids 1, 2, 4, 6 land in train, 5 in val, 3 in
+    // test. The test doc's sites walk every position-form branch of
+    // every order (asserted below); the stats are train-split only.
+    val corpus = Seq((1L, "a b c d e"), (2L, "a b c d e"),
+      (4L, "a b c d f"), (6L, "b c d e f"), (5L, "c d e f g"),
+      (3L, "a b c d e q b c d f x a b c d z"))
+    val split = Map(1L -> "train", 2L -> "train", 4L -> "train",
+      6L -> "train", 5L -> "val", 3L -> "test")
+    val d = corpus.toDF("doc_id", "text")
+    assert(TextAnalysis.holdoutSplit(d.withColumn("lang", lit("en"))
+        .withColumn("source", lit("s")))
+      .select("doc_id", "split").as[(Long, String)].collect().toMap === split)
+    val kn = new KnReplay(corpus.filter(r => split(r._1) == "train")
+      .map(_._2), 2L, 2L)
+    def sites(n: Int) = corpus.flatMap { case (id, t) =>
+      grams(t.split(" "), n).map(split(id) -> _) }
+    // the per-split (model, split) -> (n, unseen, mean) rows the
+    // operators must return, from (lower, top) scores per site
+    def expected(n: Int, kept: Map[String, Long],
+        score: String => (Long, Long), models: (String, String)) =
+      sites(n).groupBy(_._1).toSeq.flatMap { case (sp, ss) =>
+        val scored = ss.map(s => score(s._2))
+        val unseen = ss.count(s => !kept.contains(s._2)).toLong
+        val cnt = ss.size.toLong
+        Seq((models._1, sp) -> ((cnt, unseen, scored.map(_._1).sum / cnt)),
+          (models._2, sp) -> ((cnt, unseen, scored.map(_._2).sum / cnt)))
+      }.toMap
+    def got(df: org.apache.spark.sql.DataFrame, unit: String) =
+      df.select("model", "split", s"n_$unit", s"unseen_$unit", "mean_micro")
+        .as[(String, String, Long, Long, Long)].collect()
+        .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+    def tail(g: String, m: Int) = g.split(" ").takeRight(m).mkString(" ")
+
+    val five = sites(5).map(_._2)
+    assert(five.map(kn.rat5(_)._3).toSet ===
+      Set("kept", "pruned, prefix kept", "unkept prefix"))
+    assert(five.map(g => kn.rat4(tail(g, 4))._3).toSet ===
+      Set("kept", "pruned, prefix kept", "unkept prefix"))
+    assert(five.map(g => kn.rat3(tail(g, 3))._3).toSet ===
+      Set("seen context", "middle only", "continuation only"))
+    assert(got(QualityModels.lmHeldoutFivegram(d), "fivegrams") ===
+      expected(5, kn.kept5,
+        g => (micro(kn.rat4(tail(g, 4))), micro(kn.rat5(g))),
+        ("kn_quadgram", "kn_fivegram")))
+    assert(got(QualityModels.lmHeldoutQuadgram(d), "quadgrams") ===
+      expected(4, kn.kept4,
+        g => (micro(kn.rat3(tail(g, 3))), micro(kn.rat4(g))),
+        ("kn_trigram", "kn_quadgram")))
   }
 
   test("trigramSurprisalKn: probability sanity — every seen trigram " +
@@ -577,11 +641,30 @@ class QualityModelsSpec extends SparkSpec {
       spark.range(1).select(QualityModels.guardedModelMap(
         "unit", lit(QualityModels.maxBroadcastModelRows + 1), mk)).collect()
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(ex).exists(_.contains("unit: 5000001 model rows exceed " +
       "the broadcast-model bound 5000000")), s"got: $ex")
+  }
+
+  test("knGuarded: each KN order's int64 guard passes the score through " +
+       "below its limit and fails loudly, naming the operator, at it") {
+    Seq(3 -> 5.7e17, 4 -> 1.4e17, 5 -> 3.5e16).foreach { case (n, limit) =>
+      val (site, op) = Seq("tg" -> "trigram", "qg" -> "quadgram",
+        "pg" -> "fivegram")(n - 3)
+      def guarded(product: Double, heldout: Boolean) = Seq("a b c")
+        .toDF(site).select(QualityModels.knGuarded(n, heldout,
+          Seq(lit(product / 4), lit(4L)), lit(7.4d)))
+      assert(guarded(limit * 0.999, heldout = false).as[Long].head() === 7L)
+      assert(guarded(limit * 0.999, heldout = true).as[Long].head() === 7L)
+      val typeForm = intercept[Exception](
+        guarded(limit, heldout = false).collect())
+      assert(msgs(typeForm).exists(m => m.contains(s"$op KN: ") &&
+        m.contains(" overflows the exact int64 rational") &&
+        m.contains(s"($site=a b c)")), s"got: $typeForm")
+      val heldout = intercept[Exception](
+        guarded(limit, heldout = true).collect())
+      assert(msgs(heldout).exists(_.contains(s"$op KN heldout: ")),
+        s"got: $heldout")
+    }
   }
 
   test("vocabSetRow refuses a vocabSize past the broadcast-model bound") {
@@ -591,6 +674,109 @@ class QualityModelsSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("broadcast-model-sized"))
   }
+
+  test("bigramSurprisalKn: hand-computed rational formula on a tiny corpus") {
+    // corpus: "a b a b" and "b c" -> bigrams: (a b)x2, (b a)x1, (b c)x1
+    // prefix counts: a->2 (types 1), b->2 (types 2); unigrams:
+    // a:2 b:3 c:1, N=6, V=3
+    val d = Seq((1L, "a b a b", "s"), (2L, "b c", "s"))
+      .toDF("doc_id", "text", "source")
+    val out = QualityModels.bigramSurprisalKn(d)
+      .select("doc_id", "n_bigrams", "surprisal_micro")
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    def s(c12: Long, c1: Long, t1types: Long, u2: Long): Long = {
+      val nv = 6L + 3L
+      math.round((math.log((4L * c1 * nv).toDouble)
+        - math.log(((4L * c12 - 3L) * nv + 3L * t1types * (u2 + 1)).toDouble))
+        * 1.0e6)
+    }
+    val sAB = s(2, 2, 1, 3) // p(b|a): c12=2, c1=2, T1=1, u(b)=3
+    val sBA = s(1, 2, 2, 2) // p(a|b): c12=1, c1=2, T1=2, u(a)=2
+    val sBC = s(1, 2, 2, 1) // p(c|b): c12=1, c1=2, T1=2, u(c)=1
+    assert(out(1L) === ((1L, 3L, 2 * sAB + sBA)))
+    assert(out(2L) === ((2L, 1L, sBC)))
+  }
+
+  test("lmHeldoutBigram: backoff beats add-1 where V is large and test " +
+      "bigrams are seen-but-rare (the CCNet case)") {
+    // Every train doc carries the shared phrase PLUS five unique hapax
+    // words, blowing V up; held-out docs are the phrase alone. Add-1
+    // then crushes every seen phrase bigram toward 1/V while absolute
+    // discounting keeps p ≈ (c12 − D)/c1 — the measured reason CCNet
+    // gates with a backoff LM, demonstrated rather than asserted.
+    // (On the closed-vocab sf testdata both models see every test
+    // bigram and the split means differ only in noise — see NOTES_r14.)
+    def bucket(id: Long): Long = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+        .digest(id.toString.getBytes("UTF-8"))
+      java.lang.Long.parseLong(md.take(4).map("%02x".format(_)).mkString, 16)
+    }
+    val trainT = 4294967296L * 80 / 100
+    val phrase = "the cat sat on the mat"
+    val docs = (0L until 200L).map { i =>
+      val text = if (bucket(i) < trainT)
+        s"$phrase u${i}a u${i}b u${i}c u${i}d u${i}e"
+      else phrase
+      (i, text, "s")
+    }.toDF("doc_id", "text", "source")
+    val rows = QualityModels.lmHeldoutBigram(docs)
+      .select("model", "split", "n_bigrams", "unseen_bigrams", "mean_micro")
+      .as[(String, String, Long, Long, Long)].collect()
+    assert(rows.map(_._1).distinct.sorted.toSeq
+      === Seq("add1", "backoff", "kn_cont"))
+    val byKey = rows.map(r => (r._1, r._2) -> r).toMap
+    val add1 = byKey(("add1", "test")); val kn = byKey(("backoff", "test"))
+    val knc = byKey(("kn_cont", "test"))
+    assert(add1._3 === kn._3 && add1._3 === knc._3,
+      "all models score the same bigram stream")
+    assert(add1._4 === 0L, "phrase bigrams are all seen in train")
+    assert(kn._5 * 3 < add1._5,
+      s"backoff (${kn._5}) must beat add-1 (${add1._5}) decisively " +
+        "on seen-but-rare bigrams under a large vocabulary")
+    assert(knc._5 * 3 < add1._5,
+      s"KN continuation backoff (${knc._5}) must beat add-1 too")
+  }
+
+  test("pavPools: hand-computed pooling, leftmost-first, ties stand") {
+    // monotone input: untouched
+    assert(QualityModels.pavPools(Seq((10L, 1L), (10L, 5L), (10L, 9L)))
+      === Seq((0, 0, 10L, 1L), (1, 1, 10L, 5L), (2, 2, 10L, 9L)))
+    // single violation pools the pair: rates 0.8, 0.2 -> pooled 0.5
+    assert(QualityModels.pavPools(Seq((10L, 8L), (10L, 2L)))
+      === Seq((0, 1, 20L, 10L)))
+    // cascade: [0.9, 0.5, 0.1] -> leftmost merge (0.9,0.5)=0.7, then
+    // 0.7 > 0.1 merges again -> one pool of rate 0.5
+    assert(QualityModels.pavPools(Seq((10L, 9L), (10L, 5L), (10L, 1L)))
+      === Seq((0, 2, 30L, 15L)))
+    // equal rates are NOT violations (strict comparison)
+    assert(QualityModels.pavPools(Seq((10L, 4L), (20L, 8L)))
+      === Seq((0, 0, 10L, 4L), (1, 1, 20L, 8L)))
+    // weighted pooling: (n=1,p=1 rate 1.0) then (n=99,p=0) -> 1/100
+    assert(QualityModels.pavPools(Seq((1L, 1L), (99L, 0L)))
+      === Seq((0, 1, 100L, 1L)))
+  }
+
+  test("qualityCalibrated: monotone fit, reduced mean gap vs the diagram") {
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val cal = QualityModels.qualityCalibrated(docs)
+      .select("bin", "n_docs", "obs_pos_bp", "cal_bp", "gap_bp")
+      .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    // the calibrated curve is non-decreasing in the bin order — the
+    // isotonic contract raw mean_pred violates on this model
+    assert(cal.map(_._4).zip(cal.map(_._4).tail)
+      .forall { case (a, b) => a <= b }, "cal_bp must be monotone")
+    assert(cal.forall { case (_, _, obs, calv, gap) =>
+      gap === math.abs(calv - obs) })
+    val diag = QualityModels.qualityCalibration(docs)
+      .select("gap_bp").as[Long].collect()
+    assert(cal.map(_._5).sum / cal.length < diag.sum / diag.length,
+      "PAV must reduce the mean reliability gap")
+  }
+
+  /** Every message on an exception's cause chain. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty
+    else Option(t.getMessage).toSeq ++ msgs(t.getCause)
 
   implicit private class Map2Ops(rows: Array[(Long, Long, Long, Long)]) {
     def toMap2: Map[Long, (Long, Long, Long)] =
