@@ -7,9 +7,24 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Dumps formatted physical plans for the headline queries to PLANS.md
   * so plan-level properties (PushedFilters, ReadSchema pruning, join
   * strategies, WholeStageCodegen spans) are reviewable as an artifact,
-  * not just claimed in comments.
+  * not just claimed in comments. Ids that only number a run (expression
+  * ids, RDD ids, exchange plan ids, checkpoint call sites) are masked,
+  * so the file changes only when a plan does.
   */
 object PlanAudit {
+  /** Replaces run-numbering ids with fixed placeholders: `#123` → `#N`,
+    * `RDD[66]` → `RDD[N]`, `plan_id=98093` → `plan_id=N`, lambda
+    * variables `lambda x_130` → `lambda x_N` (a JVM-wide counter), JVM
+    * lambda classes `$Lambda$6553/0x7f..@1cf8` → `$Lambda$N` and
+    * `at <File>.scala:<line>` → `at <File>.scala:N`. */
+  def mask(plan: String): String =
+    plan.replaceAll("#\\d+", "#N")
+      .replaceAll("(lambda \\w+?)_\\d+\\b", "$1_N")
+      .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+", "\\$Lambda\\$N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("(at \\w+\\.scala):\\d+", "$1:N")
+
   // every registered query, alphabetical — no unaudited plans
   private def audited = SparkEntry.queries.keys.toSeq.sorted
 
@@ -29,12 +44,13 @@ object PlanAudit {
     sb ++= "Generated by `graft.PlanAudit`. Things to check per plan:\n"
     sb ++= "PushedFilters on parquet scans, ReadSchema pruned to used\n"
     sb ++= "columns, no forced broadcast of SF-scaling tables, wide\n"
-    sb ++= "WholeStageCodegen spans.\n"
+    sb ++= "WholeStageCodegen spans. Expression, RDD, exchange and\n"
+    sb ++= "lambda-variable ids and call-site lines are masked (`N`).\n"
     val names = if (only.nonEmpty) audited.filter(only.contains) else audited
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n```\n"
-      sb ++= df.queryExecution.explainString(FormattedMode)
+      sb ++= mask(df.queryExecution.explainString(FormattedMode))
       sb ++= "```\n"
     }
     Files.writeString(Paths.get(outPath), sb.toString)

@@ -762,9 +762,10 @@ object ScaleProbe {
     def candPerVertex(c: Int): Long = {
       // per-vertex average candidate count over a 64-query sample of
       // the same probe×assigned join the graph build runs
-      val cents = operators.Similarity.defaultCentroids(emb, c)
-      operators.Similarity.annIvfCandidates(
-        emb, cents, numQueries = 64, nProbe = 4).count() / 64
+      val v = operators.Similarity.vectors(emb)
+      operators.Similarity.ivfCandidates(v,
+        operators.Similarity.defaultCentroids(emb, c),
+        v.filter(col("vec_id") < 64), nProbe = 4).count() / 64
     }
     val adaptiveC = operators.Similarity.adaptiveCentroids(n)
     val fixed = candPerVertex(16)
@@ -936,6 +937,10 @@ object ScaleProbe {
   private def annProbe(spark: SparkSession, f: Int, dir: String): Unit = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val numQ = 8
+    val v = operators.Similarity.vectors(emb)
+    def ivf(c: Int): DataFrame = operators.Similarity.ivfCandidates(v,
+      operators.Similarity.defaultCentroids(emb, c),
+      v.filter(col("vec_id") < numQ), 4)
     val log2f = 31 - Integer.numberOfLeadingZeros(f) // factors are powers of 2
 
     val cases: Seq[(String, DataFrame)] = Seq(
@@ -945,12 +950,8 @@ object ScaleProbe {
       // occupancy is E[n/2^planes], so +1 plane exactly cancels each 2x)
       s"ann_lsh scaled(planes=${6 + log2f})" ->
         operators.Similarity.annLshCandidates(emb, numQ, 6 + log2f, 1, 64),
-      "ann_ivf fixed(C=16)" ->
-        operators.Similarity.annIvfCandidates(emb,
-          operators.Similarity.defaultCentroids(emb, 16), numQ, 4),
-      s"ann_ivf scaled(C=${16 * f})" ->
-        operators.Similarity.annIvfCandidates(emb,
-          operators.Similarity.defaultCentroids(emb, 16 * f), numQ, 4))
+      "ann_ivf fixed(C=16)" -> ivf(16),
+      s"ann_ivf scaled(C=${16 * f})" -> ivf(16 * f))
 
     cases.foreach { case (name, cand) =>
       val t0 = System.nanoTime()

@@ -754,14 +754,17 @@ object QualityModels {
     * corpus, with the column names [[trigramKn]] reads: trigram types
     * (tg, c123), (t1 t2) prefix stats (p12 → c12, t12types), the
     * middle-order continuation table (s23 → m23) and its stats (mt2 →
-    * m2, t2types), the continuation-unigram stats (ct3 → cont), the
-    * bigram-type total (b) and the vocabulary size (v). Every frame
-    * is a map-side-combined keyed aggregate. */
+    * m2, t2types), the bigram counts (bg, cb), the continuation-unigram
+    * stats (ct3 → cont), the bigram-type total (b) and the vocabulary
+    * size (v). Every frame is a map-side-combined keyed aggregate;
+    * tcnt and bcnt are the checkpointed corpus counts. */
   private final case class TrigramFrames(tcnt: DataFrame,
-      pstats: DataFrame, mid: DataFrame, mstats: DataFrame,
+      pstats: DataFrame, mid: DataFrame, mstats: DataFrame, bcnt: DataFrame,
       cstats: DataFrame, btot: DataFrame, vtot: DataFrame) {
-    def map(g: DataFrame => DataFrame): TrigramFrames = TrigramFrames(
-      g(tcnt), g(pstats), g(mid), g(mstats), g(cstats), g(btot), g(vtot))
+    /** Applies `g` to the DERIVED frames; the corpus counts tcnt and bcnt
+      * are already materialized and pass through as they are. */
+    def mapDerived(g: DataFrame => DataFrame): TrigramFrames = TrigramFrames(
+      tcnt, g(pstats), g(mid), g(mstats), bcnt, g(cstats), g(btot), g(vtot))
   }
 
   private def trigramModelFrames(corpus: DataFrame): TrigramFrames = {
@@ -795,7 +798,7 @@ object QualityModels {
     val btot = bcnt.agg(count(lit(1)).as("b"))
     val vtot = corpus.select(explode(tokens(col("text"))).as("t"))
       .agg(countDistinct(col("t")).as("v"))
-    TrigramFrames(tcnt, pstats, mid, mstats, cstats, btot, vtot)
+    TrigramFrames(tcnt, pstats, mid, mstats, bcnt, cstats, btot, vtot)
   }
 
   /** Order-n type counts (g, c<1..n>) — checkpointed: they feed the
@@ -882,14 +885,11 @@ object QualityModels {
                        valPct: Int = 10): DataFrame = {
     val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
     val f = trigramModelFrames(train)
-    // bigram-KN stats for the comparison model (train split)
-    val btr = train
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("cb2"))
-      .localCheckpoint() // reused by bpstats + the scored join — one scan
-    val bpstats = btr
+    // bigram-KN stats for the comparison model, over the train-split
+    // bigram counts the trigram frames already materialized
+    val bpstats = f.bcnt
       .groupBy(ngTok(col("bg"), 0).as("bt1"))
-      .agg(sum(col("cb2")).as("bc1"), count(lit(1)).as("bt1types"))
+      .agg(sum(col("cb")).as("bc1"), count(lit(1)).as("bt1types"))
     val scored = tagged
       .select(col("split"),
         explode(wordShingles(tokens(col("text")), 3)).as("tg"))
@@ -902,11 +902,11 @@ object QualityModels {
       .join(f.mid, Seq("s23"), "left")
       .join(f.mstats, col("t2") === col("mt2"), "left")
       .join(f.cstats, col("t3") === col("ct3"), "left")
-      .join(btr, col("s23") === col("bg"), "left")
+      .join(f.bcnt, col("s23") === col("bg"), "left")
       .join(bpstats, col("t2") === col("bt1"), "left")
       .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
     knHeldoutMeans(scored, 3, col("c123").isNull, Seq(
-      "kn_bigram" -> bigramKn(col("bc1"), col("cb2"), col("bt1types"),
+      "kn_bigram" -> bigramKn(col("bc1"), col("cb"), col("bt1types"),
         col("cont"), col("b") + col("v"), positions = true)
         .micro.cast("long"),
       "kn_trigram" -> knGuarded(3, heldout = true,
@@ -1026,11 +1026,10 @@ object QualityModels {
   def knPruneCurve(docs: DataFrame,
                    thetas: Seq[Long] = Seq(1L, 2L, 4L)): DataFrame = {
     require(thetas.nonEmpty && thetas.forall(_ >= 1))
-    val f0 = trigramModelFrames(docs)
-    // model-sized frames reused |thetas| times — checkpoint so the
-    // corpus scans don't replicate per threshold
+    // the derived model-sized frames are reused |thetas| times —
+    // checkpoint them so their aggregates don't replay per threshold
+    val f = trigramModelFrames(docs).mapDerived(_.localCheckpoint())
     val qall = ngramCounts(docs, 4)
-    val f = f0.map(_.localCheckpoint())
     thetas.map { th =>
       scoreQuadgramTypes(quadgramRationalTypes(qall,
           keptPrefixStats(qall.filter(col("c1234") >= th), 4), th, f))

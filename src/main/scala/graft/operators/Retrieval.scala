@@ -190,7 +190,8 @@ object Retrieval {
     val lex = shardedTopK(lexScored, col("score_micro"), kFuse, shards)
       .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
 
-    val semScored = Similarity.cosineCandidates(emb, numQueries)
+    val v = Similarity.vectors(emb)
+    val semScored = Similarity.fp32Pairs(v, Similarity.prefixQueries(v, numQueries))
       .select(col("query_id"), col("vec_id").as("doc_id"), col("cos"))
     val sem = shardedTopK(semScored, col("cos"), kFuse, shards)
       .select(col("query_id"), col("doc_id"), col("rnk").as("sem_rnk"))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window => W}
 
 import graft.core.Tables
-import graft.functions.{CosineSimilarity, DotLong, HyperplaneBucket, SqDistLong, SumSqLong, SumSqLongAsDouble}
+import graft.functions.{CosineSimilarity, DotLong, HyperplaneBucket, Int8Quantize, SqDistLong,
+  SumSqLong, SumSqLongAsDouble}
 import graft.functions.TextFunctions._
 
 /** Embedding similarity: cosine near-dup pairs, brute-force top-k ANN
@@ -187,7 +188,7 @@ object Similarity {
   }
 
   /** THE nearest-centroid assignment rule — one implementation shared
-    * by semDedup, the IVF index build, and (via ivfIndex) IVF serving,
+    * by semDedup, the IVF index build, and (via ivfIndexQ) IVF serving,
     * so the tie-break-sensitive ordering (rounded-6 ccos desc, then
     * smallest cid via the negated-cid struct) cannot drift between the
     * write path, the read path, and the SQL oracles that replicate it.
@@ -232,74 +233,6 @@ object Similarity {
   def semDedupQuery(spark: SparkSession, dir: String): DataFrame =
     semDedup(Tables.embeddings(spark, dir), numCentroids = 16, tau = 0.40)
       .orderBy(col("vec_id"))
-
-  /** Shared top-k tail of every ANN variant: rank candidates per query
-    * by (rounded cosine desc, id) — ties break identically in the
-    * DuckDB oracles — and keep rnk <= k.
-    * @param cand (query_id, vec_id, cos) candidate rows */
-  private def topK(cand: DataFrame, k: Int): DataFrame = {
-    val w = W.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand.select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Brute-force cosine top-k for a bounded query set (vec_id < 8).
-    *
-    * Scale shape: the query side is broadcast (bounded by construction),
-    * so the big side is scanned exactly once with no shuffle; the only
-    * shuffle is the final per-query top-k, whose input is |Q| * n rows
-    * pre-truncatable by partial top-k. */
-  def annCosineTopK(emb: DataFrame, numQueries: Int, k: Int): DataFrame =
-    topK(cosineCandidates(emb, numQueries), k)
-
-  /** The fp32 broadcast-query candidate block — one copy of the
-    * bounded-query scan (broadcast q side, self-pair exclusion,
-    * rounded-6 cosine) shared by annCosineTopK, annHardNegatives, and
-    * the hybrid RRF dense side, so the conventions the DuckDB oracles
-    * replicate live in one place. Emits (query_id, vec_id, cos, ...).*/
-  private[graft] def cosineCandidates(emb: DataFrame,
-                                      numQueries: Int): DataFrame = {
-    val v = vectors(emb)
-    cosineCandidatesQ(v, v.filter(col("vec_id") < numQueries)
-      .toDF("query_id", "eq"))
-  }
-
-  /** The same candidate block for an EXPLICIT bounded query frame
-    * (query_id, eq) — the held-out-query evaluation path. */
-  private[graft] def cosineCandidatesQ(v: DataFrame, q: DataFrame): DataFrame =
-    broadcast(q)
-      .join(v, col("query_id") =!= col("vec_id"))
-      .withColumn("cos",
-        round(CosineSimilarity(col("eq"), col("e")), 6))
-
-  def annCosineTopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annCosineTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
-      .orderBy(col("query_id"), col("rnk"))
-
-  /** Hard-negative mining for contrastive retrieval training (the
-    * DPR/ANCE shape — Karpukhin et al. 2020, Xiong et al. 2021): per
-    * query, the top-k candidates in the cosine band [lo, hi) —
-    * similar enough to be confusable (the negatives that actually
-    * teach the model), but below the near-dup/positive threshold so
-    * no false negative sneaks into the training pair. Plain top-k
-    * mines easy negatives; the band is the whole point.
-    *
-    * Same scale shape as annCosineTopK: bounded query side broadcast,
-    * one corpus scan, band filter BEFORE the rank shuffle (the band
-    * prunes most of the |Q|·n candidate stream in-scan); at corpus
-    * scale stage 1 swaps for the IVF/int8 shortlist unchanged. */
-  def annHardNegatives(emb: DataFrame, numQueries: Int, k: Int,
-                       lo: Double = 0.15, hi: Double = 0.40): DataFrame = {
-    require(lo < hi, s"band [$lo, $hi) is empty")
-    topK(cosineCandidates(emb, numQueries)
-      .filter(col("cos") >= lo && col("cos") < hi), k)
-  }
-
-  def annHardNegativesQuery(spark: SparkSession, dir: String): DataFrame =
-    annHardNegatives(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
-      .orderBy(col("query_id"), col("rnk"))
 
   /** Greedy k-center coreset selection (Gonzalez 1985 farthest-point
     * traversal; the coreset objective of Sener & Savarese 2018): pick
@@ -593,7 +526,7 @@ object Similarity {
       v => pmod(v("vec_id"), lit(50)) === 0, tau = 0.40)
       .orderBy(col("vec_id"))
 
-  // ---------------------------------------------------------------- LSH ANN
+  // ---------------------------------------------------------------- LSH
 
   /** Deterministic pseudo-random hyperplanes: component (p, d) is an
     * md5-derived value in [-1, 1). Driver-side constants — the plane
@@ -616,184 +549,7 @@ object Similarity {
   private def probeMasks(numPlanes: Int, probeHamming: Int): Seq[Int] =
     (0 until (1 << numPlanes)).filter(m => Integer.bitCount(m) <= probeHamming)
 
-  /** Random-hyperplane LSH ANN: `numPlanes` sign bits → 2^planes
-    * buckets; queries probe every bucket within Hamming distance
-    * `probeHamming` of their own (sum of C(planes, i) probes), compute
-    * exact cosine only within probed buckets, keep top-k.
-    *
-    * Scale shape: candidate count per query is bounded by probe-bucket
-    * occupancy (E[n/2^planes * probes]), not n — this is the O(n·b)
-    * path that replaces cosineNearDupPairs' O(n²) at 100 TB.
-    *
-    * Tuning (see the recall property test in SimilaritySpec):
-    * more planes → smaller buckets, cheaper probes, lower recall at
-    * fixed probeHamming; more probeHamming → recall rises toward
-    * brute force (at probeHamming = numPlanes it IS brute force).
-    * Raising probeHamming by 1 can only grow each query's candidate
-    * set, so recall is monotone in it. */
-  def annLshTopK(emb: DataFrame, numQueries: Int, k: Int,
-                 numPlanes: Int = 6, probeHamming: Int = 1,
-                 dim: Int = 64): DataFrame =
-    topK(annLshCandidates(emb, numQueries, numPlanes, probeHamming, dim), k)
-
-  /** The candidate frame (query_id, vec_id, cos) BEFORE top-k — exposed
-    * so ScaleProbe can audit per-query candidate volume. Occupancy of
-    * a probed bucket is E[n/2^planes], so planes must rise by 1 per
-    * corpus doubling to hold per-bucket occupancy flat; total
-    * candidates then grow only with the multi-probe bucket count
-    * (1 + planes at probeHamming=1), i.e. O(log n) versus the linear
-    * growth of fixed knobs — measured in ScaleProbe.annProbe. */
-  private[graft] def annLshCandidates(emb: DataFrame, numQueries: Int,
-                                      numPlanes: Int, probeHamming: Int,
-                                      dim: Int): DataFrame = {
-    require(probeHamming >= 0 && probeHamming <= numPlanes,
-      s"probeHamming must be in [0, numPlanes], got $probeHamming")
-    val v = vectors(emb)
-    // Bucket assignment is the ONE expression that touches every corpus
-    // vector, so it is the native codegen'd HyperplaneBucket — a
-    // primitive numPlanes×dim loop, not numPlanes interpreted HOF
-    // folds (bit-parity with the old fold pinned by HyperplaneBucketSpec).
-    val vb = v.withColumn("bucket",
-      HyperplaneBucket(col("e"), planeMatrix(numPlanes, dim)))
-    // Explode the LITERAL mask array first, then XOR as a plain column
-    // op — keeps the probe expansion codegen'd too (a transform lambda
-    // over the masks would be the plan's only interpreted expression).
-    val q = vb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("bucket"),
-        explode(array(probeMasks(numPlanes, probeHamming).map(lit): _*)).as("m"))
-      .select(col("query_id"), col("eq"),
-        col("bucket").bitwiseXOR(col("m")).as("probe"))
-
-    broadcast(q)
-      .join(vb, col("probe") === col("bucket") &&
-        col("query_id") =!= col("vec_id"))
-      .withColumn("cos",
-        round(CosineSimilarity(col("eq"), col("e")), 6))
-  }
-
-  def annLshTopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annLshTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 3)
-      .orderBy(col("query_id"), col("rnk"))
-
-  // ---------------------------------------------------------------- IVF ANN
-
-  /** IVF (inverted-file) cosine ANN — the other standard scale path
-    * next to hyperplane LSH: a coarse quantizer of `numCentroids`
-    * centroid vectors partitions the corpus into cells; each query
-    * probes its `nProbe` nearest cells and computes exact cosine only
-    * there. Candidates per query ≈ nProbe · n/C — linear scan of a
-    * tunable corpus fraction, never all of n.
-    *
-    * Scale shape: cell assignment is ONE map-side pass (corpus ×
-    * broadcast centroid table — C is a bounded model constant, the
-    * moral equivalent of the LSH plane matrix) reduced by a map-side-
-    * combined max_by aggregate, and candidate generation is an
-    * equi-join on the cell id. No window over the full corpus, no
-    * all-pairs anywhere.
-    *
-    * Centroids are the first `numCentroids` vectors — deterministic,
-    * so the DuckDB oracle replicates assignment bit-for-bit. A real
-    * deployment plugs TRAINED k-means centroids into the same plan
-    * (assignment, probing, ranking are unchanged); training itself is
-    * a separate offline job, and its floating-point reductions are not
-    * cross-engine reproducible, which is exactly why the oracle pins
-    * the serving path, not the training path. */
-  def annIvfTopK(emb: DataFrame, numQueries: Int, k: Int,
-                 numCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    require(nProbe >= 1 && nProbe <= numCentroids,
-      s"nProbe must be in [1, numCentroids], got $nProbe")
-    topK(annIvfCandidates(emb, defaultCentroids(emb, numCentroids),
-      numQueries, nProbe), k)
-  }
-
-  /** The untrained default coarse quantizer: the first C vectors as
-    * centroids. ONE definition — the serving path and ScaleProbe's
-    * occupancy audit must quantize identically or the audit measures a
-    * different operator than it claims. */
-  def defaultCentroids(emb: DataFrame, numCentroids: Int): DataFrame =
-    vectors(emb).filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("cid"), col("e").as("ce"))
-
-  /** IVF serving with an EXPLICIT centroid table (cid, ce) — the plan
-    * the oracle pins, unchanged whether centroids are the deterministic
-    * first-C default or trained by [[trainIvfCentroids]]. */
-  def annIvfTopKWith(emb: DataFrame, cents: DataFrame, numQueries: Int,
-                     k: Int, nProbe: Int): DataFrame =
-    topK(annIvfCandidates(emb, cents, numQueries, nProbe), k)
-
-  /** The candidate frame (query_id, vec_id, cos) BEFORE top-k — shared
-    * serving path for any centroid table, and exposed so ScaleProbe can
-    * audit candidates/query (≈ nProbe · n/C; C must grow linearly with
-    * n to hold the per-query scan constant). */
-  private[graft] def annIvfCandidates(emb: DataFrame, cents: DataFrame,
-                                      numQueries: Int, nProbe: Int): DataFrame = {
-    val (assigned, probes) = ivfIndex(emb, cents, numQueries, nProbe)
-    broadcast(probes)
-      .join(assigned, col("probe") === col("cell") &&
-        col("query_id") =!= col("vec_id"))
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-  }
-
-  /** IVF index + probe frames shared by the fp32 and two-stage serving
-    * paths: `assigned` (vec_id, cell, e) — each corpus vector in its
-    * single nearest cell — and `probes` (query_id, eq, probe) — each
-    * query fanned to its top-nProbe cells. A (query, vector) candidate
-    * pair arises at most once downstream because a vector lives in
-    * exactly one cell. */
-  private def ivfIndex(emb: DataFrame, cents: DataFrame, numQueries: Int,
-                       nProbe: Int): (DataFrame, DataFrame) =
-    ivfIndexOpt(emb, cents, Some(numQueries), nProbe)
-
-  /** numQueries = None means EVERY corpus vector is a query (the
-    * knnGraph corpus-as-queries contract) — no vec_id bound at all, so
-    * a Long id space (ids >= 2^31 from sharded ingest) still gets its
-    * full adjacency; an Int.MaxValue cap would silently drop those. */
-  private def ivfIndexOpt(emb: DataFrame, cents: DataFrame,
-                          numQueries: Option[Int],
-                          nProbe: Int): (DataFrame, DataFrame) = {
-    val v = vectors(emb)
-    ivfIndexQ(v, cents, numQueries.fold(v)(n => v.filter(col("vec_id") < n)),
-      nProbe)
-  }
-
-  /** The IVF index for an EXPLICIT query-vector frame (vec_id, e) —
-    * the held-out-query evaluation path shares the exact serving
-    * plan (assignment rule, probe ranking, tiebreaks) with the
-    * vec_id-prefix defaults above. */
-  private def ivfIndexQ(v: DataFrame, cents: DataFrame, qside: DataFrame,
-                        nProbe: Int): (DataFrame, DataFrame) = {
-    // nearest centroid per vector: the shared assignToCells rule —
-    // aggregates combine map-side, so the C-fold row amplification
-    // never crosses the exchange
-    val assigned = assignToCells(v, cents)
-      .select(col("vec_id"), col("cell"), col("e"))
-
-    // query probes: top-nProbe centroids (bounded rows — window is
-    // fine; the crossJoin is queries-only, |Q|·C rows — or, in
-    // all-queries mode, |corpus|·C map-side before the per-vector
-    // window, the knnGraph build cost)
-    val wProbe = W.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val probes = qside
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", round(CosineSimilarity(col("e"), col("ce")), 6))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("e").as("eq"),
-        col("cid").as("probe"))
-    (assigned, probes)
-  }
-
-  /** IVF candidates for an explicit query frame — [[annIvfCandidates]]
-    * with the query set passed in rather than a vec_id prefix. */
-  private def annIvfCandidatesQ(v: DataFrame, cents: DataFrame,
-                                qv: DataFrame, nProbe: Int): DataFrame = {
-    val (assigned, probes) = ivfIndexQ(v, cents, qv, nProbe)
-    broadcast(probes)
-      .join(assigned, col("probe") === col("cell") &&
-        col("query_id") =!= col("vec_id"))
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-  }
+  // ------------------------------------------------- trainers and codecs
 
   /** Offline spherical k-means (Lloyd) training for the IVF coarse
     * quantizer. Each iteration is one corpus scan feeding two map-side-
@@ -844,10 +600,6 @@ object Similarity {
     cents
   }
 
-  def annIvfTopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annIvfTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 3)
-      .orderBy(col("query_id"), col("rnk"))
-
   /** EXACT-INTEGER spherical k-means — [[trainIvfCentroids]]'s
     * oracle-replicable twin, closing the gap where every oracle-green
     * IVF query served from the deterministic first-C centroids while
@@ -880,9 +632,7 @@ object Similarity {
   def trainIvfCentroidsExact(emb: DataFrame, numCentroids: Int, iters: Int,
                              dim: Int = 64): DataFrame = {
     require(numCentroids >= 1 && iters >= 0)
-    val vm = vectors(emb).select(col("vec_id"),
-      transform(col("e"),
-        x => round(x * lit(1000000.0d)).cast("long")).as("em"))
+    val vm = vectors(emb).select(col("vec_id"), micro(col("e")).as("em"))
       .localCheckpoint()
     val vAsD = vm.select(col("vec_id"),
       transform(col("em"), _.cast("double")).as("e"))
@@ -919,16 +669,6 @@ object Similarity {
       transform(col("cm"), _.cast("double")).as("ce"))
   }
 
-  /** IVF serving from TRAINED centroids, end-to-end oracle-checked —
-    * the exact-integer trainer's output through the UNCHANGED
-    * annIvfTopKWith serving plan. */
-  def annIvfTopKTrainedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    annIvfTopKWith(emb, trainIvfCentroidsExact(emb, 16, 2),
-      numQueries = 8, k = 3, nProbe = 4)
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
   /** The HELD-OUT query frame (query_id, eq) for the trained-vs-
     * default recall eval: queries disjoint from BOTH centroid samples,
     * so neither serving path is its own quantizer's seed.
@@ -951,55 +691,6 @@ object Similarity {
       .limit(numQueries)
       .select(col("vec_id").as("query_id"), col("e").as("eq"))
   }
-
-  /** Recall@k per nProbe for TRAINED vs DEFAULT (first-C) centroids —
-    * same queries, same k, same probe budgets, the exact brute-force
-    * top-k as truth; recall_bp aggregates over all queries so each
-    * (centroids, n_probe) row is one point on the quality-for-compute
-    * curve.
-    *
-    * Queries are HELD OUT from both centroid samples (r12 verdict #4:
-    * the old vec_id < Q query set was a SUBSET of the first-C default
-    * sample, so each query's top probe was its own cell at cos 1.0 —
-    * the instrument measured the artifact, default 9000-9250 bp vs
-    * trained 2250-5250 bp at sf0.01). With [[heldoutQueries]] neither
-    * path serves its own seed, so the rows read quantizer QUALITY:
-    * measured sf0.01 (C=16, k=5, Q=8 held-out): trained ≥ default at
-    * every probe budget — see NOTES_r13. Both paths still converge to
-    * recall 10000 at nProbe = C — spec-pinned. */
-  def annRecallTrained(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
-                       numCentroids: Int = 16, iters: Int = 2,
-                       nProbes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    require(nProbes.nonEmpty && nProbes.forall(p => p >= 1 && p <= numCentroids))
-    val v = vectors(emb)
-    // Q rows, referenced by every serving branch — checkpoint so the
-    // corpus-side TakeOrdered does not replay per branch
-    val hq = heldoutQueries(emb, numQueries, numCentroids).localCheckpoint()
-    val exact = topK(cosineCandidatesQ(v, hq), k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-    def served(tag: String, cents: DataFrame): DataFrame =
-      nProbes.map { p =>
-        topK(annIvfCandidatesQ(v, cents,
-          hq.select(col("query_id").as("vec_id"), col("eq").as("e")), p), k)
-          .select(lit(tag).as("centroids"), lit(p).as("n_probe"),
-            col("query_id"), col("neighbor_id"))
-      }.reduce(_ unionByName _)
-    // divide by the ACTUAL held-out count (see pqTrainRecall's note)
-    val nq = hq.agg(count(lit(1)).as("n_q"))
-    served("default", defaultCentroids(emb, numCentroids))
-      .unionByName(served("trained",
-        trainIvfCentroidsExact(emb, numCentroids, iters)))
-      .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("centroids", "n_probe")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("centroids"), col("n_probe"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
-  }
-
-  def annRecallTrainedQuery(spark: SparkSession, dir: String): DataFrame =
-    annRecallTrained(Tables.embeddings(spark, dir))
-      .orderBy(col("centroids"), col("n_probe"))
 
   // ---------------------------------------------------------------- quantize
 
@@ -1044,53 +735,6 @@ object Similarity {
   def quantizeInt8Query(spark: SparkSession, dir: String): DataFrame =
     quantizeInt8(Tables.embeddings(spark, dir)).orderBy(col("vec_id"))
 
-  /** Serving DIRECTLY from the stored IVF+int8 index — the read path
-    * matching [[ivfInt8IndexRows]]'s write path: queries probe their
-    * nProbe nearest cells, candidates come from an equi-join of the
-    * broadcast probe frame against the index on `cell` (on the
-    * `partitionBy(cell)` parquet layout that join is dynamic partition
-    * pruning — only probed cells are READ, the point of the layout),
-    * and scoring is the quantized cosine computed from the STORED `q`
-    * integers — per-vector scale cancels in cosine, so the index needs
-    * no fp32 vectors at all for the shortlist tier. Unlike the ann_*
-    * functions that recompute quantization per run, this is the shape
-    * that actually serves at 100 TB: the index is built once (nightly
-    * bulk + streaming.IvfIngest appends), queries touch ~nProbe/C of
-    * it.
-    *
-    * @param queries (query_id, e) fp32 query vectors — quantized here
-    *                with the same native expression the index used */
-  def annIvfTopKFromIndex(index: DataFrame, queries: DataFrame,
-                          cents: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    require(nProbe >= 1 && k >= 1, s"nProbe/k must be >= 1, got $nProbe/$k")
-    val scoredCells = queries.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(CosineSimilarity(col("e"), col("ce")), 6))
-    val wProbe = W.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val probes = scoredCells
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nProbe)
-      .select(col("query_id"),
-        graft.functions.Int8Quantize(col("e")).as("qq"),
-        col("cid").as("cell"))
-    val cand = broadcast(probes).join(index, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cos",
-        round(CosineSimilarity(col("qq"), toDoubleArray(col("q"))), 6))
-    topK(cand, k)
-  }
-
-  def annIvfFromIndexQuery(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val v = vectors(emb)
-    val cents = v.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("e").as("ce"))
-    val queries = v.filter(col("vec_id") < 8).toDF("query_id", "e")
-    annIvfTopKFromIndex(ivfInt8IndexRows(emb, cents), queries, cents,
-        nProbe = 4, k = 3)
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
   /** The physical ANN index row — (vec_id, cell, scale, q) with the
     * SAME nearest-centroid rule the serving path probes and the SAME
     * half-away-from-zero quantization quantizeInt8 pins: one frame
@@ -1106,168 +750,6 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         round(col("maxabs"), 6).as("scale"),
         int8Components(col("e"), col("maxabs")).as("q"))
-
-  /** Brute-force cosine top-k over the int8-QUANTIZED corpus — the
-    * serving path that reads a 4x-smaller vector column (the dominant
-    * I/O cost of a 100 TB ANN scan) and accepts quantization noise in
-    * the ranking.
-    *
-    * Exactness contract that makes this oracle-checkable: quantized
-    * components are small integers (|q| <= 127), so dot products and
-    * squared norms of 64-dim vectors stay <= 64·127² ≈ 1.03e6 —
-    * EXACTLY representable in double in any accumulation order. The
-    * score is exact integer arithmetic finished by two correctly-
-    * rounded IEEE sqrts and one division: bit-replicable cross-engine
-    * with no summation-order caveat (unlike the float-input paths,
-    * which pin a left-to-right fold order instead).
-    *
-    * Scale shape: identical to annCosineTopK — bounded query side
-    * broadcast, corpus scanned once, the only shuffle is the final
-    * per-query top-k. Quantization runs IN the scan stage via the
-    * native Int8Quantize expression (lambda-free plan, spec-pinned);
-    * the declarative quantizeInt8 above stays the once-per-corpus
-    * storage pass. */
-  def annInt8TopK(emb: DataFrame, numQueries: Int, k: Int): DataFrame = {
-    val qv = vectors(emb).select(col("vec_id"),
-      graft.functions.Int8Quantize(col("e")).as("qe"))
-    val q = qv.filter(col("vec_id") < numQueries).toDF("query_id", "qq")
-    val cand = broadcast(q)
-      .join(qv, col("query_id") =!= col("vec_id"))
-      .withColumn("cos",
-        round(CosineSimilarity(col("qq"), col("qe")), 6))
-    topK(cand, k)
-  }
-
-  /** TWO-STAGE retrieval — the production serving shape the separate
-    * int8 and fp32 baselines exist to feed: stage 1 scans the
-    * 4x-smaller QUANTIZED corpus and shortlists the top `m` neighbors
-    * per query by quantized cosine (the I/O-bound pass at 100 TB);
-    * stage 2 re-scores ONLY the shortlist — |Q|·m rows — with exact
-    * fp32 cosine and keeps top `k`. Quantization noise can reorder
-    * near-ties inside the shortlist but the rerank restores the exact
-    * ordering; a true neighbor is missed only if noise pushes it below
-    * rank m, which m >> k makes rare (and AnnRerankSpec pins the
-    * m = corpus bound: with a full shortlist the result EQUALS the
-    * exact brute-force baseline).
-    *
-    * Scale shape: stage 1 is the annInt8TopK plan (broadcast bounded
-    * query side, one quantized-corpus scan, per-query top-m); stage 2
-    * broadcasts the |Q|·m shortlist against the fp32 corpus scan —
-    * no shuffle touches full-width vectors until only shortlisted
-    * rows remain. */
-  def annRerankTopK(emb: DataFrame, numQueries: Int, m: Int,
-                    k: Int): DataFrame = {
-    require(m >= k, s"shortlist m=$m must be >= k=$k")
-    val v = vectors(emb)
-    val qv = v.select(col("vec_id"),
-      graft.functions.Int8Quantize(col("e")).as("qe"))
-    val q8 = qv.filter(col("vec_id") < numQueries).toDF("query_id", "qq")
-    val wq = W.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("vec_id"))
-    val shortlist = broadcast(q8)
-      .join(qv, col("query_id") =!= col("vec_id"))
-      .withColumn("qcos",
-        round(CosineSimilarity(col("qq"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wq).as("prnk"))
-      .filter(col("prnk") <= m)
-      .select("query_id", "vec_id")
-    val qf = v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
-    val cand = v
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos",
-        round(CosineSimilarity(col("eq"), col("e")), 6))
-    topK(cand, k)
-  }
-
-  def annRerankTopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annRerankTopK(Tables.embeddings(spark, dir),
-      numQueries = 8, m = 20, k = 5)
-      .orderBy(col("query_id"), col("rnk"))
-
-  /** Product-quantization ANN (Jégou et al. 2011, "Product
-    * Quantization for Nearest Neighbor Search") — the compression
-    * tier BELOW int8: the vector splits into numSub subspaces, each
-    * encoded as the id of its nearest codeword from a numCodes-entry
-    * per-subspace codebook, so a 64-dim fp32 vector stores as 8
-    * one-byte codes — 32x less index I/O than fp32, 8x less than
-    * int8. Scoring is ADC (asymmetric distance computation): per
-    * query, ONE numSub×numCodes table of query-subvector·codeword
-    * dots; a corpus vector's score is numSub table LOOKUPS summed —
-    * the original vector is never touched at serving time.
-    *
-    * Determinism contract (the family's usual): codewords are the
-    * deterministic `vec_id < numCodes` sub-slices (production plugs a
-    * trained codebook into the same plan — the trainIvfCentroids
-    * convention); encoding picks the min rounded-6 L2 distance², ties
-    * to smallest code id; each ADC table entry and each per-sub
-    * reconstruction norm² rounds ONCE to integer micro-units, so a
-    * vector's dot and recon-norm² are BIGINT sums — exact in any
-    * accumulation order — finished by one IEEE sqrt + divide both
-    * engines compute identically. Vectors sharing a code share a
-    * score for every query, BY CONSTRUCTION (spec-pinned): that loss
-    * of resolution is exactly what was compressed away, and the fp32
-    * rerank tier (annRerankTopK) exists to restore it.
-    *
-    * Scale shape: the codebook (numSub·numCodes rows) broadcasts;
-    * encoding is one corpus scan — numSub in-row slices, broadcast
-    * codebook join, map-side-combined per-(vec, sub) argmin (the
-    * assignToCells discipline); the stored code frame (numSub small
-    * ints per vector) IS the index; serving joins codes against the
-    * broadcast ADC table on (sub, cid) and map-side-combines the
-    * numSub partial sums — no shuffle ever carries a vector wider
-    * than its codes. */
-  /** The default (data-seeded) PQ codebook: the first numCodes
-    * vectors' sub-slices. */
-  private def pqDefaultCodebook(v: DataFrame, numSub: Int, subDim: Int,
-                                numCodes: Int): DataFrame = {
-    val subs = explode(sequence(lit(0), lit(numSub - 1)))
-    v.filter(col("vec_id") < numCodes)
-      .select(col("vec_id").as("cid"), subs.as("sub"), col("e"))
-      .select(col("sub"), col("cid"),
-        slice(col("e"), col("sub") * subDim + 1, lit(subDim)).as("c"))
-  }
-
-  /** Encode + reconstructed norms against an EXPLICIT codebook
-    * (sub, cid, c) — shared by the default and trained paths. The
-    * code frame IS the PQ index (M small ints per vector): it
-    * localCheckpoints so its two consumers (the ADC scan and the
-    * reconstructed norms) and any rerank stage read the materialized
-    * index instead of replaying the corpus encode — the production
-    * shape, where the index is built once and served many times (the
-    * ann_ivf_from_index contract; without this the composed IVF+PQ
-    * plan replayed the corpus scan 26 times). */
-  private def pqPartsWith(v: DataFrame, cb: DataFrame, numSub: Int,
-                          subDim: Int): (DataFrame, DataFrame) = {
-    val subs = explode(sequence(lit(0), lit(numSub - 1)))
-    val enc = v.select(col("vec_id"), subs.as("sub"), col("e"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("e"), col("sub") * subDim + 1, lit(subDim)).as("x"))
-      .join(broadcast(cb), Seq("sub"))
-      .withColumn("d2r",
-        round(dot(col("x"), col("x")) + dot(col("c"), col("c"))
-          - lit(2.0d) * dot(col("x"), col("c")), 6))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min_by(col("cid"), struct(col("d2r"), col("cid"))).as("cid"))
-      .localCheckpoint()
-    val r2 = enc.join(broadcast(cb), Seq("sub", "cid"))
-      .groupBy(col("vec_id"))
-      .agg(sum(round(dot(col("c"), col("c")) * lit(1000000.0d)).cast("long"))
-        .as("r2m"))
-    (enc, r2)
-  }
-
-  /** The PQ model parts over (vec_id, e): per-subspace codebook
-    * slices, nearest-code assignments (the M-byte codes), and
-    * reconstructed-norm micro sums — shared by the flat ADC scan
-    * (annPqTopK) and the IVF-pruned serving stack (annIvfPqTopK). */
-  private def pqParts(v: DataFrame, numSub: Int, subDim: Int,
-                      numCodes: Int): (DataFrame, DataFrame, DataFrame) = {
-    val cb = pqDefaultCodebook(v, numSub, subDim, numCodes)
-    val (enc, r2) = pqPartsWith(v, cb, numSub, subDim)
-    (cb, enc, r2)
-  }
 
   /** TRAINED PQ codebooks — per-subspace Lloyd iterations in EXACT
     * integer micro units, the trainIvfCentroidsExact determinism
@@ -1295,11 +777,9 @@ object Similarity {
   private def pqLloydOnMicro(vm: DataFrame, numSub: Int, subDim: Int,
                              numCodes: Int, iters: Int): DataFrame = {
     require(numSub >= 1 && subDim >= 1 && numCodes >= 1 && iters >= 0)
-    val subs = explode(sequence(lit(0), lit(numSub - 1)))
     val vms = vm
-      .select(col("vec_id"), subs.as("sub"), col("em"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("em"), col("sub") * subDim + 1, lit(subDim)).as("xm"))
+      .select(col("vec_id"), subRows(numSub).as("sub"), col("em"))
+      .select(col("vec_id"), col("sub"), subSlice(col("em"), subDim).as("xm"))
       .localCheckpoint()
     val wInit = W.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
     val init = vm.select(col("vec_id"))
@@ -1331,114 +811,669 @@ object Similarity {
 
   def pqTrainCodebook(emb: DataFrame, numSub: Int = 8, subDim: Int = 8,
                       numCodes: Int = 16, iters: Int = 2): DataFrame =
-    pqLloydOnMicro(
-      vectors(emb).select(col("vec_id"),
-        transform(col("e"), x => round(x * lit(1000000.0d)).cast("long"))
-          .as("em")),
+    pqLloydOnMicro(vectors(emb).select(col("vec_id"), micro(col("e")).as("em")),
       numSub, subDim, numCodes, iters)
       .select(col("sub"), col("cid"),
         transform(col("cm"), x => x.cast("double") / lit(1000000.0d))
           .as("c"))
 
-  /** The flat ADC top-k chain against an explicit codebook and an
-    * explicit (query_id, eq) frame — shared by the default-codebook
-    * query, the trained one, and the held-out recall eval. */
-  private def pqAdcTopKQ(v: DataFrame, cb: DataFrame, q: DataFrame,
-                         k: Int, numSub: Int, subDim: Int): DataFrame = {
-    val (enc, r2) = pqPartsWith(v, cb, numSub, subDim)
-    val tab = pqQueryTabQ(q, cb, subDim)
-    val sc = enc.join(broadcast(tab), Seq("sub", "cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), first(col("qn")).as("qn"))
-    val cand = sc.join(r2, "vec_id")
-      .withColumn("cos", pqAdcCos(col("dm"), col("qn"), col("r2m")))
-    topK(cand, k)
+  // ================================================== ANN serving chain
+  //
+  // Every ANN serving and recall query in this object is one
+  // composition of the stages below; each stage is defined once and
+  // carries its own exactness contract, so the per-query docs only say
+  // which stages they compose.
+  //  - coarse: none ([[flatPairs]]), LSH buckets ([[annLshCandidates]])
+  //    or IVF cells ([[ivfIndexQ]] = [[assignToCells]] + [[ivfProbes]])
+  //    over a centroid frame that is default ([[defaultCentroids]]),
+  //    trained ([[trainIvfCentroidsExact]]) or stored beside an index;
+  //    probes meet the corpus through ONE join, [[probeJoin]];
+  //  - codes: fp32 and int8 score with [[cosOf]]; PQ and residual PQ
+  //    encode against an explicit codebook frame ([[encode]]) and score
+  //    with ONE ADC scorer ([[adcScores]]); int4 is [[packInt4]] and
+  //    [[unpackInt4]] applied to PQ code arrays;
+  //  - shortlist and rerank: [[shortlist]] keeps the code's top m,
+  //    [[exactRescore]] rescores it in fp32, [[topK]] keeps k;
+  //  - recall: [[heldout]] queries and truth, [[Budgets]] sweeps and
+  //    ONE aggregate, [[recallBp]].
+
+  /** Top-k stage, the tail of every ANN variant: rank candidates per
+    * query by (rounded cosine desc, vec_id asc) and keep rnk <= k.
+    * Tie rule: scores are compared AFTER rounding, so the DuckDB
+    * oracles rank identically even where the engines differ in the
+    * last ulp. Emits (query_id, neighbor_id, cos, rnk).
+    * @param cand (query_id, vec_id, cos) candidate rows */
+  private def topK(cand: DataFrame, k: Int): DataFrame = {
+    val w = W.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    cand.select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"),
+        row_number().over(w).as("rnk"))
+      .filter(col("rnk") <= k)
   }
 
-  private def pqAdcTopK(v: DataFrame, cb: DataFrame, numQueries: Int,
-                        k: Int, numSub: Int, subDim: Int): DataFrame =
-    pqAdcTopKQ(v, cb, v.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("eq")),
-      k, numSub, subDim)
+  /** Codes stage fp32 and int8: the rounded-6 cosine of two vector
+    * columns, through the native CosineSimilarity loop. Exactness:
+    * fp32 inputs fold left to right (DuckDB's list_sum order, see
+    * TextFunctions.dot); int8 inputs are integers with |q| <= 127, so
+    * dot and norms² (<= 64·127²) are exact in any order and the score
+    * is two correctly rounded sqrts and one divide. */
+  private def cosOf(a: Column, b: Column): Column =
+    round(CosineSimilarity(a, b), 6)
 
-  /** ann_pq_trained: the flat ADC scan served from TRAINED codebooks
-    * — same bytes per vector, better codewords. */
-  def annPqTrained(emb: DataFrame, numQueries: Int = 8, k: Int = 3,
-                   numSub: Int = 8, subDim: Int = 8, numCodes: Int = 16,
-                   iters: Int = 2): DataFrame =
-    pqAdcTopK(vectors(emb),
-      pqTrainCodebook(emb, numSub, subDim, numCodes, iters),
-      numQueries, k, numSub, subDim)
+  /** The micro-int view of a vector column: each component rounded
+    * ONCE to 10⁻⁶ units as BIGINT. Every exact-integer path (both
+    * trainers, residual PQ, the query micro block) starts here; nothing
+    * after it rounds again. */
+  private def micro(e: Column): Column =
+    transform(e, x => round(x * lit(1000000.0d)).cast("long"))
 
-  def annPqTrainedQuery(spark: SparkSession, dir: String): DataFrame =
-    annPqTrained(Tables.embeddings(spark, dir))
-      .orderBy(col("query_id"), col("rnk"))
+  /** Query stage: the bounded query frame (query_id, eq), the first
+    * numQueries vectors. */
+  private[graft] def prefixQueries(v: DataFrame, numQueries: Int): DataFrame =
+    v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
 
-  /** Does TRAINING the codebook buy recall at equal bytes? Default
-    * (data-seeded) vs Lloyd-trained ADC top-k, both against the exact
-    * fp32 truth — the measured justification (or refutation) of the
-    * training pass, the ann_recall_trained instrument pointed at PQ.
-    *
-    * Queries are HELD OUT (the r12 de-artifacting rule): disjoint from
-    * BOTH the default codebook sample (vec_id < numCodes — those
-    * queries' subvectors ARE default codewords, encoding losslessly
-    * and handing the default an artifactual win) and the trained init
-    * sample (the md5-ASC first numCodes). */
-  def pqTrainRecall(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
-                    numSub: Int = 8, subDim: Int = 8, numCodes: Int = 16,
-                    iters: Int = 2): DataFrame = {
-    val v = vectors(emb)
-    val hq = heldoutQueries(emb, numQueries, numCodes).localCheckpoint()
-    // recall_bp divides by the ACTUAL held-out count, not numQueries·k:
-    // heldoutQueries returns fewer than numQueries rows when the corpus
-    // barely exceeds numCodes + the init sample, and a constant
-    // denominator would silently deflate recall and break the
-    // nProbe=C→10000 convergence invariant (r13 ADVICE)
-    val nq = hq.agg(count(lit(1)).as("n_q"))
-    val truth = topK(cosineCandidatesQ(v, hq), k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
+  /** A (query_id, eq) frame in the (vec_id, e) shape the IVF stages
+    * take for their query side. */
+  private def asVectors(q: DataFrame): DataFrame = q.toDF("vec_id", "e")
+
+  // --------------------------------------------------------- coarse stages
+
+  /** Coarse stage "none": each bounded query meets every row of `rows`
+    * but its own vector. The query side broadcasts, so the corpus is
+    * scanned once and the only shuffle is the per-query top-k. */
+  private def flatPairs(q: DataFrame, rows: DataFrame): DataFrame =
+    broadcast(q).join(rows, col("query_id") =!= col("vec_id"))
+
+  /** Brute-force fp32 candidates (query_id, eq, vec_id, e, cos) — coarse
+    * "none" with fp32 codes: the exact baseline, the truth of every
+    * recall query, and the hybrid RRF dense side. */
+  private[graft] def fp32Pairs(v: DataFrame, q: DataFrame): DataFrame =
+    flatPairs(q, v).withColumn("cos", cosOf(col("eq"), col("e")))
+
+  /** THE probe → candidate join of the partitioned coarse stages: each
+    * query's probe rows (query_id, probe, ...) meet the rows whose
+    * `cell` column (an IVF cell, an LSH bucket) equals the probe, self
+    * pairs excluded. A vector lives in one cell and a query's probes
+    * are distinct, so a (query, vector) pair arises at most once. The
+    * probe side is |Q|·probes rows and broadcasts; on a
+    * partitionBy(cell) index the join prunes to the probed cells. */
+  private def probeJoin(probes: DataFrame, rows: DataFrame,
+                        cell: String): DataFrame =
+    broadcast(probes)
+      .join(rows, col("probe") === col(cell) && col("query_id") =!= col("vec_id"))
+
+  /** Coarse stage IVF, probe side — THE probe ranking: each query vector
+    * of `qv` (vec_id, e) takes its nProbe nearest cells of `cents`
+    * (cid, ce) by (rounded-6 ccos desc, cid asc), [[assignToCells]]'
+    * rule extended past rank 1. |Q|·C rows before the per-query window
+    * (corpus·C map-side when the corpus is the query set, the knnGraph
+    * build). Emits (query_id, eq, probe, prnk). */
+  private def ivfProbes(qv: DataFrame, cents: DataFrame,
+                        nProbe: Int): DataFrame = {
+    val w = W.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
+    qv.crossJoin(broadcast(cents))
+      .withColumn("ccos", cosOf(col("e"), col("ce")))
+      .withColumn("prnk", row_number().over(w))
+      .filter(col("prnk") <= nProbe)
+      .select(col("vec_id").as("query_id"), col("e").as("eq"),
+        col("cid").as("probe"), col("prnk"))
+  }
+
+  /** Coarse stage IVF, both sides: `assigned` (vec_id, cell, e) puts each
+    * corpus vector in its single nearest cell, `probes` fans each
+    * vector of `qside` (vec_id, e) to its nProbe nearest cells. The
+    * assignment aggregates combine map-side, so the C-fold row
+    * amplification never crosses the exchange. */
+  private def ivfIndexQ(v: DataFrame, cents: DataFrame, qside: DataFrame,
+                        nProbe: Int): (DataFrame, DataFrame) =
+    (assignToCells(v, cents).select(col("vec_id"), col("cell"), col("e")),
+      ivfProbes(qside, cents, nProbe))
+
+  /** The IVF candidate ids (query_id, vec_id, prnk): every probed cell's
+    * vectors, tagged with the probe rank of the cell that holds them. */
+  private def ivfPairs(probes: DataFrame, assigned: DataFrame): DataFrame =
+    probeJoin(probes.select("query_id", "probe", "prnk"),
+        assigned.select("vec_id", "cell"), "cell")
+      .select("query_id", "vec_id", "prnk")
+
+  /** IVF fp32 candidates (query_id, vec_id, cos) for the query vectors
+    * `qside` (vec_id, e) — candidates/query ≈ nProbe · n/C, so C must
+    * grow with n to hold the per-query scan (ScaleProbe measures it). */
+  private[graft] def ivfCandidates(v: DataFrame, cents: DataFrame,
+                                   qside: DataFrame, nProbe: Int): DataFrame = {
+    val (assigned, probes) = ivfIndexQ(v, cents, qside, nProbe)
+    probeJoin(probes, assigned, "cell").withColumn("cos", cosOf(col("eq"), col("e")))
+  }
+
+  /** The untrained default coarse quantizer: the first C vectors as
+    * centroids. ONE definition — the serving path and ScaleProbe's
+    * occupancy audit must quantize identically or the audit measures a
+    * different operator than it claims. */
+  def defaultCentroids(emb: DataFrame, numCentroids: Int): DataFrame =
+    vectors(emb).filter(col("vec_id") < numCentroids)
+      .select(col("vec_id").as("cid"), col("e").as("ce"))
+
+  // ------------------------------------------------------ PQ codes stages
+
+  /** One row per PQ subspace, and sub-slice `sub` of an array column. */
+  private def subRows(numSub: Int): Column =
+    explode(sequence(lit(0), lit(numSub - 1)))
+
+  private def subSlice(e: Column, subDim: Int): Column =
+    slice(e, col("sub") * subDim + 1, lit(subDim))
+
+  /** THE PQ encoder (Jégou et al. 2011), codes stage of raw and residual
+    * PQ over an explicit codebook frame `cb` (sub, cid, codeword): each
+    * row of `rows` (ids..., x) is sliced per subspace and takes the
+    * codeword nearest by `d2`, ties to the smallest cid. Emits (ids...,
+    * sub, cid) — the M-byte index. It localCheckpoints so the ADC scan
+    * and any rerank read the built index instead of replaying the
+    * corpus encode (the ann_ivf_from_index contract); the encode is one
+    * corpus pass with a broadcast codebook join and a map-side-combined
+    * per-(vector, sub) argmin. */
+  private def encode(rows: DataFrame, ids: Seq[String], x: String,
+                     cb: DataFrame, numSub: Int, subDim: Int,
+                     d2: Column): DataFrame = {
+    val keys = ids.map(col)
+    rows.select(keys :+ subRows(numSub).as("sub") :+ col(x): _*)
+      .select(keys :+ col("sub") :+ subSlice(col(x), subDim).as("x"): _*)
+      .join(broadcast(cb), Seq("sub"))
+      .withColumn("d2", d2)
+      .groupBy(keys :+ col("sub"): _*)
+      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
       .localCheckpoint()
-    def served(tag: String, cb: DataFrame) =
-      pqAdcTopKQ(v, cb, hq, k, numSub, subDim)
-        .select(lit(tag).as("codebook"), col("query_id"),
-          col("neighbor_id"))
-    served("default", pqDefaultCodebook(v, numSub, subDim, numCodes))
-      .unionByName(served("trained",
-        pqTrainCodebook(emb, numSub, subDim, numCodes, iters)))
-      .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("codebook")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("codebook"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
   }
 
-  def pqTrainRecallQuery(spark: SparkSession, dir: String): DataFrame =
-    pqTrainRecall(Tables.embeddings(spark, dir)).orderBy(col("codebook"))
+  /** Raw PQ codes (vec_id, sub, cid) of `v` against `cb` (sub, cid, c):
+    * distance² = x·x + c·c − 2x·c rounded to 6 places, every dot a
+    * sequential fold the oracle replays. */
+  private def pqCodes(v: DataFrame, cb: DataFrame, numSub: Int,
+                      subDim: Int): DataFrame =
+    encode(v, Seq("vec_id"), "e", cb, numSub, subDim,
+      round(dot(col("x"), col("x")) + dot(col("c"), col("c"))
+        - lit(2.0d) * dot(col("x"), col("c")), 6))
 
-  /** Per-query ADC lookup tables (query_id, sub, cid, qn, tm) — the
-    * micro-integer dot of each query's sub-slice with every code.
-    * `q` is an explicit (query_id, eq) frame. */
-  private def pqQueryTabQ(q: DataFrame, cb: DataFrame,
-                          subDim: Int): DataFrame =
+  /** The default (data-seeded) PQ codebook: the first numCodes
+    * vectors' sub-slices. */
+  private def pqDefaultCodebook(v: DataFrame, numSub: Int, subDim: Int,
+                                numCodes: Int): DataFrame =
+    v.filter(col("vec_id") < numCodes)
+      .select(col("vec_id").as("cid"), subRows(numSub).as("sub"), col("e"))
+      .select(col("sub"), col("cid"), subSlice(col("e"), subDim).as("c"))
+
+  /** Stored code arrays: code rows (ids..., sub, cid) become one row
+    * per vector, (ids..., codes) in subspace order. */
+  private def codeArrays(rows: DataFrame, ids: String*): DataFrame =
+    rows.groupBy(ids.map(col): _*)
+      .agg(transform(sort_array(collect_list(struct(col("sub"), col("cid")))),
+        s => s.getField("cid")).as("codes"))
+
+  /** Code rows (keep..., sub, cid) read back from stored code arrays. */
+  private def codeRows(index: DataFrame, keep: String*): DataFrame =
+    index.select(keep.map(col) :+ posexplode(col("codes")): _*)
+      .withColumnRenamed("pos", "sub").withColumnRenamed("col", "cid")
+
+  /** THE int4 pack (FAISS PQx4): with numCodes <= 16 a code id fits 4
+    * bits, so two share a byte, packed[b] = n(codes[2b]) |
+    * n(codes[2b+1]) << 4 over the 0-based Spark SQL array index. n(c) =
+    * c − base moves the codebook's cid domain [base, base + numCodes)
+    * onto a nibble; a cid outside that window raises in-plan (the
+    * nibble-window guard) instead of silently corrupting every code —
+    * its upper bound is base + numCodes, not base + 16, so convention
+    * drift that still fits a nibble is caught too. */
+  private def packInt4(numSub: Int, numCodes: Int, base: Int): Column = {
+    require(numCodes >= 1 && numCodes <= 16,
+      s"int4 packing needs numCodes <= 16, got $numCodes")
+    require(numSub >= 2 && numSub % 2 == 0,
+      s"int4 packing needs an even numSub, got $numSub")
+    def nib(e: String) =
+      s"(CASE WHEN $e < $base OR $e >= ${base + numCodes} THEN " +
+        "CAST(raise_error('int4 pack: cid out of the nibble window " +
+        s"[$base, ${base + numCodes})') AS BIGINT) ELSE $e - $base END)"
+    expr(s"transform(sequence(0, ${numSub / 2 - 1}), " +
+      s"b -> CAST(${nib("codes[b * 2]")} | " +
+      s"shiftleft(${nib("codes[b * 2 + 1]")}, 4) AS INT))").as("packed")
+  }
+
+  /** THE int4 unpack, [[packInt4]]'s inverse: codes[s] = ((packed[s div
+    * 2] >> 4·(s mod 2)) & 15) + base as BIGINT. Lossless, so serving
+    * from packed codes is bit-identical to serving from code arrays. */
+  private def unpackInt4(numSub: Int, base: Int): Column =
+    expr(s"transform(sequence(0, ${numSub - 1}), " +
+      "s -> CAST((shiftright(packed[CAST(s div 2 AS INT)], " +
+      s"CAST(s % 2 AS INT) * 4) & 15) + $base AS BIGINT))").as("codes")
+
+  /** The query micro block (query_id, qm, q2m) of a (query_id, eq) frame:
+    * [[micro]] components and their BIGINT norm². */
+  private def queryMicro(q: DataFrame): DataFrame =
+    q.select(col("query_id"), micro(col("eq")).as("qm"))
+      .withColumn("q2m", SumSqLong(col("qm")))
+
+  /** An ADC code: the key its per-query table joins code rows on, and
+    * the cosine that finishes the summed dot `dm`, the summed
+    * reconstruction norm² `r2m` and the table's query-norm term `qn`. */
+  private case class Adc(key: Seq[String], cos: Column)
+
+  /** Raw PQ: dm and r2m are micro-unit BIGINT sums (each table entry and
+    * each per-sub codeword norm² rounds ONCE to micro units), qn = ‖q‖
+    * in fp64; one IEEE sqrt + divide both engines compute alike. */
+  private val pqAdc = Adc(Seq("sub", "cid"),
+    when(col("r2m") <= 0 || col("qn") === 0.0d, lit(0.0d))
+      .otherwise(round((col("dm") / lit(1000000.0d)) /
+        (col("qn") * sqrt(col("r2m") / lit(1000000.0d))), 6)))
+
+  /** Residual PQ: dm, qn = ‖q‖² and r2m are exact micro² BIGINTs — the
+    * reconstruction x̂ = c_cell + ŵ stays within 3·10⁶ per component, so
+    * r2m <= 64·9·10¹² < 2⁵³ passes through double exactly and every dot
+    * stays far inside BIGINT. */
+  private val residualAdc = Adc(Seq("cell", "sub", "cid"),
+    when(col("r2m") <= 0 || col("qn") <= 0, lit(0.0d))
+      .otherwise(round(col("dm").cast("double")
+        / (sqrt(col("qn").cast("double")) * sqrt(col("r2m").cast("double"))), 6)))
+
+  /** Raw-PQ ADC table per (query_id, sub, cid): tm = query sub-slice ·
+    * codeword and r2 = codeword norm², both rounded once to micro units,
+    * and qn = ‖q‖. |Q|·M·numCodes rows — model-sized. */
+  private def pqTable(q: DataFrame, cb: DataFrame, subDim: Int): DataFrame =
     q.select(col("query_id"), col("eq"), l2norm(col("eq")).as("qn"))
       .crossJoin(cb)
       .select(col("query_id"), col("sub"), col("cid"), col("qn"),
-        round(dot(slice(col("eq"), col("sub") * subDim + 1, lit(subDim)),
-          col("c")) * lit(1000000.0d)).cast("long").as("tm"))
+        round(dot(subSlice(col("eq"), subDim), col("c")) * lit(1000000.0d))
+          .cast("long").as("tm"),
+        round(dot(col("c"), col("c")) * lit(1000000.0d)).cast("long").as("r2"))
 
-  private def pqQueryTab(v: DataFrame, cb: DataFrame, numQueries: Int,
-                         subDim: Int): DataFrame =
-    pqQueryTabQ(v.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("eq")), cb, subDim)
+  /** Residual ADC table per (query_id, cell, sub, cid) from the query
+    * micro block and the reconstruction slices `xhat`: tm = qm_sub · x̂,
+    * r2 = ‖x̂‖², qn = ‖qm‖². Per (query, cell) because codes address
+    * residuals — |Q|·C·M·numCodes rows, still model-sized. */
+  private def residualTable(q: DataFrame, xhat: DataFrame,
+                            subDim: Int): DataFrame =
+    queryMicro(q).crossJoin(broadcast(xhat))
+      .select(col("query_id"), col("q2m").as("qn"), col("cell"), col("sub"),
+        col("cid"), DotLong(subSlice(col("qm"), subDim), col("xh")).as("tm"),
+        SumSqLong(col("xh")).as("r2"))
 
-  /** The ADC cosine from summed table entries + reconstructed norm. */
-  private def pqAdcCos(dm: Column, qn: Column, r2m: Column): Column =
-    when(r2m <= 0 || qn === 0.0d, lit(0.0d))
-      .otherwise(round((dm / lit(1000000.0d)) /
-        (qn * sqrt(r2m / lit(1000000.0d))), 6))
+  /** THE ADC scorer (asymmetric distance computation): code rows meet
+    * the broadcast per-query table on the code's key, and a vector's
+    * score sums its numSub table dots and reconstruction norms² — BIGINT
+    * sums, exact in any order — finished by the code's cosine. Rows
+    * without query_id come from coarse "none" (every query meets every
+    * row, self pairs dropped); rows with query_id were paired by a
+    * coarse stage. Vectors sharing a code share a score for every
+    * query BY CONSTRUCTION: that resolution is what the codes compress
+    * away and what the rerank restores. Emits (query_id, vec_id, cos). */
+  private def adcScores(rows: DataFrame, tab: DataFrame, code: Adc): DataFrame = {
+    val met =
+      if (rows.columns.contains("query_id"))
+        rows.join(broadcast(tab), "query_id" +: code.key)
+      else rows.join(broadcast(tab), code.key)
+        .filter(col("query_id") =!= col("vec_id"))
+    met.groupBy(col("query_id"), col("vec_id"))
+      .agg(sum(col("tm")).as("dm"), sum(col("r2")).as("r2m"),
+        first(col("qn")).as("qn"))
+      .select(col("query_id"), col("vec_id"), code.cos.as("cos"))
+  }
 
+  /** Flat raw-PQ ADC top-k against an explicit codebook and query frame. */
+  private def pqAdcTopK(v: DataFrame, cb: DataFrame, q: DataFrame, k: Int,
+                        numSub: Int, subDim: Int): DataFrame =
+    topK(adcScores(pqCodes(v, cb, numSub, subDim), pqTable(q, cb, subDim),
+      pqAdc), k)
+
+  // ------------------------------------------------- residual PQ codes
+
+  /** Micro-int centroid frame (cell, cm) from a RAW-scale centroid table
+    * (components <= 1, e.g. defaultCentroids), guarded here because
+    * every caller — the stored-index serve included — expects raw
+    * scale, and micro input would silently re-scale by 10⁶. */
+  private def microCentsOf(cents: DataFrame): DataFrame =
+    guardRawScaleCents(cents).select(col("cid").as("cell"),
+      micro(col("ce")).as("cm"))
+
+  /** (cell, cm) from [[trainIvfCentroidsExact]] output, which is ALREADY
+    * micro-valued: a plain CAST, never ×10⁶ — cosines are scale-
+    * invariant, residuals are not. */
+  private def castCentsOf(cents: DataFrame): DataFrame =
+    cents.select(col("cid").as("cell"), transform(col("ce"), _.cast("long")).as("cm"))
+
+  /** (vec_id, cell, rm) — each assigned vector's BIGINT micro residual
+    * x − c_cell against its cell centroid (the FAISS IVFADC semantic:
+    * PQ encodes the residual, not x). */
+  private def residualFrame(assigned: DataFrame, cm: DataFrame): DataFrame =
+    assigned.select(col("vec_id"), col("cell"), micro(col("e")).as("em"))
+      .join(broadcast(cm), "cell")
+      .select(col("vec_id"), col("cell"),
+        zip_with(col("em"), col("cm"), (x, c) => x - c).as("rm"))
+
+  /** Residual PQ codes (vec_id, cell, sub, cid) against `cb` (sub, cid,
+    * wm): distance² is an exact BIGINT L2, no rounding anywhere. */
+  private def residualCodes(rm: DataFrame, cb: DataFrame, numSub: Int,
+                            subDim: Int): DataFrame =
+    encode(rm, Seq("vec_id", "cell"), "rm", cb, numSub, subDim,
+      SqDistLong(col("x"), col("wm")))
+
+  /** Data-seeded residual codebook: the residuals of vectors [seedFrom,
+    * seedFrom + numCodes), sub-sliced. The seed prefix sits PAST the
+    * centroid sample: a centroid vector's residual against its own cell
+    * is zero, so seeding from the centroid ids gives an all-zero
+    * codebook. */
+  private def residualSeedCodebook(rm: DataFrame, numSub: Int, subDim: Int,
+                                   numCodes: Int, seedFrom: Int): DataFrame =
+    rm.filter(col("vec_id") >= seedFrom && col("vec_id") < seedFrom + numCodes)
+      .select(col("vec_id").as("cid"), subRows(numSub).as("sub"), col("rm"))
+      .select(col("sub"), col("cid"), subSlice(col("rm"), subDim).as("wm"))
+
+  /** TRAINED residual codebook — the integer Lloyd core pointed at the
+    * residual frame, so codewords minimize within-cell residual L2
+    * (what FAISS's IVFADC trains). Output stays micro (sub, cid, wm). */
+  def pqTrainResidualCodebook(rm: DataFrame, numSub: Int = 8,
+                              subDim: Int = 8, numCodes: Int = 16,
+                              iters: Int = 2): DataFrame =
+    pqLloydOnMicro(rm.select(col("vec_id"), col("rm").as("em")),
+      numSub, subDim, numCodes, iters)
+      .select(col("sub"), col("cid"), col("cm").as("wm"))
+
+  /** Reconstruction slices xhat(cell, sub, cid, xh = c_sub + ŵ) from the
+    * MODEL tables alone (no corpus) — C·M·numCodes rows, the piece a
+    * stored-index server rebuilds per query batch. */
+  private def residualXhatOf(cm: DataFrame, cb: DataFrame, numSub: Int,
+                             subDim: Int): DataFrame =
+    cm.select(col("cell"), subRows(numSub).as("sub"), col("cm"))
+      .select(col("cell"), col("sub"), subSlice(col("cm"), subDim).as("cs"))
+      .join(broadcast(cb), Seq("sub"))
+      .select(col("cell"), col("sub"), col("cid"),
+        zip_with(col("cs"), col("wm"), (a, b) => a + b).as("xh"))
+
+  /** Residual ADC scores of IVF-paired code rows `rows` (query_id,
+    * vec_id, cell, sub, cid) for the queries `q` (query_id, eq). */
+  private def residualScores(rows: DataFrame, q: DataFrame, cm: DataFrame,
+                             cb: DataFrame, numSub: Int,
+                             subDim: Int): DataFrame =
+    adcScores(rows, residualTable(q, residualXhatOf(cm, cb, numSub, subDim),
+      subDim), residualAdc)
+
+  /** (vec_id, cell, rm) residuals of the corpus against RAW-scale
+    * centroids — the guarded public index boundary. */
+  private def rawResiduals(emb: DataFrame, cents: DataFrame): DataFrame = {
+    val cg = guardRawScaleCents(cents)
+    residualFrame(assignToCells(vectors(emb), cg), microCentsOf(cg))
+  }
+
+  // -------------------------------------------- shortlist + rerank stages
+
+  /** Shortlist stage: each query's top m candidates by the code's score
+    * `cos`, under [[topK]]'s tie rule, as (query_id, vec_id, prnk). */
+  private def shortlist(scored: DataFrame, m: Int): DataFrame = {
+    val w = W.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
+    scored.select(col("query_id"), col("vec_id"), row_number().over(w).as("prnk"))
+      .filter(col("prnk") <= m)
+  }
+
+  /** Rerank stage: the shortlist rescored in exact fp32, joined by id to
+    * the corpus `v` (vec_id, e) and the queries `q` (query_id, eq). Both
+    * joins broadcast bounded frames, so no shuffle carries a full-width
+    * vector until only |Q|·m shortlisted rows remain. */
+  private def exactRescore(v: DataFrame, short: DataFrame,
+                           q: DataFrame): DataFrame =
+    v.join(broadcast(short), "vec_id").join(broadcast(q), "query_id")
+      .withColumn("cos", cosOf(col("eq"), col("e")))
+
+  /** Shortlist the code's top m, rerank in fp32, keep k. A true neighbor
+    * is lost only outside the coarse candidates or below code rank m;
+    * with m = the candidate count the result IS the exact top-k over
+    * the candidates (spec-pinned). */
+  private def rerankTopK(v: DataFrame, scored: DataFrame, q: DataFrame,
+                         m: Int, k: Int): DataFrame =
+    topK(exactRescore(v, shortlist(scored, m), q), k)
+
+  // ------------------------------------------------------- recall stages
+
+  /** Recall stage, held-out side: queries `q` (query_id, eq) disjoint
+    * from the seed prefix [0, skip) and the md5 init sample
+    * ([[heldoutQueries]] — no path serves its own seed), their ACTUAL
+    * count `nq` (n_q), and the exact fp32 truth (query_id, neighbor_id,
+    * hit) over the whole corpus. */
+  private case class Heldout(q: DataFrame, nq: DataFrame, truth: DataFrame)
+
+  private def heldout(emb: DataFrame, v: DataFrame, numQueries: Int,
+                      skip: Int, k: Int): Heldout = {
+    // Q rows, referenced by every served branch: checkpointed so the
+    // corpus-side TakeOrdered does not replay per branch
+    val hq = heldoutQueries(emb, numQueries, skip).localCheckpoint()
+    Heldout(hq, hq.agg(count(lit(1)).as("n_q")),
+      truthOf(v, hq, k).localCheckpoint())
+  }
+
+  /** The brute-force truth (query_id, neighbor_id, hit) for `q`. */
+  private def truthOf(v: DataFrame, q: DataFrame, k: Int): DataFrame =
+    topK(fp32Pairs(v, q), k)
+      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
+
+  /** Recall stage, budget sweep: one served top-k frame per budget b,
+    * tagged `name` = b. Budgets must be distinct: a repeated budget
+    * would double-count its hits in [[recallBp]]'s groupBy. */
+  private case class Budgets(name: String, values: Seq[Int]) {
+    require(values.nonEmpty && values.distinct.size == values.size,
+      s"$name budgets must be non-empty and distinct (a repeated budget " +
+        s"double-counts its hits), got $values")
+    def sweep(serve: Int => DataFrame): DataFrame =
+      values.map(b => serve(b)
+          .select(lit(b).as(name), col("query_id"), col("neighbor_id")))
+        .reduce(_ unionByName _)
+  }
+
+  /** THE recall aggregate: served top-k rows (keys..., query_id,
+    * neighbor_id) left-joined to the truth, hits summed per key tuple,
+    * recall_bp = (10000·hits) div (n·k) in BIGINT. n is the ACTUAL query
+    * count: `nq`'s n_q when given (heldoutQueries may return fewer rows
+    * than asked, and a constant denominator would deflate recall and
+    * break the nProbe = C → 10000 invariant), 1 when the keys hold
+    * query_id and every row is one query. */
+  private def recallBp(served: DataFrame, truth: DataFrame, k: Int,
+                       nq: Option[DataFrame], keys: String*): DataFrame = {
+    val hits = served.join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
+      .groupBy(keys.map(col): _*)
+      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
+    val out = keys.map(col) :+ col("hits")
+    nq match {
+      case Some(n) => hits.crossJoin(broadcast(n))
+        .select(out :+ expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"): _*)
+      case None =>
+        hits.select(out :+ expr(s"(10000 * hits) div $k").as("recall_bp"): _*)
+    }
+  }
+
+  // ================================================ ANN serving queries
+
+  /** Brute-force cosine top-k for a bounded query set (vec_id < Q):
+    * coarse none, fp32 codes, top-k. */
+  def annCosineTopK(emb: DataFrame, numQueries: Int, k: Int): DataFrame = {
+    val v = vectors(emb)
+    topK(fp32Pairs(v, prefixQueries(v, numQueries)), k)
+  }
+
+  def annCosineTopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annCosineTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** Hard-negative mining for contrastive retrieval training (the
+    * DPR/ANCE shape — Karpukhin et al. 2020, Xiong et al. 2021): per
+    * query, the top-k candidates in the cosine band [lo, hi) — similar
+    * enough to be confusable, below the near-dup/positive threshold so
+    * no false negative enters a training pair. annCosineTopK's stages
+    * with the band filtered BEFORE the rank shuffle. */
+  def annHardNegatives(emb: DataFrame, numQueries: Int, k: Int,
+                       lo: Double = 0.15, hi: Double = 0.40): DataFrame = {
+    require(lo < hi, s"band [$lo, $hi) is empty")
+    val v = vectors(emb)
+    topK(fp32Pairs(v, prefixQueries(v, numQueries))
+      .filter(col("cos") >= lo && col("cos") < hi), k)
+  }
+
+  def annHardNegativesQuery(spark: SparkSession, dir: String): DataFrame =
+    annHardNegatives(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** Random-hyperplane LSH ANN: `numPlanes` sign bits → 2^planes
+    * buckets; queries probe every bucket within Hamming distance
+    * `probeHamming` of their own, fp32 codes score the probed buckets
+    * only, top-k. Candidates per query are bounded by probe-bucket
+    * occupancy (E[n/2^planes · probes]), not n. More probeHamming can
+    * only grow each candidate set, so recall is monotone in it (at
+    * probeHamming = numPlanes it IS brute force). */
+  def annLshTopK(emb: DataFrame, numQueries: Int, k: Int,
+                 numPlanes: Int = 6, probeHamming: Int = 1,
+                 dim: Int = 64): DataFrame =
+    topK(annLshCandidates(emb, numQueries, numPlanes, probeHamming, dim), k)
+
+  /** Coarse stage LSH with fp32 codes: candidates (query_id, vec_id, cos)
+    * BEFORE top-k, exposed so ScaleProbe can audit per-query candidate
+    * volume (planes must rise by 1 per corpus doubling to hold bucket
+    * occupancy flat). The bucket is the native HyperplaneBucket — the
+    * one expression that touches every corpus vector — and the literal
+    * mask array explodes before the XOR, so the probe expansion stays
+    * codegen'd. */
+  private[graft] def annLshCandidates(emb: DataFrame, numQueries: Int,
+                                      numPlanes: Int, probeHamming: Int,
+                                      dim: Int): DataFrame = {
+    require(probeHamming >= 0 && probeHamming <= numPlanes,
+      s"probeHamming must be in [0, numPlanes], got $probeHamming")
+    val vb = vectors(emb).withColumn("bucket",
+      HyperplaneBucket(col("e"), planeMatrix(numPlanes, dim)))
+    val q = vb.filter(col("vec_id") < numQueries)
+      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("bucket"),
+        explode(array(probeMasks(numPlanes, probeHamming).map(lit): _*)).as("m"))
+      .select(col("query_id"), col("eq"),
+        col("bucket").bitwiseXOR(col("m")).as("probe"))
+    probeJoin(q, vb, "bucket").withColumn("cos", cosOf(col("eq"), col("e")))
+  }
+
+  def annLshTopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annLshTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 3)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** IVF (inverted-file) cosine ANN over the default first-C centroids:
+    * coarse IVF, fp32 codes, top-k. Centroids are deterministic so the
+    * oracle replicates assignment bit-for-bit; trained centroids plug
+    * into the same plan ([[annIvfTopKWith]]). */
+  def annIvfTopK(emb: DataFrame, numQueries: Int, k: Int,
+                 numCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    require(nProbe >= 1 && nProbe <= numCentroids,
+      s"nProbe must be in [1, numCentroids], got $nProbe")
+    annIvfTopKWith(emb, defaultCentroids(emb, numCentroids), numQueries, k,
+      nProbe)
+  }
+
+  /** IVF serving with an EXPLICIT centroid table (cid, ce) — the plan the
+    * oracle pins, whether centroids are default or trained. */
+  def annIvfTopKWith(emb: DataFrame, cents: DataFrame, numQueries: Int,
+                     k: Int, nProbe: Int): DataFrame = {
+    val v = vectors(emb)
+    topK(ivfCandidates(v, cents, v.filter(col("vec_id") < numQueries), nProbe), k)
+  }
+
+  def annIvfTopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annIvfTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 3)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** IVF serving from TRAINED centroids, end-to-end oracle-checked — the
+    * exact-integer trainer's output through the unchanged IVF stages. */
+  def annIvfTopKTrainedQuery(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    annIvfTopKWith(emb, trainIvfCentroidsExact(emb, 16, 2),
+      numQueries = 8, k = 3, nProbe = 4)
+      .orderBy(col("query_id"), col("rnk"))
+  }
+
+  /** Serving DIRECTLY from the stored IVF+int8 index ([[ivfInt8IndexRows]]'
+    * write path): coarse IVF against the stored centroids, the probe
+    * join against the index on `cell` (partition pruning on the
+    * partitionBy(cell) layout — only probed cells are READ), and int8
+    * codes scored from the STORED integers; per-vector scale cancels in
+    * cosine, so the shortlist tier needs no fp32 vector. The index is
+    * built once (nightly bulk + streaming.IvfIngest appends).
+    * @param queries (query_id, e) fp32 query vectors — quantized here
+    *                with the native expression the index used */
+  def annIvfTopKFromIndex(index: DataFrame, queries: DataFrame,
+                          cents: DataFrame, nProbe: Int, k: Int): DataFrame = {
+    require(nProbe >= 1 && k >= 1, s"nProbe/k must be >= 1, got $nProbe/$k")
+    val probes = ivfProbes(queries.select(col("query_id").as("vec_id"), col("e")),
+        cents, nProbe)
+      .select(col("query_id"), Int8Quantize(col("eq")).as("qq"), col("probe"))
+    topK(probeJoin(probes, index, "cell")
+      .withColumn("cos", cosOf(col("qq"), toDoubleArray(col("q")))), k)
+  }
+
+  def annIvfFromIndexQuery(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    val cents = defaultCentroids(emb, 16)
+    annIvfTopKFromIndex(ivfInt8IndexRows(emb, cents),
+        vectors(emb).filter(col("vec_id") < 8).toDF("query_id", "e"), cents,
+        nProbe = 4, k = 3)
+      .orderBy(col("query_id"), col("rnk"))
+  }
+
+  /** int8 codes under coarse "none": the native Int8Quantize in the scan
+    * stage (bit-equal to quantizeInt8's rounding) on both sides,
+    * (query_id, vec_id, cos). */
+  private def int8Pairs(v: DataFrame, numQueries: Int): DataFrame = {
+    val qv = v.select(col("vec_id"), Int8Quantize(col("e")).as("qe"))
+    flatPairs(qv.filter(col("vec_id") < numQueries).toDF("query_id", "qq"), qv)
+      .withColumn("cos", cosOf(col("qq"), col("qe")))
+  }
+
+  /** Brute-force cosine top-k over the int8-QUANTIZED corpus — a 4x
+    * smaller vector column, quantization noise accepted in the ranking:
+    * coarse none, int8 codes, top-k. */
+  def annInt8TopK(emb: DataFrame, numQueries: Int, k: Int): DataFrame =
+    topK(int8Pairs(vectors(emb), numQueries), k)
+
+  def annInt8TopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annInt8TopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** TWO-STAGE retrieval: coarse none, int8 codes, shortlist m, fp32
+    * rerank, top-k. With a full shortlist the result EQUALS the exact
+    * brute-force baseline (AnnRerankSpec). */
+  def annRerankTopK(emb: DataFrame, numQueries: Int, m: Int,
+                    k: Int): DataFrame = {
+    require(m >= k, s"shortlist m=$m must be >= k=$k")
+    val v = vectors(emb)
+    rerankTopK(v, int8Pairs(v, numQueries), prefixQueries(v, numQueries), m, k)
+  }
+
+  def annRerankTopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annRerankTopK(Tables.embeddings(spark, dir),
+      numQueries = 8, m = 20, k = 5)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** The IVF + int8 + rerank stack: coarse IVF (only ≈ nProbe·n/C rows
+    * are touched), int8 codes computed once per corpus vector inside
+    * `assigned`, shortlist m, fp32 rerank, top-k. With nProbe = C and m
+    * = corpus size the result EQUALS brute force (AnnIvfRerankSpec). */
+  def annIvfRerankTopK(emb: DataFrame, numQueries: Int, m: Int, k: Int,
+                       numCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    require(m >= k, s"shortlist m=$m must be >= k=$k")
+    require(nProbe >= 1 && nProbe <= numCentroids,
+      s"nProbe must be in [1, numCentroids], got $nProbe")
+    val v = vectors(emb)
+    val (assigned, probes) = ivfIndexQ(v, defaultCentroids(emb, numCentroids),
+      v.filter(col("vec_id") < numQueries), nProbe)
+    val scored = probeJoin(
+        probes.select(col("query_id"), Int8Quantize(col("eq")).as("qq"), col("probe")),
+        assigned.withColumn("qe", Int8Quantize(col("e"))), "cell")
+      .withColumn("cos", cosOf(col("qq"), col("qe")))
+    rerankTopK(v, scored, prefixQueries(v, numQueries), m, k)
+  }
+
+  def annIvfRerankTopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annIvfRerankTopK(Tables.embeddings(spark, dir),
+      numQueries = 8, m = 12, k = 3)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** Product-quantization ANN (Jégou et al. 2011): coarse none, raw PQ
+    * codes against the default codebook, ADC, top-k. A 64-dim fp32
+    * vector stores as 8 one-byte codes — 32x less index I/O than fp32. */
   def annPqTopK(emb: DataFrame, numQueries: Int, k: Int,
                 numSub: Int = 8, subDim: Int = 8,
                 numCodes: Int = 16): DataFrame = {
@@ -1446,67 +1481,82 @@ object Similarity {
     require(numSub >= 1 && subDim >= 1 && numCodes >= 1,
       s"bad PQ shape $numSub x $subDim x $numCodes")
     val v = vectors(emb)
-    val (cb, enc, r2) = pqParts(v, numSub, subDim, numCodes)
-    val tab = pqQueryTab(v, cb, numQueries, subDim)
-    val sc = enc.join(broadcast(tab), Seq("sub", "cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), first(col("qn")).as("qn"))
-    val cand = sc.join(r2, "vec_id")
-      .withColumn("cos", pqAdcCos(col("dm"), col("qn"), col("r2m")))
-    topK(cand, k)
+    pqAdcTopK(v, pqDefaultCodebook(v, numSub, subDim, numCodes),
+      prefixQueries(v, numQueries), k, numSub, subDim)
   }
 
-  /** The full production serving stack — IVF prune → PQ-ADC scan →
-    * exact rerank (the FAISS IVFADC/IVFPQ composition, Jégou et al.
-    * 2011): stage 1 bounds candidates to the probed cells (never the
-    * corpus), stage 2 scores those candidates from the M-byte codes
-    * and the query's code tables — no full-width vector is touched
-    * per candidate — and stage 3 rescores only the top-m shortlist in
-    * exact fp32 so reported scores are true cosines.
-    *
-    * Scale shape: the candidate join is the IVF equi-join on cell;
-    * ADC scoring joins candidates to the code frame (M rows per
-    * vector) against a BROADCAST query table (|Q|·M·numCodes rows —
-    * model-sized); the rerank touches m vectors per query. At corpus
-    * scale the win over annIvfRerankTopK's int8 shortlist is
-    * bandwidth: M bytes per candidate instead of the full int8
-    * vector. */
-  /** The composed serving chain with EXPLICIT model tables (coarse
-    * centroids + PQ codebook) — one plan for the data-seeded default
-    * (annIvfPqTopK) and the fully-trained compose (annIvfPqTrained),
-    * so training swaps the MODELS, never the serving semantics. */
+  def annPqTopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annPqTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** ann_pq_trained: annPqTopK's stages with the TRAINED codebook. */
+  def annPqTrained(emb: DataFrame, numQueries: Int = 8, k: Int = 3,
+                   numSub: Int = 8, subDim: Int = 8, numCodes: Int = 16,
+                   iters: Int = 2): DataFrame = {
+    val v = vectors(emb)
+    pqAdcTopK(v, pqTrainCodebook(emb, numSub, subDim, numCodes, iters),
+      prefixQueries(v, numQueries), k, numSub, subDim)
+  }
+
+  def annPqTrainedQuery(spark: SparkSession, dir: String): DataFrame =
+    annPqTrained(Tables.embeddings(spark, dir))
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** int4-PACKED PQ index rows (vec_id, packed) — FAISS's PQx4 storage,
+    * M/2 bytes per vector: raw PQ codes through [[packInt4]]. A storage
+    * change, not a model change. */
+  def pqInt4IndexRowsWith(v: DataFrame, cb: DataFrame, numSub: Int,
+                          subDim: Int, numCodes: Int): DataFrame = {
+    val pack = packInt4(numSub, numCodes, base = 0)
+    codeArrays(pqCodes(v, cb, numSub, subDim), "vec_id")
+      .select(col("vec_id"), pack)
+  }
+
+  def pqInt4IndexRows(emb: DataFrame, numSub: Int = 8, subDim: Int = 8,
+                      numCodes: Int = 16): DataFrame = {
+    val v = vectors(emb)
+    pqInt4IndexRowsWith(v, pqDefaultCodebook(v, numSub, subDim, numCodes),
+      numSub, subDim, numCodes)
+  }
+
+  /** ann_pq_int4_topk — annPqTopK served from the int4-PACKED index:
+    * codes unpack IN-SCAN ([[unpackInt4]]) into the unchanged ADC, so
+    * the result is BIT-IDENTICAL to annPqTopK (SimilaritySpec pins it). */
+  def annPqInt4TopK(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
+                    numSub: Int = 8, subDim: Int = 8,
+                    numCodes: Int = 16): DataFrame = {
+    require(numQueries >= 1 && k >= 1, s"bad numQueries=$numQueries/k=$k")
+    val v = vectors(emb)
+    val cb = pqDefaultCodebook(v, numSub, subDim, numCodes)
+    // the stored index: numSub/2 bytes per vector, built once
+    val packed = pqInt4IndexRowsWith(v, cb, numSub, subDim, numCodes)
+      .localCheckpoint()
+    val rows = codeRows(packed.select(col("vec_id"), unpackInt4(numSub, 0)),
+      "vec_id")
+    topK(adcScores(rows, pqTable(prefixQueries(v, numQueries), cb, subDim),
+      pqAdc), k)
+  }
+
+  def annPqInt4TopKQuery(spark: SparkSession, dir: String): DataFrame =
+    annPqInt4TopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** The composed IVFADC serving chain with EXPLICIT model tables: coarse
+    * IVF over `cents`, raw PQ codes against `cb`, ADC over the probed
+    * candidates, shortlist m, fp32 rerank, top-k — one plan for the
+    * default (annIvfPqTopK) and the trained (annIvfPqTrained) models. */
   def annIvfPqTopKWith(emb: DataFrame, cents: DataFrame, cb: DataFrame,
                        numQueries: Int, m: Int, k: Int, nProbe: Int,
                        numSub: Int, subDim: Int): DataFrame = {
     require(m >= k, s"shortlist m=$m must be >= k=$k")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     val v = vectors(emb)
-    val (assigned, probes) = ivfIndex(emb, cents, numQueries, nProbe)
-    val candIds = broadcast(probes.select(col("query_id"), col("probe")))
-      .join(assigned.select(col("vec_id"), col("cell")),
-        col("probe") === col("cell") && col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id")
-    val (enc, r2) = pqPartsWith(v, cb, numSub, subDim)
-    val tab = pqQueryTab(v, cb, numQueries, subDim)
-    val sc = candIds.join(enc, "vec_id")
-      .join(broadcast(tab), Seq("query_id", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), first(col("qn")).as("qn"))
-    val wm = W.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("vec_id"))
-    val shortlist = sc.join(r2, "vec_id")
-      .withColumn("pcos", pqAdcCos(col("dm"), col("qn"), col("r2m")))
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wm).as("prnk"))
-      .filter(col("prnk") <= m)
-      .select("query_id", "vec_id")
-    val qf = v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
-    val cand = v
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-    topK(cand, k)
+    val q = prefixQueries(v, numQueries)
+    val (assigned, probes) = ivfIndexQ(v, cents,
+      v.filter(col("vec_id") < numQueries), nProbe)
+    val rows = ivfPairs(probes, assigned)
+      .join(pqCodes(v, cb, numSub, subDim), "vec_id")
+    rerankTopK(v, adcScores(rows, pqTable(q, cb, subDim), pqAdc), q, m, k)
   }
 
   def annIvfPqTopK(emb: DataFrame, numQueries: Int = 8, m: Int = 12,
@@ -1524,19 +1574,11 @@ object Similarity {
     annIvfPqTopK(Tables.embeddings(spark, dir))
       .orderBy(col("query_id"), col("rnk"))
 
-  /** ann_ivf_pq_trained — the serving stack trained END-TO-END (r13
-    * verdict #2): BOTH model tiers come from their exact-integer
-    * trainers — the coarse quantizer from [[trainIvfCentroidsExact]]
-    * (micro-int Lloyd, oracle-replayable) and the PQ codebooks from
-    * [[pqTrainCodebook]] (per-subspace integer Lloyd on the L2
-    * objective) — composed through the UNCHANGED annIvfPqTopKWith
-    * serving plan. The r13 compose served data-seeded models by
-    * choice (its oracle pinned the compose); this entry's oracle
-    * replays BOTH trainers AND the serving chain, so a green row
-    * certifies the production stack end to end: train coarse → train
-    * PQ → assign → probe → encode → ADC → rerank. At iters=0 both
-    * trainers return their md5-sample seeds and the compose is pinned
-    * ≡ annIvfPqTopKWith on those seed tables (AnnIvfPqTrainedSpec). */
+  /** ann_ivf_pq_trained — annIvfPqTopKWith with BOTH models from their
+    * exact-integer trainers ([[trainIvfCentroidsExact]],
+    * [[pqTrainCodebook]]); the oracle replays both trainers and the
+    * chain. At iters = 0 it is annIvfPqTopKWith on the md5 seed tables
+    * (AnnIvfPqTrainedSpec). */
   def annIvfPqTrained(emb: DataFrame, numQueries: Int = 8, m: Int = 12,
                       k: Int = 3, numCentroids: Int = 16, nProbe: Int = 4,
                       numSub: Int = 8, subDim: Int = 8, numCodes: Int = 16,
@@ -1553,175 +1595,21 @@ object Similarity {
     annIvfPqTrained(Tables.embeddings(spark, dir))
       .orderBy(col("query_id"), col("rnk"))
 
-  // ------------------------------------------------- residual IVFADC
-
-  /** (vec_id, em) micro-integer view — vectors rounded ONCE to 10⁻⁶
-    * units; all residual-PQ arithmetic stays in BIGINT from here. */
-  private def microVectors(v: DataFrame): DataFrame =
-    v.select(col("vec_id"),
-      transform(col("e"), x => round(x * lit(1000000.0d)).cast("long"))
-        .as("em"))
-
-  /** The residual-PQ index over an assigned frame: codes
-    * (vec_id, cell, sub, cid) and reconstruction slices
-    * xhat(cell, sub, cid, xh) — the TRUE FAISS IVFADC semantic (Jégou
-    * et al. 2011 §III): PQ encodes the RESIDUAL x − q_coarse(x), not x.
-    * Residuals concentrate near zero once the coarse quantizer has
-    * soaked up the between-cell variance, so the same M×numCodes bytes
-    * spend their resolution on a far smaller ball — the recall-at-
-    * equal-bytes win pqResidualRecall measures.
-    *
-    * Exactness: micro-int vectors minus micro-int centroids give BIGINT
-    * residuals; encode argmin is a BIGINT L2 (no rounding anywhere),
-    * ties to the smallest code id; reconstruction x̂ = c_cell + ŵ stays
-    * BIGINT. Bounds: |x̂| ≤ 3·10⁶ per component ⇒ recon norm² ≤
-    * 64·9·10¹² < 2⁵³ (exact in double for the final IEEE sqrt) and every
-    * ADC dot ≤ 2·10¹⁴ — far inside BIGINT.
-    *
-    * Scale shape: the codebook is numSub·numCodes rows (seeded from
-    * the residuals of vectors [seedFrom, seedFrom + numCodes) —
-    * pqDefaultCodebook's prefix convention SHIFTED past the centroid
-    * sample, because a centroid vector's residual against its own
-    * cell is exactly ZERO: seeding from vec_id < numCodes when those
-    * ids are also the default centroids yields an all-zero codebook
-    * and the "residual" scores degenerate to bare cell centroids —
-    * caught by pqResidualRecall's first measurement); encoding is one
-    * pass over the assigned corpus with a broadcast codebook join and
-    * a map-side-combined per-(vec, sub) argmin; xhat is
-    * C·numSub·numCodes rows — model-sized — built entirely from
-    * broadcast frames. */
-  /** Micro-int centroid frame (cell, cm) from a RAW-scale centroid
-    * table (components ≤ 1 — defaultCentroids). The trained exact
-    * trainer's output is ALREADY micro-valued and must cast, not
-    * re-scale (residuals are scale-sensitive where cosines are not —
-    * see annIvfPqResidualTrained). */
-  private def microCentsOf(cents: DataFrame): DataFrame =
-    // guarded at THIS shared boundary (r15 review): every caller —
-    // including the SERVE path annIvfPqResidualFromIndex, which the
-    // per-entry guards below don't reach — expects RAW-scale
-    // centroids; the trained convention (already micro) CASTs and
-    // never comes through here. Passing micro values would silently
-    // re-scale by 1e6 and corrupt every residual.
-    guardRawScaleCents(cents).select(col("cid").as("cell"),
-      transform(col("ce"), x => round(x * lit(1000000.0d)).cast("long"))
-        .as("cm"))
-
-  /** (vec_id, cell, rm) — each assigned vector's BIGINT micro residual
-    * against its cell centroid. */
-  private def residualFrame(assigned: DataFrame, cm: DataFrame): DataFrame =
-    assigned
-      .select(col("vec_id"), col("cell"),
-        transform(col("e"), x => round(x * lit(1000000.0d)).cast("long"))
-          .as("em"))
-      .join(broadcast(cm), "cell")
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("em"), col("cm"), (x, c) => x - c).as("rm"))
-
-  /** Data-seeded residual codebook: the residuals of vectors
-    * [seedFrom, seedFrom + numCodes), sub-sliced. */
-  private def residualSeedCodebook(rm: DataFrame, numSub: Int, subDim: Int,
-                                   numCodes: Int, seedFrom: Int): DataFrame = {
-    val subs = explode(sequence(lit(0), lit(numSub - 1)))
-    rm.filter(col("vec_id") >= seedFrom &&
-        col("vec_id") < seedFrom + numCodes)
-      .select(col("vec_id").as("cid"), subs.as("sub"), col("rm"))
-      .select(col("sub"), col("cid"),
-        slice(col("rm"), col("sub") * subDim + 1, lit(subDim)).as("wm"))
+  /** The residual IVFADC tail over an IVF index: residual codes of `rm`
+    * against `cb`, ADC over the probed candidates, shortlist m, fp32
+    * rerank, top-k. */
+  private def residualRerank(v: DataFrame, q: DataFrame, probes: DataFrame,
+                             assigned: DataFrame, rm: DataFrame,
+                             cm: DataFrame, cb: DataFrame, m: Int, k: Int,
+                             numSub: Int, subDim: Int): DataFrame = {
+    val rows = ivfPairs(probes, assigned)
+      .join(residualCodes(rm, cb, numSub, subDim), "vec_id")
+    rerankTopK(v, residualScores(rows, q, cm, cb, numSub, subDim), q, m, k)
   }
 
-  /** TRAINED residual codebook — the integer Lloyd core pointed at
-    * the residual frame: codewords minimize within-cell-residual L2,
-    * which is exactly what FAISS's IVFADC trains (PQ on residuals).
-    * Output stays in micro-int scale (sub, cid, wm). */
-  def pqTrainResidualCodebook(rm: DataFrame, numSub: Int = 8,
-                              subDim: Int = 8, numCodes: Int = 16,
-                              iters: Int = 2): DataFrame =
-    pqLloydOnMicro(rm.select(col("vec_id"), col("rm").as("em")),
-      numSub, subDim, numCodes, iters)
-      .select(col("sub"), col("cid"), col("cm").as("wm"))
-
-  /** Encode + reconstruction slices against an explicit residual
-    * codebook (sub, cid, wm): codes (vec_id, cell, sub, cid) and
-    * xhat(cell, sub, cid, xh = c_sub + ŵ). */
-  private def residualEncodeXhat(rm: DataFrame, cm: DataFrame,
-                                 cb: DataFrame, numSub: Int,
-                                 subDim: Int): (DataFrame, DataFrame) = {
-    val subs = explode(sequence(lit(0), lit(numSub - 1)))
-    val codes = rm
-      .select(col("vec_id"), col("cell"), subs.as("sub"), col("rm"))
-      .select(col("vec_id"), col("cell"), col("sub"),
-        slice(col("rm"), col("sub") * subDim + 1, lit(subDim)).as("x"))
-      .join(broadcast(cb), Seq("sub"))
-      .withColumn("d2", SqDistLong(col("x"), col("wm")))
-      .groupBy(col("vec_id"), col("cell"), col("sub"))
-      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
-      .localCheckpoint()
-    (codes, residualXhatOf(cm, cb, numSub, subDim))
-  }
-
-  /** Reconstruction slices xhat(cell, sub, cid, xh = c_sub + ŵ) from
-    * the MODEL tables alone (no corpus) — the piece a stored-index
-    * server rebuilds per query batch. */
-  private def residualXhatOf(cm: DataFrame, cb: DataFrame, numSub: Int,
-                             subDim: Int): DataFrame = {
-    val subs = explode(sequence(lit(0), lit(numSub - 1)))
-    cm.select(col("cell"), subs.as("sub"), col("cm"))
-      .select(col("cell"), col("sub"),
-        slice(col("cm"), col("sub") * subDim + 1, lit(subDim)).as("cs"))
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("cell"), col("sub"), col("cid"),
-        zip_with(col("cs"), col("wm"), (a, b) => a + b).as("xh"))
-  }
-
-  private def residualPqParts(assigned: DataFrame, cents: DataFrame,
-                              numSub: Int, subDim: Int, numCodes: Int,
-                              seedFrom: Int): (DataFrame, DataFrame) = {
-    val cm = microCentsOf(cents)
-    val rm = residualFrame(assigned, cm)
-    val cb = residualSeedCodebook(rm, numSub, subDim, numCodes, seedFrom)
-    residualEncodeXhat(rm, cm, cb, numSub, subDim)
-  }
-
-  /** The residual-ADC cosine: BIGINT dot and norms², finished by one
-    * IEEE sqrt+divide both engines compute identically (operands are
-    * exact integers < 2⁵³ passed through double exactly). */
-  private def resAdcCos(dm: Column, q2m: Column, r2m: Column): Column =
-    when(r2m <= 0 || q2m <= 0, lit(0.0d))
-      .otherwise(round(dm.cast("double")
-        / (sqrt(q2m.cast("double")) * sqrt(r2m.cast("double"))), 6))
-
-  /** The per-(query, cell) ADC tables + candidate scoring shared by
-    * the serving query and the recall eval: `qm` is (query_id, qm,
-    * q2m), `candIds` the IVF-probed (query_id, vec_id) pairs. Emits
-    * (query_id, vec_id, cos) — the ADC estimate, BEFORE any rerank. */
-  private def residualAdcScores(candIds: DataFrame, codes: DataFrame,
-                                xhat: DataFrame, qm: DataFrame,
-                                subDim: Int): DataFrame = {
-    val rr = xhat.select(col("cell"), col("sub"), col("cid"),
-      SumSqLong(col("xh")).as("rr"))
-    val r2 = codes.join(broadcast(rr), Seq("cell", "sub", "cid"))
-      .groupBy("vec_id").agg(sum(col("rr")).as("r2m"))
-    val tab = qm.crossJoin(broadcast(xhat))
-      .select(col("query_id"), col("q2m"), col("cell"), col("sub"),
-        col("cid"),
-        DotLong(slice(col("qm"), col("sub") * subDim + 1, lit(subDim)),
-          col("xh")).as("tm"))
-    candIds.join(codes.select("vec_id", "cell", "sub", "cid"), "vec_id")
-      .join(broadcast(tab), Seq("query_id", "cell", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), first(col("q2m")).as("q2m"))
-      .join(r2, "vec_id")
-      .withColumn("cos", resAdcCos(col("dm"), col("q2m"), col("r2m")))
-      .select("query_id", "vec_id", "cos")
-  }
-
-  /** ann_ivf_pq_residual — IVFADC serving with RESIDUAL-encoded PQ
-    * (r13 verdict #1): assign → residual → encode → per-(query, cell)
-    * ADC → shortlist → exact fp32 rerank. Identical IVF probe chain
-    * and rerank tail to annIvfPqTopK; only the code semantics change
-    * (codes address residuals, so the ADC tables carry the cell
-    * centroid inside x̂ = c + ŵ and become per-(query, cell) —
-    * |Q|·C·M·numCodes rows, still model-sized and broadcast). */
+  /** ann_ivf_pq_residual — IVFADC with RESIDUAL-encoded PQ: coarse IVF
+    * (default centroids), residual PQ codes against the seeded
+    * codebook, ADC, shortlist m, fp32 rerank, top-k. */
   def annIvfPqResidualTopK(emb: DataFrame, numQueries: Int = 8,
                            m: Int = 12, k: Int = 3, numCentroids: Int = 16,
                            nProbe: Int = 4, numSub: Int = 8,
@@ -1731,229 +1619,24 @@ object Similarity {
       s"nProbe must be in [1, numCentroids], got $nProbe")
     val v = vectors(emb)
     val cents = defaultCentroids(emb, numCentroids)
-    val (assigned, probes) = ivfIndex(emb, cents, numQueries, nProbe)
-    val candIds = broadcast(probes.select(col("query_id"), col("probe")))
-      .join(assigned.select(col("vec_id"), col("cell")),
-        col("probe") === col("cell") && col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id")
-    val (codes, xhat) = residualPqParts(assigned, cents, numSub, subDim,
-      numCodes, seedFrom = numCentroids)
-    val qm = microVectors(v.filter(col("vec_id") < numQueries))
-      .select(col("vec_id").as("query_id"), col("em").as("qm"))
-      .withColumn("q2m",
-        SumSqLong(col("qm")))
-    val wm = W.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val shortlist = residualAdcScores(candIds, codes, xhat, qm, subDim)
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wm).as("prnk"))
-      .filter(col("prnk") <= m)
-      .select("query_id", "vec_id")
-    val qf = v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
-    val cand = v
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-    topK(cand, k)
+    val (assigned, probes) = ivfIndexQ(v, cents,
+      v.filter(col("vec_id") < numQueries), nProbe)
+    val cm = microCentsOf(cents)
+    val rm = residualFrame(assigned, cm)
+    residualRerank(v, prefixQueries(v, numQueries), probes, assigned, rm, cm,
+      residualSeedCodebook(rm, numSub, subDim, numCodes, numCentroids),
+      m, k, numSub, subDim)
   }
 
   def annIvfPqResidualTopKQuery(spark: SparkSession, dir: String): DataFrame =
     annIvfPqResidualTopK(Tables.embeddings(spark, dir))
       .orderBy(col("query_id"), col("rnk"))
 
-  /** Does RESIDUAL encoding buy recall at equal bytes — and how does
-    * the answer move with the PROBE BUDGET? Raw-vector PQ vs residual
-    * PQ, BOTH inside the same IVF probe chain (same cells, same
-    * candidates, same M×numCodes bytes per vector), top-k served
-    * directly from the ADC estimate — no rerank, so the rows measure
-    * the CODES, not the fp32 tail — against the exact brute-force
-    * truth on HELD-OUT queries (disjoint from the centroid sample and
-    * both codebook seed samples; the r12 de-artifacting rule), at
-    * EVERY nProbe in one pass: candidates carry the probe RANK of the
-    * cell that contributed them, the ADC scores each (query, vec)
-    * once at the maximum budget, and each budget's top-k is a rank
-    * filter over that one scored frame (the tau_sweep
-    * one-candidate-pass-for-the-whole-curve discipline). The
-    * literature (Jégou 2011 Fig.2) promises the residual win; on
-    * isotropic synthetics the honest measured answer may be a null —
-    * either way the curve records it per budget. */
-  def pqResidualRecall(emb: DataFrame, numQueries: Int = 32, k: Int = 5,
-                       numCentroids: Int = 16,
-                       nProbes: Seq[Int] = Seq(1, 2, 4),
-                       numSub: Int = 8, subDim: Int = 8,
-                       numCodes: Int = 16): DataFrame = {
-    require(nProbes.nonEmpty &&
-      nProbes.forall(p => p >= 1 && p <= numCentroids))
-    val maxP = nProbes.max
-    val v = vectors(emb)
-    val cents = defaultCentroids(emb, numCentroids)
-    // held out past BOTH seed prefixes: the centroid sample [0, C) and
-    // the residual-codebook sample [C, C + numCodes)
-    val hq = heldoutQueries(emb, numQueries,
-      numCentroids + numCodes).localCheckpoint()
-    val nq = hq.agg(count(lit(1)).as("n_q"))
-    val truth = topK(cosineCandidatesQ(v, hq), k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-      .localCheckpoint()
-    // probes at the MAX budget, probe rank kept for the per-budget cut
-    val wProbe = W.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val probes = hq.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(CosineSimilarity(col("eq"), col("ce")), 6))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= maxP)
-      .select(col("query_id"), col("cid").as("probe"), col("prnk"))
-    val assigned = assignToCells(v, cents)
-      .select(col("vec_id"), col("cell"), col("e"))
-    val candIds = broadcast(probes)
-      .join(assigned.select(col("vec_id"), col("cell")),
-        col("probe") === col("cell") && col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id", "prnk")
-      .localCheckpoint()
-    val candFlat = candIds.select("query_id", "vec_id")
-    // raw branch: flat PQ codes, scored once over the max-budget set
-    val cbRaw = pqDefaultCodebook(v, numSub, subDim, numCodes)
-    val (encRaw, r2Raw) = pqPartsWith(v, cbRaw, numSub, subDim)
-    val tabRaw = pqQueryTabQ(hq, cbRaw, subDim)
-    val rawScored = candFlat.join(encRaw, "vec_id")
-      .join(broadcast(tabRaw), Seq("query_id", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), first(col("qn")).as("qn"))
-      .join(r2Raw, "vec_id")
-      .withColumn("cos", pqAdcCos(col("dm"), col("qn"), col("r2m")))
-    // residual branch: same candidates, residual codes, scored once
-    val (codes, xhat) = residualPqParts(assigned, cents, numSub, subDim,
-      numCodes, seedFrom = numCentroids)
-    val qmh = hq
-      .select(col("query_id"),
-        transform(col("eq"), x => round(x * lit(1000000.0d)).cast("long"))
-          .as("qm"))
-      .withColumn("q2m",
-        SumSqLong(col("qm")))
-    val resScored = residualAdcScores(candFlat, codes, xhat, qmh, subDim)
-    def served(tag: String, scored: DataFrame) = {
-      val ranked = scored.join(candIds, Seq("query_id", "vec_id"))
-        .localCheckpoint()
-      nProbes.map { p =>
-        topK(ranked.filter(col("prnk") <= p), k)
-          .select(lit(tag).as("encoding"), lit(p).as("n_probe"),
-            col("query_id"), col("neighbor_id"))
-      }.reduce(_ unionByName _)
-    }
-    served("raw", rawScored)
-      .unionByName(served("residual", resScored))
-      .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("encoding", "n_probe")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("encoding"), col("n_probe"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
-  }
-
-  def pqResidualRecallQuery(spark: SparkSession, dir: String): DataFrame =
-    pqResidualRecall(Tables.embeddings(spark, dir))
-      .orderBy(col("encoding"), col("n_probe"))
-
-  /** The OTHER serving knob's curve (r14 verdict #6): pqResidualRecall
-    * sweeps the probe budget (nProbe); this sweeps the RERANK budget —
-    * shortlist depth m, the number of ADC-ranked candidates the exact
-    * fp32 tail rescores per query. One residual-ADC scored pass ranks
-    * the candidates once at the MAXIMUM budget; each m is a rank
-    * filter over that one frame, and ONE exact-scored frame (built at
-    * max m) serves every budget's rerank (the tau_sweep
-    * one-pass-for-the-whole-curve discipline, third instance).
-    *
-    * Unlike the nProbe curve, monotonicity here IS a true invariant:
-    * shortlists nest in m and the rerank orders by EXACT cosine (the
-    * truth's own order, rounded-6 + vec_id tiebreak both sides), so a
-    * served true neighbor can only be displaced by a vector that
-    * precedes it in the exact order — which is then itself a truth row.
-    * Per-query hits are non-decreasing in m — spec-pinned as a strict
-    * invariant (Batch15Spec), not a data-pinned observation. */
-  def rerankBudgetRecall(emb: DataFrame, numQueries: Int = 32, k: Int = 5,
-                         ms: Seq[Int] = Seq(5, 10, 20, 40),
-                         numCentroids: Int = 16, nProbe: Int = 4,
-                         numSub: Int = 8, subDim: Int = 8,
-                         numCodes: Int = 16): DataFrame = {
-    require(ms.nonEmpty && ms.forall(_ >= k),
-      s"every rerank budget must be >= k=$k, got $ms")
-    require(ms.distinct.size == ms.size,
-      s"rerank budgets must be distinct (a duplicate m double-counts " +
-        s"its hits in the groupBy), got $ms")
-    require(nProbe >= 1 && nProbe <= numCentroids,
-      s"nProbe must be in [1, numCentroids=$numCentroids], got $nProbe")
-    val maxM = ms.max
-    val v = vectors(emb)
-    val cents = defaultCentroids(emb, numCentroids)
-    val hq = heldoutQueries(emb, numQueries,
-      numCentroids + numCodes).localCheckpoint()
-    val nq = hq.agg(count(lit(1)).as("n_q"))
-    val truth = topK(cosineCandidatesQ(v, hq), k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-      .localCheckpoint()
-    val wProbe = W.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val probes = hq.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(CosineSimilarity(col("eq"), col("ce")), 6))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nProbe)
-      .select(col("query_id"), col("cid").as("probe"))
-    val assigned = assignToCells(v, cents)
-      .select(col("vec_id"), col("cell"), col("e"))
-    val candIds = broadcast(probes)
-      .join(assigned.select(col("vec_id"), col("cell")),
-        col("probe") === col("cell") && col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id")
-    val (codes, xhat) = residualPqParts(assigned, cents, numSub, subDim,
-      numCodes, seedFrom = numCentroids)
-    val qmh = hq
-      .select(col("query_id"),
-        transform(col("eq"), x => round(x * lit(1000000.0d)).cast("long"))
-          .as("qm"))
-      .withColumn("q2m",
-        SumSqLong(col("qm")))
-    val wAdc = W.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val shortRank = residualAdcScores(candIds, codes, xhat, qmh, subDim)
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wAdc).as("prnk"))
-      .filter(col("prnk") <= maxM)
-    // exact rerank scores computed ONCE at the max budget — |Q|·maxM
-    // rows; every m reads this frame through a rank filter
-    val exact = v.join(broadcast(shortRank), "vec_id")
-      .join(broadcast(hq), "query_id")
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-      .select("query_id", "vec_id", "cos", "prnk")
-      .localCheckpoint()
-    ms.map { m =>
-      topK(exact.filter(col("prnk") <= m), k)
-        .select(lit(m).as("m"), col("query_id"), col("neighbor_id"))
-    }.reduce(_ unionByName _)
-      .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("m")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("m"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
-  }
-
-  def rerankBudgetRecallQuery(spark: SparkSession, dir: String): DataFrame =
-    rerankBudgetRecall(Tables.embeddings(spark, dir)).orderBy(col("m"))
-
-  /** ann_ivf_pq_residual_trained — the COMPLETE FAISS IVFADC
-    * production semantic, every tier trained: exact-integer Lloyd
-    * coarse centroids (trainIvfCentroidsExact), residuals against
-    * THOSE centroids, and a residual codebook from the integer Lloyd
-    * core pointed at the residual frame (pqTrainResidualCodebook) —
-    * codewords minimize within-cell residual L2, which is what buys
-    * recall-at-equal-bytes over both raw-PQ and seeded-residual PQ.
-    * Serving is the unchanged residual-ADC chain + exact rerank.
-    *
-    * Scale caveat, explicit: the trained trainer's centroid output is
-    * ALREADY micro-valued, so the residual uses CAST, not ×10⁶ —
-    * cosines are scale-invariant but residuals are not; mixing the
-    * scales silently destroys the codes (guarded by the iters=0
-    * boundary spec, whose seed tables exercise exactly this path). */
+  /** ann_ivf_pq_residual_trained — the complete FAISS IVFADC semantic,
+    * every tier trained: exact-integer coarse centroids (micro-valued,
+    * so [[castCentsOf]]), residuals against them, and a residual
+    * codebook from the integer Lloyd core; the serving tail is
+    * annIvfPqResidualTopK's. */
   def annIvfPqResidualTrained(emb: DataFrame, numQueries: Int = 8,
                               m: Int = 12, k: Int = 3,
                               numCentroids: Int = 16, nProbe: Int = 4,
@@ -1964,34 +1647,13 @@ object Similarity {
       s"nProbe must be in [1, numCentroids], got $nProbe")
     val v = vectors(emb)
     val cents = trainIvfCentroidsExact(emb, numCentroids, iters)
-    val (assigned, probes) = ivfIndex(emb, cents, numQueries, nProbe)
-    val candIds = broadcast(probes.select(col("query_id"), col("probe")))
-      .join(assigned.select(col("vec_id"), col("cell")),
-        col("probe") === col("cell") && col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id")
-    // trained centroids are micro-valued doubles: CAST to micro longs
-    val cm = cents.select(col("cid").as("cell"),
-      transform(col("ce"), _.cast("long")).as("cm"))
+    val (assigned, probes) = ivfIndexQ(v, cents,
+      v.filter(col("vec_id") < numQueries), nProbe)
+    val cm = castCentsOf(cents)
     val rm = residualFrame(assigned, cm).localCheckpoint()
-    val cb = pqTrainResidualCodebook(rm, numSub, subDim, numCodes, iters)
-    val (codes, xhat) = residualEncodeXhat(rm, cm, cb, numSub, subDim)
-    val qm = microVectors(v.filter(col("vec_id") < numQueries))
-      .select(col("vec_id").as("query_id"), col("em").as("qm"))
-      .withColumn("q2m",
-        SumSqLong(col("qm")))
-    val wm = W.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val shortlist = residualAdcScores(candIds, codes, xhat, qm, subDim)
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wm).as("prnk"))
-      .filter(col("prnk") <= m)
-      .select("query_id", "vec_id")
-    val qf = v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
-    val cand = v
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-    topK(cand, k)
+    residualRerank(v, prefixQueries(v, numQueries), probes, assigned, rm, cm,
+      pqTrainResidualCodebook(rm, numSub, subDim, numCodes, iters),
+      m, k, numSub, subDim)
   }
 
   def annIvfPqResidualTrainedQuery(spark: SparkSession,
@@ -1999,87 +1661,12 @@ object Similarity {
     annIvfPqResidualTrained(Tables.embeddings(spark, dir))
       .orderBy(col("query_id"), col("rnk"))
 
-  /** Seeded-residual vs TRAINED-residual codebooks at equal bytes —
-    * the pq_train_recall instrument pointed at the residual tier:
-    * same trained coarse quantizer, same candidates (so the row
-    * isolates the CODEBOOK-training effect), top-k from the ADC
-    * estimate, held-out queries disjoint from the centroid init and
-    * both codebook seed/init samples, actual-count denominator. */
-  def pqResidualTrainedRecall(emb: DataFrame, numQueries: Int = 8,
-                              k: Int = 5, numCentroids: Int = 16,
-                              nProbe: Int = 4, numSub: Int = 8,
-                              subDim: Int = 8, numCodes: Int = 16,
-                              iters: Int = 2): DataFrame = {
-    val v = vectors(emb)
-    val cents = trainIvfCentroidsExact(emb, numCentroids, iters)
-    val hq = heldoutQueries(emb, numQueries,
-      numCentroids + numCodes).localCheckpoint()
-    val nq = hq.agg(count(lit(1)).as("n_q"))
-    val truth = topK(cosineCandidatesQ(v, hq), k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-      .localCheckpoint()
-    val (assigned, probes) = ivfIndexQ(v, cents,
-      hq.select(col("query_id").as("vec_id"), col("eq").as("e")), nProbe)
-    val candIds = broadcast(probes.select(col("query_id"), col("probe")))
-      .join(assigned.select(col("vec_id"), col("cell")),
-        col("probe") === col("cell") && col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id")
-      .localCheckpoint()
-    val cm = cents.select(col("cid").as("cell"),
-      transform(col("ce"), _.cast("long")).as("cm"))
-    val rm = residualFrame(assigned, cm).localCheckpoint()
-    val qmh = hq
-      .select(col("query_id"),
-        transform(col("eq"), x => round(x * lit(1000000.0d)).cast("long"))
-          .as("qm"))
-      .withColumn("q2m",
-        SumSqLong(col("qm")))
-    def branch(tag: String, cb: DataFrame) = {
-      val (codes, xhat) = residualEncodeXhat(rm, cm, cb, numSub, subDim)
-      topK(residualAdcScores(candIds, codes, xhat, qmh, subDim), k)
-        .select(lit(tag).as("codebook"), col("query_id"),
-          col("neighbor_id"))
-    }
-    branch("seeded",
-        residualSeedCodebook(rm, numSub, subDim, numCodes,
-          seedFrom = numCentroids))
-      .unionByName(branch("trained",
-        pqTrainResidualCodebook(rm, numSub, subDim, numCodes, iters)))
-      .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("codebook")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("codebook"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
-  }
-
-  def pqResidualTrainedRecallQuery(spark: SparkSession,
-                                   dir: String): DataFrame =
-    pqResidualTrainedRecall(Tables.embeddings(spark, dir))
-      .orderBy(col("codebook"))
-
-  /** The physical residual-PQ index row — (vec_id, cell, codes) with
-    * codes[s] = the sub-s codeword id: M small ints per vector, the
-    * true IVFADC index payload (M bytes where fp32 stores 4·dim).
-    * Written `partitionBy("cell")` the serving probe becomes partition
-    * pruning — only probed cells are READ (spec-pinned). The companion
-    * model tables (centroids + codebook — model-sized) persist
-    * alongside; ivfInt8IndexRows' nightly-bulk contract applies. */
-  /** Index rows against an EXPLICIT (frozen) codebook — the per-batch
-    * encoder the streaming ingest needs: every output row depends only
-    * on its own input row plus the static model frames, so streamed
-    * index content is batch-identical under any split. */
-  /** The data-seeded residual codebook derived from a corpus — the
-    * model frame the nightly bulk persists alongside the index
-    * (exposed for the streaming ingest's frozen-model contract). */
-  /** RAW-scale guard at the public residual-index boundaries: these
-    * entries apply microCentsOf (×10⁶) unconditionally, so a caller
-    * passing trainIvfCentroidsExact output — ALREADY micro-valued, the
-    * convention annIvfPqResidualTrained hand-handles with a plain CAST
-    * — would silently get ~10⁶x-inflated residuals and garbage codes.
-    * Unit vectors keep every component ≤ 1, so magnitude ≥ 10³ can
-    * only mean a micro-valued frame: fail loudly (the raise_error
-    * delimiter discipline) instead of encoding corruption. */
+  /** RAW-scale guard at the residual boundaries: [[microCentsOf]] scales
+    * by 10⁶ unconditionally, so a caller passing trainIvfCentroidsExact
+    * output — ALREADY micro-valued — would silently get ~10⁶x-inflated
+    * residuals and garbage codes. Unit vectors keep every component
+    * <= 1, so magnitude >= 10³ can only mean a micro-valued frame: fail
+    * loudly (the raise_error delimiter discipline). */
   private def guardRawScaleCents(cents: DataFrame): DataFrame = {
     // two independent micro signals: component magnitude ≥ 1e3 (no raw
     // unit-vector mean reaches it) OR squared L2 norm ≥ 1e10 (micro
@@ -2087,7 +1674,7 @@ object Similarity {
     // very high-dim frames whose every component stays under 1e3). The
     // message names WHICH signal fired — an operator debugging the
     // magnitude claim on a norm-tripped frame would find it false and
-    // distrust the guard (r16 review)
+    // distrust the guard
     val mag = array_max(transform(col("ce"), x => abs(x)))
     val nrm2 = aggregate(col("ce"), lit(0.0d), (acc, x) => acc + x * x)
     cents.select(col("cid"),
@@ -2106,116 +1693,59 @@ object Similarity {
         .otherwise(col("ce")).as("ce"))
   }
 
+  /** The data-seeded residual codebook derived from a corpus — the model
+    * frame the nightly bulk persists beside the index (exposed for the
+    * streaming ingest's frozen-model contract). */
   def residualSeedCodebookOf(emb: DataFrame, cents: DataFrame,
                              numSub: Int = 8, subDim: Int = 8,
                              numCodes: Int = 16,
-                             seedFrom: Int = 16): DataFrame = {
-    val cg = guardRawScaleCents(cents)
-    val assigned = assignToCells(vectors(emb), cg)
-      .select(col("vec_id"), col("cell"), col("e"))
-    residualSeedCodebook(residualFrame(assigned, microCentsOf(cg)),
-      numSub, subDim, numCodes, seedFrom)
-  }
+                             seedFrom: Int = 16): DataFrame =
+    residualSeedCodebook(rawResiduals(emb, cents), numSub, subDim, numCodes,
+      seedFrom)
 
-  private def residualIndexRowsOf(rm: DataFrame, cm: DataFrame,
-                                  cb: DataFrame, numSub: Int,
-                                  subDim: Int): DataFrame = {
-    val (codes, _) = residualEncodeXhat(rm, cm, cb, numSub, subDim)
-    codes.groupBy(col("vec_id"), col("cell"))
-      .agg(transform(
-        sort_array(collect_list(struct(col("sub"), col("cid")))),
-        s => s.getField("cid")).as("codes"))
-  }
-
+  /** The physical residual-PQ index row (vec_id, cell, codes) against an
+    * EXPLICIT (frozen) codebook — M small ints per vector, the IVFADC
+    * index payload. Written partitionBy(cell), serving's probe becomes
+    * partition pruning. Each row depends only on itself plus the static
+    * model frames, so streamed index content (ResidualIngest) is
+    * batch-identical under any split. */
   def residualPqIndexRowsWith(emb: DataFrame, cents: DataFrame,
                               cb: DataFrame, numSub: Int = 8,
-                              subDim: Int = 8): DataFrame = {
-    val cg = guardRawScaleCents(cents)
-    val assigned = assignToCells(vectors(emb), cg)
-      .select(col("vec_id"), col("cell"), col("e"))
-    val cm = microCentsOf(cg)
-    residualIndexRowsOf(residualFrame(assigned, cm), cm, cb, numSub,
-      subDim)
-  }
+                              subDim: Int = 8): DataFrame =
+    codeArrays(residualCodes(rawResiduals(emb, cents), cb, numSub, subDim),
+      "vec_id", "cell")
 
+  /** The residual-PQ index rows against the corpus' own seeded codebook. */
   def residualPqIndexRows(emb: DataFrame, cents: DataFrame,
                           numSub: Int = 8, subDim: Int = 8,
                           numCodes: Int = 16,
                           seedFrom: Int = 16): DataFrame = {
-    val cg = guardRawScaleCents(cents)
-    val assigned = assignToCells(vectors(emb), cg)
-      .select(col("vec_id"), col("cell"), col("e"))
-    val cm = microCentsOf(cg)
-    val rm = residualFrame(assigned, cm)
-    val cb = residualSeedCodebook(rm, numSub, subDim, numCodes, seedFrom)
-    residualIndexRowsOf(rm, cm, cb, numSub, subDim)
+    val rm = rawResiduals(emb, cents)
+    codeArrays(residualCodes(rm,
+      residualSeedCodebook(rm, numSub, subDim, numCodes, seedFrom),
+      numSub, subDim), "vec_id", "cell")
   }
 
-  /** Serving DIRECTLY from the stored residual-PQ index — the read
-    * path matching [[residualPqIndexRows]]' write path: queries probe
-    * their nProbe nearest cells against the (model-sized) centroid
-    * table, candidates come from the equi-join of the broadcast probe
-    * frame against the index on `cell` (partition pruning on the
-    * partitionBy(cell) layout), ADC scores come from the STORED codes
-    * + the per-(query, cell) tables derived from the model frames
-    * alone, and only the top-m shortlist touches fp32 vectors (the
-    * primary store, joined by id) for the exact rerank. The plan must
-    * serve EXACTLY what the rebuild-everything plan serves —
-    * SimilaritySpec pins the equality, and the oracle is the SAME
-    * replay ann_ivf_pq_residual pins. */
+  /** Serving DIRECTLY from the stored residual-PQ index: coarse IVF
+    * against the stored centroids, the probe join against the index on
+    * `cell`, residual ADC from the STORED codes plus the per-(query,
+    * cell) tables of the model frames alone, and only the top-m
+    * shortlist touches fp32 vectors (the primary store `corpus`, joined
+    * by id). It serves EXACTLY what annIvfPqResidualTopK serves
+    * (SimilaritySpec); the oracle is the same replay. */
   def annIvfPqResidualFromIndex(index: DataFrame, queries: DataFrame,
                                 corpus: DataFrame, cents: DataFrame,
                                 cb: DataFrame, nProbe: Int, m: Int,
                                 k: Int, numSub: Int,
                                 subDim: Int): DataFrame = {
     require(m >= k && nProbe >= 1)
-    val cm = microCentsOf(cents)
-    val wProbe = W.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(CosineSimilarity(col("e"), col("ce")), 6))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nProbe)
-      .select(col("query_id"), col("cid").as("cell"))
-    val candSub = broadcast(probes)
-      .join(index, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        posexplode(col("codes")))
-      .withColumnRenamed("pos", "sub").withColumnRenamed("col", "cid")
-    val xhat = residualXhatOf(cm, cb, numSub, subDim)
-    val rr = xhat.select(col("cell"), col("sub"), col("cid"),
-      SumSqLong(col("xh")).as("rr"))
-    val qm = queries
-      .select(col("query_id"),
-        transform(col("e"), x => round(x * lit(1000000.0d)).cast("long"))
-          .as("qm"))
-      .withColumn("q2m",
-        SumSqLong(col("qm")))
-    val tab = qm.crossJoin(broadcast(xhat))
-      .select(col("query_id"), col("q2m"), col("cell"), col("sub"),
-        col("cid"),
-        DotLong(slice(col("qm"), col("sub") * subDim + 1, lit(subDim)),
-          col("xh")).as("tm"))
-    val wm = W.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val shortlist = candSub
-      .join(broadcast(tab), Seq("query_id", "cell", "sub", "cid"))
-      .join(broadcast(rr), Seq("cell", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), sum(col("rr")).as("r2m"),
-        first(col("q2m")).as("q2m"))
-      .withColumn("cos", resAdcCos(col("dm"), col("q2m"), col("r2m")))
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wm).as("prnk"))
-      .filter(col("prnk") <= m)
-      .select("query_id", "vec_id")
-    val qf = queries.toDF("query_id", "eq")
-    val cand = corpus
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-    topK(cand, k)
+    val q = queries.toDF("query_id", "eq")
+    val probes = ivfProbes(asVectors(q), cents, nProbe)
+      .select("query_id", "probe")
+    val rows = codeRows(probeJoin(probes, index, "cell"),
+      "query_id", "vec_id", "cell")
+    rerankTopK(corpus,
+      residualScores(rows, q, microCentsOf(cents), cb, numSub, subDim), q, m, k)
   }
 
   def annIvfPqResidualFromIndexQuery(spark: SparkSession,
@@ -2232,64 +1762,31 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** The two r15 storage wins COMPOSED — the stored residual-PQ index
-    * (row 250) at int4 packing (row 253): (vec_id, cell, packed[M/2])
-    * where packed[b] = cid[2b] | cid[2b+1] << 4 — the production
-    * IVFADC index at HALF the code bytes (M/2 where row 250 stores M
-    * small ints, both against fp32's 4·dim). Written partitionBy(cell)
-    * the probe pruning story is unchanged. */
+  /** The stored residual-PQ index at int4 packing: (vec_id, cell,
+    * packed[M/2]) through [[packInt4]] with base = seedFrom — the seed
+    * codebook's cids are [seedFrom, seedFrom + numCodes) by construction
+    * (they are the seed vectors' ids), and serving re-bases. */
   def residualPqIndexRowsInt4(emb: DataFrame, cents: DataFrame,
                               numSub: Int = 8, subDim: Int = 8,
                               numCodes: Int = 16,
                               seedFrom: Int = 16): DataFrame = {
-    require(numCodes >= 1 && numCodes <= 16,
-      s"int4 packing needs numCodes <= 16, got $numCodes")
-    require(numSub >= 2 && numSub % 2 == 0,
-      s"int4 packing needs an even numSub, got $numSub")
-    // the seed codebook's cids are [seedFrom, seedFrom + numCodes) BY
-    // CONSTRUCTION (they are the seed vectors' ids) — a nibble stores
-    // cid − seedFrom, and serving re-bases. Packing a cid outside the
-    // nibble window would silently corrupt every code (this bug's
-    // first draft did exactly that: cids 16..31 into 4 bits), so the
-    // rebase guards loudly in-plan.
-    // upper bound is seedFrom + numCodes, NOT seedFrom + 16: with
-    // numCodes < 16 a cid in the [numCodes, 16) gap would still fit a
-    // nibble but violates the codebook's domain — the guard exists to
-    // catch exactly such convention drift, so it checks the real domain
-    def nib(e: String) =
-      s"(CASE WHEN $e < $seedFrom OR $e >= ${seedFrom + numCodes} THEN " +
-        "CAST(raise_error('int4 residual pack: cid out of the " +
-        s"nibble window [$seedFrom, ${seedFrom + numCodes})') AS BIGINT) " +
-        s"ELSE $e - $seedFrom END)"
+    val pack = packInt4(numSub, numCodes, seedFrom)
     residualPqIndexRows(emb, cents, numSub, subDim, numCodes, seedFrom)
-      .select(col("vec_id"), col("cell"), expr(
-        s"transform(sequence(0, ${numSub / 2 - 1}), " +
-          s"b -> CAST(${nib("codes[b * 2]")} | " +
-          s"shiftleft(${nib("codes[b * 2 + 1]")}, 4) AS INT))")
-        .as("packed"))
+      .select(col("vec_id"), col("cell"), pack)
   }
 
-  /** Serving from the PACKED stored index: nibbles unpack IN-SCAN
-    * (shiftright + mask — the ann_pq_int4_topk formula) into the
-    * UNCHANGED from-index plan, so the result is bit-identical to
-    * serving from the unpacked index and to the rebuild plan
-    * (spec-pinned; the oracle replays pack → unpack inside the
-    * ann_ivf_pq_residual chain). */
+  /** Serving from the PACKED stored index: [[unpackInt4]] re-bases the
+    * nibbles by `cidBase` (the packing's seedFrom) into the unchanged
+    * from-index plan, bit-identical to serving the unpacked index and to
+    * the rebuild plan (spec-pinned). */
   def annIvfPqResidualFromInt4Index(index: DataFrame, queries: DataFrame,
                                     corpus: DataFrame, cents: DataFrame,
                                     cb: DataFrame, nProbe: Int, m: Int,
                                     k: Int, numSub: Int, subDim: Int,
-                                    cidBase: Int = 16): DataFrame = {
-    // cidBase = the packing's seedFrom: nibbles re-base to the
-    // codebook's cid domain before the (cell, sub, cid) ADC joins
-    val unpacked = index.select(col("vec_id"), col("cell"), expr(
-      s"transform(sequence(0, ${numSub - 1}), " +
-        "s -> CAST((shiftright(packed[CAST(s div 2 AS INT)], " +
-        s"CAST(s % 2 AS INT) * 4) & 15) + $cidBase AS BIGINT))")
-      .as("codes"))
-    annIvfPqResidualFromIndex(unpacked, queries, corpus, cents, cb,
-      nProbe, m, k, numSub, subDim)
-  }
+                                    cidBase: Int = 16): DataFrame =
+    annIvfPqResidualFromIndex(
+      index.select(col("vec_id"), col("cell"), unpackInt4(numSub, cidBase)),
+      queries, corpus, cents, cb, nProbe, m, k, numSub, subDim)
 
   def annIvfPqResidualInt4Query(spark: SparkSession,
                                 dir: String): DataFrame = {
@@ -2304,187 +1801,265 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  def annPqTopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annPqTopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
-      .orderBy(col("query_id"), col("rnk"))
+  // ================================================== ANN recall queries
 
-  // --------------------------------------------------- int4-packed PQ
-
-  /** int4-PACKED PQ index rows (r14 verdict #2) — FAISS's PQx4
-    * storage: with numCodes ≤ 16 a code id fits 4 bits, so TWO codes
-    * pack per byte and the index halves again (M/2 bytes per vector
-    * where PQ8 stores M). Pure shift/mask column expressions (the
-    * zorder_key bit discipline): packed[b] = cid[2b] | cid[2b+1] << 4.
-    * This is a STORAGE change, not a model change — the codes are
-    * bit-identical to the unpacked frame, spec-pinned through the
-    * serving equality below. */
-  def pqInt4IndexRowsWith(v: DataFrame, cb: DataFrame, numSub: Int,
-                          subDim: Int, numCodes: Int): DataFrame = {
-    require(numCodes >= 1 && numCodes <= 16,
-      s"int4 packing needs numCodes <= 16, got $numCodes")
-    require(numSub >= 2 && numSub % 2 == 0,
-      s"int4 packing needs an even numSub, got $numSub")
-    val (enc, _) = pqPartsWith(v, cb, numSub, subDim)
-    enc.groupBy(col("vec_id"))
-      .agg(transform(
-        sort_array(collect_list(struct(col("sub"), col("cid")))),
-        s => s.getField("cid")).as("codes"))
-      // Spark SQL [] is 0-based (unlike element_at/DuckDB's 1-based)
-      .select(col("vec_id"), expr(
-        s"transform(sequence(0, ${numSub / 2 - 1}), " +
-          "b -> CAST(codes[b * 2] | shiftleft(codes[b * 2 + 1], 4) " +
-          "AS INT))").as("packed"))
-  }
-
-  def pqInt4IndexRows(emb: DataFrame, numSub: Int = 8, subDim: Int = 8,
-                      numCodes: Int = 16): DataFrame = {
+  /** MEASURED recall@k of IVF serving (annIvfTopK, one run per nProbe)
+    * against brute force, per query and nProbe — the knob-tuning
+    * artifact behind every "C and nProbe meet the recall SLA" claim
+    * (IVF recall has no closed form). Recall stages with per-query rows
+    * (denominator k). */
+  def annRecallEval(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
+                    numCentroids: Int = 16,
+                    nProbes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+    val budgets = Budgets("n_probe", nProbes)
+    require(nProbes.forall(p => p >= 1 && p <= numCentroids))
     val v = vectors(emb)
-    pqInt4IndexRowsWith(v, pqDefaultCodebook(v, numSub, subDim, numCodes),
-      numSub, subDim, numCodes)
+    recallBp(budgets.sweep(p => annIvfTopK(emb, numQueries, k, numCentroids, p)),
+      truthOf(v, prefixQueries(v, numQueries), k), k, None, "n_probe", "query_id")
   }
 
-  /** ann_pq_int4_topk — the flat ADC scan served from the int4-PACKED
-    * index: codes unpack IN-SCAN (shiftright + mask over the stored
-    * bytes — no full-width vector, no unpacked code frame is ever
-    * materialized), then the unchanged ADC chain scores them. Because
-    * pack/unpack is lossless, the result is BIT-IDENTICAL to
-    * annPqTopK on the same models — Batch15Spec pins the equality,
-    * and the oracle replays the pack → unpack bit formula in SQL. */
-  def annPqInt4TopK(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
-                    numSub: Int = 8, subDim: Int = 8,
-                    numCodes: Int = 16): DataFrame = {
-    require(numQueries >= 1 && k >= 1, s"bad numQueries=$numQueries/k=$k")
+  def annRecallEvalQuery(spark: SparkSession, dir: String): DataFrame =
+    annRecallEval(Tables.embeddings(spark, dir))
+      .orderBy(col("n_probe"), col("query_id"))
+
+  /** Recall@k per nProbe for TRAINED vs DEFAULT (first-C) centroids on
+    * held-out queries (neither path serves its own seed): coarse IVF,
+    * fp32 codes, top-k, recall stages. Both converge to 10000 at
+    * nProbe = C (spec-pinned). */
+  def annRecallTrained(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
+                       numCentroids: Int = 16, iters: Int = 2,
+                       nProbes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+    val budgets = Budgets("n_probe", nProbes)
+    require(nProbes.forall(p => p >= 1 && p <= numCentroids))
     val v = vectors(emb)
-    val cb = pqDefaultCodebook(v, numSub, subDim, numCodes)
-    // the stored index: numSub/2 bytes per vector, built once
-    val packed = pqInt4IndexRowsWith(v, cb, numSub, subDim, numCodes)
-      .localCheckpoint()
-    val enc = packed
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(numSub - 1))).as("sub"),
-        col("packed"))
-      .select(col("vec_id"), col("sub"), expr(
-        "CAST(shiftright(packed[CAST(sub div 2 AS INT)], " +
-          "CAST(sub % 2 AS INT) * 4) & 15 AS BIGINT)").as("cid"))
-    val r2 = enc.join(broadcast(cb), Seq("sub", "cid"))
-      .groupBy(col("vec_id"))
-      .agg(sum(round(dot(col("c"), col("c")) * lit(1000000.0d))
-        .cast("long")).as("r2m"))
-    val tab = pqQueryTab(v, cb, numQueries, subDim)
-    val sc = enc.join(broadcast(tab), Seq("sub", "cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("tm")).as("dm"), first(col("qn")).as("qn"))
-    val cand = sc.join(r2, "vec_id")
-      .withColumn("cos", pqAdcCos(col("dm"), col("qn"), col("r2m")))
-    topK(cand, k)
+    val h = heldout(emb, v, numQueries, numCentroids, k)
+    def served(tag: String, cents: DataFrame): DataFrame =
+      budgets.sweep(p => topK(ivfCandidates(v, cents, asVectors(h.q), p), k))
+        .select(lit(tag).as("centroids"), col("*"))
+    recallBp(served("default", defaultCentroids(emb, numCentroids))
+        .unionByName(served("trained",
+          trainIvfCentroidsExact(emb, numCentroids, iters))),
+      h.truth, k, Some(h.nq), "centroids", "n_probe")
   }
 
-  def annPqInt4TopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annPqInt4TopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
-      .orderBy(col("query_id"), col("rnk"))
+  def annRecallTrainedQuery(spark: SparkSession, dir: String): DataFrame =
+    annRecallTrained(Tables.embeddings(spark, dir))
+      .orderBy(col("centroids"), col("n_probe"))
 
-  /** Recall AT EQUAL BYTES — the measurement that justifies (or
-    * refutes) int4 packing as the production default: 4 bytes per
-    * vector spent as "pq8_4x16" (4 subspaces × 16 dims, one byte per
-    * code) vs "int4_8x8" (8 subspaces × 8 dims, two 4-bit codes per
-    * byte). Finer subspace granularity at the same storage is the
-    * int4 bet (FAISS PQx4). Both branches ADC-score the full corpus
-    * for 32 HELD-OUT queries (disjoint from the shared numCodes seed
-    * prefix) against the exact brute-force truth. The int4 branch
-    * legitimately scores from UNPACKED codes: pack/unpack is
-    * bit-lossless (pinned by ann_pq_int4_topk ≡ ann_pq_topk), so the
-    * row isolates the MODEL-shape effect — storage equality is the
-    * serving query's contract, not this instrument's. */
+  /** Does TRAINING the codebook buy recall at equal bytes? Flat ADC top-k
+    * from the default vs the Lloyd-trained codebook on held-out queries
+    * (disjoint from the default sample vec_id < numCodes, whose
+    * subvectors ARE default codewords, and from the trained init). */
+  def pqTrainRecall(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
+                    numSub: Int = 8, subDim: Int = 8, numCodes: Int = 16,
+                    iters: Int = 2): DataFrame = {
+    val v = vectors(emb)
+    val h = heldout(emb, v, numQueries, numCodes, k)
+    def served(tag: String, cb: DataFrame) =
+      pqAdcTopK(v, cb, h.q, k, numSub, subDim)
+        .select(lit(tag).as("codebook"), col("query_id"), col("neighbor_id"))
+    recallBp(served("default", pqDefaultCodebook(v, numSub, subDim, numCodes))
+        .unionByName(served("trained",
+          pqTrainCodebook(emb, numSub, subDim, numCodes, iters))),
+      h.truth, k, Some(h.nq), "codebook")
+  }
+
+  def pqTrainRecallQuery(spark: SparkSession, dir: String): DataFrame =
+    pqTrainRecall(Tables.embeddings(spark, dir)).orderBy(col("codebook"))
+
+  /** Recall AT EQUAL BYTES: 4 bytes per vector spent as "pq8_4x16" (4
+    * subspaces × 16 dims, a byte per code) vs "int4_8x8" (8 × 8, two
+    * 4-bit codes per byte), flat ADC top-k on held-out queries. The int4
+    * branch scores unpacked codes — pack/unpack is lossless (pinned by
+    * ann_pq_int4_topk ≡ ann_pq_topk), so the row isolates the model
+    * shape. */
   def pqInt4Recall(emb: DataFrame, numQueries: Int = 32, k: Int = 5,
                    numCodes: Int = 16): DataFrame = {
     val v = vectors(emb)
-    val hq = heldoutQueries(emb, numQueries, numCodes).localCheckpoint()
-    val nq = hq.agg(count(lit(1)).as("n_q"))
-    val truth = topK(cosineCandidatesQ(v, hq), k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-      .localCheckpoint()
+    val h = heldout(emb, v, numQueries, numCodes, k)
     def served(tag: String, numSub: Int, subDim: Int) =
-      pqAdcTopKQ(v, pqDefaultCodebook(v, numSub, subDim, numCodes), hq,
+      pqAdcTopK(v, pqDefaultCodebook(v, numSub, subDim, numCodes), h.q,
         k, numSub, subDim)
-        .select(lit(tag).as("encoding"), col("query_id"),
-          col("neighbor_id"))
-    served("pq8_4x16", 4, 16)
-      .unionByName(served("int4_8x8", 8, 8))
-      .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("encoding")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
+        .select(lit(tag).as("encoding"), col("query_id"), col("neighbor_id"))
+    recallBp(served("pq8_4x16", 4, 16).unionByName(served("int4_8x8", 8, 8)),
+        h.truth, k, Some(h.nq), "encoding")
       .select(col("encoding"), lit(4L).as("bytes_per_vec"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
+        col("recall_bp"))
   }
 
   def pqInt4RecallQuery(spark: SparkSession, dir: String): DataFrame =
     pqInt4Recall(Tables.embeddings(spark, dir)).orderBy(col("encoding"))
 
-  /** The FULL production ANN serving stack — IVF cell shortlist ×
-    * int8 scoring × fp32 rerank composed into one plan (the r10
-    * pieces ran separately: annIvfTopK scanned probed cells at fp32,
-    * annRerankTopK int8-scanned the WHOLE corpus). Three stages:
-    *
-    *   1. coarse: each query probes its nProbe nearest IVF cells, so
-    *      only ≈ nProbe·n/C corpus rows are touched at all;
-    *   2. shortlist: those rows are scored by QUANTIZED cosine (the
-    *      4x-smaller column a 100 TB index actually stores per cell)
-    *      and cut to the top m per query;
-    *   3. rerank: exact fp32 cosine on |Q|·m rows restores the true
-    *      ordering before the final top-k.
-    *
-    * Misses compose exactly like the parts: a true neighbor is lost
-    * only if it lives outside every probed cell (IVF recall, measured
-    * by SimilaritySpec's recall property) or quantization noise pushes
-    * it below rank m inside them (m >> k makes this rare; AnnRerankSpec
-    * pins the bound). With nProbe = C and m = corpus size the result
-    * EQUALS the exact brute-force baseline — the boundary contract
-    * AnnIvfRerankSpec pins.
-    *
-    * Scale shape: cell assignment and quantization are one map-side
-    * pass each, computed ONCE per corpus vector (inside `assigned`,
-    * not per candidate pair); both join stages broadcast only bounded
-    * frames (probes, then the |Q|·m shortlist); no shuffle ever
-    * carries full-width fp32 vectors except the final |Q|·m rerank. */
-  def annIvfRerankTopK(emb: DataFrame, numQueries: Int, m: Int, k: Int,
-                       numCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    require(m >= k, s"shortlist m=$m must be >= k=$k")
-    require(nProbe >= 1 && nProbe <= numCentroids,
-      s"nProbe must be in [1, numCentroids], got $nProbe")
-    val (assigned, probes) = ivfIndex(
-      emb, defaultCentroids(emb, numCentroids), numQueries, nProbe)
-    val a8 = assigned.withColumn("qe", graft.functions.Int8Quantize(col("e")))
-    val p8 = probes.select(col("query_id"),
-      graft.functions.Int8Quantize(col("eq")).as("qq"), col("probe"))
-    val wm = W.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("vec_id"))
-    val shortlist = broadcast(p8)
-      .join(a8, col("probe") === col("cell") &&
-        col("query_id") =!= col("vec_id"))
-      .withColumn("qcos", round(CosineSimilarity(col("qq"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"),
-        row_number().over(wm).as("prnk"))
-      .filter(col("prnk") <= m)
-      .select("query_id", "vec_id")
+  /** Does RESIDUAL encoding buy recall at equal bytes, per probe budget?
+    * Raw vs residual PQ inside the same IVF candidates (same cells, same
+    * M×numCodes bytes), top-k straight from the ADC — no rerank, so the
+    * rows measure the CODES — on held-out queries past both seed
+    * prefixes. One pass for the whole curve: candidates carry the probe
+    * rank of their cell, each (query, vec) is scored once at the
+    * maximum budget, and each budget's top-k is a rank filter. */
+  def pqResidualRecall(emb: DataFrame, numQueries: Int = 32, k: Int = 5,
+                       numCentroids: Int = 16,
+                       nProbes: Seq[Int] = Seq(1, 2, 4),
+                       numSub: Int = 8, subDim: Int = 8,
+                       numCodes: Int = 16): DataFrame = {
+    val budgets = Budgets("n_probe", nProbes)
+    require(nProbes.forall(p => p >= 1 && p <= numCentroids))
     val v = vectors(emb)
-    val qf = v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
-    val cand = v
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos", round(CosineSimilarity(col("eq"), col("e")), 6))
-    topK(cand, k)
+    val cents = defaultCentroids(emb, numCentroids)
+    val h = heldout(emb, v, numQueries, numCentroids + numCodes, k)
+    val (assigned, probes) = ivfIndexQ(v, cents, asVectors(h.q), nProbes.max)
+    val cand = ivfPairs(probes, assigned).localCheckpoint()
+    val cbRaw = pqDefaultCodebook(v, numSub, subDim, numCodes)
+    val rawScored = adcScores(cand.join(pqCodes(v, cbRaw, numSub, subDim), "vec_id"),
+      pqTable(h.q, cbRaw, subDim), pqAdc)
+    val cm = microCentsOf(cents)
+    val rm = residualFrame(assigned, cm)
+    val cbRes = residualSeedCodebook(rm, numSub, subDim, numCodes, numCentroids)
+    val resScored = residualScores(
+      cand.join(residualCodes(rm, cbRes, numSub, subDim), "vec_id"),
+      h.q, cm, cbRes, numSub, subDim)
+    def served(tag: String, scored: DataFrame) = {
+      val ranked = scored.join(cand, Seq("query_id", "vec_id")).localCheckpoint()
+      budgets.sweep(p => topK(ranked.filter(col("prnk") <= p), k))
+        .select(lit(tag).as("encoding"), col("*"))
+    }
+    recallBp(served("raw", rawScored).unionByName(served("residual", resScored)),
+      h.truth, k, Some(h.nq), "encoding", "n_probe")
   }
 
-  def annIvfRerankTopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annIvfRerankTopK(Tables.embeddings(spark, dir),
-      numQueries = 8, m = 12, k = 3)
-      .orderBy(col("query_id"), col("rnk"))
+  def pqResidualRecallQuery(spark: SparkSession, dir: String): DataFrame =
+    pqResidualRecall(Tables.embeddings(spark, dir))
+      .orderBy(col("encoding"), col("n_probe"))
 
-  def annInt8TopKQuery(spark: SparkSession, dir: String): DataFrame =
-    annInt8TopK(Tables.embeddings(spark, dir), numQueries = 8, k = 5)
-      .orderBy(col("query_id"), col("rnk"))
+  /** The RERANK budget's curve: shortlist depth m of the residual IVFADC
+    * chain on held-out queries. The candidates are ADC-ranked once at
+    * the maximum m and rescored in fp32 once; each m is a rank filter.
+    * Hits are non-decreasing in m — a TRUE invariant (SimilaritySpec):
+    * shortlists nest in m and the rerank orders by the truth's own exact
+    * rounded-6 + vec_id order, so a served true neighbor can only be
+    * displaced by a vector that is itself a truth row. */
+  def rerankBudgetRecall(emb: DataFrame, numQueries: Int = 32, k: Int = 5,
+                         ms: Seq[Int] = Seq(5, 10, 20, 40),
+                         numCentroids: Int = 16, nProbe: Int = 4,
+                         numSub: Int = 8, subDim: Int = 8,
+                         numCodes: Int = 16): DataFrame = {
+    val budgets = Budgets("m", ms)
+    require(ms.forall(_ >= k), s"every rerank budget must be >= k=$k, got $ms")
+    require(nProbe >= 1 && nProbe <= numCentroids,
+      s"nProbe must be in [1, numCentroids=$numCentroids], got $nProbe")
+    val v = vectors(emb)
+    val cents = defaultCentroids(emb, numCentroids)
+    val h = heldout(emb, v, numQueries, numCentroids + numCodes, k)
+    val (assigned, probes) = ivfIndexQ(v, cents, asVectors(h.q), nProbe)
+    val cm = microCentsOf(cents)
+    val rm = residualFrame(assigned, cm)
+    val cb = residualSeedCodebook(rm, numSub, subDim, numCodes, numCentroids)
+    val rows = ivfPairs(probes, assigned)
+      .join(residualCodes(rm, cb, numSub, subDim), "vec_id")
+    // exact rerank scores computed ONCE at the max budget — |Q|·maxM
+    // rows; every m reads this frame through a rank filter
+    val exact = exactRescore(v,
+        shortlist(residualScores(rows, h.q, cm, cb, numSub, subDim), ms.max), h.q)
+      .select("query_id", "vec_id", "cos", "prnk")
+      .localCheckpoint()
+    recallBp(budgets.sweep(m => topK(exact.filter(col("prnk") <= m), k)),
+      h.truth, k, Some(h.nq), "m")
+  }
+
+  def rerankBudgetRecallQuery(spark: SparkSession, dir: String): DataFrame =
+    rerankBudgetRecall(Tables.embeddings(spark, dir)).orderBy(col("m"))
+
+  /** Seeded vs TRAINED residual codebooks at equal bytes: the same trained
+    * coarse quantizer and the same candidates (the row isolates the
+    * codebook-training effect), top-k from the ADC, held-out queries. */
+  def pqResidualTrainedRecall(emb: DataFrame, numQueries: Int = 8,
+                              k: Int = 5, numCentroids: Int = 16,
+                              nProbe: Int = 4, numSub: Int = 8,
+                              subDim: Int = 8, numCodes: Int = 16,
+                              iters: Int = 2): DataFrame = {
+    val v = vectors(emb)
+    val cents = trainIvfCentroidsExact(emb, numCentroids, iters)
+    val h = heldout(emb, v, numQueries, numCentroids + numCodes, k)
+    val (assigned, probes) = ivfIndexQ(v, cents, asVectors(h.q), nProbe)
+    val cand = ivfPairs(probes, assigned).localCheckpoint()
+    val cm = castCentsOf(cents)
+    val rm = residualFrame(assigned, cm).localCheckpoint()
+    def branch(tag: String, cb: DataFrame) =
+      topK(residualScores(cand.join(residualCodes(rm, cb, numSub, subDim), "vec_id"),
+          h.q, cm, cb, numSub, subDim), k)
+        .select(lit(tag).as("codebook"), col("query_id"), col("neighbor_id"))
+    recallBp(branch("seeded",
+        residualSeedCodebook(rm, numSub, subDim, numCodes, numCentroids))
+        .unionByName(branch("trained",
+          pqTrainResidualCodebook(rm, numSub, subDim, numCodes, iters))),
+      h.truth, k, Some(h.nq), "codebook")
+  }
+
+  def pqResidualTrainedRecallQuery(spark: SparkSession,
+                                   dir: String): DataFrame =
+    pqResidualTrainedRecall(Tables.embeddings(spark, dir))
+      .orderBy(col("codebook"))
+
+  /** Matryoshka (MRL — Kusupati et al. 2022) dimension-tier recall:
+    * brute-force cosine top-k on the FIRST d dimensions per tier d,
+    * against the full-dimension tier as truth — how many leading dims a
+    * serving index needs. ONE corpus scan: every (query, vector) pair
+    * scores all tiers in-row, unpivots to (dims, query, vec, cos), and
+    * the per-tier top-k is one window pass over a checkpointed edge
+    * frame; recall stages with the top tier as truth, so that row reads
+    * 10000 by construction. */
+  def annMatryoshkaRecall(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
+                          tiers: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
+    Budgets("dims", tiers) // rejects a repeated tier before any scan
+    require(tiers == tiers.sorted && tiers.forall(_ >= 1),
+      "tiers must be ascending positive dims")
+    val v = vectors(emb)
+    val q = prefixQueries(v, numQueries)
+    val cand = flatPairs(q, v)
+      .select(Seq(col("query_id"), col("vec_id")) ++ tiers.map { d =>
+        cosOf(slice(col("eq"), 1, d), slice(col("e"), 1, d)).as(s"cos_$d")
+      }: _*)
+    val long = cand.selectExpr("query_id", "vec_id",
+      s"stack(${tiers.size}, " +
+        tiers.map(d => s"CAST($d AS BIGINT), cos_$d").mkString(", ") +
+        ") AS (dims, cos)")
+    val w = W.partitionBy(col("dims"), col("query_id"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    val edges = long
+      .select(col("dims"), col("query_id"), col("vec_id").as("neighbor_id"),
+        row_number().over(w).as("rnk"))
+      .filter(col("rnk") <= k)
+      .localCheckpoint()
+    val truth = edges.filter(col("dims") === tiers.max.toLong)
+      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
+    recallBp(edges, truth, k, Some(q.agg(count(lit(1)).as("n_q"))), "dims")
+  }
+
+  def annMatryoshkaRecallQuery(spark: SparkSession, dir: String): DataFrame =
+    annMatryoshkaRecall(Tables.embeddings(spark, dir)).orderBy(col("dims"))
+
+  /** MEASURED neighborhood shift of the all-but-the-top transform:
+    * brute-force top-k over the POSTPROCESSED vectors (query side too)
+    * against the original-vector truth, per query — recall_bp near
+    * 10000 means the common direction carried little neighbor
+    * information. Recall stages with per-query rows. */
+  def embedAllButTopRecall(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
+                           iters: Int = 6, dim: Int = 64): DataFrame = {
+    val post = allButTopVectors(emb, iters, dim)
+      .select(col("vec_id"),
+        transform(col("num"), n =>
+          when(col("nrm") === 0.0d, lit(0.0d))
+            .otherwise(round(n.cast("double") / col("nrm")
+              * lit(1000000.0d)).cast("long").cast("double"))).as("e"))
+      .localCheckpoint()
+    val v = vectors(emb)
+    recallBp(topK(fp32Pairs(post, prefixQueries(post, numQueries)), k),
+      truthOf(v, prefixQueries(v, numQueries), k), k, None, "query_id")
+  }
+
+  def embedAllButTopRecallQuery(spark: SparkSession, dir: String): DataFrame =
+    embedAllButTopRecall(Tables.embeddings(spark, dir))
+      .orderBy(col("query_id"))
 
   // ---------------------------------------------------------------- kNN graph
 
@@ -2497,7 +2072,7 @@ object Similarity {
     *
     * This is ann_ivf serving with Q = the corpus itself, and the scale
     * shape changes where it must: the probe side is corpus-sized, so
-    * it is NOT broadcast (contrast annIvfCandidates) — candidates come
+    * it is NOT broadcast (contrast ivfCandidates) — candidates come
     * from a shuffled equi-join on (cell, blk), where `blk` sub-tiles
     * each cell's corpus slice so a hot cell splits across numBlocks
     * tasks instead of funneling through one (the cosineNearDupPairs
@@ -2520,8 +2095,10 @@ object Similarity {
                                    numCentroids: Int, nProbe: Int,
                                    numBlocks: Int): DataFrame = {
     require(nProbe >= 1 && nProbe <= numCentroids && numBlocks >= 1)
-    val cents = defaultCentroids(emb, numCentroids)
-    val (assigned, probes) = ivfIndexOpt(emb, cents, None, nProbe)
+    val v = vectors(emb)
+    // every corpus vector is a query: no vec_id bound, so a Long id
+    // space (ids >= 2^31 from sharded ingest) keeps its full adjacency
+    val (assigned, probes) = ivfIndexQ(v, defaultCentroids(emb, numCentroids), v, nProbe)
     val blocked = assigned
       .select(col("vec_id").as("neighbor_id"), col("cell"), col("e").as("en"),
         pmod(col("vec_id"), lit(numBlocks.toLong)).as("blk"))
@@ -2896,94 +2473,6 @@ object Similarity {
   def topComponentQuery(spark: SparkSession, dir: String): DataFrame =
     topComponent(Tables.embeddings(spark, dir)).orderBy(col("dim"))
 
-  // ---------------------------------------------------------------- recall eval
-
-  /** MEASURED recall@k of the IVF serving path against exact brute
-    * force, per query and per nProbe setting — the knob-tuning
-    * artifact behind every "C and nProbe were chosen to meet the
-    * recall SLA" claim in this family (the banding analog is
-    * bandingFor's closed form; IVF recall has no closed form, so it
-    * must be measured). recall_bp = 10000·hits div k in BIGINTs.
-    *
-    * Scale shape: each probed serving run is the annIvfTopK plan
-    * unchanged (one per nProbe, unioned — the cells scan is shared
-    * work a cache-conscious caller can persist); the exact side is the
-    * brute-force baseline ONCE; both sides land as |Q|·k edge frames
-    * and the hit join + per-(nProbe, query) aggregate never touch
-    * anything corpus-sized. */
-  def annRecallEval(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
-                    numCentroids: Int = 16,
-                    nProbes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    require(nProbes.nonEmpty && nProbes.forall(p => p >= 1 && p <= numCentroids))
-    val exact = annCosineTopK(emb, numQueries, k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-    val approx = nProbes.map { p =>
-      annIvfTopK(emb, numQueries, k, numCentroids, p)
-        .select(lit(p).as("n_probe"), col("query_id"), col("neighbor_id"))
-    }.reduce(_ unionByName _)
-    approx.join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("n_probe", "query_id")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .select(col("n_probe"), col("query_id"), col("hits"),
-        expr(s"(10000 * hits) div $k").as("recall_bp"))
-  }
-
-  def annRecallEvalQuery(spark: SparkSession, dir: String): DataFrame =
-    annRecallEval(Tables.embeddings(spark, dir))
-      .orderBy(col("n_probe"), col("query_id"))
-
-  /** Matryoshka (MRL — Kusupati et al. 2022) dimension-tier recall:
-    * brute-force cosine top-k using only the FIRST d dimensions, per
-    * tier d, against the full-dimension truth — the measured
-    * accuracy-vs-cost curve that decides how many leading dims a
-    * serving index actually needs (an MRL-trained encoder front-loads
-    * information, so low tiers stay useful; this instrument is how
-    * you check YOUR embeddings before truncating them).
-    *
-    * Scale shape: ONE corpus scan — every (query, vector) pair scores
-    * ALL tiers in-row (prefix cosines share the broadcast-query scan),
-    * then unpivots to (dims, query, vec, cos) so the per-tier top-k is
-    * a single window pass; the edge frame (|tiers|·|Q|·k rows) is
-    * localCheckpointed before the truth self-join (the k-core lesson —
-    * a recursive consumer would replay the corpus scan).
-    *
-    * The top tier IS the truth, so its row reports recall_bp = 10000
-    * by construction — the eval's self-check. */
-  def annMatryoshkaRecall(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
-                          tiers: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
-    require(tiers.nonEmpty && tiers == tiers.sorted && tiers.forall(_ >= 1),
-      "tiers must be ascending positive dims")
-    val v = vectors(emb)
-    val q = v.filter(col("vec_id") < numQueries).toDF("query_id", "eq")
-    val cand = broadcast(q).join(v, col("query_id") =!= col("vec_id"))
-      .select(Seq(col("query_id"), col("vec_id")) ++ tiers.map { d =>
-        round(CosineSimilarity(slice(col("eq"), 1, d), slice(col("e"), 1, d)),
-          6).as(s"cos_$d")
-      }: _*)
-    val long = cand.selectExpr("query_id", "vec_id",
-      s"stack(${tiers.size}, " +
-        tiers.map(d => s"CAST($d AS BIGINT), cos_$d").mkString(", ") +
-        ") AS (dims, cos)")
-    val w = W.partitionBy(col("dims"), col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val edges = long
-      .select(col("dims"), col("query_id"), col("vec_id").as("neighbor_id"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
-      .localCheckpoint()
-    val truth = edges.filter(col("dims") === tiers.max.toLong)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-    val nq = q.agg(count(lit(1)).as("n_q"))
-    edges.join(truth, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("dims")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("dims"), col("hits"),
-        expr(s"(10000 * hits) div (n_q * $k)").as("recall_bp"))
-  }
-
-  def annMatryoshkaRecallQuery(spark: SparkSession, dir: String): DataFrame =
-    annMatryoshkaRecall(Tables.embeddings(spark, dir)).orderBy(col("dims"))
 
   /** The TRANSFORM ann_matryoshka_recall gates: truncate every vector
     * to its first `d` dims and re-normalize to unit length, shipped in
@@ -3084,41 +2573,6 @@ object Similarity {
   def embedAllButTopQuery(spark: SparkSession, dir: String): DataFrame =
     embedAllButTop(Tables.embeddings(spark, dir)).orderBy(col("vec_id"))
 
-  /** MEASURED neighborhood shift of the all-but-the-top transform:
-    * brute-force cosine top-k over the POSTPROCESSED vectors (query
-    * side postprocessed too — the transform applies to the whole
-    * space) against the original-vector truth, per query. recall_bp
-    * near 10000 ⇒ the common direction carried little neighbor
-    * information; a low row names the queries whose neighborhoods the
-    * anisotropy was defining — the measurement that decides whether
-    * to ship the transform (the ann_recall_eval discipline pointed at
-    * a TRANSFORM instead of an index knob).
-    *
-    * Scale shape: annCosineTopK's twice (bounded broadcast-query scan
-    * each side) + a |Q|·k edge join — nothing corpus-sized shuffles. */
-  def embedAllButTopRecall(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
-                           iters: Int = 6, dim: Int = 64): DataFrame = {
-    val post = allButTopVectors(emb, iters, dim)
-      .select(col("vec_id"),
-        transform(col("num"), n =>
-          when(col("nrm") === 0.0d, lit(0.0d))
-            .otherwise(round(n.cast("double") / col("nrm")
-              * lit(1000000.0d)).cast("long").cast("double"))).as("e"))
-      .localCheckpoint()
-    val served = topK(cosineCandidatesQ(post,
-      post.filter(col("vec_id") < numQueries).toDF("query_id", "eq")), k)
-    val truth = annCosineTopK(emb, numQueries, k)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-    served.join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-      .select(col("query_id"), col("hits"),
-        expr(s"(10000 * hits) div $k").as("recall_bp"))
-  }
-
-  def embedAllButTopRecallQuery(spark: SparkSession, dir: String): DataFrame =
-    embedAllButTopRecall(Tables.embeddings(spark, dir))
-      .orderBy(col("query_id"))
 
   /** Exact-integer Gram-Schmidt step shared by the v₂ iteration and
     * its seed: o = u·⟨v₁,v₁⟩ − ⟨u,v₁⟩·v₁ over (j, u)/(j, v) frames —

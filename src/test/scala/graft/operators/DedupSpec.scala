@@ -468,4 +468,22 @@ class DedupSpec extends SparkSpec {
     assert(out(2L) === ((2L, 2L, 0L)))
     assert(out(3L) === ((3L, 5L, 0L)))
   }
+
+  test("tauSweep: cumulative counts are monotone and pin the operator curve") {
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val out = Dedup.tauSweep(docs)
+      .select("tau_bp", "n_pairs").as[(Long, Long)].collect().sortBy(_._1)
+    assert(out.map(_._1) === Seq(5000L, 6000L, 7000L, 8000L, 9000L, 10000L))
+    val counts = out.map(_._2)
+    assert(counts.zip(counts.tail).forall { case (lo, hi) => lo >= hi },
+      "raising tau can only lose pairs")
+    // the sweep's exact cross-multiplied histogram makes each row
+    // EQUAL the deletion count of the operator it predicts: n_pairs(τ)
+    // == ngramJaccardPairs(tau = τ/10000).count(), at every threshold,
+    // not just the floor
+    out.foreach { case (tauBp, n) =>
+      val op = Dedup.ngramJaccardPairs(docs, 3, tauBp / 10000.0).count()
+      assert(n === op, s"sweep row $tauBp must equal the operator count")
+    }
+  }
 }

@@ -111,4 +111,31 @@ class MixturePlanSpec extends SparkSpec {
       assert(planned === expected(c), s"$c plan must match solve()")
     }
   }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  test("mixturePlanClusters: component sizes ARE the trained " +
+      "assignment's cluster sizes; plan invariants hold") {
+    val docs = graft.core.Tables.documents(spark, sf)
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val plan = MixturePlan.mixturePlanClusters(docs, emb)
+      .select("component", "n_docs", "src_tokens", "planned_tokens",
+        "epochs_micro", "capped")
+      .as[(String, Long, Long, Long, Long, Boolean)].collect().toSeq
+    // the component dim IS the assignment: per-cell counts must match
+    val cents = Similarity.trainIvfCentroidsExact(emb, 12, 2)
+    val sizes = Similarity.assignToCells(Similarity.vectors(emb), cents)
+      .groupBy("cell").count()
+      .as[(Long, Long)].collect().toMap
+    assert(plan.map(p => (p._1, p._2)).toSet ===
+      sizes.map { case (c, n) => (s"cell$c", n) }.toSet,
+      "plan components must mirror the trained cluster sizes exactly")
+    // solver invariants (the mixture_plan laws on the new front end):
+    // epoch cap respected; capped components sit exactly at the cap
+    plan.foreach { case (c, _, t, p, em, capped) =>
+      assert(em <= 4000000L, s"$c exceeds the epoch cap")
+      if (capped) assert(p === (t * 4000000L) / 1000000L,
+        s"capped component $c must sit exactly at cap")
+    }
+  }
 }

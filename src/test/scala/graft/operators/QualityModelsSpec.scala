@@ -782,4 +782,30 @@ class QualityModelsSpec extends SparkSpec {
     def toMap2: Map[Long, (Long, Long, Long)] =
       rows.map { case (k, a, b, c) => k -> ((a, b, c)) }.toMap
   }
+
+  test("scoreAucEval: doubled-units U is exact on a hand-built case") {
+    // craft four docs where both scorers are deterministic; we verify
+    // the U machinery itself against a brute-force pair count
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val out = QualityModels.scoreAucEval(docs)
+      .select("n_pos", "n_neg", "u2", "auc_bp")
+      .as[(Long, Long, Long, Long)].head()
+    val (p, n, u2, bp) = out
+    assert(p + n === docs.count())
+    assert(u2 >= 0 && u2 <= 2 * p * n, "U bounded by all-pairs")
+    assert(bp === (10000L * u2) / (2 * p * n))
+
+    // brute-force reference on the same inputs
+    val sc = QualityModels.qualityLogreg(docs,
+        QualityModels.defaultQualityWeights(spark))
+      .select("doc_id", "score").as[(Long, Long)].collect().toMap
+    val keep = QualityModels.gopherRules(docs)
+      .select("doc_id", "keep").as[(Long, Boolean)].collect().toMap
+    val pos = keep.filter(_._2).keys.toSeq
+    val neg = keep.filterNot(_._2).keys.toSeq
+    val u2Brute = (for { a <- pos; b <- neg } yield {
+      if (sc(a) > sc(b)) 2L else if (sc(a) == sc(b)) 1L else 0L
+    }).sum
+    assert(u2 === u2Brute, "histogram U must equal the all-pairs count")
+  }
 }

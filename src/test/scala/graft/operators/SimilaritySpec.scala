@@ -950,4 +950,197 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(viaTrained === viaWith)
   }
+
+  // ---- raw-scale guard, int4 packing, rerank budget and equal-bytes
+  //      recall, embedding norm QC
+
+  test("residualSeedCodebookOf / residualPqIndexRows fail LOUDLY on " +
+      "micro-valued (trained-style) centroids instead of encoding junk") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    // trainIvfCentroidsExact output convention: micro-valued doubles
+    val microCents = Similarity.defaultCentroids(emb, 4)
+      .select(col("cid"),
+        transform(col("ce"), x => round(x * lit(1000000.0d))).as("ce"))
+    def mustFail(f: => org.apache.spark.sql.DataFrame): Unit = {
+      val ex = intercept[Exception] { f.collect() }
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty
+        else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(ex).exists(_.contains("MICRO-valued")),
+        s"expected the raw-scale guard message, got: $ex")
+    }
+    mustFail(Similarity.residualSeedCodebookOf(emb, microCents))
+    mustFail(Similarity.residualPqIndexRows(emb, microCents))
+    mustFail(Similarity.residualPqIndexRowsWith(emb, microCents,
+      Similarity.residualSeedCodebookOf(emb,
+        Similarity.defaultCentroids(emb, 4))))
+    // raw-scale centroids still pass through untouched
+    val ok = Similarity.residualSeedCodebookOf(emb,
+      Similarity.defaultCentroids(emb, 4), numCodes = 4)
+    assert(ok.count() > 0)
+  }
+
+  test("rerankBudgetRecall: strictly valid curve — per-m hits are " +
+      "non-decreasing (a TRUE invariant here), full-budget top") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val rows = Similarity.rerankBudgetRecall(emb)
+      .select("m", "hits", "recall_bp")
+      .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
+    assert(rows.map(_._1) === Seq(5, 10, 20, 40))
+    // shortlists nest in m and the rerank orders by the truth's own
+    // exact rounded-6 cosine + vec_id tiebreak: a served true neighbor
+    // can only be displaced by a higher-exact-ranked vector, which is
+    // itself a truth row — so hits can never drop when m grows. This
+    // is a real invariant, not a data-pinned observation (contrast the
+    // nProbe curve, where ADC approximation breaks it).
+    val hits = rows.map(_._2)
+    assert(hits.zip(hits.tail).forall { case (a, b) => b >= a },
+      s"hits must be non-decreasing in m: $hits")
+    rows.foreach { case (_, h, bp) =>
+      assert(bp === (10000L * h) / (32L * 5L),
+        "denominator must be the actual held-out count (32 at this sf)")
+    }
+  }
+
+  test("int4 packing is bit-lossless: annPqInt4TopK == annPqTopK " +
+      "row for row (storage change, not model change)") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val packed = Similarity.annPqInt4TopK(emb, numQueries = 8, k = 5)
+      .select("query_id", "neighbor_id", "cos", "rnk")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val flat = Similarity.annPqTopK(emb, numQueries = 8, k = 5)
+      .select("query_id", "neighbor_id", "cos", "rnk")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    assert(packed === flat,
+      "serving from packed 4-bit codes must equal the byte-code plan")
+  }
+
+  test("int4 pack bit formula: two 4-bit cids per byte, hand-checked") {
+    // codes per sub for one vector -> packed bytes:
+    //  (3, 9)  -> 3 | 9<<4  = 147;  (15, 0) -> 15 | 0<<4 = 15
+    val enc = Seq((7L, 0, 3L), (7L, 1, 9L), (7L, 2, 15L), (7L, 3, 0L))
+      .toDF("vec_id", "sub", "cid")
+    val packed = enc.groupBy(col("vec_id"))
+      .agg(org.apache.spark.sql.functions.transform(
+        sort_array(collect_list(struct(col("sub"), col("cid")))),
+        s => s.getField("cid")).as("codes"))
+      .select(col("vec_id"), expr(
+        "transform(sequence(0, 1), " +
+          "b -> CAST(codes[b * 2] | shiftleft(codes[b * 2 + 1], 4) " +
+          "AS INT))").as("packed"))
+      .as[(Long, Seq[Int])].collect().head
+    assert(packed === ((7L, Seq(147, 15))))
+    // and the unpack formula inverts it
+    val unpacked = Seq((7L, Seq(147, 15))).toDF("vec_id", "packed")
+      .select(col("vec_id"),
+        explode(sequence(lit(0), lit(3))).as("sub"), col("packed"))
+      .select(col("sub"), expr(
+        "CAST(shiftright(packed[CAST(sub div 2 AS INT)], " +
+          "CAST(sub % 2 AS INT) * 4) & 15 AS BIGINT)").as("cid"))
+      .as[(Int, Long)].collect().sortBy(_._1).toSeq
+    assert(unpacked === Seq((0, 3L), (1, 9L), (2, 15L), (3, 0L)))
+  }
+
+  test("int4 residual index: packed serving == unpacked serving == " +
+      "rebuild; stored row carries M/2 nibbles-bytes") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val v = Similarity.vectors(emb)
+    val cents = Similarity.defaultCentroids(emb, 16).localCheckpoint()
+    val cb = Similarity.residualSeedCodebookOf(emb, cents).localCheckpoint()
+    val queries = v.filter(col("vec_id") < 8).toDF("query_id", "e")
+    val packedIdx = Similarity.residualPqIndexRowsInt4(emb, cents)
+      .localCheckpoint()
+    // the storage halves: 4 packed bytes where the unpacked index
+    // stores 8 code ids
+    assert(packedIdx.select(size(col("packed"))).distinct()
+      .as[Int].collect().toSeq === Seq(4))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "cos", "rnk")
+        .as[(Long, Long, Double, Int)].collect().toSet
+    val fromPacked = rows(Similarity.annIvfPqResidualFromInt4Index(
+      packedIdx, queries, v, cents, cb,
+      nProbe = 4, m = 12, k = 3, numSub = 8, subDim = 8))
+    val fromPlain = rows(Similarity.annIvfPqResidualFromIndex(
+      Similarity.residualPqIndexRows(emb, cents), queries, v, cents, cb,
+      nProbe = 4, m = 12, k = 3, numSub = 8, subDim = 8))
+    assert(fromPacked === fromPlain,
+      "nibble packing must be serving-invisible")
+    assert(fromPacked === rows(Similarity.annIvfPqResidualTopK(emb)),
+      "packed-index serving must equal the rebuild plan")
+  }
+
+  test("pqInt4Recall: equal-bytes rows present, actual-count " +
+      "denominator, shared truth") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val rows = Similarity.pqInt4Recall(emb)
+      .select("encoding", "bytes_per_vec", "hits", "recall_bp")
+      .as[(String, Long, Long, Long)].collect().toSeq
+    assert(rows.map(_._1).toSet === Set("pq8_4x16", "int4_8x8"))
+    rows.foreach { case (_, bytes, h, bp) =>
+      assert(bytes === 4L)
+      assert(bp === (10000L * h) / (32L * 5L))
+    }
+  }
+
+  test("rerankBudgetRecall: m = corpus recovers the candidate-set " +
+      "recall ceiling (exact rerank over ALL probed candidates)") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    // at m >= |candidates| the rerank IS an exact top-k over the
+    // probed cells: the curve's ceiling equals serving the candidates
+    // exactly — more budget cannot help past the probe recall
+    val wide = Similarity.rerankBudgetRecall(emb, ms = Seq(5, 100000))
+      .select("m", "recall_bp").as[(Int, Long)].collect().toMap
+    assert(wide(100000) >= wide(5))
+    val again = Similarity.rerankBudgetRecall(emb,
+      ms = Seq(100000, 200000))
+      .select("m", "recall_bp").as[(Int, Long)].collect().toMap
+    assert(again(100000) === again(200000),
+      "past the candidate-set size, the budget knob must saturate")
+    assert(again(100000) === wide(100000))
+  }
+
+  test("embedNormQc: zero vectors and non-finite components are flagged apart") {
+    val d = Seq(
+      (1L, Array(3.0f, 4.0f), 0),                  // norm 5
+      (2L, Array(0.0f, 0.0f), 0),                  // zero vector
+      (3L, Array(Float.NaN, 1.0f), 0),             // non-finite
+      (4L, Array(Float.PositiveInfinity, 0.0f), 1))
+      .toDF("vec_id", "embedding", "label")
+    val out = Similarity.embedNormQc(d)
+      .select("label", "n", "min_norm_micro", "max_norm_micro", "n_zero",
+        "n_nonfinite")
+      .as[(Int, Long, Option[Long], Option[Long], Long, Long)]
+      .collect().toSeq.sortBy(_._1)
+    assert(out === Seq(
+      (0, 3L, Some(0L), Some(5000000L), 1L, 1L),
+      (1, 1L, None, None, 0L, 1L)))
+  }
+
+  test("embedNormQc: the real table is clean") {
+    val out = Similarity.embedNormQc(
+        graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001"))
+      .agg(sum("n_zero"), sum("n_nonfinite")).as[(Long, Long)].head()
+    assert(out === ((0L, 0L)))
+  }
+
+  test("every recall instrument rejects a repeated budget (a repeat " +
+      "would double-count its hits)") {
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val cases: Seq[(String, () => Any)] = Seq(
+      "annRecallEval" -> (() => Similarity.annRecallEval(emb,
+        nProbes = Seq(1, 1, 2))),
+      "annRecallTrained" -> (() => Similarity.annRecallTrained(emb,
+        nProbes = Seq(2, 4, 2))),
+      "pqResidualRecall" -> (() => Similarity.pqResidualRecall(emb,
+        nProbes = Seq(1, 2, 2))),
+      "annMatryoshkaRecall" -> (() => Similarity.annMatryoshkaRecall(emb,
+        tiers = Seq(8, 8, 16))),
+      "rerankBudgetRecall" -> (() => Similarity.rerankBudgetRecall(emb,
+        ms = Seq(5, 10, 10))))
+    cases.foreach { case (name, build) =>
+      withClue(s"$name: ") {
+        intercept[IllegalArgumentException](build())
+      }
+    }
+  }
 }
