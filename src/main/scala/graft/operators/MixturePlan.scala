@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.TextFunctions._
+import graft.oracle.AnnSql
 
 /** Mixture EPOCH PLANNING — the waterfilling solver that turns a
   * target source mixture into concrete per-source repeat factors.
@@ -345,10 +346,10 @@ object MixturePlan {
     "mixture_plan_clusters" ->
       s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e
          |           FROM embeddings),
-         |${Similarity.trainedCentsCtes(numCentroids = 12, iters = 2)},
+         |${AnnSql.trainedCents(numCentroids = 12, iters = 2)},
          |ac AS (
          | SELECT v.vec_id, c.cid,
-         |  ${Similarity.cosSql("v.e", "c.ce")} AS ccos
+         |  ${AnnSql.cosSql("v.e", "c.ce")} AS ccos
          | FROM v CROSS JOIN cents c),
          |assigned AS (
          | SELECT vec_id, cid AS cell FROM (

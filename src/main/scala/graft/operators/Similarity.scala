@@ -8,6 +8,8 @@ import graft.core.Tables
 import graft.functions.{CosineSimilarity, DotLong, HyperplaneBucket, Int8Quantize, SqDistLong,
   SumSqLong, SumSqLongAsDouble}
 import graft.functions.TextFunctions._
+import graft.oracle.AnnSql.cosSql
+import graft.oracle.PcaSql.{allButTopCtes, topComponentCtes}
 
 /** Embedding similarity: cosine near-dup pairs, brute-force top-k ANN
   * (the correctness baseline) and a random-hyperplane-LSH bucketed ANN
@@ -532,7 +534,7 @@ object Similarity {
     * md5-derived value in [-1, 1). Driver-side constants — the plane
     * matrix is tiny (numPlanes x dim) and ships as literals, the moral
     * equivalent of broadcasting the model. */
-  private def planeMatrix(numPlanes: Int, dim: Int): Seq[Seq[Double]] = {
+  private[graft] def planeMatrix(numPlanes: Int, dim: Int): Seq[Seq[Double]] = {
     val digest = java.security.MessageDigest.getInstance("MD5")
     def h(s: String): Double = {
       val bytes = digest.digest(s.getBytes("UTF-8"))
@@ -546,7 +548,7 @@ object Similarity {
   /** All XOR masks of Hamming weight <= r over `planes` bits — the
     * multi-probe neighborhood. Driver-side constant (2^planes masks
     * scanned; planes is single-digit). */
-  private def probeMasks(numPlanes: Int, probeHamming: Int): Seq[Int] =
+  private[graft] def probeMasks(numPlanes: Int, probeHamming: Int): Seq[Int] =
     (0 until (1 << numPlanes)).filter(m => Integer.bitCount(m) <= probeHamming)
 
   // ------------------------------------------------- trainers and codecs
@@ -1262,6 +1264,18 @@ object Similarity {
         .reduce(_ unionByName _)
   }
 
+  /** Recall stage, probe-budget sweep of fp32 IVF serving: the
+    * candidates of `q` are scored ONCE at the largest budget, each
+    * tagged with the probe rank `prnk` of the cell that holds it, and
+    * every budget p is a `prnk <= p` filter plus top-k — one candidate
+    * frame for the whole curve, equal to serving each budget alone. */
+  private def ivfProbeSweep(v: DataFrame, cents: DataFrame, q: DataFrame,
+                            budgets: Budgets, k: Int): DataFrame = {
+    val cand = ivfCandidates(v, cents, asVectors(q), budgets.values.max)
+      .localCheckpoint()
+    budgets.sweep(p => topK(cand.filter(col("prnk") <= p), k))
+  }
+
   /** THE recall aggregate: served top-k rows (keys..., query_id,
     * neighbor_id) left-joined to the truth, hits summed per key tuple,
     * recall_bp = (10000·hits) div (n·k) in BIGINT. n is the ACTUAL query
@@ -1715,17 +1729,6 @@ object Similarity {
     codeArrays(residualCodes(rawResiduals(emb, cents), cb, numSub, subDim),
       "vec_id", "cell")
 
-  /** The residual-PQ index rows against the corpus' own seeded codebook. */
-  def residualPqIndexRows(emb: DataFrame, cents: DataFrame,
-                          numSub: Int = 8, subDim: Int = 8,
-                          numCodes: Int = 16,
-                          seedFrom: Int = 16): DataFrame = {
-    val rm = rawResiduals(emb, cents)
-    codeArrays(residualCodes(rm,
-      residualSeedCodebook(rm, numSub, subDim, numCodes, seedFrom),
-      numSub, subDim), "vec_id", "cell")
-  }
-
   /** Serving DIRECTLY from the stored residual-PQ index: coarse IVF
     * against the stored centroids, the probe join against the index on
     * `cell`, residual ADC from the STORED codes plus the per-(query,
@@ -1753,25 +1756,27 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val v = vectors(emb)
     val cents = defaultCentroids(emb, 16)
-    // the model/codebook the nightly bulk persists alongside the index
+    // the model/codebook the nightly bulk persists alongside the index,
+    // built once and encoded against by the index build too
     val cb = residualSeedCodebookOf(emb, cents).localCheckpoint()
     annIvfPqResidualFromIndex(
-      residualPqIndexRows(emb, cents),
+      residualPqIndexRowsWith(emb, cents, cb),
       v.filter(col("vec_id") < 8).toDF("query_id", "e"),
       v, cents, cb, nProbe = 4, m = 12, k = 3, numSub = 8, subDim = 8)
       .orderBy(col("query_id"), col("rnk"))
   }
 
   /** The stored residual-PQ index at int4 packing: (vec_id, cell,
-    * packed[M/2]) through [[packInt4]] with base = seedFrom — the seed
-    * codebook's cids are [seedFrom, seedFrom + numCodes) by construction
-    * (they are the seed vectors' ids), and serving re-bases. */
+    * packed[M/2]) — [[residualPqIndexRowsWith]] through [[packInt4]]
+    * with base = seedFrom. A seed codebook's cids are [seedFrom,
+    * seedFrom + numCodes) by construction (they are the seed vectors'
+    * ids), and serving re-bases. */
   def residualPqIndexRowsInt4(emb: DataFrame, cents: DataFrame,
-                              numSub: Int = 8, subDim: Int = 8,
-                              numCodes: Int = 16,
+                              cb: DataFrame, numSub: Int = 8,
+                              subDim: Int = 8, numCodes: Int = 16,
                               seedFrom: Int = 16): DataFrame = {
     val pack = packInt4(numSub, numCodes, seedFrom)
-    residualPqIndexRows(emb, cents, numSub, subDim, numCodes, seedFrom)
+    residualPqIndexRowsWith(emb, cents, cb, numSub, subDim)
       .select(col("vec_id"), col("cell"), pack)
   }
 
@@ -1795,7 +1800,7 @@ object Similarity {
     val cents = defaultCentroids(emb, 16)
     val cb = residualSeedCodebookOf(emb, cents).localCheckpoint()
     annIvfPqResidualFromInt4Index(
-      residualPqIndexRowsInt4(emb, cents),
+      residualPqIndexRowsInt4(emb, cents, cb),
       v.filter(col("vec_id") < 8).toDF("query_id", "e"),
       v, cents, cb, nProbe = 4, m = 12, k = 3, numSub = 8, subDim = 8)
       .orderBy(col("query_id"), col("rnk"))
@@ -1803,10 +1808,10 @@ object Similarity {
 
   // ================================================== ANN recall queries
 
-  /** MEASURED recall@k of IVF serving (annIvfTopK, one run per nProbe)
-    * against brute force, per query and nProbe — the knob-tuning
-    * artifact behind every "C and nProbe meet the recall SLA" claim
-    * (IVF recall has no closed form). Recall stages with per-query rows
+  /** MEASURED recall@k of IVF serving (annIvfTopK's stages) against
+    * brute force, per query and nProbe — the knob-tuning artifact
+    * behind every "C and nProbe meet the recall SLA" claim (IVF recall
+    * has no closed form). Recall stages with per-query rows
     * (denominator k). */
   def annRecallEval(emb: DataFrame, numQueries: Int = 8, k: Int = 5,
                     numCentroids: Int = 16,
@@ -1814,8 +1819,9 @@ object Similarity {
     val budgets = Budgets("n_probe", nProbes)
     require(nProbes.forall(p => p >= 1 && p <= numCentroids))
     val v = vectors(emb)
-    recallBp(budgets.sweep(p => annIvfTopK(emb, numQueries, k, numCentroids, p)),
-      truthOf(v, prefixQueries(v, numQueries), k), k, None, "n_probe", "query_id")
+    val q = prefixQueries(v, numQueries)
+    recallBp(ivfProbeSweep(v, defaultCentroids(emb, numCentroids), q, budgets, k),
+      truthOf(v, q, k), k, None, "n_probe", "query_id")
   }
 
   def annRecallEvalQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1834,7 +1840,7 @@ object Similarity {
     val v = vectors(emb)
     val h = heldout(emb, v, numQueries, numCentroids, k)
     def served(tag: String, cents: DataFrame): DataFrame =
-      budgets.sweep(p => topK(ivfCandidates(v, cents, asVectors(h.q), p), k))
+      ivfProbeSweep(v, cents, h.q, budgets, k)
         .select(lit(tag).as("centroids"), col("*"))
     recallBp(served("default", defaultCentroids(emb, numCentroids))
         .unionByName(served("trained",
@@ -2876,1418 +2882,6 @@ object Similarity {
       | FROM embeddings)
       |""".stripMargin
 
-  /** Full oracle for the LSH path: the plane matrix is deterministic
-    * driver-side data, so it is embedded as SQL literals (Double
-    * .toString round-trips exactly through DuckDB's parser) and the
-    * whole bucket → probe → cosine → rank pipeline is replicated in
-    * SQL. This checks the LSH plumbing itself, not just row counts. */
-  private def annLshOracle(numQueries: Int, k: Int, numPlanes: Int,
-                           probeHamming: Int = 1): String = {
-    val planes = planeMatrix(numPlanes, 64)
-    val planeRows = planes.zipWithIndex.map { case (p, i) =>
-      s"($i, [${p.mkString(", ")}])"
-    }.mkString(",\n   ")
-    val probeRows = probeMasks(numPlanes, probeHamming).map(m => s"($m)").mkString(",")
-    s"""WITH planes(pi, pvec) AS (VALUES
-       |   $planeRows),
-       |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |dots AS (
-       | SELECT v.vec_id, p.pi,
-       |  list_sum(list_transform(range(1, len(v.e)+1), i -> v.e[i] * p.pvec[i])) AS d
-       | FROM v, planes p),
-       |buckets AS (
-       | SELECT vec_id, CAST(sum(CASE WHEN d > 0 THEN (1 << pi) ELSE 0 END) AS INTEGER) AS bucket
-       | FROM dots GROUP BY 1),
-       |q AS (
-       | SELECT b.vec_id AS query_id, xor(b.bucket, m.m) AS probe
-       | FROM buckets b, (VALUES $probeRows) AS m(m)
-       | WHERE b.vec_id < $numQueries),
-       |cand AS (
-       | SELECT q.query_id, x.vec_id AS neighbor_id
-       | FROM q JOIN buckets x ON x.bucket = q.probe AND x.vec_id <> q.query_id),
-       |scored AS (
-       | SELECT c.query_id, c.neighbor_id,
-       |  round(list_sum(list_transform(range(1, len(a.e)+1), i -> a.e[i] * b.e[i]))
-       |   / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-       |      * sqrt(list_sum(list_transform(b.e, x -> x * x)))), 6) AS cos
-       | FROM cand c JOIN v a ON c.query_id = a.vec_id
-       |  JOIN v b ON c.neighbor_id = b.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM scored)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-  }
-
-  /** Full oracle for the IVF path: centroids are the first C vectors,
-    * so assignment, probing and ranking all replicate in SQL — the
-    * whole serving pipeline is checked, not just row counts. */
-  /** The shared cosine SQL fragment: dot and norms as in-order
-    * list_sum folds, rounded to 6 dp — the CosineSimilarity parity
-    * contract. Valid over DOUBLE and BIGINT lists (micro ints pass
-    * through double exactly). */
-  private[graft] def cosSql(a: String, b: String): String =
-    s"""round(list_sum(list_transform(range(1, len($a)+1), i -> $a[i]*$b[i]))
-       |   / (sqrt(list_sum(list_transform($a, x -> x*x)))
-       |      * sqrt(list_sum(list_transform($b, x -> x*x)))), 6)""".stripMargin
-
-  /** cosSql over the first `d` components only — same sequential
-    * accumulation order as CosineSimilarity over slice(·, 1, d). */
-  private def cosSliceSql(a: String, b: String, d: Int): String =
-    s"""round(list_sum(list_transform(range(1, ${d + 1}), i -> $a[i]*$b[i]))
-       |   / (sqrt(list_sum(list_transform($a[1:$d], x -> x*x)))
-       |      * sqrt(list_sum(list_transform($b[1:$d], x -> x*x)))), 6)""".stripMargin
-
-  /** Per-subspace Lloyd replay — assumes CTEs `v(vec_id, e)` and
-    * `sub(s)`; emits `cbt(sub, cid, c)`. Mirrors pqTrainCodebook:
-    * micro-int subvectors, BIGINT L2 argmin (d2 asc, cid asc),
-    * floored integer means, exact /10⁶ back to fp scale. */
-  private def pqTrainCtes(subDim: Int, numCodes: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""vmi AS (SELECT vec_id,
-      | list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS em
-      | FROM v),
-      |vms AS MATERIALIZED (SELECT vec_id, s.s AS sub,
-      | list_transform(range(1, ${subDim + 1}),
-      |                j -> em[s.s*$subDim + j]) AS xm
-      | FROM vmi, sub s),
-      |pinit AS (SELECT vec_id, CAST(row_number() OVER (
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS BIGINT) AS cid
-      | FROM v),
-      |pc0 AS (SELECT m.sub, p.cid, m.xm AS cm
-      | FROM vms m JOIN pinit p USING (vec_id)
-      | WHERE p.cid <= $numCodes)""".stripMargin
-    for (t <- 1 to iters) {
-      sb ++= s""",
-        |pa$t AS (SELECT m.vec_id, m.sub, m.xm, c.cid,
-        |  list_sum(list_transform(range(1, ${subDim + 1}),
-        |    i -> (m.xm[i]-c.cm[i])*(m.xm[i]-c.cm[i]))) AS d2
-        | FROM vms m JOIN pc${t - 1} c ON m.sub = c.sub),
-        |ps$t AS (SELECT sub, cid, xm FROM (
-        | SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |   ORDER BY d2, cid) AS rn FROM pa$t) WHERE rn = 1),
-        |pc$t AS MATERIALIZED (
-        | SELECT sub, cid, list(cv ORDER BY i) AS cm FROM (
-        |  SELECT sub, cid, i,
-        |   CAST(floor(CAST(sum(xm[i]) AS DOUBLE)/count(*)) AS BIGINT) AS cv
-        |  FROM ps$t, UNNEST(range(1, ${subDim + 1})) u(i)
-        |  GROUP BY sub, cid, i)
-        | GROUP BY sub, cid)""".stripMargin
-    }
-    sb ++= s""",
-      |cbt AS (SELECT sub, cid, list_transform(cm, x -> x/1000000.0) AS c
-      | FROM pc$iters)""".stripMargin
-    sb.toString
-  }
-
-  /** The ADC chain against codebook CTE `cbName`, CTE names suffixed
-    * by `sfx` — assumes `v`, `sub`, `cx(vec_id, sub, x)` and
-    * `q(query_id, e, qn)`. Emits cand$sfx(query_id, neighbor_id, cos). */
-  private def pqAdcCtes(cbName: String, sfx: String, subDim: Int): String =
-    s"""enc$sfx AS (
-       | SELECT vec_id, sub, cid FROM (
-       |  SELECT cx.vec_id, cx.sub, cb.cid,
-       |   row_number() OVER (PARTITION BY cx.vec_id, cx.sub ORDER BY
-       |    round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cx.x[i]))
-       |      + list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cb.c[i]*cb.c[i]))
-       |      - 2*list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cb.c[i])),
-       |     6), cb.cid) AS rn
-       |  FROM cx JOIN $cbName cb ON cx.sub = cb.sub) WHERE rn = 1),
-       |r2$sfx AS (
-       | SELECT e.vec_id,
-       |  sum(CAST(round(list_sum(list_transform(cb.c, x -> x*x)) * 1000000)
-       |      AS BIGINT)) AS r2m
-       | FROM enc$sfx e JOIN $cbName cb ON e.sub = cb.sub AND e.cid = cb.cid
-       | GROUP BY 1),
-       |tab$sfx AS (
-       | SELECT q.query_id, cb.sub, cb.cid, q.qn,
-       |  CAST(round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |    i -> q.e[cb.sub*$subDim + i] * cb.c[i])) * 1000000) AS BIGINT)
-       |   AS tm
-       | FROM q, $cbName cb),
-       |sc$sfx AS (
-       | SELECT t.query_id, e.vec_id, sum(t.tm) AS dm, min(t.qn) AS qn
-       | FROM enc$sfx e JOIN tab$sfx t ON e.sub = t.sub AND e.cid = t.cid
-       | WHERE t.query_id <> e.vec_id GROUP BY 1, 2),
-       |cand$sfx AS (
-       | SELECT sc.query_id, sc.vec_id AS neighbor_id,
-       |  CASE WHEN r2.r2m <= 0 OR sc.qn = 0 THEN 0.0
-       |       ELSE round((sc.dm / 1000000.0)
-       |            / (sc.qn * sqrt(r2.r2m / 1000000.0)), 6) END AS cos
-       | FROM sc$sfx sc JOIN r2$sfx r2 ON sc.vec_id = r2.vec_id)""".stripMargin
-
-  /** A COMPLETE flat-ADC branch with its own subspace SHAPE — every
-    * CTE suffixed so two different (numSub, subDim) shapes can serve
-    * side by side in one statement (the equal-bytes comparison).
-    * Assumes `v` and a query frame `q(query_id, e, qn)`. Emits
-    * cand$sfx(query_id, neighbor_id, cos). */
-  private def pqShapeBranchCtes(sfx: String, numSub: Int, subDim: Int,
-                                numCodes: Int): String =
-    s"""sub$sfx AS (SELECT unnest(range(0, $numSub)) AS s),
-       |cb$sfx AS (
-       | SELECT s.s AS sub, v.vec_id AS cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS c
-       | FROM v, sub$sfx s WHERE v.vec_id < $numCodes),
-       |cx$sfx AS (
-       | SELECT v.vec_id, s.s AS sub,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS x
-       | FROM v, sub$sfx s),
-       |enc$sfx AS (
-       | SELECT vec_id, sub, cid FROM (
-       |  SELECT cx.vec_id, cx.sub, cb.cid,
-       |   row_number() OVER (PARTITION BY cx.vec_id, cx.sub ORDER BY
-       |    round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cx.x[i]))
-       |      + list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cb.c[i]*cb.c[i]))
-       |      - 2*list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cb.c[i])),
-       |     6), cb.cid) AS rn
-       |  FROM cx$sfx cx JOIN cb$sfx cb ON cx.sub = cb.sub) WHERE rn = 1),
-       |r2$sfx AS (
-       | SELECT e.vec_id,
-       |  sum(CAST(round(list_sum(list_transform(cb.c, x -> x*x)) * 1000000)
-       |      AS BIGINT)) AS r2m
-       | FROM enc$sfx e JOIN cb$sfx cb ON e.sub = cb.sub AND e.cid = cb.cid
-       | GROUP BY 1),
-       |tab$sfx AS (
-       | SELECT q.query_id, cb.sub, cb.cid, q.qn,
-       |  CAST(round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |    i -> q.e[cb.sub*$subDim + i] * cb.c[i])) * 1000000) AS BIGINT)
-       |   AS tm
-       | FROM q, cb$sfx cb),
-       |sc$sfx AS (
-       | SELECT t.query_id, e.vec_id, sum(t.tm) AS dm, min(t.qn) AS qn
-       | FROM enc$sfx e JOIN tab$sfx t ON e.sub = t.sub AND e.cid = t.cid
-       | WHERE t.query_id <> e.vec_id GROUP BY 1, 2),
-       |cand$sfx AS (
-       | SELECT sc.query_id, sc.vec_id AS neighbor_id,
-       |  CASE WHEN r2.r2m <= 0 OR sc.qn = 0 THEN 0.0
-       |       ELSE round((sc.dm / 1000000.0)
-       |            / (sc.qn * sqrt(r2.r2m / 1000000.0)), 6) END AS cos
-       | FROM sc$sfx sc JOIN r2$sfx r2 ON sc.vec_id = r2.vec_id)""".stripMargin
-
-  /** ann_pq_int4_topk oracle: the ann_pq_topk chain with the PACK →
-    * UNPACK bit formula replayed in SQL between encode and serving —
-    * packed[b] = cid[2b] | cid[2b+1] << 4, then cid = (packed[s div 2]
-    * >> ((s % 2) · 4)) & 15 (DuckDB lists are 1-based, hence the +1
-    * on the list index; Spark's [] is 0-based — both sides documented
-    * at their use sites). */
-  private def annPqInt4Oracle(numQueries: Int, k: Int, numSub: Int,
-                              subDim: Int, numCodes: Int): String =
-    s"""WITH ${pqSharedCtes(numQueries, numSub, subDim)},
-       |cb AS (
-       | SELECT s.s AS sub, v.vec_id AS cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS c
-       | FROM v, sub s WHERE v.vec_id < $numCodes),
-       |enc0 AS (
-       | SELECT vec_id, sub, cid FROM (
-       |  SELECT cx.vec_id, cx.sub, cb.cid,
-       |   row_number() OVER (PARTITION BY cx.vec_id, cx.sub ORDER BY
-       |    round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cx.x[i]))
-       |      + list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cb.c[i]*cb.c[i]))
-       |      - 2*list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cb.c[i])),
-       |     6), cb.cid) AS rn
-       |  FROM cx JOIN cb ON cx.sub = cb.sub) WHERE rn = 1),
-       |packed AS (
-       | SELECT vec_id,
-       |  list_transform(range(0, ${numSub / 2}),
-       |   b -> (codes[b*2 + 1] | (codes[b*2 + 2] << 4))) AS packed
-       | FROM (SELECT vec_id, list(cid ORDER BY sub) AS codes
-       |       FROM enc0 GROUP BY vec_id)),
-       |enc AS (
-       | SELECT p.vec_id, s.s AS sub,
-       |  ((p.packed[s.s // 2 + 1] >> ((s.s % 2) * 4)) & 15) AS cid
-       | FROM packed p, sub s),
-       |r2 AS (
-       | SELECT e.vec_id,
-       |  sum(CAST(round(list_sum(list_transform(cb.c, x -> x*x)) * 1000000)
-       |      AS BIGINT)) AS r2m
-       | FROM enc e JOIN cb ON e.sub = cb.sub AND e.cid = cb.cid GROUP BY 1),
-       |tab AS (
-       | SELECT q.query_id, cb.sub, cb.cid, q.qn,
-       |  CAST(round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |    i -> q.e[cb.sub*$subDim + i] * cb.c[i])) * 1000000) AS BIGINT)
-       |   AS tm
-       | FROM q, cb),
-       |sc AS (
-       | SELECT t.query_id, e.vec_id, sum(t.tm) AS dm, min(t.qn) AS qn
-       | FROM enc e JOIN tab t ON e.sub = t.sub AND e.cid = t.cid
-       | WHERE t.query_id <> e.vec_id GROUP BY 1, 2),
-       |cand AS (
-       | SELECT sc.query_id, sc.vec_id AS neighbor_id,
-       |  CASE WHEN r2.r2m <= 0 OR sc.qn = 0 THEN 0.0
-       |       ELSE round((sc.dm / 1000000.0)
-       |            / (sc.qn * sqrt(r2.r2m / 1000000.0)), 6) END AS cos
-       | FROM sc JOIN r2 ON sc.vec_id = r2.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |   ORDER BY cos DESC, neighbor_id) AS rnk FROM cand)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  /** pq_int4_recall oracle: held-out queries, the two equal-byte
-    * shapes each ADC-served over the full corpus, recall vs exact
-    * truth. */
-  private def pqInt4RecallOracle(numQueries: Int, k: Int,
-                                 numCodes: Int): String =
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |tinit AS (SELECT vec_id FROM (
-       | SELECT vec_id, row_number() OVER (
-       |   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM v)
-       | WHERE rn <= $numCodes),
-       |q AS MATERIALIZED (
-       | SELECT vec_id AS query_id, e,
-       |  sqrt(list_sum(list_transform(e, x -> x*x))) AS qn
-       | FROM v
-       | WHERE vec_id >= $numCodes
-       |  AND vec_id NOT IN (SELECT vec_id FROM tinit)
-       | ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-       | LIMIT $numQueries),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT qv.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY qv.vec_id
-       |     ORDER BY ${cosSql("qv.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v qv JOIN v x ON qv.vec_id <> x.vec_id
-       |  WHERE qv.vec_id IN (SELECT query_id FROM q)) WHERE rnk <= $k),
-       |${pqShapeBranchCtes("_w", numSub = 4, subDim = 16, numCodes)},
-       |${pqShapeBranchCtes("_n", numSub = 8, subDim = 8, numCodes)},
-       |served AS (
-       | SELECT 'pq8_4x16' AS encoding, query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, neighbor_id) AS rnk FROM cand_w)
-       | WHERE rnk <= $k
-       | UNION ALL
-       | SELECT 'int4_8x8', query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, neighbor_id) AS rnk FROM cand_n)
-       | WHERE rnk <= $k),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM q)
-       |SELECT s.encoding, CAST(4 AS BIGINT) AS bytes_per_vec,
-       | CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM served s LEFT JOIN truth t
-       | ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-       | CROSS JOIN nq
-       |GROUP BY 1, nq.n_q ORDER BY 1""".stripMargin
-
-  private def pqSharedCtes(numQueries: Int, numSub: Int, subDim: Int,
-                           heldoutFrom: Option[Int] = None): String = {
-    val qCte = heldoutFrom match {
-      case None =>
-        s"""q AS (
-           | SELECT vec_id AS query_id, e,
-           |  sqrt(list_sum(list_transform(e, x -> x*x))) AS qn
-           | FROM v WHERE vec_id < $numQueries)""".stripMargin
-      case Some(numCodes) =>
-        s"""tinit AS (SELECT vec_id FROM (
-           | SELECT vec_id, row_number() OVER (
-           |   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM v)
-           | WHERE rn <= $numCodes),
-           |q AS MATERIALIZED (
-           | SELECT vec_id AS query_id, e,
-           |  sqrt(list_sum(list_transform(e, x -> x*x))) AS qn
-           | FROM v
-           | WHERE vec_id >= $numCodes
-           |  AND vec_id NOT IN (SELECT vec_id FROM tinit)
-           | ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-           | LIMIT $numQueries)""".stripMargin
-    }
-    s"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |$qCte,
-       |cx AS (
-       | SELECT v.vec_id, s.s AS sub,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS x
-       | FROM v, sub s)""".stripMargin
-  }
-
-  private def annPqTrainedOracle(numQueries: Int, k: Int, numSub: Int,
-                                 subDim: Int, numCodes: Int,
-                                 iters: Int): String =
-    s"""WITH ${pqSharedCtes(numQueries, numSub, subDim)},
-       |${pqTrainCtes(subDim, numCodes, iters)},
-       |${pqAdcCtes("cbt", "", subDim)}
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |   ORDER BY cos DESC, neighbor_id) AS rnk FROM cand)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  private def pqTrainRecallOracle(numQueries: Int, k: Int, numSub: Int,
-                                  subDim: Int, numCodes: Int,
-                                  iters: Int): String =
-    s"""WITH ${pqSharedCtes(numQueries, numSub, subDim,
-             heldoutFrom = Some(numCodes))},
-       |cbd AS (
-       | SELECT s.s AS sub, v.vec_id AS cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS c
-       | FROM v, sub s WHERE v.vec_id < $numCodes),
-       |${pqTrainCtes(subDim, numCodes, iters)},
-       |${pqAdcCtes("cbd", "_d", subDim)},
-       |${pqAdcCtes("cbt", "_t", subDim)},
-       |served AS (
-       | SELECT 'default' AS codebook, query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, neighbor_id) AS rnk FROM cand_d)
-       | WHERE rnk <= $k
-       | UNION ALL
-       | SELECT 'trained', query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, neighbor_id) AS rnk FROM cand_t)
-       | WHERE rnk <= $k),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT qv.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY qv.vec_id
-       |     ORDER BY ${cosSql("qv.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v qv JOIN v x ON qv.vec_id <> x.vec_id
-       |  WHERE qv.vec_id IN (SELECT query_id FROM q)) WHERE rnk <= $k),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM q)
-       |SELECT s.codebook,
-       | CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM served s LEFT JOIN truth t
-       | ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-       | CROSS JOIN nq
-       |GROUP BY 1, nq.n_q ORDER BY 1""".stripMargin
-
-  /** The composed IVF+PQ serving chain as CTE SQL — assumes CTEs `v`,
-    * `sub`, a centroid table `cents(cid, ce)` and a codebook
-    * `$cbName(sub, cid, c)` are already defined, so ONE serving replay
-    * checks both the data-seeded compose (ann_ivf_pq_topk) and the
-    * fully-trained one (ann_ivf_pq_trained). */
-  private def ivfPqServeSql(numQueries: Int, m: Int, k: Int, nProbe: Int,
-                            subDim: Int, cbName: String): String =
-    s"""ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |cx AS (
-       | SELECT v.vec_id, s.s AS sub,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS x
-       | FROM v, sub s),
-       |enc AS (
-       | SELECT vec_id, sub, cid FROM (
-       |  SELECT cx.vec_id, cx.sub, cb.cid,
-       |   row_number() OVER (PARTITION BY cx.vec_id, cx.sub ORDER BY
-       |    round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cx.x[i]))
-       |      + list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cb.c[i]*cb.c[i]))
-       |      - 2*list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cb.c[i])),
-       |     6), cb.cid) AS rn
-       |  FROM cx JOIN $cbName cb ON cx.sub = cb.sub) WHERE rn = 1),
-       |r2 AS (
-       | SELECT e.vec_id,
-       |  sum(CAST(round(list_sum(list_transform(cb.c, x -> x*x)) * 1000000)
-       |      AS BIGINT)) AS r2m
-       | FROM enc e JOIN $cbName cb ON e.sub = cb.sub AND e.cid = cb.cid
-       | GROUP BY 1),
-       |q AS (
-       | SELECT vec_id AS query_id, e,
-       |  sqrt(list_sum(list_transform(e, x -> x*x))) AS qn
-       | FROM v WHERE vec_id < $numQueries),
-       |tab AS (
-       | SELECT q.query_id, cb.sub, cb.cid, q.qn,
-       |  CAST(round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |    i -> q.e[cb.sub*$subDim + i] * cb.c[i])) * 1000000) AS BIGINT)
-       |   AS tm
-       | FROM q, $cbName cb),
-       |sc AS (
-       | SELECT c.query_id, c.vec_id, sum(t.tm) AS dm, min(t.qn) AS qn
-       | FROM candi c JOIN enc e ON c.vec_id = e.vec_id
-       |  JOIN tab t ON t.query_id = c.query_id AND t.sub = e.sub
-       |   AND t.cid = e.cid
-       | GROUP BY 1, 2),
-       |short AS (
-       | SELECT query_id, vec_id FROM (
-       |  SELECT sc.query_id, sc.vec_id,
-       |   row_number() OVER (PARTITION BY sc.query_id ORDER BY
-       |    CASE WHEN r2.r2m <= 0 OR sc.qn = 0 THEN 0.0
-       |         ELSE round((sc.dm / 1000000.0)
-       |              / (sc.qn * sqrt(r2.r2m / 1000000.0)), 6) END DESC,
-       |    sc.vec_id) AS prnk
-       |  FROM sc JOIN r2 ON sc.vec_id = r2.vec_id) WHERE prnk <= $m),
-       |rr AS (
-       | SELECT s.query_id, s.vec_id AS neighbor_id,
-       |  ${cosSql("qv.e", "x.e")} AS cos
-       | FROM short s JOIN v qv ON s.query_id = qv.vec_id
-       |  JOIN v x ON s.vec_id = x.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM rr) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  /** ann_ivf_pq_topk oracle: the IVF candidate chain + the PQ code/
-    * table chain + ADC shortlist + exact rerank, composed verbatim
-    * from the two standalone oracles. */
-  private def annIvfPqOracle(numQueries: Int, m: Int, k: Int,
-                             numCentroids: Int, nProbe: Int, numSub: Int,
-                             subDim: Int, numCodes: Int): String =
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v
-       |          WHERE vec_id < $numCentroids),
-       |cb AS (
-       | SELECT s.s AS sub, v.vec_id AS cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS c
-       | FROM v, sub s WHERE v.vec_id < $numCodes),
-       |${ivfPqServeSql(numQueries, m, k, nProbe, subDim, "cb")}""".stripMargin
-
-  /** ann_ivf_pq_trained oracle: BOTH exact-integer trainers replayed
-    * (trainedCentsCtes = the micro-int Lloyd coarse quantizer,
-    * pqTrainCtes = the per-subspace integer Lloyd codebooks), feeding
-    * the SAME serving chain the untrained compose pins. */
-  private def annIvfPqTrainedOracle(numQueries: Int, m: Int, k: Int,
-                                    numCentroids: Int, nProbe: Int,
-                                    numSub: Int, subDim: Int,
-                                    numCodes: Int, iters: Int): String =
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |${trainedCentsCtes(numCentroids, iters)},
-       |${pqTrainCtes(subDim, numCodes, iters)},
-       |${ivfPqServeSql(numQueries, m, k, nProbe, subDim, "cbt")}""".stripMargin
-
-  /** The residual-PQ BASE CTE chain — assumes `v`, `cents`,
-    * `assigned(vec_id, cell)`. Emits resvm (micro vectors), cmm
-    * (micro centroids — `cmExpr` is the per-component conversion:
-    * ×10⁶ rounding for raw-scale centroids, a plain CAST for the
-    * already-micro trained ones), resrm (residuals). */
-  private def residualBaseCtes(cmExpr: String): String =
-    s"""resvm AS (SELECT vec_id,
-       | list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS em
-       | FROM v),
-       |cmm AS (SELECT cid AS cell,
-       | list_transform(ce, x -> $cmExpr) AS cm
-       | FROM cents),
-       |resrm AS MATERIALIZED (
-       | SELECT m.vec_id, a.cell,
-       |  list_transform(range(1, len(m.em)+1), i -> m.em[i] - c.cm[i]) AS rm
-       | FROM resvm m JOIN assigned a USING (vec_id)
-       |  JOIN cmm c ON a.cell = c.cell)""".stripMargin
-
-  /** Data-seeded residual codebook CTE `$name(sub, cid, wm)`. */
-  private def residualSeedCbCte(name: String, subDim: Int, numCodes: Int,
-                                seedFrom: Int): String =
-    s"""$name AS (
-       | SELECT s.s AS sub, r.vec_id AS cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> r.rm[s.s*$subDim + j]) AS wm
-       | FROM resrm r, sub s
-       | WHERE r.vec_id >= $seedFrom AND r.vec_id < ${seedFrom + numCodes})""".stripMargin
-
-  /** TRAINED residual codebook CTEs — the integer Lloyd core replayed
-    * over resrm's sub-slices (pqLloydOnMicro step for step: md5-rank
-    * init over the residual frame's vec_ids, BIGINT-L2 assignment
-    * ties cid asc, floored integer means). Emits `$name(sub, cid,
-    * wm)` in micro scale. */
-  private def residualTrainCbCtes(name: String, subDim: Int,
-                                  numCodes: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""rvs AS MATERIALIZED (SELECT r.vec_id, s.s AS sub,
-      | list_transform(range(1, ${subDim + 1}),
-      |                j -> r.rm[s.s*$subDim + j]) AS xm
-      | FROM resrm r, sub s),
-      |rin AS (SELECT vec_id, CAST(row_number() OVER (
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS BIGINT) AS cid
-      | FROM resrm),
-      |rc0 AS (SELECT m.sub, p.cid, m.xm AS cm
-      | FROM rvs m JOIN rin p USING (vec_id)
-      | WHERE p.cid <= $numCodes)""".stripMargin
-    for (t <- 1 to iters) {
-      sb ++= s""",
-        |ra$t AS (SELECT m.vec_id, m.sub, m.xm, c.cid,
-        |  list_sum(list_transform(range(1, ${subDim + 1}),
-        |    i -> (m.xm[i]-c.cm[i])*(m.xm[i]-c.cm[i]))) AS d2
-        | FROM rvs m JOIN rc${t - 1} c ON m.sub = c.sub),
-        |rs$t AS (SELECT sub, cid, xm FROM (
-        | SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |   ORDER BY d2, cid) AS rn FROM ra$t) WHERE rn = 1),
-        |rc$t AS MATERIALIZED (
-        | SELECT sub, cid, list(cv ORDER BY i) AS cm FROM (
-        |  SELECT sub, cid, i,
-        |   CAST(floor(CAST(sum(xm[i]) AS DOUBLE)/count(*)) AS BIGINT) AS cv
-        |  FROM rs$t, UNNEST(range(1, ${subDim + 1})) u(i)
-        |  GROUP BY sub, cid, i)
-        | GROUP BY sub, cid)""".stripMargin
-    }
-    sb ++= s""",
-      |$name AS (SELECT sub, cid, cm AS wm FROM rc$iters)""".stripMargin
-    sb.toString
-  }
-
-  /** Encode + reconstruction against codebook CTE `$cbName`, names
-    * suffixed `$sfx` — emits renc$sfx, xh$sfx, rrt$sfx, resr2$sfx. */
-  private def residualIndexCtes(cbName: String, sfx: String,
-                                subDim: Int): String =
-    s"""rx$sfx AS (
-       | SELECT r.vec_id, r.cell, s.s AS sub,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> r.rm[s.s*$subDim + j]) AS x
-       | FROM resrm r, sub s),
-       |renc$sfx AS MATERIALIZED (
-       | SELECT vec_id, cell, sub, cid FROM (
-       |  SELECT rx.vec_id, rx.cell, rx.sub, cb.cid,
-       |   row_number() OVER (PARTITION BY rx.vec_id, rx.sub ORDER BY
-       |    list_sum(list_transform(range(1, ${subDim + 1}),
-       |      i -> (rx.x[i]-cb.wm[i])*(rx.x[i]-cb.wm[i]))), cb.cid) AS rn
-       |  FROM rx$sfx rx JOIN $cbName cb ON rx.sub = cb.sub) WHERE rn = 1),
-       |xh$sfx AS (
-       | SELECT c.cell, w.sub, w.cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 i -> c.cm[w.sub*$subDim + i] + w.wm[i]) AS xh
-       | FROM cmm c CROSS JOIN $cbName w),
-       |rrt$sfx AS (SELECT cell, sub, cid,
-       | CAST(list_sum(list_transform(xh, x -> x*x)) AS BIGINT) AS rr
-       | FROM xh$sfx),
-       |resr2$sfx AS (
-       | SELECT e.vec_id, CAST(sum(t.rr) AS BIGINT) AS r2m
-       | FROM renc$sfx e JOIN rrt$sfx t ON e.cell = t.cell
-       |  AND e.sub = t.sub AND e.cid = t.cid
-       | GROUP BY 1)""".stripMargin
-
-  /** The residual-ADC candidate scoring — assumes candi(query_id,
-    * vec_id), renc$sfx/xh$sfx/resr2$sfx, and a query frame
-    * `$qName(query_id, qm, q2m)`. Emits rescand$sfx. */
-  private def residualScoreCtes(qName: String, sfx: String,
-                                subDim: Int): String =
-    s"""restab$sfx AS (
-       | SELECT q.query_id, q.q2m, x.cell, x.sub, x.cid,
-       |  CAST(list_sum(list_transform(range(1, ${subDim + 1}),
-       |    i -> q.qm[x.sub*$subDim + i] * x.xh[i])) AS BIGINT) AS tm
-       | FROM $qName q CROSS JOIN xh$sfx x),
-       |ressc$sfx AS (
-       | SELECT c.query_id, c.vec_id, CAST(sum(t.tm) AS BIGINT) AS dm,
-       |  min(t.q2m) AS q2m
-       | FROM candi c JOIN renc$sfx e ON c.vec_id = e.vec_id
-       |  JOIN restab$sfx t ON t.query_id = c.query_id AND t.cell = e.cell
-       |   AND t.sub = e.sub AND t.cid = e.cid
-       | GROUP BY 1, 2),
-       |rescand$sfx AS (
-       | SELECT sc.query_id, sc.vec_id,
-       |  CASE WHEN r2.r2m <= 0 OR sc.q2m <= 0 THEN 0.0
-       |       ELSE round(CAST(sc.dm AS DOUBLE)
-       |            / (sqrt(CAST(sc.q2m AS DOUBLE))
-       |               * sqrt(CAST(r2.r2m AS DOUBLE))), 6) END AS cos
-       | FROM ressc$sfx sc JOIN resr2$sfx r2 ON sc.vec_id = r2.vec_id)""".stripMargin
-
-  /** ann_ivf_pq_residual oracle: assignment → residual → encode →
-    * per-(query, cell) ADC → shortlist → exact rerank, all replayed. */
-  private def annIvfPqResidualOracle(numQueries: Int, m: Int, k: Int,
-                                     numCentroids: Int, nProbe: Int,
-                                     numSub: Int, subDim: Int,
-                                     numCodes: Int): String =
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v
-       |          WHERE vec_id < $numCentroids),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |${residualBaseCtes("CAST(round(x * 1000000.0) AS BIGINT)")},
-       |${residualSeedCbCte("rcb", subDim, numCodes, seedFrom = numCentroids)},
-       |${residualIndexCtes("rcb", "", subDim)},
-       |qres AS (
-       | SELECT query_id, qm,
-       |  CAST(list_sum(list_transform(qm, x -> x*x)) AS BIGINT) AS q2m
-       | FROM (SELECT vec_id AS query_id,
-       |   list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qm
-       |  FROM v WHERE vec_id < $numQueries)),
-       |${residualScoreCtes("qres", "", subDim)},
-       |short AS (
-       | SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id,
-       |   row_number() OVER (PARTITION BY query_id
-       |                      ORDER BY cos DESC, vec_id) AS prnk
-       |  FROM rescand) WHERE prnk <= $m),
-       |rrk AS (
-       | SELECT s.query_id, s.vec_id AS neighbor_id,
-       |  ${cosSql("qv.e", "x.e")} AS cos
-       | FROM short s JOIN v qv ON s.query_id = qv.vec_id
-       |  JOIN v x ON s.vec_id = x.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM rrk) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  /** ann_ivf_pq_residual_int4 oracle: the ann_ivf_pq_residual replay
-    * with the PACK → UNPACK nibble formulas spliced between encode
-    * and serving — codes list per vector, packed[b] = cid[2b] |
-    * cid[2b+1] << 4, then cid = (packed[s div 2] >> ((s%2)·4)) & 15,
-    * and the reconstructed-norm + ADC scoring read ONLY the unpacked
-    * frame. Must return exactly what the unpacked replay returns. */
-  private def annIvfPqResidualInt4Oracle(numQueries: Int, m: Int, k: Int,
-                                         numCentroids: Int, nProbe: Int,
-                                         numSub: Int, subDim: Int,
-                                         numCodes: Int): String =
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v
-       |          WHERE vec_id < $numCentroids),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |${residualBaseCtes("CAST(round(x * 1000000.0) AS BIGINT)")},
-       |${residualSeedCbCte("rcb", subDim, numCodes, seedFrom = numCentroids)},
-       |${residualIndexCtes("rcb", "_b", subDim)},
-       |rcodes AS (
-       | SELECT vec_id, cell, list(cid ORDER BY sub) AS codes
-       | FROM renc_b GROUP BY 1, 2),
-       |rpk AS (
-       | SELECT vec_id, cell,
-       |  list_transform(range(0, ${numSub / 2}),
-       |   b -> ((codes[b*2 + 1] - $numCentroids)
-       |         | ((codes[b*2 + 2] - $numCentroids) << 4))) AS packed
-       | FROM rcodes),
-       |renc AS MATERIALIZED (
-       | SELECT p.vec_id, p.cell, s.s AS sub,
-       |  ((p.packed[s.s // 2 + 1] >> ((s.s % 2) * 4)) & 15)
-       |    + $numCentroids AS cid
-       | FROM rpk p, sub s),
-       |xh AS (SELECT * FROM xh_b),
-       |rrt AS (SELECT * FROM rrt_b),
-       |resr2 AS (
-       | SELECT e.vec_id, CAST(sum(t.rr) AS BIGINT) AS r2m
-       | FROM renc e JOIN rrt t ON e.cell = t.cell
-       |  AND e.sub = t.sub AND e.cid = t.cid
-       | GROUP BY 1),
-       |qres AS (
-       | SELECT query_id, qm,
-       |  CAST(list_sum(list_transform(qm, x -> x*x)) AS BIGINT) AS q2m
-       | FROM (SELECT vec_id AS query_id,
-       |   list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qm
-       |  FROM v WHERE vec_id < $numQueries)),
-       |${residualScoreCtes("qres", "", subDim)},
-       |short AS (
-       | SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id,
-       |   row_number() OVER (PARTITION BY query_id
-       |                      ORDER BY cos DESC, vec_id) AS prnk
-       |  FROM rescand) WHERE prnk <= $m),
-       |rrk AS (
-       | SELECT s.query_id, s.vec_id AS neighbor_id,
-       |  ${cosSql("qv.e", "x.e")} AS cos
-       | FROM short s JOIN v qv ON s.query_id = qv.vec_id
-       |  JOIN v x ON s.vec_id = x.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM rrk) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  /** pq_residual_recall oracle: held-out queries, ONE max-budget IVF
-    * candidate set carrying probe RANKS, the raw-PQ ADC branch and
-    * the residual branch each scored once, every probe budget served
-    * by a rank filter + per-(budget, query) top-k, recall vs
-    * brute-force truth. */
-  private def pqResidualRecallOracle(numQueries: Int, k: Int,
-                                     numCentroids: Int,
-                                     nProbes: Seq[Int], numSub: Int,
-                                     subDim: Int,
-                                     numCodes: Int): String = {
-    val maxP = nProbes.max
-    val vals = nProbes.map(p => s"($p)").mkString(", ")
-    val hqBound = numCentroids + numCodes
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v
-       |          WHERE vec_id < $numCentroids),
-       |tinit AS (SELECT vec_id FROM (
-       | SELECT vec_id, row_number() OVER (
-       |   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM v)
-       | WHERE rn <= $hqBound),
-       |hq AS MATERIALIZED (
-       | SELECT vec_id FROM v
-       | WHERE vec_id >= $hqBound
-       |  AND vec_id NOT IN (SELECT vec_id FROM tinit)
-       | ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-       | LIMIT $numQueries),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id IN (SELECT vec_id FROM hq))
-       | WHERE rn <= $maxP),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id, p.rn
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT qv.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY qv.vec_id
-       |     ORDER BY ${cosSql("qv.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v qv JOIN v x ON qv.vec_id <> x.vec_id
-       |  WHERE qv.vec_id IN (SELECT vec_id FROM hq)) WHERE rnk <= $k),
-       |cb AS (
-       | SELECT s.s AS sub, v.vec_id AS cid,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS c
-       | FROM v, sub s WHERE v.vec_id < $numCodes),
-       |cx AS (
-       | SELECT v.vec_id, s.s AS sub,
-       |  list_transform(range(1, ${subDim + 1}),
-       |                 j -> v.e[s.s*$subDim + j]) AS x
-       | FROM v, sub s),
-       |enc AS (
-       | SELECT vec_id, sub, cid FROM (
-       |  SELECT cx.vec_id, cx.sub, cb.cid,
-       |   row_number() OVER (PARTITION BY cx.vec_id, cx.sub ORDER BY
-       |    round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cx.x[i]))
-       |      + list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cb.c[i]*cb.c[i]))
-       |      - 2*list_sum(list_transform(range(1, ${subDim + 1}),
-       |       i -> cx.x[i]*cb.c[i])),
-       |     6), cb.cid) AS rn
-       |  FROM cx JOIN cb ON cx.sub = cb.sub) WHERE rn = 1),
-       |r2 AS (
-       | SELECT e.vec_id,
-       |  sum(CAST(round(list_sum(list_transform(cb.c, x -> x*x)) * 1000000)
-       |      AS BIGINT)) AS r2m
-       | FROM enc e JOIN cb ON e.sub = cb.sub AND e.cid = cb.cid GROUP BY 1),
-       |qraw AS (
-       | SELECT v.vec_id AS query_id, v.e,
-       |  sqrt(list_sum(list_transform(v.e, x -> x*x))) AS qn
-       | FROM v WHERE v.vec_id IN (SELECT vec_id FROM hq)),
-       |tab AS (
-       | SELECT q.query_id, cb.sub, cb.cid, q.qn,
-       |  CAST(round(list_sum(list_transform(range(1, ${subDim + 1}),
-       |    i -> q.e[cb.sub*$subDim + i] * cb.c[i])) * 1000000) AS BIGINT)
-       |   AS tm
-       | FROM qraw q, cb),
-       |rawsc AS (
-       | SELECT c.query_id, c.vec_id, sum(t.tm) AS dm, min(t.qn) AS qn
-       | FROM candi c JOIN enc e ON c.vec_id = e.vec_id
-       |  JOIN tab t ON t.query_id = c.query_id AND t.sub = e.sub
-       |   AND t.cid = e.cid
-       | GROUP BY 1, 2),
-       |rawcand AS (
-       | SELECT sc.query_id, sc.vec_id,
-       |  CASE WHEN r2.r2m <= 0 OR sc.qn = 0 THEN 0.0
-       |       ELSE round((sc.dm / 1000000.0)
-       |            / (sc.qn * sqrt(r2.r2m / 1000000.0)), 6) END AS cos
-       | FROM rawsc sc JOIN r2 ON sc.vec_id = r2.vec_id),
-       |${residualBaseCtes("CAST(round(x * 1000000.0) AS BIGINT)")},
-       |${residualSeedCbCte("rcb", subDim, numCodes, seedFrom = numCentroids)},
-       |${residualIndexCtes("rcb", "_r", subDim)},
-       |qres AS (
-       | SELECT query_id, qm,
-       |  CAST(list_sum(list_transform(qm, x -> x*x)) AS BIGINT) AS q2m
-       | FROM (SELECT vec_id AS query_id,
-       |   list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qm
-       |  FROM v WHERE vec_id IN (SELECT vec_id FROM hq))),
-       |${residualScoreCtes("qres", "_r", subDim)},
-       |served AS (
-       | SELECT 'raw' AS encoding, n_probe, query_id,
-       |  vec_id AS neighbor_id FROM (
-       |  SELECT np.p AS n_probe, rc.query_id, rc.vec_id,
-       |   row_number() OVER (PARTITION BY np.p, rc.query_id
-       |     ORDER BY rc.cos DESC, rc.vec_id) AS rnk
-       |  FROM (VALUES $vals) np(p)
-       |   JOIN rawcand rc ON TRUE
-       |   JOIN candi c ON c.query_id = rc.query_id
-       |    AND c.vec_id = rc.vec_id AND c.rn <= np.p)
-       | WHERE rnk <= $k
-       | UNION ALL
-       | SELECT 'residual', n_probe, query_id, vec_id FROM (
-       |  SELECT np.p AS n_probe, rc.query_id, rc.vec_id,
-       |   row_number() OVER (PARTITION BY np.p, rc.query_id
-       |     ORDER BY rc.cos DESC, rc.vec_id) AS rnk
-       |  FROM (VALUES $vals) np(p)
-       |   JOIN rescand_r rc ON TRUE
-       |   JOIN candi c ON c.query_id = rc.query_id
-       |    AND c.vec_id = rc.vec_id AND c.rn <= np.p)
-       | WHERE rnk <= $k),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM hq)
-       |SELECT s.encoding, CAST(s.n_probe AS BIGINT) AS n_probe,
-       | CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM served s LEFT JOIN truth t
-       | ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-       | CROSS JOIN nq
-       |GROUP BY 1, 2, nq.n_q ORDER BY 1, 2""".stripMargin
-  }
-
-  /** rerank_budget_recall oracle: the residual-ADC chain ranked once
-    * at the max shortlist budget, ONE exact-scored frame at max m, and
-    * each rerank budget served by a rank filter + per-(m, query) exact
-    * top-k — recall vs brute-force truth per m. */
-  private def rerankBudgetRecallOracle(numQueries: Int, k: Int,
-                                       ms: Seq[Int], numCentroids: Int,
-                                       nProbe: Int, numSub: Int,
-                                       subDim: Int, numCodes: Int): String = {
-    val maxM = ms.max
-    val vals = ms.map(m => s"($m)").mkString(", ")
-    val hqBound = numCentroids + numCodes
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v
-       |          WHERE vec_id < $numCentroids),
-       |tinit AS (SELECT vec_id FROM (
-       | SELECT vec_id, row_number() OVER (
-       |   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM v)
-       | WHERE rn <= $hqBound),
-       |hq AS MATERIALIZED (
-       | SELECT vec_id FROM v
-       | WHERE vec_id >= $hqBound
-       |  AND vec_id NOT IN (SELECT vec_id FROM tinit)
-       | ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-       | LIMIT $numQueries),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id IN (SELECT vec_id FROM hq))
-       | WHERE rn <= $nProbe),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT qv.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY qv.vec_id
-       |     ORDER BY ${cosSql("qv.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v qv JOIN v x ON qv.vec_id <> x.vec_id
-       |  WHERE qv.vec_id IN (SELECT vec_id FROM hq)) WHERE rnk <= $k),
-       |${residualBaseCtes("CAST(round(x * 1000000.0) AS BIGINT)")},
-       |${residualSeedCbCte("rcb", subDim, numCodes, seedFrom = numCentroids)},
-       |${residualIndexCtes("rcb", "_r", subDim)},
-       |qres AS (
-       | SELECT query_id, qm,
-       |  CAST(list_sum(list_transform(qm, x -> x*x)) AS BIGINT) AS q2m
-       | FROM (SELECT vec_id AS query_id,
-       |   list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qm
-       |  FROM v WHERE vec_id IN (SELECT vec_id FROM hq))),
-       |${residualScoreCtes("qres", "_r", subDim)},
-       |shortr AS MATERIALIZED (
-       | SELECT query_id, vec_id, prnk FROM (
-       |  SELECT query_id, vec_id,
-       |   row_number() OVER (PARTITION BY query_id
-       |     ORDER BY cos DESC, vec_id) AS prnk
-       |  FROM rescand_r) WHERE prnk <= $maxM),
-       |exactsc AS MATERIALIZED (
-       | SELECT s.query_id, s.vec_id, s.prnk,
-       |  ${cosSql("qv.e", "x.e")} AS cos
-       | FROM shortr s JOIN v qv ON s.query_id = qv.vec_id
-       |  JOIN v x ON s.vec_id = x.vec_id),
-       |served AS (
-       | SELECT m, query_id, vec_id AS neighbor_id FROM (
-       |  SELECT mm.m, e.query_id, e.vec_id,
-       |   row_number() OVER (PARTITION BY mm.m, e.query_id
-       |     ORDER BY e.cos DESC, e.vec_id) AS rnk
-       |  FROM (VALUES $vals) mm(m)
-       |   JOIN exactsc e ON e.prnk <= mm.m)
-       | WHERE rnk <= $k),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM hq)
-       |SELECT CAST(s.m AS BIGINT) AS m,
-       | CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM served s LEFT JOIN truth t
-       | ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-       | CROSS JOIN nq
-       |GROUP BY 1, nq.n_q ORDER BY 1""".stripMargin
-  }
-
-  /** ann_ivf_pq_residual_trained oracle: trained coarse centroids
-    * (trainedCentsCtes — micro-valued, so cmm CASTS instead of
-    * re-scaling), residuals, the residual-Lloyd codebook replay, and
-    * the same encode→ADC→shortlist→rerank chain. */
-  private def annIvfPqResidualTrainedOracle(numQueries: Int, m: Int,
-                                            k: Int, numCentroids: Int,
-                                            nProbe: Int, numSub: Int,
-                                            subDim: Int, numCodes: Int,
-                                            iters: Int): String =
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |${trainedCentsCtes(numCentroids, iters)},
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |${residualBaseCtes("CAST(x AS BIGINT)")},
-       |${residualTrainCbCtes("rcbt", subDim, numCodes, iters)},
-       |${residualIndexCtes("rcbt", "", subDim)},
-       |qres AS (
-       | SELECT query_id, qm,
-       |  CAST(list_sum(list_transform(qm, x -> x*x)) AS BIGINT) AS q2m
-       | FROM (SELECT vec_id AS query_id,
-       |   list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qm
-       |  FROM v WHERE vec_id < $numQueries)),
-       |${residualScoreCtes("qres", "", subDim)},
-       |short AS (
-       | SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id,
-       |   row_number() OVER (PARTITION BY query_id
-       |                      ORDER BY cos DESC, vec_id) AS prnk
-       |  FROM rescand) WHERE prnk <= $m),
-       |rrk AS (
-       | SELECT s.query_id, s.vec_id AS neighbor_id,
-       |  ${cosSql("qv.e", "x.e")} AS cos
-       | FROM short s JOIN v qv ON s.query_id = qv.vec_id
-       |  JOIN v x ON s.vec_id = x.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM rrk) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  /** pq_residual_trained_recall oracle: ONE trained coarse + candidate
-    * set, the seeded and Lloyd-trained residual codebooks served
-    * side-by-side from the ADC estimate, recall vs exact truth. */
-  private def pqResidualTrainedRecallOracle(numQueries: Int, k: Int,
-                                            numCentroids: Int, nProbe: Int,
-                                            numSub: Int, subDim: Int,
-                                            numCodes: Int,
-                                            iters: Int): String = {
-    val hqBound = numCentroids + numCodes
-    s"""WITH v AS (
-       | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |sub AS (SELECT unnest(range(0, $numSub)) AS s),
-       |${trainedCentsCtes(numCentroids, iters)},
-       |tinit AS (SELECT vec_id FROM (
-       | SELECT vec_id, row_number() OVER (
-       |   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM v)
-       | WHERE rn <= $hqBound),
-       |hq AS MATERIALIZED (
-       | SELECT vec_id FROM v
-       | WHERE vec_id >= $hqBound
-       |  AND vec_id NOT IN (SELECT vec_id FROM tinit)
-       | ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-       | LIMIT $numQueries),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id IN (SELECT vec_id FROM hq))
-       | WHERE rn <= $nProbe),
-       |candi AS (
-       | SELECT p.query_id, a.vec_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT qv.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY qv.vec_id
-       |     ORDER BY ${cosSql("qv.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v qv JOIN v x ON qv.vec_id <> x.vec_id
-       |  WHERE qv.vec_id IN (SELECT vec_id FROM hq)) WHERE rnk <= $k),
-       |${residualBaseCtes("CAST(x AS BIGINT)")},
-       |${residualSeedCbCte("rcb", subDim, numCodes, seedFrom = numCentroids)},
-       |${residualTrainCbCtes("rcbt", subDim, numCodes, iters)},
-       |qres AS (
-       | SELECT query_id, qm,
-       |  CAST(list_sum(list_transform(qm, x -> x*x)) AS BIGINT) AS q2m
-       | FROM (SELECT vec_id AS query_id,
-       |   list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS qm
-       |  FROM v WHERE vec_id IN (SELECT vec_id FROM hq))),
-       |${residualIndexCtes("rcb", "_s", subDim)},
-       |${residualScoreCtes("qres", "_s", subDim)},
-       |${residualIndexCtes("rcbt", "_t", subDim)},
-       |${residualScoreCtes("qres", "_t", subDim)},
-       |served AS (
-       | SELECT 'seeded' AS codebook, query_id, vec_id AS neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, vec_id) AS rnk FROM rescand_s)
-       | WHERE rnk <= $k
-       | UNION ALL
-       | SELECT 'trained', query_id, vec_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, vec_id) AS rnk FROM rescand_t)
-       | WHERE rnk <= $k),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM hq)
-       |SELECT s.codebook,
-       | CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM served s LEFT JOIN truth t
-       | ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-       | CROSS JOIN nq
-       |GROUP BY 1, nq.n_q ORDER BY 1""".stripMargin
-  }
-
-  /** ann_matryoshka_recall oracle: one MATERIALIZED candidate block
-    * scoring every tier in-row, UNION-ALL unpivot, per-tier top-k,
-    * hits vs the top-tier truth. */
-  private def annMatryoshkaOracle(numQueries: Int, k: Int,
-                                  tiers: Seq[Int]): String = {
-    val tierCols = tiers.map(d =>
-      s"${cosSliceSql("q.eq", "x.e", d)} AS cos_$d").mkString(",\n  ")
-    val unpivot = tiers.map(d =>
-      s"SELECT query_id, vec_id, CAST($d AS BIGINT) AS dims, cos_$d AS cos FROM cand")
-      .mkString("\n UNION ALL ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |q AS (SELECT vec_id AS query_id, e AS eq FROM v
-       |      WHERE vec_id < $numQueries),
-       |cand AS MATERIALIZED (
-       | SELECT q.query_id, x.vec_id,
-       |  $tierCols
-       | FROM q JOIN v x ON x.vec_id <> q.query_id),
-       |long AS ($unpivot),
-       |edges AS MATERIALIZED (
-       | SELECT dims, query_id, vec_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY dims, query_id
-       |                               ORDER BY cos DESC, vec_id) AS rnk
-       |  FROM long) WHERE rnk <= $k),
-       |truth AS (SELECT query_id, vec_id FROM edges
-       |          WHERE dims = ${tiers.max}),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM q)
-       |SELECT e.dims, CAST(sum(CASE WHEN t.query_id IS NOT NULL
-       |  THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL
-       |  THEN 1 ELSE 0 END) AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM edges e LEFT JOIN truth t
-       | ON t.query_id = e.query_id AND t.vec_id = e.vec_id
-       | CROSS JOIN nq
-       |GROUP BY e.dims, nq.n_q ORDER BY dims""".stripMargin
-  }
-
-  /** The IVF serving CTE chain — assumes CTEs `v(vec_id, e)` and
-    * `cents(cid, ce)` are already defined, so the SAME serving SQL
-    * checks the default-centroid and trained-centroid paths. */
-  private def ivfServingSql(numQueries: Int, k: Int, nProbe: Int): String =
-    s"""ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |cand AS (
-       | SELECT p.query_id, a.vec_id AS neighbor_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |scored AS (
-       | SELECT c.query_id, c.neighbor_id,
-       |  ${cosSql("q.e", "x.e")} AS cos
-       | FROM cand c JOIN v q ON c.query_id = q.vec_id
-       |  JOIN v x ON c.neighbor_id = x.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM scored) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  private def annIvfOracle(numQueries: Int, k: Int, numCentroids: Int,
-                           nProbe: Int): String =
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < $numCentroids),
-       |${ivfServingSql(numQueries, k, nProbe)}""".stripMargin
-
-  /** trainIvfCentroidsExact replicated as SQL CTEs — micro rounding,
-    * md5-ordered init, per-iteration round(cos,6)/cid-tiebreak
-    * assignment and floored integer-mean update, ending in
-    * `cents(cid, ce)` ready for [[ivfServingSql]]. Assumes `v`. */
-  private[graft] def trainedCentsCtes(numCentroids: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""vm AS (SELECT vec_id,
-      | list_transform(e, x -> CAST(round(x * 1000000.0) AS BIGINT)) AS em
-      | FROM v),
-      |tc0 AS (SELECT cid, cm FROM (
-      | SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-      |   vec_id) AS BIGINT) AS cid, em AS cm FROM vm)
-      | WHERE cid <= $numCentroids)""".stripMargin
-    for (t <- 1 to iters) {
-      sb ++= s""",
-        |ta$t AS (SELECT m.vec_id, m.em, c.cid,
-        |  ${cosSql("m.em", "c.cm")} AS ccos
-        | FROM vm m CROSS JOIN tc${t - 1} c),
-        |ts$t AS (SELECT vec_id, em, cell FROM (
-        | SELECT vec_id, em, cid AS cell,
-        |  row_number() OVER (PARTITION BY vec_id
-        |                     ORDER BY ccos DESC, cid) AS rn
-        | FROM ta$t) WHERE rn = 1),
-        |tc$t AS (SELECT cell AS cid, list(cv ORDER BY i) AS cm FROM (
-        | SELECT cell, i,
-        |  CAST(floor(CAST(sum(em[i]) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-        | FROM ts$t, UNNEST(range(1, len(em)+1)) u(i) GROUP BY cell, i)
-        | GROUP BY cell)""".stripMargin
-    }
-    sb ++= s""",
-      |cents AS (SELECT cid, list_transform(cm, x -> CAST(x AS DOUBLE)) AS ce
-      | FROM tc$iters)""".stripMargin
-    sb.toString
-  }
-
-  private def annIvfTrainedOracle(numQueries: Int, k: Int, numCentroids: Int,
-                                  nProbe: Int, iters: Int): String =
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |${trainedCentsCtes(numCentroids, iters)},
-       |${ivfServingSql(numQueries, k, nProbe)}""".stripMargin
-
-  /** ann_recall_trained oracle: both centroid tables tagged and
-    * unioned, one serving/ranking chain partitioned by tag, recall
-    * against the shared brute-force truth. Queries are the HELD-OUT
-    * set — [[heldoutQueries]]'s rule replayed: drop vec_id < C, drop
-    * the md5-ASC first-C trained init sample, take the md5-DESC tail
-    * Q. */
-  private def annRecallTrainedOracle(numQueries: Int, k: Int,
-                                     numCentroids: Int, iters: Int,
-                                     nProbes: Seq[Int]): String = {
-    val maxP = nProbes.max
-    val vals = nProbes.map(p => s"($p)").mkString(", ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |${trainedCentsCtes(numCentroids, iters)},
-       |tinit AS (SELECT vec_id FROM (
-       | SELECT vec_id, row_number() OVER (
-       |   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM v)
-       | WHERE rn <= $numCentroids),
-       |hq AS MATERIALIZED (
-       | SELECT vec_id FROM v
-       | WHERE vec_id >= $numCentroids
-       |  AND vec_id NOT IN (SELECT vec_id FROM tinit)
-       | ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-       | LIMIT $numQueries),
-       |dcents AS (SELECT vec_id AS cid, e AS ce FROM v
-       | WHERE vec_id < $numCentroids),
-       |allc AS (SELECT 'default' AS tag, cid, ce FROM dcents
-       | UNION ALL SELECT 'trained', cid, ce FROM cents),
-       |ac AS (
-       | SELECT c.tag, v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN allc c),
-       |assigned AS (
-       | SELECT tag, vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY tag, vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT tag, vec_id AS query_id, cid AS probe, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY tag, vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id IN (SELECT vec_id FROM hq)) WHERE rn <= $maxP),
-       |exact_scored AS (
-       | SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |  ${cosSql("q.e", "x.e")} AS cos
-       | FROM v q JOIN v x ON q.vec_id <> x.vec_id
-       | WHERE q.vec_id IN (SELECT vec_id FROM hq)),
-       |exact AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |                               ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM exact_scored) WHERE rnk <= $k),
-       |cand AS (
-       | SELECT pr.tag, np.p AS n_probe, pr.query_id, a.vec_id AS neighbor_id
-       | FROM (VALUES $vals) np(p)
-       |  JOIN probes pr ON pr.rn <= np.p
-       |  JOIN assigned a ON a.tag = pr.tag AND a.cell = pr.probe
-       |   AND a.vec_id <> pr.query_id),
-       |scored AS (
-       | SELECT c.tag, c.n_probe, c.query_id, c.neighbor_id,
-       |  ${cosSql("q.e", "x.e")} AS cos
-       | FROM cand c JOIN v q ON c.query_id = q.vec_id
-       |  JOIN v x ON c.neighbor_id = x.vec_id),
-       |ranked AS (
-       | SELECT tag, n_probe, query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY tag, n_probe, query_id
-       |                               ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored) WHERE rnk <= $k),
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM hq)
-       |SELECT r.tag AS centroids, r.n_probe,
-       |  CAST(sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |   AS BIGINT) AS hits,
-       |  (10000 * CAST(sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |   AS BIGINT)) // (nq.n_q * $k) AS recall_bp
-       |FROM ranked r LEFT JOIN exact e
-       | ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-       | CROSS JOIN nq
-       |GROUP BY 1, 2, nq.n_q ORDER BY 1, 2""".stripMargin
-  }
-
-  /** Full oracle for the composed IVF × int8 × fp32-rerank path: the
-    * IVF assignment/probing fragments are [[annIvfOracle]]'s, the
-    * quantization is embed_quantize_int8's explicit sign·floor form,
-    * and the int8 shortlist scoring is exact integer arithmetic (|q| <=
-    * 127 ⇒ 64-dim dots <= ~1.03e6, exactly representable in double in
-    * any order) — so the WHOLE three-stage pipeline replicates in SQL
-    * bit-for-bit, not just row counts. */
-  /** Oracle for the from-index serving path: identical CTE chain to
-    * the rerank oracle up to the candidate set, then the top-k ranks
-    * directly on the quantized cosine computed from the stored-index
-    * integers (exact small-int arithmetic, bit-stable cross-engine). */
-  /** ann_recall_eval oracle: the annIvfOracle CTE chain ranked once
-    * per nProbe value (a VALUES fan-out over the probe-rank filter),
-    * the brute-force exact top-k as the truth set, hits by left join. */
-  private def annRecallOracle(numQueries: Int, k: Int, numCentroids: Int,
-                              nProbes: Seq[Int]): String = {
-    val maxP = nProbes.max
-    val vals = nProbes.map(p => s"($p)").mkString(", ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < $numCentroids),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  round(list_sum(list_transform(range(1, len(v.e)+1), i -> v.e[i]*c.ce[i]))
-       |   / (sqrt(list_sum(list_transform(v.e, x -> x*x)))
-       |      * sqrt(list_sum(list_transform(c.ce, x -> x*x)))), 6) AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $maxP),
-       |exact_scored AS (
-       | SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |  round(list_sum(list_transform(range(1, len(q.e)+1), i -> q.e[i]*x.e[i]))
-       |   / (sqrt(list_sum(list_transform(q.e, y -> y*y)))
-       |      * sqrt(list_sum(list_transform(x.e, y -> y*y)))), 6) AS cos
-       | FROM v q JOIN v x ON q.vec_id < $numQueries AND q.vec_id <> x.vec_id),
-       |exact AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |                               ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM exact_scored) WHERE rnk <= $k),
-       |cand AS (
-       | SELECT np.p AS n_probe, pr.query_id, a.vec_id AS neighbor_id
-       | FROM (VALUES $vals) np(p)
-       |  JOIN probes pr ON pr.rn <= np.p
-       |  JOIN assigned a ON a.cell = pr.probe AND a.vec_id <> pr.query_id),
-       |scored AS (
-       | SELECT c.n_probe, c.query_id, c.neighbor_id,
-       |  round(list_sum(list_transform(range(1, len(q.e)+1), i -> q.e[i]*x.e[i]))
-       |   / (sqrt(list_sum(list_transform(q.e, y -> y*y)))
-       |      * sqrt(list_sum(list_transform(x.e, y -> y*y)))), 6) AS cos
-       | FROM cand c JOIN v q ON c.query_id = q.vec_id
-       |  JOIN v x ON c.neighbor_id = x.vec_id),
-       |ranked AS (
-       | SELECT n_probe, query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY n_probe, query_id
-       |                               ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored) WHERE rnk <= $k)
-       |SELECT r.n_probe, r.query_id,
-       |  CAST(sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |   AS BIGINT) AS hits,
-       |  (10000 * CAST(sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |   AS BIGINT)) // $k AS recall_bp
-       |FROM ranked r LEFT JOIN exact e
-       | ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
-
   /** top_component oracle: the identical milli-gram + max-rescaled
     * power recurrence unrolled as MATERIALIZED CTEs (plain CTE
     * inlining would replay the gram per reference — the k-core
@@ -4295,67 +2889,6 @@ object Similarity {
   private def topComponentOracle(iters: Int, dim: Int): String =
     s"""WITH ${topComponentCtes(iters, dim)}
        |SELECT j AS dim, v AS v_unit FROM v$iters ORDER BY dim""".stripMargin
-
-  /** The power-iteration CTE chain alone (qm … v$iters) — shared by
-    * top_component and the all-but-the-top transform oracles. */
-  private def topComponentCtes(iters: Int, dim: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""qm AS (
-      | SELECT list_transform(embedding::DOUBLE[],
-      |   x -> CAST(round(x * 1000.0) AS BIGINT)) AS q
-      | FROM embeddings),
-      |px AS (SELECT q, unnest(range(1, len(q) + 1)) AS i FROM qm),
-      |pr AS (SELECT q, i, unnest(range(1, len(q) + 1)) AS j FROM px),
-      |g AS MATERIALIZED (
-      | SELECT i - 1 AS i, j - 1 AS j, CAST(sum(q[i] * q[j]) AS BIGINT) AS m
-      | FROM pr GROUP BY 1, 2),
-      |sd AS (SELECT i AS sj FROM g WHERE i = j ORDER BY m DESC, i LIMIT 1),
-      |v0 AS MATERIALIZED (
-      | SELECT jj AS j, CASE WHEN jj = (SELECT sj FROM sd)
-      |  THEN 10000 ELSE 0 END AS v
-      | FROM (SELECT unnest(range(0, $dim)) AS jj))""".stripMargin
-    for (t <- 1 to iters) {
-      sb ++= s""",w$t AS MATERIALIZED (
-        | SELECT g.i, sum(CAST(g.m AS HUGEINT) * vp.v) AS w
-        | FROM g JOIN v${t - 1} vp ON g.j = vp.j GROUP BY 1),
-        |m$t AS MATERIALIZED (SELECT max(abs(w)) AS mw FROM w$t),
-        |v$t AS MATERIALIZED (
-        | SELECT i AS j, CAST(round(CAST(w AS DOUBLE) / CAST(mw AS DOUBLE)
-        |   * 10000.0) AS BIGINT) AS v
-        | FROM w$t, m$t)""".stripMargin
-    }
-    sb.toString
-  }
-
-  /** The all-but-the-top projection CTE chain over the power
-    * iteration's v$iters — emits `abt(vec_id, qq, xv, vv, num, nrm)`,
-    * the exact-integer residual frame both abt oracles read. */
-  private def allButTopCtes(iters: Int, dim: Int): String =
-    s"""${topComponentCtes(iters, dim)},
-       |varr AS MATERIALIZED (
-       | SELECT list(v ORDER BY j) AS va,
-       |  CAST(list_sum(list_transform(list(v ORDER BY j), y -> y * y))
-       |   AS BIGINT) AS vv
-       | FROM v$iters),
-       |qv AS (
-       | SELECT vec_id, list_transform(embedding::DOUBLE[],
-       |   x -> CAST(round(x * 1000.0) AS BIGINT)) AS q
-       | FROM embeddings),
-       |pj AS (
-       | SELECT qv.vec_id, qv.q, r.va, r.vv,
-       |  CAST(list_sum(list_transform(qv.q, y -> y * y)) AS BIGINT) AS qq,
-       |  CAST(list_sum(list_transform(range(1, len(qv.q) + 1),
-       |    i -> qv.q[i] * r.va[i])) AS BIGINT) AS xv
-       | FROM qv CROSS JOIN varr r),
-       |abt AS MATERIALIZED (
-       | SELECT vec_id, qq, xv, vv, num,
-       |  sqrt(list_sum(list_transform(num,
-       |    n -> CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))) AS nrm
-       | FROM (
-       |  SELECT vec_id, qq, xv, vv,
-       |   list_transform(range(1, len(q) + 1),
-       |     i -> q[i] * vv - xv * va[i]) AS num
-       |  FROM pj))""".stripMargin
 
   /** The orthogonalized-power v₂ CTE chain on top of
     * [[topComponentCtes]] — seed at argmax G_jj·(10⁸ − v₁_j²) (the
@@ -4497,48 +3030,6 @@ object Similarity {
        |   END AS BIGINT)), ',') AS e_csv
        |FROM abt ORDER BY vec_id""".stripMargin
 
-  private def embedAllButTopRecallOracle(numQueries: Int, k: Int,
-                                         iters: Int, dim: Int): String =
-    s"""WITH ${allButTopCtes(iters, dim)},
-       |post AS MATERIALIZED (
-       | SELECT vec_id, list_transform(num, n ->
-       |  CASE WHEN nrm = 0 THEN 0.0
-       |   ELSE CAST(CAST(round(CAST(n AS DOUBLE) / nrm * 1000000.0)
-       |    AS BIGINT) AS DOUBLE) END) AS e
-       | FROM abt),
-       |served AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY q.vec_id
-       |    ORDER BY ${cosSql("q.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM post q JOIN post x
-       |   ON q.vec_id < $numQueries AND q.vec_id <> x.vec_id)
-       | WHERE rnk <= $k),
-       |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-       |   row_number() OVER (PARTITION BY q.vec_id
-       |    ORDER BY ${cosSql("q.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v q JOIN v x
-       |   ON q.vec_id < $numQueries AND q.vec_id <> x.vec_id)
-       | WHERE rnk <= $k)
-       |SELECT s.query_id,
-       | CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | (10000 * CAST(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // $k AS recall_bp
-       |FROM served s LEFT JOIN truth t
-       | ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** knn_graph oracle: annIvfOracle's CTE chain with the probe set
-    * widened to the WHOLE corpus, plus the reciprocal-edge self-join
-    * for the mutual flag. */
-  /** The kNN edge-frame CTE chain shared by the graph dump and the
-    * mutual-kNN clustering oracle. The corpus-sized cosine table and
-    * the edge frame are MATERIALIZED — the k-core lesson: a recursive
-    * consumer would otherwise replay the whole chain per reference. */
   /** The oracle's replica of [[adaptiveCentroids]] — ceil(sqrt(n))
     * clamped to [16, 65536], computed over the same corpus; IEEE sqrt
     * and ceil are bit-identical across engines on integer inputs. */
@@ -4546,6 +3037,11 @@ object Similarity {
     "(SELECT least(65536, greatest(16, CAST(ceil(sqrt(CAST(count(*) " +
       "AS DOUBLE))) AS BIGINT))) FROM v)"
 
+  /** The kNN edge-frame CTE chain shared by the graph dump and the
+    * mutual-kNN clustering oracle: the IVF serving replay with the probe
+    * set widened to the WHOLE corpus. The corpus-sized cosine table and
+    * the edge frame are MATERIALIZED — the k-core lesson: a recursive
+    * consumer would otherwise replay the whole chain per reference. */
   private def knnEdgesCtes(k: Int, nProbe: Int): String =
     s"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |cents AS (SELECT vec_id AS cid, e AS ce FROM v
@@ -4711,102 +3207,6 @@ object Similarity {
        | c.vec_id = c.rep_id AS is_canonical
        |FROM comp c JOIN sz USING (rep_id) ORDER BY vec_id""".stripMargin
 
-  private def annIvfFromIndexOracle(numQueries: Int, k: Int,
-                                    numCentroids: Int, nProbe: Int): String =
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |qv AS (
-       | SELECT vec_id, list_transform(e, x -> CASE WHEN maxabs = 0 THEN 0
-       |   ELSE CAST(sign(x) * floor(abs(x) * 127.0 / maxabs + 0.5)
-       |             AS INTEGER) END) AS q
-       | FROM (SELECT vec_id, e,
-       |        list_max(list_transform(e, x -> abs(x))) AS maxabs FROM v)),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < $numCentroids),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  round(list_sum(list_transform(range(1, len(v.e)+1), i -> v.e[i]*c.ce[i]))
-       |   / (sqrt(list_sum(list_transform(v.e, x -> x*x)))
-       |      * sqrt(list_sum(list_transform(c.ce, x -> x*x)))), 6) AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |cand AS (
-       | SELECT p.query_id, a.vec_id AS neighbor_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |q8 AS (
-       | SELECT c.query_id, c.neighbor_id,
-       |  round(list_sum(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]))
-       |   / (sqrt(list_sum(list_transform(a.q, x -> x*x)))
-       |      * sqrt(list_sum(list_transform(b.q, x -> x*x)))), 6) AS cos
-       | FROM cand c JOIN qv a ON c.query_id = a.vec_id
-       |  JOIN qv b ON c.neighbor_id = b.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM q8) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  private def annIvfRerankOracle(numQueries: Int, k: Int, numCentroids: Int,
-                                 nProbe: Int, m: Int): String =
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |qv AS (
-       | SELECT vec_id, list_transform(e, x -> CASE WHEN maxabs = 0 THEN 0
-       |   ELSE CAST(sign(x) * floor(abs(x) * 127.0 / maxabs + 0.5)
-       |             AS INTEGER) END) AS q
-       | FROM (SELECT vec_id, e,
-       |        list_max(list_transform(e, x -> abs(x))) AS maxabs FROM v)),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < $numCentroids),
-       |ac AS (
-       | SELECT v.vec_id, c.cid,
-       |  round(list_sum(list_transform(range(1, len(v.e)+1), i -> v.e[i]*c.ce[i]))
-       |   / (sqrt(list_sum(list_transform(v.e, x -> x*x)))
-       |      * sqrt(list_sum(list_transform(c.ce, x -> x*x)))), 6) AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac WHERE vec_id < $numQueries) WHERE rn <= $nProbe),
-       |cand AS (
-       | SELECT p.query_id, a.vec_id AS neighbor_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |q8 AS (
-       | SELECT c.query_id, c.neighbor_id,
-       |  round(list_sum(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]))
-       |   / (sqrt(list_sum(list_transform(a.q, x -> x*x)))
-       |      * sqrt(list_sum(list_transform(b.q, x -> x*x)))), 6) AS qcos
-       | FROM cand c JOIN qv a ON c.query_id = a.vec_id
-       |  JOIN qv b ON c.neighbor_id = b.vec_id),
-       |short AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |                               ORDER BY qcos DESC, neighbor_id) AS rn
-       |  FROM q8) WHERE rn <= $m),
-       |scored AS (
-       | SELECT s.query_id, s.neighbor_id,
-       |  round(list_sum(list_transform(range(1, len(q.e)+1), i -> q.e[i]*x.e[i]))
-       |   / (sqrt(list_sum(list_transform(q.e, y -> y*y)))
-       |      * sqrt(list_sum(list_transform(x.e, y -> y*y)))), 6) AS cos
-       | FROM short s JOIN v q ON s.query_id = q.vec_id
-       |  JOIN v x ON s.neighbor_id = x.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY cos DESC, neighbor_id) AS rnk
-       | FROM scored) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
   /** Full oracle for the banded decontam path: planes as SQL literals,
     * band/bucket assignment, DISTINCT collision pairs, exact verify —
     * the same pipeline the Spark plan runs, so the banding itself is
@@ -4900,23 +3300,12 @@ object Similarity {
         |  SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS maxabs
         |  FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)))
         |ORDER BY vec_id""".stripMargin,
-    "ann_lsh_topk" -> annLshOracle(numQueries = 8, k = 3, numPlanes = 6),
-    "ann_ivf_topk" -> annIvfOracle(numQueries = 8, k = 3,
-      numCentroids = 16, nProbe = 4),
-    "ann_ivf_topk_trained" -> annIvfTrainedOracle(numQueries = 8, k = 3,
-      numCentroids = 16, nProbe = 4, iters = 2),
-    "ann_recall_trained" -> annRecallTrainedOracle(numQueries = 8, k = 5,
-      numCentroids = 16, iters = 2, nProbes = Seq(1, 2, 4)),
     "knn_graph" -> knnGraphOracle(k = 5, nProbe = 4),
     "knn_graph_clusters" -> knnGraphClustersOracle(k = 5, nProbe = 4),
     "knn_graph_refine" -> knnRefineOracle(k = 5, nProbe = 4),
     "knn_refine_recall" -> knnRefineRecallOracle(k = 5, nProbe = 4),
     "knn_refine_converged" -> knnRefineConvergedOracle(k = 5, nProbe = 4,
       maxRounds = 3, epsBp = 100L),
-    "ann_recall_eval" -> annRecallOracle(numQueries = 8, k = 5,
-      numCentroids = 16, nProbes = Seq(1, 2, 4)),
-    "ann_matryoshka_recall" -> annMatryoshkaOracle(numQueries = 8, k = 5,
-      tiers = Seq(8, 16, 32, 64)),
     // the truncate-and-renorm transform at d=16: same fold order for
     // the prefix norm, each unit component rounded once to micro
     "embed_matryoshka_truncate" ->
@@ -4932,51 +3321,8 @@ object Similarity {
         |        ELSE CAST(round(x / nrm * 1000000.0) AS BIGINT) END),
         |  ',') AS t_csv
         |FROM t ORDER BY vec_id""".stripMargin,
-    "ann_ivf_pq_topk" -> annIvfPqOracle(numQueries = 8, m = 12, k = 3,
-      numCentroids = 16, nProbe = 4, numSub = 8, subDim = 8,
-      numCodes = 16),
-    "ann_ivf_pq_trained" -> annIvfPqTrainedOracle(numQueries = 8, m = 12,
-      k = 3, numCentroids = 16, nProbe = 4, numSub = 8, subDim = 8,
-      numCodes = 16, iters = 2),
-    "ann_ivf_pq_residual" -> annIvfPqResidualOracle(numQueries = 8,
-      m = 12, k = 3, numCentroids = 16, nProbe = 4, numSub = 8,
-      subDim = 8, numCodes = 16),
-    // the stored-index read path must serve EXACTLY what the rebuild
-    // plan serves — same replay, deliberately
-    "ann_ivf_pq_residual_index" -> annIvfPqResidualOracle(numQueries = 8,
-      m = 12, k = 3, numCentroids = 16, nProbe = 4, numSub = 8,
-      subDim = 8, numCodes = 16),
-    // numQueries = 32 (r14 verdict #8): 8 held-out queries gave the
-    // curve 250 bp granularity — one hit of noise could invert the
-    // first point's raw-vs-residual story; 32 queries × k=5 puts the
-    // floor at 62.5 bp
-    "pq_residual_recall" -> pqResidualRecallOracle(numQueries = 32, k = 5,
-      numCentroids = 16, nProbes = Seq(1, 2, 4), numSub = 8, subDim = 8,
-      numCodes = 16),
-    "rerank_budget_recall" -> rerankBudgetRecallOracle(numQueries = 32,
-      k = 5, ms = Seq(5, 10, 20, 40), numCentroids = 16, nProbe = 4,
-      numSub = 8, subDim = 8, numCodes = 16),
-    "ann_pq_int4_topk" -> annPqInt4Oracle(numQueries = 8, k = 5,
-      numSub = 8, subDim = 8, numCodes = 16),
-    "ann_ivf_pq_residual_int4" -> annIvfPqResidualInt4Oracle(
-      numQueries = 8, m = 12, k = 3, numCentroids = 16, nProbe = 4,
-      numSub = 8, subDim = 8, numCodes = 16),
-    "pq_int4_recall" -> pqInt4RecallOracle(numQueries = 32, k = 5,
-      numCodes = 16),
-    "ann_ivf_pq_residual_trained" -> annIvfPqResidualTrainedOracle(
-      numQueries = 8, m = 12, k = 3, numCentroids = 16, nProbe = 4,
-      numSub = 8, subDim = 8, numCodes = 16, iters = 2),
-    "pq_residual_trained_recall" -> pqResidualTrainedRecallOracle(
-      numQueries = 8, k = 5, numCentroids = 16, nProbe = 4, numSub = 8,
-      subDim = 8, numCodes = 16, iters = 2),
-    "ann_pq_trained" -> annPqTrainedOracle(numQueries = 8, k = 3,
-      numSub = 8, subDim = 8, numCodes = 16, iters = 2),
-    "pq_train_recall" -> pqTrainRecallOracle(numQueries = 8, k = 5,
-      numSub = 8, subDim = 8, numCodes = 16, iters = 2),
     "top_component" -> topComponentOracle(iters = 6, dim = 64),
     "embed_all_but_top" -> embedAllButTopOracle(iters = 6, dim = 64),
-    "ann_abt_recall" -> embedAllButTopRecallOracle(numQueries = 8, k = 5,
-      iters = 6, dim = 64),
     "top_components2" -> topComponents2Oracle(iters = 6, dim = 64),
     "embed_all_but_top2" -> embedAllButTop2Oracle(iters = 6, dim = 64),
     "embed_exact_dups" ->
@@ -5006,10 +3352,6 @@ object Similarity {
         |   AS BIGINT) AS n_zero,
         |  CAST(sum(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_nonfinite
         |FROM r GROUP BY label ORDER BY label""".stripMargin,
-    "ann_ivf_rerank_topk" -> annIvfRerankOracle(numQueries = 8, k = 3,
-      numCentroids = 16, nProbe = 4, m = 12),
-    "ann_ivf_from_index" -> annIvfFromIndexOracle(numQueries = 8, k = 3,
-      numCentroids = 16, nProbe = 4),
     "embed_decontam" -> (vectorCte +
       """, b AS (SELECT vec_id AS bench_id, e AS eb, nrm AS nrmb
         |        FROM v WHERE vec_id % 50 = 0),
@@ -5127,157 +3469,7 @@ object Similarity {
         |FROM assigned a JOIN comp c USING (vec_id) JOIN sz USING (rep_id)
         |JOIN keepers k USING (rep_id)
         |ORDER BY vec_id""".stripMargin),
-    "ann_cosine_topk" -> (vectorCte +
-      """SELECT query_id, neighbor_id, cos, rnk FROM (
-        | SELECT query_id, neighbor_id, cos,
-        |  row_number() OVER (PARTITION BY query_id
-        |                     ORDER BY cos DESC, neighbor_id) AS rnk
-        | FROM (
-        |  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-        |   round(list_sum(list_transform(range(1, len(q.e)+1), i -> q.e[i]*x.e[i]))
-        |     / (q.nrm * x.nrm), 6) AS cos
-        |  FROM v q JOIN v x ON x.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 8))
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin),
-    // the confusable band [0.15, 0.40): rank only candidates inside it
-    "ann_hard_negatives" -> (vectorCte +
-      """SELECT query_id, neighbor_id, cos, rnk FROM (
-        | SELECT query_id, neighbor_id, cos,
-        |  row_number() OVER (PARTITION BY query_id
-        |                     ORDER BY cos DESC, neighbor_id) AS rnk
-        | FROM (
-        |  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-        |   round(list_sum(list_transform(range(1, len(q.e)+1), i -> q.e[i]*x.e[i]))
-        |     / (q.nrm * x.nrm), 6) AS cos
-        |  FROM v q JOIN v x ON x.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 8)
-        | WHERE cos >= 0.15 AND cos < 0.40)
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin),
     "kcenter_coreset" -> kcenterOracle(k = 8),
     "mmr_diversify" -> mmrOracle(k = 8, nCand = 64),
-    // the whole quantize→score→rank pipeline replicated in SQL — the
-    // quantized values are exact small integers, so list_sum order is
-    // irrelevant and the score is bit-stable cross-engine
-    // two-stage: int8 top-20 shortlist (same qz/n CTEs as ann_int8),
-    // exact fp32 rerank of the shortlist to top-5
-    "ann_rerank_topk" ->
-      """WITH v AS (
-        | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        |vn AS (
-        | SELECT vec_id, e,
-        |  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-        |m AS (
-        | SELECT vec_id, e,
-        |  list_max(list_transform(e, x -> abs(x))) AS ma FROM v),
-        |qz AS (
-        | SELECT vec_id,
-        |  CASE WHEN ma = 0 THEN list_transform(e, x -> 0.0)
-        |       ELSE list_transform(e,
-        |              x -> sign(x) * floor(abs(x) * 127.0 / ma + 0.5))
-        |  END AS qe
-        | FROM m),
-        |n AS (
-        | SELECT vec_id, qe,
-        |  sqrt(list_sum(list_transform(qe, x -> x * x))) AS nrm FROM qz),
-        |pre AS (
-        | SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |   row_number() OVER (PARTITION BY query_id
-        |                      ORDER BY qcos DESC, neighbor_id) AS prnk
-        |  FROM (
-        |   SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-        |    round(list_sum(list_transform(range(1, len(q.qe)+1),
-        |      i -> q.qe[i]*x.qe[i])) / (q.nrm * x.nrm), 6) AS qcos
-        |   FROM n q JOIN n x ON x.vec_id <> q.vec_id
-        |   WHERE q.vec_id < 8))
-        | WHERE prnk <= 20)
-        |SELECT query_id, neighbor_id, cos, rnk FROM (
-        | SELECT query_id, neighbor_id, cos,
-        |  row_number() OVER (PARTITION BY query_id
-        |                     ORDER BY cos DESC, neighbor_id) AS rnk
-        | FROM (
-        |  SELECT p.query_id, p.neighbor_id,
-        |   round(list_sum(list_transform(range(1, len(q.e)+1),
-        |     i -> q.e[i]*x.e[i])) / (q.nrm * x.nrm), 6) AS cos
-        |  FROM pre p
-        |   JOIN vn q ON q.vec_id = p.query_id
-        |   JOIN vn x ON x.vec_id = p.neighbor_id))
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    "ann_int8_topk" ->
-      """WITH v AS (
-        | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        |m AS (
-        | SELECT vec_id, e,
-        |  list_max(list_transform(e, x -> abs(x))) AS ma FROM v),
-        |qz AS (
-        | SELECT vec_id,
-        |  CASE WHEN ma = 0 THEN list_transform(e, x -> 0.0)
-        |       ELSE list_transform(e,
-        |              x -> sign(x) * floor(abs(x) * 127.0 / ma + 0.5))
-        |  END AS qe
-        | FROM m),
-        |n AS (
-        | SELECT vec_id, qe,
-        |  sqrt(list_sum(list_transform(qe, x -> x * x))) AS nrm FROM qz)
-        |SELECT query_id, neighbor_id, cos, rnk FROM (
-        | SELECT query_id, neighbor_id, cos,
-        |  row_number() OVER (PARTITION BY query_id
-        |                     ORDER BY cos DESC, neighbor_id) AS rnk
-        | FROM (
-        |  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-        |   round(list_sum(list_transform(range(1, len(q.qe)+1), i -> q.qe[i]*x.qe[i]))
-        |     / (q.nrm * x.nrm), 6) AS cos
-        |  FROM n q JOIN n x ON x.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 8))
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    "ann_pq_topk" ->
-      """WITH v AS (
-        | SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        |sub AS (SELECT unnest(range(0, 8)) AS s),
-        |cb AS (
-        | SELECT s.s AS sub, v.vec_id AS cid,
-        |  list_transform(range(1, 9), j -> v.e[s.s*8 + j]) AS c
-        | FROM v, sub s WHERE v.vec_id < 16),
-        |cx AS (
-        | SELECT v.vec_id, s.s AS sub,
-        |  list_transform(range(1, 9), j -> v.e[s.s*8 + j]) AS x
-        | FROM v, sub s),
-        |enc AS (
-        | SELECT vec_id, sub, cid FROM (
-        |  SELECT cx.vec_id, cx.sub, cb.cid,
-        |   row_number() OVER (PARTITION BY cx.vec_id, cx.sub ORDER BY
-        |    round(list_sum(list_transform(range(1, 9), i -> cx.x[i]*cx.x[i]))
-        |      + list_sum(list_transform(range(1, 9), i -> cb.c[i]*cb.c[i]))
-        |      - 2*list_sum(list_transform(range(1, 9), i -> cx.x[i]*cb.c[i])),
-        |     6), cb.cid) AS rn
-        |  FROM cx JOIN cb ON cx.sub = cb.sub) WHERE rn = 1),
-        |r2 AS (
-        | SELECT e.vec_id,
-        |  sum(CAST(round(list_sum(list_transform(cb.c, x -> x*x)) * 1000000)
-        |      AS BIGINT)) AS r2m
-        | FROM enc e JOIN cb ON e.sub = cb.sub AND e.cid = cb.cid GROUP BY 1),
-        |q AS (
-        | SELECT vec_id AS query_id, e,
-        |  sqrt(list_sum(list_transform(e, x -> x*x))) AS qn
-        | FROM v WHERE vec_id < 8),
-        |tab AS (
-        | SELECT q.query_id, cb.sub, cb.cid, q.qn,
-        |  CAST(round(list_sum(list_transform(range(1, 9),
-        |    i -> q.e[cb.sub*8 + i] * cb.c[i])) * 1000000) AS BIGINT) AS tm
-        | FROM q, cb),
-        |sc AS (
-        | SELECT t.query_id, e.vec_id, sum(t.tm) AS dm, min(t.qn) AS qn
-        | FROM enc e JOIN tab t ON e.sub = t.sub AND e.cid = t.cid
-        | WHERE t.query_id <> e.vec_id GROUP BY 1, 2),
-        |cand AS (
-        | SELECT sc.query_id, sc.vec_id AS neighbor_id,
-        |  CASE WHEN r2.r2m <= 0 OR sc.qn = 0 THEN 0.0
-        |       ELSE round((sc.dm / 1000000.0)
-        |            / (sc.qn * sqrt(r2.r2m / 1000000.0)), 6) END AS cos
-        | FROM sc JOIN r2 ON sc.vec_id = r2.vec_id)
-        |SELECT query_id, neighbor_id, cos, rnk FROM (
-        | SELECT *, row_number() OVER (PARTITION BY query_id
-        |   ORDER BY cos DESC, neighbor_id) AS rnk FROM cand)
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
   )
 }

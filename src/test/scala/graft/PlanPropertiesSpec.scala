@@ -509,4 +509,18 @@ class PlanPropertiesSpec extends SparkSpec {
     assert(exchanges == 1 && plan.contains("Window"),
       s"expected scan -> one hash exchange -> sort -> window, planned:\n$plan")
   }
+
+  test("masked plans do not depend on what was planned before them") {
+    // corpus_card's count(DISTINCT) Expand orders its columns by
+    // expression-id hashes; planning other queries in between shifts
+    // the ids, which reordered the masked plan before the audit pinned
+    // its id base
+    val dir = "/root/testdata/sf0.001"
+    val first = PlanAudit.maskedPlan(spark, "corpus_card", dir)
+    Seq("ann_ivf_pq_residual", "ann_recall_trained", "bpe_train").foreach { q =>
+      PlanAudit.maskedPlan(spark, q, dir)
+      assert(PlanAudit.maskedPlan(spark, "corpus_card", dir) === first,
+        s"corpus_card's masked plan moved after planning $q")
+    }
+  }
 }

@@ -209,4 +209,31 @@ class CdcTimeseriesSpec extends SparkSpec {
       ("view", "click") -> ((2L, 2000L)),
       ("purchase", "purchase") -> ((1L, 550L))))
   }
+
+  test("rollingMedian: discrete lower median over the trailing frame") {
+    import spark.implicits._
+    def ts(s: Long) = new Timestamp(s * 1000L)
+    // user 1 values: 10, 100, 20, 30 (k=3 frames):
+    // [10]=10, [10,100]=10 (lower of 2), [10,100,20]=20, [100,20,30]=30
+    val ev = Seq(
+      (1L, ts(1), 1L, "a", 0.10, ""), (2L, ts(2), 1L, "a", 1.00, ""),
+      (3L, ts(3), 1L, "a", 0.20, ""), (4L, ts(4), 1L, "a", 0.30, ""))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val out = Timeseries.rollingMedian(ev, k = 3)
+      .select("event_id", "median_cents").as[(Long, Long)].collect().toSeq
+      .sortBy(_._1)
+    assert(out === Seq((1L, 10L), (2L, 10L), (3L, 20L), (4L, 30L)))
+  }
+
+  test("rollingMedian shrugs off the spike that drags the EWMA") {
+    import spark.implicits._
+    def ts(s: Long) = new Timestamp(s * 1000L)
+    val ev = (1 to 8).map(i =>
+      (i.toLong, ts(i.toLong), 1L, "a", if (i == 4) 99.0 else 1.0, ""))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val med = Timeseries.rollingMedian(ev, k = 3)
+      .filter(col("event_id") > 4).select("median_cents").as[Long].collect()
+    assert(med.drop(1).forall(_ === 100L),
+      "median returns to baseline one step after the spike leaves the center")
+  }
 }

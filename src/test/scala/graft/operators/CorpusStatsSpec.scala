@@ -303,4 +303,46 @@ class CorpusStatsSpec extends SparkSpec {
     assert(CorpusStats.ksDrift(solo).count() === 0L,
       "one-vs-rest is undefined with a single source")
   }
+
+  test("zipfFit: an exact power law measures its own exponent") {
+    // counts c(r) = round(C * r^-0.8): slope_micro must land near -0.8e6
+    val docs = (1 to 50).flatMap { r =>
+      val c = math.max(1, math.round(10000.0 * math.pow(r, -0.8)).toInt)
+      Seq.fill(c)(s"w$r")
+    }
+    val df = Seq((1L, docs.mkString(" "))).toDF("doc_id", "text")
+    val out = CorpusStats.zipfFit(df, topN = 50)
+      .select("n_fit", "slope_micro").as[(Long, Long)].head()
+    assert(out._1 === 50L)
+    assert(math.abs(out._2 + 800000L) < 20000L,
+      s"fitted slope ${out._2} should be close to -800000 micro")
+  }
+
+  test("zipfFit: uniform counts fit slope 0") {
+    val df = Seq((1L, (1 to 30).map(i => s"u$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val out = CorpusStats.zipfFit(df, topN = 30)
+      .select("slope_micro").as[Long].head()
+    assert(out === 0L)
+  }
+
+  test("heapsFit: a genuinely growing vocabulary fits a positive beta") {
+    // every doc introduces fresh types at a constant rate: V = N/2,
+    // so ln V = ln N - ln 2 and beta must be ~1
+    val docs = (0L until 40L).map(d =>
+      (d, (0 until 10).map(i => s"w${d}_${i / 2}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val out = CorpusStats.heapsFit(docs)
+      .select("beta_micro").as[Long].head()
+    assert(math.abs(out - 1000000L) < 5000L, s"beta $out should be ~1e6")
+  }
+
+  test("heapsFit: a closed vocabulary saturates toward beta 0") {
+    val docs = (0L until 40L).map(d =>
+      (d, (0 until 10).map(i => s"fixed$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val out = CorpusStats.heapsFit(docs)
+      .select("beta_micro").as[Long].head()
+    assert(out >= 0L && out < 100000L, s"beta $out should be near 0")
+  }
 }

@@ -486,4 +486,23 @@ class DedupSpec extends SparkSpec {
       assert(n === op, s"sweep row $tauBp must equal the operator count")
     }
   }
+
+  test("minhashBandingFor: minimal banding meeting the predicted SLA") {
+    // tau=0.8, numHashes=64: b=8 predicts ~0.77, b=16 ~0.9998
+    assert(Dedup.minhashBandingFor(0.8, 0.95, 64) === ((16, 4)))
+    // looser SLA admits the cheaper banding
+    assert(Dedup.minhashBandingFor(0.8, 0.5, 64) === ((8, 8)))
+    // unreachable SLA falls back to 1-row bands (max recall)
+    assert(Dedup.minhashBandingFor(0.05, 0.999, 64) === ((64, 1)))
+  }
+
+  test("minhashBandingFor's choice meets its SLA in MEASURED recall") {
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val (bands, _) = Dedup.minhashBandingFor(0.8, 0.95, 64)
+    val measured = Dedup.lshRecallEval(docs, tau = 0.8, numHashes = 64,
+      bandings = Seq(bands))
+      .select("recall_bp").as[Long].head()
+    assert(measured >= 9500L,
+      s"chosen banding $bands measured $measured bp < SLA 9500")
+  }
 }

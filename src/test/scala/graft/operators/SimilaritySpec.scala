@@ -875,7 +875,8 @@ class SimilaritySpec extends SparkSpec {
       .createTempDirectory("graft_respq").toString
     val emb = graft.core.Tables.embeddings(spark, sf)
     val cents = Similarity.defaultCentroids(emb, 16).localCheckpoint()
-    Similarity.residualPqIndexRows(emb, cents)
+    Similarity.residualPqIndexRowsWith(emb, cents,
+        Similarity.residualSeedCodebookOf(emb, cents))
       .write.partitionBy("cell").mode("overwrite").parquet(tmp)
     val index = spark.read.parquet(tmp)
     val total = index.count()
@@ -970,7 +971,8 @@ class SimilaritySpec extends SparkSpec {
         s"expected the raw-scale guard message, got: $ex")
     }
     mustFail(Similarity.residualSeedCodebookOf(emb, microCents))
-    mustFail(Similarity.residualPqIndexRows(emb, microCents))
+    mustFail(Similarity.residualPqIndexRowsWith(emb, microCents,
+      Similarity.residualSeedCodebookOf(emb, microCents)))
     mustFail(Similarity.residualPqIndexRowsWith(emb, microCents,
       Similarity.residualSeedCodebookOf(emb,
         Similarity.defaultCentroids(emb, 4))))
@@ -1048,7 +1050,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.defaultCentroids(emb, 16).localCheckpoint()
     val cb = Similarity.residualSeedCodebookOf(emb, cents).localCheckpoint()
     val queries = v.filter(col("vec_id") < 8).toDF("query_id", "e")
-    val packedIdx = Similarity.residualPqIndexRowsInt4(emb, cents)
+    val packedIdx = Similarity.residualPqIndexRowsInt4(emb, cents, cb)
       .localCheckpoint()
     // the storage halves: 4 packed bytes where the unpacked index
     // stores 8 code ids
@@ -1061,7 +1063,7 @@ class SimilaritySpec extends SparkSpec {
       packedIdx, queries, v, cents, cb,
       nProbe = 4, m = 12, k = 3, numSub = 8, subDim = 8))
     val fromPlain = rows(Similarity.annIvfPqResidualFromIndex(
-      Similarity.residualPqIndexRows(emb, cents), queries, v, cents, cb,
+      Similarity.residualPqIndexRowsWith(emb, cents, cb), queries, v, cents, cb,
       nProbe = 4, m = 12, k = 3, numSub = 8, subDim = 8))
     assert(fromPacked === fromPlain,
       "nibble packing must be serving-invisible")

@@ -410,4 +410,31 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out.map(_._1).toSeq === (1L to 10L))
     assert(out.map(_._2).toSeq === out.map(_._2).sorted.toSeq)
   }
+
+  test("spanCorruptionPlan: spans are in-block, non-overlapping, 15% mass") {
+    val text = (0 until 100).map(i => s"t$i").mkString(" ")
+    val out = TextAnalysis.spanCorruptionPlan(Seq((1L, text)).toDF("doc_id", "text"))
+      .select("block", "span_start", "span_text")
+      .as[(Int, Long, String)].collect().sortBy(_._1)
+    assert(out.length === 5, "100 tokens / 20 per block")
+    out.foreach { case (b, s, txt) =>
+      assert(s >= b * 20 && s + 3 <= (b + 1) * 20, "span stays inside its block")
+      assert(txt.split(" ").length === 3)
+      assert(txt === (s until s + 3).map(i => s"t$i").mkString(" "),
+        "span text is the slice at span_start")
+    }
+    val starts = out.map(_._2)
+    starts.zip(starts.tail).foreach { case (a, b) => assert(a + 3 <= b) }
+    assert(out.length * 3 === 15, "15% of 100 tokens masked")
+  }
+
+  test("spanCorruptionPlan: short docs emit nothing; plan is reproducible") {
+    val df = Seq((1L, "a b c d e"), (2L, (0 until 25).map("w" + _).mkString(" ")))
+      .toDF("doc_id", "text")
+    val a = TextAnalysis.spanCorruptionPlan(df).collect().map(_.toSeq).toSet
+    val b = TextAnalysis.spanCorruptionPlan(df).collect().map(_.toSeq).toSet
+    assert(a === b)
+    assert(!a.exists(_.head == 1L), "5-token doc has no full block")
+    assert(a.count(_.head == 2L) === 1, "25 tokens -> one full block")
+  }
 }

@@ -24,12 +24,12 @@ class ResidualIngestSpec extends SparkSpec {
     val v = Similarity.vectors(emb)
     val cents = Similarity.defaultCentroids(emb, 16).localCheckpoint()
     // the frozen codebook the nightly bulk persists (seeded from the
-    // reference corpus — the same rule residualPqIndexRows applies)
+    // reference corpus)
     val cb = Similarity.residualSeedCodebookOf(emb, cents,
       numSub = 8, subDim = 8, numCodes = 16, seedFrom = 16)
       .localCheckpoint()
 
-    val batchRows = Similarity.residualPqIndexRows(emb, cents)
+    val batchRows = Similarity.residualPqIndexRowsWith(emb, cents, cb)
     val expect = batchRows
       .select(col("vec_id"), col("cell"),
         concat_ws(",", col("codes")).as("ccsv"))
@@ -75,7 +75,8 @@ class ResidualIngestSpec extends SparkSpec {
       "write converges to the batch rows (r14 verdict #3)") {
     val emb = graft.core.Tables.embeddings(spark, sf)
     val cents = Similarity.defaultCentroids(emb, 16).localCheckpoint()
-    val rows = Similarity.residualPqIndexRows(emb, cents).localCheckpoint()
+    val rows = Similarity.residualPqIndexRowsWith(emb, cents,
+      Similarity.residualSeedCodebookOf(emb, cents)).localCheckpoint()
     val dir = Files.createTempDirectory("res_replay").toString
     val key = s"${IndexSink.ingestTag("res_ck")}-7"
     IndexSink.writeBatch(rows.filter(col("vec_id") % 3 === 0),
