@@ -38,9 +38,51 @@ import org.apache.spark.unsafe.types.UTF8String
   * array; a NULL token array also yields the empty array (size(null)
   * is null, so the HOF form's `when` fell through to `otherwise`).
   * The expression is therefore never null (`array()` in both arms). */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int) extends WordGrams {
 
   require(k >= 1 && k <= 64, s"shingle width must be in [1, 64], got $k")
+
+  override def prettyName: String = "word_shingles"
+  protected def partial: Boolean = false
+
+  override protected def withNewChildInternal(newChild: Expression): WordShingles =
+    copy(child = newChild)
+}
+
+/** Native Catalyst expression: the SUFFIX WINDOW of every token
+  * position — the up-to-`maxN` tokens starting there, space-joined —
+  * in one primitive loop inside the scan stage (WordShingles' kernel
+  * with the end-of-array windows kept instead of dropped). It feeds
+  * the Kneser-Ney family's one n-gram count frame
+  * (QualityModels.ngramWindows), whose every order's k-grams are the
+  * k-prefixes of these windows.
+  *
+  * Contract (pinned by WordShinglesSpec against the HOF form
+  * transform(sequence(0, size(toks) - 1),
+  *   i => concat_ws(" ", slice(toks, i + 1, maxN)))):
+  * n = |toks| tokens yield n windows, window i = concat_ws(" ",
+  * toks[i .. min(i + maxN, n) - 1]) — the last maxN − 1 are shorter;
+  * a NULL token array yields the empty array, never null. */
+case class WordWindows(child: Expression, maxN: Int) extends WordGrams {
+
+  require(maxN >= 1 && maxN <= 64, s"window width must be in [1, 64], got $maxN")
+
+  def k: Int = maxN
+  override def prettyName: String = "word_windows"
+  protected def partial: Boolean = true
+
+  override protected def withNewChildInternal(newChild: Expression): WordWindows =
+    copy(child = newChild)
+}
+
+/** The body both in-row n-gram kernels share: type check, the
+  * never-null array result, and one interpreted/codegen entry point
+  * (WordShingles.compute). */
+sealed abstract class WordGrams extends UnaryExpression {
+  def k: Int
+  /** Whether positions closer than k to the end emit their shorter
+    * window (WordWindows) or nothing (WordShingles). */
+  protected def partial: Boolean
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -48,7 +90,6 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
       s"$prettyName requires array<string>, got ${t.sql}")
   }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
 
   // null/short inputs produce the EMPTY array (the HOF form's
   // otherwise(array()) arm), so the result itself is never null
@@ -57,7 +98,7 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     WordShingles.compute(
-      if (v == null) null else v.asInstanceOf[ArrayData], k)
+      if (v == null) null else v.asInstanceOf[ArrayData], k, partial)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -67,13 +108,10 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
         ${c.code}
         org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
           graft.functions.WordShingles.compute(
-            ${c.isNull} ? null : ${c.value}, $k);
+            ${c.isNull} ? null : ${c.value}, $k, $partial);
       """,
       isNull = FalseLiteral)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
 }
 
 object WordShingles {
@@ -85,25 +123,29 @@ object WordShingles {
   private val SEP = UTF8String.fromString(" ")
   private val EMPTY = new GenericArrayData(Array.empty[Any])
 
-  /** Shared by the interpreted and codegen paths (called from generated
-    * Java — keep the signature Java-friendly). Null or shorter-than-k
-    * input → the shared empty array. */
-  def compute(a: ArrayData, k: Int): ArrayData = {
+  /** Shared by the interpreted and codegen paths of both kernels
+    * (called from generated Java — keep the signature Java-friendly).
+    * Null input → the shared empty array; otherwise one k-token string
+    * per position with k tokens ahead, plus, when `partial`, the
+    * shorter windows of the last k − 1 positions. */
+  def compute(a: ArrayData, k: Int, partial: Boolean): ArrayData = {
     if (a == null) return EMPTY
     val n = a.numElements()
-    if (n < k) return EMPTY
+    val m = if (partial) n else n - k + 1
+    if (m <= 0) return EMPTY
     val toks = new Array[UTF8String](n)
     var i = 0
     while (i < n) {
       toks(i) = if (a.isNullAt(i)) null else a.getUTF8String(i)
       i += 1
     }
-    val out = new Array[Any](n - k + 1)
-    val parts = new Array[UTF8String](k)
+    val out = new Array[Any](m)
+    var parts = new Array[UTF8String](k)
     i = 0
-    while (i <= n - k) {
+    while (i < m) {
+      if (n - i < parts.length) parts = new Array[UTF8String](n - i)
       var j = 0
-      while (j < k) { parts(j) = toks(i + j); j += 1 }
+      while (j < parts.length) { parts(j) = toks(i + j); j += 1 }
       // concatWs copies bytes, so reusing `parts` across positions is
       // safe; null tokens are skipped exactly like SQL concat_ws
       out(i) = UTF8String.concatWs(SEP, parts: _*)
@@ -111,4 +153,11 @@ object WordShingles {
     }
     new GenericArrayData(out)
   }
+}
+
+object WordWindows {
+
+  /** Column API: word_windows(toks, maxN) → array<string>. */
+  def apply(toks: Column, maxN: Int): Column =
+    GraftBridge.column(WordWindows(GraftBridge.expression(toks), maxN))
 }

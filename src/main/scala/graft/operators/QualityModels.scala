@@ -32,9 +32,14 @@ object QualityModels {
     * (NgramSubstrSpec pins parity): split is a per-row regex split
     * allocating a token array per CALL, and the model builds called it
     * up to six times per row on count frames with millions of n-gram
-    * types; these are one byte scan + one slice copy each. */
+    * types; these are one byte scan + one slice copy each.
+    *
+    * ngTok is the one-field SLICE, not NgramToken: every KN call site
+    * reads a token its n-gram has, where the two agree, and the slice
+    * is non-nullable, so a join on it infers no IS NOT NULL filter
+    * to push down into the count table's scan. */
   private def ngTok(c: Column, i: Int): Column =
-    graft.functions.NgramToken(c, i)
+    graft.functions.NgramSlice(c, i, 1)
   private def ngHead(c: Column, m: Int): Column =
     graft.functions.NgramSlice(c, 0, m)
   private def ngTail(c: Column, m: Int): Column =
@@ -391,37 +396,26 @@ object QualityModels {
     * #3: a bigram TYPE table is effectively unbounded on web corpora,
     * so the old whole-model `map_from_entries(collect_list)` → one
     * broadcast map row was a refuse-at-5M-types ceiling; its sibling
-    * proved the keyed shape costs nothing): bigram counts are ONE
-    * map-side-combined aggregate (bigram-vocab-sized output; Heaps'
-    * law keeps it ≪ corpus), prefix counts REUSE the bigram table (a
-    * second vocab-sized aggregate — the corpus is NOT rescanned), the
-    * per-TYPE model FRAME equi-joins the exploded doc-bigram stream on
-    * `bg` (inner — every doc bigram is a seen type by construction),
-    * and ONE per-doc aggregate collapses it. Nothing model-sized
-    * crosses a driver or a broadcast; the only broadcast is the 1-row
-    * V scalar. Docs with < 2 tokens carry a 0 score and a NULL mean
-    * (no bigram evidence) via the left join back. */
+    * proved the keyed shape costs nothing): the corpus is read ONCE,
+    * into the KN family's window frame ([[ngramWindows]], maxN = 2);
+    * bigram counts, prefix counts and V are vocab-sized aggregates of
+    * it ([[KnFrames]]), the per-TYPE model FRAME equi-joins the
+    * frame's doc-bigram sites on `bg` (every doc bigram is a seen type
+    * by construction), and ONE per-doc aggregate collapses it
+    * ([[knPerDoc]]). Nothing model-sized crosses a driver or a
+    * broadcast; the only broadcast is the 1-row V scalar. Docs with < 2
+    * tokens carry a 0 score and a NULL mean (no bigram evidence). */
   def bigramSurprisal(docs: DataFrame,
                       minKeepMicro: Long = 3340000L,
                       maxKeepMicro: Long = 3420000L): DataFrame = {
-    val bigs = docs.select(
-      explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-    val bcnt = bigs.groupBy("bg").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // reused by pcnt + the model build — one scan
-    // prefix occurrences + V from the bigram table, not a rescan
-    val pcnt = bcnt
-      .groupBy(ngTok(col("bg"), 0).as("t1"))
-      .agg(sum(col("cnt")).as("pcnt"))
-    val vocabV = docs
-      .select(explode(tokens(col("text"))).as("t"))
-      .agg(countDistinct(col("t")).as("v"))
-    val smodel = bcnt
-      .join(pcnt, ngTok(col("bg"), 0) === col("t1"))
-      .crossJoin(broadcast(vocabV))
+    val f = docFrames(docs, 2)
+    val smodel = f.bcnt
+      .join(f.bpstats, ngTok(col("bg"), 0) === col("bt1"))
+      .crossJoin(broadcast(f.tot))
       .select(col("bg"),
-        round((log(col("pcnt") + col("v")) - log(col("cnt") + 1))
+        round((log(col("bc1") + col("v")) - log(col("cb") + 1))
           * lit(1000000.0d)).cast("long").as("s"))
-    knPerDoc(docs, 2, smodel)
+    knPerDoc(f, 2, smodel)
       .withColumn("keep",
         coalesce(col("mean_micro") >= minKeepMicro &&
           col("mean_micro") <= maxKeepMicro, lit(false)))
@@ -433,8 +427,9 @@ object QualityModels {
   // ------------------------------------------------- the Kneser-Ney ladder
   //
   // Every KN query below (bigram_surprisal_kn … lm_heldout_fivegram) is a
-  // composition of the same parts, each defined once here: the model
-  // frames (trigramModelFrames, prunedFrames), the exact rationals (Kn,
+  // composition of the same parts, each defined once here: the one
+  // n-gram count frame (ngramWindows) and every order's statistics
+  // derived from it (windowSites, KnFrames), the exact rationals (Kn,
   // knBase, knRung, prunedRung, trigramKn), the int64 guard (knGuarded),
   // the per-doc scorer (knPerDoc) and the held-out aggregate
   // (knHeldoutMeans). Two FORMS share the rationals:
@@ -515,7 +510,7 @@ object QualityModels {
       lower: Column, norm: Column, positions: Boolean): Kn =
     knRung(c1, c12, t1types, knBase(norm, lower, positions), positions)
 
-  /** The trigram-KN rational over the columns of [[trigramModelFrames]]:
+  /** The trigram-KN rational over the columns of [[KnFrames]]:
     * two [[knRung]]s on the continuation base (cont, B+V). The middle
     * rung is KN's defining move one order up — the backoff bigram
     * distribution counts distinct LEFT CONTEXTS in the trigram table,
@@ -594,26 +589,147 @@ object QualityModels {
       .otherwise(micro).cast("long")
   }
 
-  /** The per-doc scorer of the type form: the exploded order-n stream
-    * equi-joins the per-TYPE model `smodel` (n-gram column, s) on its
-    * key — inner: every doc n-gram is a seen type by construction —
-    * and ONE per-doc aggregate collapses it. Docs with < n tokens
-    * carry 0/NULL via the left join back (no evidence). */
-  private def knPerDoc(docs: DataFrame, n: Int,
-                       smodel: DataFrame): DataFrame = {
+  /** THE n-gram count frame of the KN family — one per query: every
+    * token position's SUFFIX WINDOW, its next (up to) `maxN` tokens
+    * space-joined (graft.functions.WordWindows, native inside the scan
+    * stage), as (key, w, c) rows checkpointed ONCE. `key` is doc_id
+    * for the type form (the per-doc scorer reads it) and the md5
+    * holdout `split` for the position form (train rows build the
+    * model, every split's rows are the sites). The corpus is tokenised
+    * once; every order's statistics are keyed aggregates of this frame
+    * ([[windowSites]], [[KnFrames]]), scan-free.
+    *
+    * Exactness contract, for every k ≤ maxN (WordShinglesSpec pins it
+    * against per-order explode(wordShingles(tokens(text), k)), under
+    * both keys):
+    *  - c_k(g) = Σ c over the windows with ≥ k tokens whose k-prefix
+    *    (ngHead) is g — each k-gram occurrence is the k-prefix of
+    *    exactly one window, the one starting at its position, and that
+    *    window has ≥ k tokens exactly when the occurrence exists;
+    *  - short documents: the last maxN − 1 windows of a document are
+    *    shorter, so a document with fewer than k tokens adds nothing
+    *    to order k (wordShingles emits nothing for it either); a NULL
+    *    text emits no window — one row with a NULL w (explode_outer)
+    *    keeps its key, so the doc-keyed frame lists every document and
+    *    the per-doc scorer never reads the corpus again; empty tokens
+    *    (doubled spaces) are fields like any other, exactly as tokens()
+    *    splits them;
+    *  - the vocabulary is the set of order-1 prefixes;
+    *  - c is an int64 count, so a per-position count becomes Σ c and a
+    *    per-position surprisal sum Σ c·s — the same integers, summed in
+    *    int64, bit-exact.
+    *
+    * Keyed by the split (three values), the windows are aggregated to
+    * (split, w, c), map-side combined before the one window shuffle.
+    * Keyed by doc_id they are NOT: each row is one position, c = 1. A
+    * document's windows hardly repeat inside it, so a (doc_id, w)
+    * aggregate would shuffle the documents or the windows and merge
+    * almost no rows; the per-order counts aggregate across documents
+    * anyway. */
+  private[graft] def ngramWindows(corpus: DataFrame, key: String,
+                                  maxN: Int): DataFrame = {
+    val windows = corpus.select(col(key),
+      explode_outer(graft.functions.WordWindows(tokens(col("text")), maxN)).as("w"))
+    (if (key == "doc_id") windows.withColumn("c", lit(1L))
+     else windows.groupBy(key, "w").agg(count(lit(1)).as("c")))
+      .localCheckpoint()
+  }
+
+  /** Whether the frame's window w has ≥ k tokens. */
+  private def hasTokens(k: Int): Column =
+    graft.functions.NgramToken(col("w"), k - 1).isNotNull
+
+  /** The order-k sites of a window frame: (key, g, c), one row per
+    * window with ≥ k tokens, g its k-prefix — see [[ngramWindows]]. */
+  private[graft] def windowSites(win: DataFrame, k: Int,
+                                 g: String): DataFrame =
+    win.filter(hasTokens(k))
+      .withColumn(g, ngHead(col("w"), k)).drop("w")
+
+  /** Every order's statistics over ONE window frame of width maxN
+    * (restricted to its train rows in the position form), with the
+    * column names the rationals read. The type counts of all orders
+    * 1..maxN are ONE aggregate of the frame's order-k sites, (k, g, c),
+    * checkpointed once and lazily (no eager job): a count table
+    * several statistics read is a scan of it, not a re-run aggregate.
+    * The statistics above the counts are lazy keyed aggregates of
+    * that table. */
+  private final class KnFrames(val win: DataFrame, maxN: Int) {
+    private lazy val allCounts: DataFrame = (1 to maxN)
+      .map(k => windowSites(win, k, "g").select(lit(k).as("k"), col("g"), col("c")))
+      .reduce(_.union(_))
+      .groupBy("k", "g").agg(sum(col("c")).as("c"))
+      .localCheckpoint(eager = false)
+    /** c_k: (g → c) — [[ngramWindows]]' exactness rule. */
+    def counts(k: Int, g: String, c: String): DataFrame = {
+      require(k <= maxN, s"order $k above the frame's width $maxN")
+      allCounts.filter(col("k") === k).select(col("g").as(g), col("c").as(c))
+    }
+    /** Order n's type counts (knGram(n) → c<1..n>). */
+    def ngrams(n: Int): DataFrame = counts(n, knGram(n), s"c${knIds(n)}")
+
+    /** Unigrams (t → u) and the token/type totals (n_tok, v). */
+    lazy val ucnt: DataFrame = counts(1, "t", "u")
+    lazy val tot: DataFrame =
+      ucnt.agg(sum(col("u")).as("n_tok"), count(lit(1)).as("v"))
+    /** Bigrams (bg → cb), their prefix stats (bt1 → bc1, bt1types),
+      * the continuation-unigram stats (ct3 → cont: distinct left
+      * contexts) and the bigram-type total (b). */
+    lazy val bcnt: DataFrame = counts(2, "bg", "cb")
+    lazy val bpstats: DataFrame = bcnt
+      .groupBy(ngTok(col("bg"), 0).as("bt1"))
+      .agg(sum(col("cb")).as("bc1"), count(lit(1)).as("bt1types"))
+    lazy val cstats: DataFrame = bcnt
+      .groupBy(ngTok(col("bg"), 1).as("ct3"))
+      .agg(count(lit(1)).as("cont"))
+    lazy val btot: DataFrame = bcnt.agg(count(lit(1)).as("b"))
+    /** Trigrams (tg → c123), their (t1 t2) prefix stats (p12 → c12,
+      * t12types), the middle-order continuation table (s23 → m23) and
+      * its stats (mt2 → m2, t2types). */
+    lazy val tcnt: DataFrame = counts(3, "tg", "c123")
+    lazy val pstats: DataFrame = tcnt
+      .groupBy(ngHead(col("tg"), 2).as("p12"))
+      .agg(sum(col("c123")).as("c12"), count(lit(1)).as("t12types"))
+    lazy val mid: DataFrame = tcnt
+      .groupBy(ngTail(col("tg"), 2).as("s23"))
+      .agg(count(lit(1)).as("m23"))
+    lazy val mstats: DataFrame = mid
+      .groupBy(ngTok(col("s23"), 0).as("mt2"))
+      .agg(sum(col("m23")).as("m2"), count(lit(1)).as("t2types"))
+
+    /** The pruned order-n frames (n ∈ {4, 5}): ALL types with counts
+      * (needed to score seen-but-pruned positions), the kept types
+      * (c ≥ minCount) and their context stats. */
+    def pruned(n: Int, minCount: Long): (DataFrame, DataFrame, DataFrame) = {
+      val all = ngrams(n)
+      val kept = all.filter(col(s"c${knIds(n)}") >= minCount)
+      (all, kept, keptPrefixStats(kept, n))
+    }
+  }
+
+  /** The type form's statistics, over the doc-keyed window frame. */
+  private def docFrames(docs: DataFrame, maxN: Int): KnFrames =
+    new KnFrames(ngramWindows(docs, "doc_id", maxN), maxN)
+
+  /** The per-doc scorer of the type form: the order-n sites of the
+    * doc-keyed frame ([[windowSites]]) join the per-TYPE model `smodel`
+    * (n-gram column, s) on g — every site is a seen type by
+    * construction — and ONE per-doc aggregate collapses them, weighted
+    * by the window count c (Σ c sites, Σ c·s micro-nats). The frame's
+    * other rows (windows shorter than n, a NULL text's NULL window)
+    * enter with c = 0, so every document gets a row: docs with < n
+    * tokens (or a NULL text) carry 0/NULL (no evidence). */
+  private def knPerDoc(f: KnFrames, n: Int, smodel: DataFrame): DataFrame = {
     val (g, cnt) = (knGram(n), s"n_${knUnit(n)}")
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), n)).as(g))
-      .join(smodel, g)
+    val sites = windowSites(f.win, n, g).join(smodel, g)
+      .select(col("doc_id"), col("c"), (col("c") * col("s")).as("cs"))
+    val rest = f.win.filter(!hasTokens(n))
+      .select(col("doc_id"), lit(0L).as("c"), lit(0L).as("cs"))
+    sites.unionByName(rest)
       .groupBy("doc_id")
-      .agg(count(lit(1)).as(cnt), sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col(cnt), lit(0L)).as(cnt),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col(cnt), lit(0L)) > 0,
-          expr(s"surprisal_micro div $cnt")).as("mean_micro"))
+      .agg(sum(col("c")).as(cnt), sum(col("cs")).as("surprisal_micro"))
+      .withColumn("mean_micro",
+        when(col(cnt) > 0, expr(s"surprisal_micro div $cnt")))
   }
 
   /** (doc_id, text and the md5 holdout split label; its train rows). */
@@ -624,45 +740,34 @@ object QualityModels {
     (tagged, tagged.filter(col("split") === "train"))
   }
 
+  /** The position form's window frame, keyed by the md5 holdout split
+    * (every split's windows are its sites), and the train-split
+    * statistics over its train rows. */
+  private def heldoutFrames(docs: DataFrame, trainPct: Int, valPct: Int,
+                            maxN: Int): (DataFrame, KnFrames) = {
+    val win = ngramWindows(heldoutTagged(docs, trainPct, valPct)._1,
+      "split", maxN)
+    (win, new KnFrames(win.filter(col("split") === "train"), maxN))
+  }
+
   /** The held-out comparison of several models on the SAME order-n
-    * sites: per split, the site count, the `unseen` sites and each
-    * model's mean micro-nats (exact trunc division) — one aggregate,
-    * one row per (model, split). */
+    * sites (each weighted by its window count c): per split, the site
+    * count, the `unseen` sites and each model's mean micro-nats (exact
+    * trunc division) — one aggregate, one row per (model, split). */
   private def knHeldoutMeans(scored: DataFrame, n: Int, unseen: Column,
                              models: Seq[(String, Column)]): DataFrame = {
     val (sites, miss) = (s"n_${knUnit(n)}", s"unseen_${knUnit(n)}")
     val agg = scored
-      .select(col("split") +: unseen.as("unseen") +:
+      .select(col("split") +: col("c") +: unseen.as("unseen") +:
         models.zipWithIndex.map { case ((_, s), i) => s.as(s"s$i") }: _*)
       .groupBy("split")
-      .agg(count(lit(1)).as(sites),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as(miss) +:
-          models.indices.map(i => sum(col(s"s$i")).as(s"sum$i")): _*)
+      .agg(sum(col("c")).as(sites),
+        sum(when(col("unseen"), col("c")).otherwise(0L)).as(miss) +:
+          models.indices.map(i => sum(col("c") * col(s"s$i")).as(s"sum$i")): _*)
     models.zipWithIndex.map { case ((model, _), i) =>
       agg.select(lit(model).as("model"), col("split"), col(sites),
         col(miss), expr(s"sum$i div $sites").as("mean_micro"))
     }.reduce(_.unionByName(_))
-  }
-
-  /** The bigram-KN model frames over a (possibly split-filtered)
-    * corpus: bigram types (bg → c12), their prefix stats (t1 → c1,
-    * t1types), unigram counts (t → u) and the token/type totals (n_tok,
-    * v). bcnt and ucnt are checkpointed — each feeds a stats frame AND
-    * a model join, so the corpus is scanned once per count frame. */
-  private def bigramModelFrames(corpus: DataFrame):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val bcnt = corpus
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val pstats = bcnt
-      .groupBy(ngTok(col("bg"), 0).as("t1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("t1types"))
-    val ucnt = corpus.select(explode(tokens(col("text"))).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("u"))
-      .localCheckpoint()
-    val tot = ucnt.agg(sum(col("u")).as("n_tok"), count(lit(1)).as("v"))
-    (bcnt, pstats, ucnt, tot)
   }
 
   /** Interpolated ABSOLUTE-DISCOUNT backoff bigram LM (the Kneser-Ney
@@ -675,24 +780,25 @@ object QualityModels {
     * p_uni(t2) = (u2+1)/(N+V) (N/V = token/type totals).
     *
     * Scale shape — three vocab-sized map-side-combined aggregates
-    * (bigram, prefix, unigram) build a per-TYPE model FRAME and
+    * (bigram, prefix, unigram) of the one window frame
+    * ([[ngramWindows]]) build a per-TYPE model FRAME and
     * [[knPerDoc]] scores it: every stage is keyed and
     * map-side-combinable; nothing model-sized crosses a driver or a
     * broadcast (a bigram TYPE table is effectively unbounded on web
     * corpora — collapsing it into one driver-sized map row would be an
     * OOM at scale). */
   def bigramSurprisalKn(docs: DataFrame): DataFrame = {
-    val (bcnt, pstats, ucnt, tot) = bigramModelFrames(docs)
-    val smodel = bcnt
-      .withColumn("t1", ngTok(col("bg"), 0))
+    val f = docFrames(docs, 2)
+    val smodel = f.bcnt
+      .withColumn("bt1", ngTok(col("bg"), 0))
       .withColumn("t2", ngTok(col("bg"), 1))
-      .join(pstats, "t1")
-      .join(ucnt, col("t2") === col("t"))
-      .crossJoin(broadcast(tot))
-      .select(col("bg"), bigramKn(col("c1"), col("c12"), col("t1types"),
+      .join(f.bpstats, "bt1")
+      .join(f.ucnt, col("t2") === col("t"))
+      .crossJoin(broadcast(f.tot))
+      .select(col("bg"), bigramKn(col("bc1"), col("cb"), col("bt1types"),
         col("u"), col("n_tok") + col("v"), positions = false)
         .micro.cast("long").as("s"))
-    knPerDoc(docs, 2, smodel)
+    knPerDoc(f, 2, smodel)
   }
 
   def bigramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
@@ -713,35 +819,28 @@ object QualityModels {
     *     backs off LOW however high its raw count
     * in the position form (t1 unseen ⇒ the lower order alone).
     *
-    * Scale shape: the scoring side EXPLODES the split-tagged bigram
-    * stream and left-joins the four vocab-sized model tables (bigram,
-    * prefix, unigram, continuation) on their keys — all map-side-
-    * combinable keyed equi-joins, no broadcast map needed — then ONE
-    * 9-row aggregate. */
+    * Scale shape: the scoring side reads the split-keyed window frame's
+    * bigram sites ([[heldoutFrames]]) and left-joins the four
+    * vocab-sized train-split model tables (bigram, prefix, unigram,
+    * continuation) on their keys — all map-side-combinable keyed
+    * equi-joins, no broadcast map needed — then ONE 9-row aggregate. */
   def lmHeldoutBigram(docs: DataFrame, trainPct: Int = 80,
                       valPct: Int = 10): DataFrame = {
-    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
-    val (bcnt, pstats, ucnt, tot) = bigramModelFrames(train)
-    val cstats = bcnt
-      .groupBy(ngTok(col("bg"), 1).as("t2"))
-      .agg(count(lit(1)).as("cont"))
-    val btot = bcnt.agg(count(lit(1)).as("b"))
-    val scored = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 2)).as("bg"))
+    val (win, f) = heldoutFrames(docs, trainPct, valPct, 2)
+    val scored = windowSites(win, 2, "bg")
       .withColumn("bt1", ngTok(col("bg"), 0))
       .withColumn("bt2", ngTok(col("bg"), 1))
-      .join(bcnt, Seq("bg"), "left")
-      .join(pstats, col("bt1") === col("t1"), "left")
-      .join(cstats, col("bt2") === col("t2"), "left")
-      .join(ucnt, col("bt2") === col("t"), "left")
-      .crossJoin(broadcast(tot))
-      .crossJoin(broadcast(btot))
-    def backoff(lower: String, norm: Column) = bigramKn(col("c1"),
-      col("c12"), col("t1types"), col(lower), norm, positions = true)
-    knHeldoutMeans(scored, 2, col("c12").isNull, Seq(
-      "add1" -> Kn(coalesce(col("c1"), lit(0L)) + col("v"),
-        coalesce(col("c12"), lit(0L)) + 1).micro.cast("long"),
+      .join(f.bcnt, Seq("bg"), "left")
+      .join(f.bpstats, Seq("bt1"), "left")
+      .join(f.cstats, col("bt2") === col("ct3"), "left")
+      .join(f.ucnt, col("bt2") === col("t"), "left")
+      .crossJoin(broadcast(f.tot))
+      .crossJoin(broadcast(f.btot))
+    def backoff(lower: String, norm: Column) = bigramKn(col("bc1"),
+      col("cb"), col("bt1types"), col(lower), norm, positions = true)
+    knHeldoutMeans(scored, 2, col("cb").isNull, Seq(
+      "add1" -> Kn(coalesce(col("bc1"), lit(0L)) + col("v"),
+        coalesce(col("cb"), lit(0L)) + 1).micro.cast("long"),
       "backoff" -> backoff("u", col("n_tok") + col("v")).micro.cast("long"),
       "kn_cont" -> backoff("cont", col("b") + col("v")).micro.cast("long")))
   }
@@ -749,65 +848,6 @@ object QualityModels {
   def lmHeldoutBigramQuery(spark: SparkSession, dir: String): DataFrame =
     lmHeldoutBigram(Tables.documents(spark, dir))
       .orderBy(col("model"), col("split"))
-
-  /** The trigram-KN model frames over a (possibly split-filtered)
-    * corpus, with the column names [[trigramKn]] reads: trigram types
-    * (tg, c123), (t1 t2) prefix stats (p12 → c12, t12types), the
-    * middle-order continuation table (s23 → m23) and its stats (mt2 →
-    * m2, t2types), the bigram counts (bg, cb), the continuation-unigram
-    * stats (ct3 → cont), the bigram-type total (b) and the vocabulary
-    * size (v). Every frame is a map-side-combined keyed aggregate;
-    * tcnt and bcnt are the checkpointed corpus counts. */
-  private final case class TrigramFrames(tcnt: DataFrame,
-      pstats: DataFrame, mid: DataFrame, mstats: DataFrame, bcnt: DataFrame,
-      cstats: DataFrame, btot: DataFrame, vtot: DataFrame) {
-    /** Applies `g` to the DERIVED frames; the corpus counts tcnt and bcnt
-      * are already materialized and pass through as they are. */
-    def mapDerived(g: DataFrame => DataFrame): TrigramFrames = TrigramFrames(
-      tcnt, g(pstats), g(mid), g(mstats), bcnt, g(cstats), g(btot), g(vtot))
-  }
-
-  private def trigramModelFrames(corpus: DataFrame): TrigramFrames = {
-    // the two corpus-scan count frames are REUSED (tcnt feeds pstats,
-    // mid and the scorer join; bcnt feeds cstats and btot) — without a
-    // checkpoint each reference replays the corpus scan
-    // (lm_heldout_fivegram once planned 48 physical scans because every
-    // order re-derived its counts). localCheckpoint materializes each
-    // ONCE; all derived stats frames are vocab-sized aggregates over
-    // the checkpointed RDD, scan-free.
-    val tcnt = corpus
-      .select(explode(wordShingles(tokens(col("text")), 3)).as("tg"))
-      .groupBy("tg").agg(count(lit(1)).as("c123"))
-      .localCheckpoint()
-    val pstats = tcnt
-      .groupBy(ngHead(col("tg"), 2).as("p12"))
-      .agg(sum(col("c123")).as("c12"), count(lit(1)).as("t12types"))
-    val mid = tcnt
-      .select(ngTail(col("tg"), 2).as("s23"))
-      .groupBy("s23").agg(count(lit(1)).as("m23"))
-    val mstats = mid
-      .groupBy(ngTok(col("s23"), 0).as("mt2"))
-      .agg(sum(col("m23")).as("m2"), count(lit(1)).as("t2types"))
-    val bcnt = corpus
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("cb"))
-      .localCheckpoint()
-    val cstats = bcnt
-      .groupBy(ngTok(col("bg"), 1).as("ct3"))
-      .agg(count(lit(1)).as("cont"))
-    val btot = bcnt.agg(count(lit(1)).as("b"))
-    val vtot = corpus.select(explode(tokens(col("text"))).as("t"))
-      .agg(countDistinct(col("t")).as("v"))
-    TrigramFrames(tcnt, pstats, mid, mstats, bcnt, cstats, btot, vtot)
-  }
-
-  /** Order-n type counts (g, c<1..n>) — checkpointed: they feed the
-    * kept-prefix stats AND the scorer join, one corpus scan. */
-  private def ngramCounts(corpus: DataFrame, n: Int): DataFrame =
-    corpus
-      .select(explode(wordShingles(tokens(col("text")), n)).as(knGram(n)))
-      .groupBy(knGram(n)).agg(count(lit(1)).as(s"c${knIds(n)}"))
-      .localCheckpoint()
 
   /** The kept-context stats of the pruned order n over the RETAINED
     * types only: p<1..n−1> → c<1..n−1>k, t<1..n−1>types — see
@@ -817,16 +857,6 @@ object QualityModels {
     kept.groupBy(ngHead(col(knGram(n)), n - 1).as(s"p$ids"))
       .agg(sum(col(s"c${knIds(n)}")).as(s"c${ids}k"),
         count(lit(1)).as(s"t${ids}types"))
-  }
-
-  /** The pruned order-n model frames (n ∈ {4, 5}): ALL types with
-    * counts (needed to score seen-but-pruned positions), the kept types
-    * (c ≥ minCount) and their context stats. */
-  private def prunedFrames(corpus: DataFrame, n: Int, minCount: Long):
-      (DataFrame, DataFrame, DataFrame) = {
-    val all = ngramCounts(corpus, n)
-    val kept = all.filter(col(s"c${knIds(n)}") >= minCount)
-    (all, kept, keptPrefixStats(kept, n))
   }
 
   /** Trigram-LM cross-entropy with INTERPOLATED KNESER-NEY smoothing
@@ -845,10 +875,10 @@ object QualityModels {
     * Scale shape — deliberately NOT a broadcast map: the trigram-type
     * model is vocab³-bounded (Heaps keeps it ≪ positions but ≫ the
     * bigram vocab — at 100 TB it is billions of rows and cannot
-    * broadcast). The model is keyed joins over [[trigramModelFrames]],
-    * scored by [[knPerDoc]]. */
+    * broadcast). The model is keyed joins over [[KnFrames]] of the one
+    * window frame ([[ngramWindows]]), scored by [[knPerDoc]]. */
   def trigramSurprisalKn(docs: DataFrame): DataFrame = {
-    val f = trigramModelFrames(docs)
+    val f = docFrames(docs, 3)
     val smodel = f.tcnt
       .withColumn("p12", ngHead(col("tg"), 2))
       .withColumn("s23", ngTail(col("tg"), 2))
@@ -858,12 +888,12 @@ object QualityModels {
       // every seen trigram's (t2,t3) is a seen bigram, so the
       // continuation join is inner by construction
       .join(f.cstats, ngTok(col("tg"), 2) === col("ct3"))
-      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.tot))
       .select(col("tg"), knGuarded(3, heldout = false,
         Seq(col("c12"), col("m2"), col("b") + col("v")),
         trigramKn(positions = false).micro,
         hint = "(divide both sides by B+V, round once more) ").as("s"))
-    knPerDoc(docs, 3, smodel)
+    knPerDoc(f, 3, smodel)
   }
 
   def trigramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
@@ -880,19 +910,13 @@ object QualityModels {
     * the full ladder; else t2 seen as a middle ⇒ the middle order
     * alone; else the continuation unigram); kn_bigram is
     * lm_heldout_bigram's kn_cont ladder on (t2, t3). Unseen rows share
-    * exact integer inputs, so both engines round identically. */
+    * exact integer inputs, so both engines round identically. Sites and
+    * train statistics come from one split-keyed window frame
+    * ([[heldoutFrames]], [[ngramWindows]]). */
   def lmHeldoutTrigram(docs: DataFrame, trainPct: Int = 80,
                        valPct: Int = 10): DataFrame = {
-    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
-    val f = trigramModelFrames(train)
-    // bigram-KN stats for the comparison model, over the train-split
-    // bigram counts the trigram frames already materialized
-    val bpstats = f.bcnt
-      .groupBy(ngTok(col("bg"), 0).as("bt1"))
-      .agg(sum(col("cb")).as("bc1"), count(lit(1)).as("bt1types"))
-    val scored = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 3)).as("tg"))
+    val (win, f) = heldoutFrames(docs, trainPct, valPct, 3)
+    val scored = windowSites(win, 3, "tg")
       .withColumn("p12", ngHead(col("tg"), 2))
       .withColumn("s23", ngTail(col("tg"), 2))
       .withColumn("t2", ngTok(col("tg"), 1))
@@ -903,8 +927,8 @@ object QualityModels {
       .join(f.mstats, col("t2") === col("mt2"), "left")
       .join(f.cstats, col("t3") === col("ct3"), "left")
       .join(f.bcnt, col("s23") === col("bg"), "left")
-      .join(bpstats, col("t2") === col("bt1"), "left")
-      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+      .join(f.bpstats, col("t2") === col("bt1"), "left")
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.tot))
     knHeldoutMeans(scored, 3, col("c123").isNull, Seq(
       "kn_bigram" -> bigramKn(col("bc1"), col("cb"), col("bt1types"),
         col("cont"), col("b") + col("v"), positions = true)
@@ -967,7 +991,7 @@ object QualityModels {
     * middle pair); only qpstats is outer — a prefix with no kept types
     * falls to the pure-backoff branch. */
   private def quadgramRationalTypes(qall: DataFrame, qpstats: DataFrame,
-      minCount: Long, f: TrigramFrames): DataFrame = {
+      minCount: Long, f: KnFrames): DataFrame = {
     val quad = prunedRung(4, col("c1234") >= minCount,
       trigramKn(positions = false))
     qall
@@ -979,7 +1003,7 @@ object QualityModels {
       .join(f.mid, ngTail(col("sfx"), 2) === col("s23"))
       .join(f.mstats, ngTok(col("sfx"), 1) === col("mt2"))
       .join(f.cstats, ngTok(col("sfx"), 2) === col("ct3"))
-      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.tot))
       .select(col("qg"), col("c1234"), quad.den.as("den4"),
         quad.num.as("num4"), knBound(Seq(coalesce(col("c123k"), lit(1L)),
           col("c12"), col("m2"), col("b") + col("v"))).as("bound4"))
@@ -1000,15 +1024,16 @@ object QualityModels {
     * corpus) and let pruned positions back off ([[prunedRung]]). The
     * backoff distribution is the unpruned [[trigramKn]], so pruning
     * bites exactly where the blowup is: the top order. Keyed joins end
-    * to end (the quadgram table is exactly what must NEVER broadcast),
-    * scored by [[knPerDoc]]; den = 64·c123k·c12·m2·(B+V) is guarded by
+    * to end (the quadgram table is exactly what must NEVER broadcast)
+    * over the one window frame's counts ([[ngramWindows]]), scored by
+    * [[knPerDoc]]; den = 64·c123k·c12·m2·(B+V) is guarded by
     * [[knGuarded]]. */
   def quadgramSurprisalKn(docs: DataFrame,
                           minCount: Long = 2L): DataFrame = {
     require(minCount >= 1)
-    val f = trigramModelFrames(docs)
-    val (qall, _, qpstats) = prunedFrames(docs, 4, minCount)
-    knPerDoc(docs, 4,
+    val f = docFrames(docs, 4)
+    val (qall, _, qpstats) = f.pruned(4, minCount)
+    knPerDoc(f, 4,
       scoreQuadgramTypes(quadgramRationalTypes(qall, qpstats, minCount, f)))
   }
 
@@ -1020,16 +1045,17 @@ object QualityModels {
     * against the corpus-level mean surprisal (what pruning costs).
     * Positions need no re-scan per θ: Σ_positions s = Σ_types c1234·s,
     * so the curve is |thetas| keyed joins over the SAME type table —
-    * the corpus is touched once for qall, once for the trigram
-    * frames. A flat mean_micro next to a collapsing kept_types is the
-    * green light to prune; a jumping mean is the alarm. */
+    * the corpus is touched once, for the window frame every order's
+    * counts derive from ([[ngramWindows]]). A flat mean_micro next to a
+    * collapsing kept_types is the green light to prune; a jumping mean
+    * is the alarm. */
   def knPruneCurve(docs: DataFrame,
                    thetas: Seq[Long] = Seq(1L, 2L, 4L)): DataFrame = {
     require(thetas.nonEmpty && thetas.forall(_ >= 1))
-    // the derived model-sized frames are reused |thetas| times —
-    // checkpoint them so their aggregates don't replay per threshold
-    val f = trigramModelFrames(docs).mapDerived(_.localCheckpoint())
-    val qall = ngramCounts(docs, 4)
+    // the |thetas| branches read the same statistics: one plan, each
+    // shared aggregate one exchange
+    val f = docFrames(docs, 4)
+    val qall = f.ngrams(4)
     thetas.map { th =>
       scoreQuadgramTypes(quadgramRationalTypes(qall,
           keptPrefixStats(qall.filter(col("c1234") >= th), 4), th, f))
@@ -1051,7 +1077,7 @@ object QualityModels {
     * last three tokens are (a, b, c), already concatenated in column
     * `sfx` — the position-form inputs of [[trigramKn]] — plus the
     * broadcast totals. */
-  private def joinTrigramSites(sites: DataFrame, f: TrigramFrames,
+  private def joinTrigramSites(sites: DataFrame, f: KnFrames,
       sfx: String, a: Column, b: Column, c: Column): DataFrame =
     sites
       .join(f.tcnt, col(sfx) === col("tg"), "left")
@@ -1059,7 +1085,7 @@ object QualityModels {
       .join(f.mid, concat_ws(" ", b, c) === col("s23"), "left")
       .join(f.mstats, b === col("mt2"), "left")
       .join(f.cstats, c === col("ct3"), "left")
-      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.vtot))
+      .crossJoin(broadcast(f.btot)).crossJoin(broadcast(f.tot))
 
   /** Held-out quadgram-KN (pruned) vs trigram-KN on the SAME quadgram
     * positions — lmHeldoutTrigram's frame one order up: both models
@@ -1069,16 +1095,14 @@ object QualityModels {
     * misses (pruned types score as misses — they are misses, that is
     * what shipping a pruned model means). kn_trigram is the
     * position-form [[trigramKn]] on the suffix (t2 t3 t4); kn_quadgram
-    * stacks [[prunedRung]] on it. */
+    * stacks [[prunedRung]] on it. Sites and statistics: one split-keyed
+    * window frame ([[heldoutFrames]], [[ngramWindows]]). */
   def lmHeldoutQuadgram(docs: DataFrame, minCount: Long = 2L,
                         trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     require(minCount >= 1)
-    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
-    val f = trigramModelFrames(train)
-    val (_, qkept, qpstats) = prunedFrames(train, 4, minCount)
-    val sites = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 4)).as("qg"))
+    val (win, f) = heldoutFrames(docs, trainPct, valPct, 4)
+    val (_, qkept, qpstats) = f.pruned(4, minCount)
+    val sites = windowSites(win, 4, "qg")
       .withColumn("p123", ngHead(col("qg"), 3))
       .withColumn("t2", ngTok(col("qg"), 1))
       .withColumn("t3", ngTok(col("qg"), 2))
@@ -1116,14 +1140,16 @@ object QualityModels {
     * must NEVER broadcast; every model join is a keyed equi-join
     * (the suffix-quadgram join is inner by construction: a seen
     * fivegram's suffix is a seen quadgram), scored by [[knPerDoc]].
+    * Every order's counts come from ONE window frame
+    * ([[ngramWindows]], maxN = 5): the corpus is tokenised once.
     * den = 256·c1234k·c123k·c12·m2·(B+V) is guarded by [[knGuarded]]. */
   def fivegramSurprisalKn(docs: DataFrame, minCount4: Long = 2L,
                           minCount5: Long = 2L): DataFrame = {
     require(minCount4 >= 1 && minCount5 >= 1)
-    val f = trigramModelFrames(docs)
-    val (qall, _, qpstats) = prunedFrames(docs, 4, minCount4)
+    val f = docFrames(docs, 5)
+    val (qall, _, qpstats) = f.pruned(4, minCount4)
     val qrat = quadgramRationalTypes(qall, qpstats, minCount4, f)
-    val (pall, _, ppstats) = prunedFrames(docs, 5, minCount5)
+    val (pall, _, ppstats) = f.pruned(5, minCount5)
     val five = prunedRung(5, col("c12345") >= minCount5,
       Kn(col("den4"), col("num4")))
     val smodel = pall
@@ -1134,7 +1160,7 @@ object QualityModels {
       .select(col("pg"), knGuarded(5, heldout = false,
         Seq(coalesce(col("c1234k"), lit(1L)), col("bound4")),
         five.micro).as("s"))
-    knPerDoc(docs, 5, smodel)
+    knPerDoc(f, 5, smodel)
   }
 
   def fivegramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1147,18 +1173,17 @@ object QualityModels {
     * the mean_micro gap IS the value of the fifth order net of
     * pruning, and `unseen_fivegrams` counts kept-model misses.
     * kn_quadgram is lmHeldoutQuadgram's ladder on the suffix quadgram
-    * (t2..t5); kn_fivegram stacks [[prunedRung]] on it. */
+    * (t2..t5); kn_fivegram stacks [[prunedRung]] on it. Sites and
+    * statistics: one split-keyed window frame ([[heldoutFrames]],
+    * [[ngramWindows]]). */
   def lmHeldoutFivegram(docs: DataFrame, minCount4: Long = 2L,
                         minCount5: Long = 2L, trainPct: Int = 80,
                         valPct: Int = 10): DataFrame = {
     require(minCount4 >= 1 && minCount5 >= 1)
-    val (tagged, train) = heldoutTagged(docs, trainPct, valPct)
-    val f = trigramModelFrames(train)
-    val (_, qkept, qpstats) = prunedFrames(train, 4, minCount4)
-    val (_, pkept, ppstats) = prunedFrames(train, 5, minCount5)
-    val sites = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 5)).as("pg"))
+    val (win, f) = heldoutFrames(docs, trainPct, valPct, 5)
+    val (_, qkept, qpstats) = f.pruned(4, minCount4)
+    val (_, pkept, ppstats) = f.pruned(5, minCount5)
+    val sites = windowSites(win, 5, "pg")
       .withColumn("t2", ngTok(col("pg"), 1))
       .withColumn("t3", ngTok(col("pg"), 2))
       .withColumn("t4", ngTok(col("pg"), 3))
@@ -1851,7 +1876,8 @@ object QualityModels {
   /** The trigram-KN model CTE chain over a `tok(…, toks)` CTE the
     * caller defines — trigram stream/types, prefix stats, the middle
     * continuation table, continuation-unigram stats and the two
-    * scalars, mirroring [[trigramModelFrames]] frame for frame. */
+    * scalars, mirroring [[KnFrames]]' trigram statistics frame for
+    * frame. */
   private def trigramModelCtes(withDocId: Boolean): String = {
     val docCol = if (withDocId) "doc_id, " else ""
     s"""tgocc AS (

@@ -8,7 +8,6 @@ import graft.core.Tables
 import graft.functions.{CosineSimilarity, DotLong, HyperplaneBucket, Int8Quantize, SqDistLong,
   SumSqLong, SumSqLongAsDouble}
 import graft.functions.TextFunctions._
-import graft.oracle.AnnSql.cosSql
 import graft.oracle.PcaSql.{allButTopCtes, topComponentCtes}
 
 /** Embedding similarity: cosine near-dup pairs, brute-force top-k ANN
@@ -3030,183 +3029,6 @@ object Similarity {
        |   END AS BIGINT)), ',') AS e_csv
        |FROM abt ORDER BY vec_id""".stripMargin
 
-  /** The oracle's replica of [[adaptiveCentroids]] — ceil(sqrt(n))
-    * clamped to [16, 65536], computed over the same corpus; IEEE sqrt
-    * and ceil are bit-identical across engines on integer inputs. */
-  private val adaptiveCentroidsSql: String =
-    "(SELECT least(65536, greatest(16, CAST(ceil(sqrt(CAST(count(*) " +
-      "AS DOUBLE))) AS BIGINT))) FROM v)"
-
-  /** The kNN edge-frame CTE chain shared by the graph dump and the
-    * mutual-kNN clustering oracle: the IVF serving replay with the probe
-    * set widened to the WHOLE corpus. The corpus-sized cosine table and
-    * the edge frame are MATERIALIZED — the k-core lesson: a recursive
-    * consumer would otherwise replay the whole chain per reference. */
-  private def knnEdgesCtes(k: Int, nProbe: Int): String =
-    s"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |cents AS (SELECT vec_id AS cid, e AS ce FROM v
-       |          WHERE vec_id < $adaptiveCentroidsSql),
-       |ac AS MATERIALIZED (
-       | SELECT v.vec_id, c.cid,
-       |  ${cosSql("v.e", "c.ce")} AS ccos
-       | FROM v CROSS JOIN cents c),
-       |assigned AS (
-       | SELECT vec_id, cid AS cell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn = 1),
-       |probes AS (
-       | SELECT vec_id AS query_id, cid AS probe FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY ccos DESC, cid) AS rn
-       |  FROM ac) WHERE rn <= $nProbe),
-       |cand AS (
-       | SELECT p.query_id, a.vec_id AS neighbor_id
-       | FROM probes p JOIN assigned a
-       |  ON a.cell = p.probe AND a.vec_id <> p.query_id),
-       |scored AS (
-       | SELECT c.query_id, c.neighbor_id,
-       |  ${cosSql("q.e", "x.e")} AS cos
-       | FROM cand c JOIN v q ON c.query_id = q.vec_id
-       |  JOIN v x ON c.neighbor_id = x.vec_id),
-       |edges AS MATERIALIZED (
-       | SELECT query_id AS src, neighbor_id AS dst, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |                               ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored) WHERE rnk <= $k)""".stripMargin
-
-  private def knnGraphOracle(k: Int, nProbe: Int): String =
-    s"""WITH ${knnEdgesCtes(k, nProbe)}
-       |SELECT e.src, e.dst, e.cos, e.rnk, (r.src IS NOT NULL) AS mutual
-       |FROM edges e LEFT JOIN edges r ON r.src = e.dst AND r.dst = e.src
-       |ORDER BY e.src, e.rnk""".stripMargin
-
-  /** The NN-Descent one-round expansion CTEs — candidate set per
-    * vertex (neighbors ∪ reverse ∪ two-hop), exact rescore, top-k
-    * re-rank. Assumes [[knnEdgesCtes]]' `v` and `edges`. */
-  private def refinedEdgesCtes(k: Int): String =
-    s"""cnd AS (
-       | SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM edges
-       |  UNION ALL SELECT dst, src FROM edges
-       |  UNION ALL SELECT a.src, b.dst FROM edges a
-       |   JOIN edges b ON a.dst = b.src
-       | ) WHERE src <> dst),
-       |rsc AS MATERIALIZED (
-       | SELECT c.src, c.dst,
-       |  ${cosSql("q.e", "x.e")} AS cos
-       | FROM cnd c JOIN v q ON c.src = q.vec_id
-       |  JOIN v x ON c.dst = x.vec_id),
-       |refined AS (
-       | SELECT src, dst, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src
-       |                               ORDER BY cos DESC, dst) AS rnk
-       |  FROM rsc) WHERE rnk <= $k)""".stripMargin
-
-  private def knnRefineOracle(k: Int, nProbe: Int): String =
-    s"""WITH ${knnEdgesCtes(k, nProbe)},
-       |${refinedEdgesCtes(k)}
-       |SELECT src, dst, cos, rnk FROM refined ORDER BY src, rnk""".stripMargin
-
-  /** One round-suffixed NN-Descent step: er_$r refines er_{r-1} (er_0
-    * = edges), chg_$r counts the round's NEW (src,dst) pairs — the
-    * unrolled replica of the Spark loop's per-round state. */
-  private def refineRoundCtes(k: Int, r: Int): String = {
-    val prev = if (r == 1) "edges" else s"er_${r - 1}"
-    s"""cnd_$r AS (
-       | SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM $prev
-       |  UNION ALL SELECT dst, src FROM $prev
-       |  UNION ALL SELECT a.src, b.dst FROM $prev a
-       |   JOIN $prev b ON a.dst = b.src
-       | ) WHERE src <> dst),
-       |rsc_$r AS MATERIALIZED (
-       | SELECT c.src, c.dst,
-       |  ${cosSql("q.e", "x.e")} AS cos
-       | FROM cnd_$r c JOIN v q ON c.src = q.vec_id
-       |  JOIN v x ON c.dst = x.vec_id),
-       |er_$r AS MATERIALIZED (
-       | SELECT src, dst, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src
-       |                               ORDER BY cos DESC, dst) AS rnk
-       |  FROM rsc_$r) WHERE rnk <= $k),
-       |chg_$r AS (
-       | SELECT CAST(count(*) AS BIGINT) AS c FROM er_$r e
-       |  LEFT JOIN $prev p ON p.src = e.src AND p.dst = e.dst
-       | WHERE p.src IS NULL)""".stripMargin
-  }
-
-  /** knn_refine_converged oracle: maxRounds refine rounds unrolled,
-    * the effective round picked by the SAME early-stop rule the Spark
-    * loop applies (first round whose new-edge count falls below epsBp
-    * bp of n·k; the round cap needs no chg test — the loop takes its
-    * last round unconditionally). */
-  private def knnRefineConvergedOracle(k: Int, nProbe: Int,
-      maxRounds: Int, epsBp: Long): String = {
-    val rounds = (1 to maxRounds).map(refineRoundCtes(k, _)).mkString(",\n")
-    val cases = (1 until maxRounds).map { r =>
-      s"WHEN 10000 * (SELECT c FROM chg_$r) < " +
-        s"$epsBp * (SELECT count(*) FROM v) * $k THEN $r"
-    }.mkString("\n  ")
-    val branches = (1 to maxRounds).map { r =>
-      s"SELECT src, dst, cos, rnk FROM er_$r WHERE (SELECT e FROM eff) = $r"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH ${knnEdgesCtes(k, nProbe)},
-       |$rounds,
-       |eff AS (SELECT CASE
-       |  $cases
-       |  ELSE $maxRounds END AS e)
-       |$branches
-       |ORDER BY src, rnk""".stripMargin
-  }
-
-  /** knn_refine_recall oracle: ivf and refined edge sets vs the
-    * EXHAUSTIVE exact kNN graph (all-pairs top-k — the truth the
-    * nProbe=C boundary spec pins on the Spark side). */
-  private def knnRefineRecallOracle(k: Int, nProbe: Int): String =
-    s"""WITH ${knnEdgesCtes(k, nProbe)},
-       |${refinedEdgesCtes(k)},
-       |truth AS MATERIALIZED (
-       | SELECT src, dst FROM (
-       |  SELECT q.vec_id AS src, x.vec_id AS dst,
-       |   ${cosSql("q.e", "x.e")} AS cos,
-       |   row_number() OVER (PARTITION BY q.vec_id
-       |    ORDER BY ${cosSql("q.e", "x.e")} DESC, x.vec_id) AS rnk
-       |  FROM v q JOIN v x ON q.vec_id <> x.vec_id) WHERE rnk <= $k),
-       |st AS (SELECT 'ivf' AS stage, src, dst FROM edges
-       | UNION ALL SELECT 'refined', src, dst FROM refined),
-       |nv AS (SELECT CAST(count(*) AS BIGINT) AS n_vec FROM v)
-       |SELECT st.stage,
-       | CAST(sum(CASE WHEN t.src IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT) AS hits,
-       | nv.n_vec,
-       | (10000 * CAST(sum(CASE WHEN t.src IS NOT NULL THEN 1 ELSE 0 END)
-       |  AS BIGINT)) // (nv.n_vec * $k) AS recall_bp
-       |FROM st LEFT JOIN truth t ON t.src = st.src AND t.dst = st.dst
-       | CROSS JOIN nv
-       |GROUP BY 1, nv.n_vec ORDER BY 1""".stripMargin
-
-  /** knn_graph_clusters oracle: the shared edge chain, reciprocal
-    * filter, then min-label connected components as a recursive CTE
-    * (the dedup_clusters pattern over the mutual graph). */
-  private def knnGraphClustersOracle(k: Int, nProbe: Int): String =
-    s"""WITH RECURSIVE ${knnEdgesCtes(k, nProbe)},
-       |mut AS MATERIALIZED (
-       | SELECT e.src, e.dst FROM edges e
-       |  JOIN edges r ON r.src = e.dst AND r.dst = e.src
-       | WHERE e.src < e.dst),
-       |und AS (SELECT src, dst FROM mut UNION ALL SELECT dst, src FROM mut),
-       |reach(n, l) AS (
-       | SELECT vec_id, vec_id FROM v
-       | UNION
-       | SELECT e.dst, r.l FROM reach r JOIN und e ON e.src = r.n),
-       |comp AS (SELECT n AS vec_id, min(l) AS rep_id FROM reach GROUP BY n),
-       |sz AS (SELECT rep_id, count(*) AS cluster_size FROM comp GROUP BY 1)
-       |SELECT c.vec_id, c.rep_id,
-       | CAST(sz.cluster_size AS BIGINT) AS cluster_size,
-       | c.vec_id = c.rep_id AS is_canonical
-       |FROM comp c JOIN sz USING (rep_id) ORDER BY vec_id""".stripMargin
-
   /** Full oracle for the banded decontam path: planes as SQL literals,
     * band/bucket assignment, DISTINCT collision pairs, exact verify —
     * the same pipeline the Spark plan runs, so the banding itself is
@@ -3300,12 +3122,6 @@ object Similarity {
         |  SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS maxabs
         |  FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)))
         |ORDER BY vec_id""".stripMargin,
-    "knn_graph" -> knnGraphOracle(k = 5, nProbe = 4),
-    "knn_graph_clusters" -> knnGraphClustersOracle(k = 5, nProbe = 4),
-    "knn_graph_refine" -> knnRefineOracle(k = 5, nProbe = 4),
-    "knn_refine_recall" -> knnRefineRecallOracle(k = 5, nProbe = 4),
-    "knn_refine_converged" -> knnRefineConvergedOracle(k = 5, nProbe = 4,
-      maxRounds = 3, epsBp = 100L),
     // the truncate-and-renorm transform at d=16: same fold order for
     // the prefix norm, each unit component rounded once to micro
     "embed_matryoshka_truncate" ->

@@ -64,14 +64,15 @@ object AnnSql {
     if (materialize) "MATERIALIZED " else ""
 
   /** One statement: the CTEs in order, then the final select. */
-  private def sql(ctes: Seq[String], select: String): String =
-    ctes.mkString("WITH ", ",\n", "\n") + select
+  private[oracle] def sql(ctes: Seq[String], select: String,
+                          recursive: Boolean = false): String =
+    ctes.mkString(if (recursive) "WITH RECURSIVE " else "WITH ", ",\n", "\n") + select
 
   // -------------------------------------------------------------- inputs
 
   /** Inputs: the corpus v(vec_id, e), each embedding widened to DOUBLE[]
     * once; every fp32 score folds over these doubles. */
-  private val vectors: String = "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
+  private[oracle] val vectors: String = "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
 
   /** Inputs: the prefix query set `name`(query_id, e), the first n rows
     * of `vs`. */
@@ -98,7 +99,7 @@ object AnnSql {
 
   /** Truth: truth(query_id, vec_id, cos, rnk), each query's exact fp32
     * top-k over the whole corpus — coarse flat, fp32 codes, top-k. */
-  private def truth(k: Int): Seq[String] = Seq(
+  private[oracle] def truth(k: Int): Seq[String] = Seq(
     flat("tcand"), cosine("tsc", "tcand"), ranked("truth", "tsc", k))
 
   // -------------------------------------------------------------- coarse
@@ -138,8 +139,8 @@ object AnnSql {
   }
 
   /** Coarse IVF centroids, default: cents$sfx(cid, ce), the first C
-    * vectors. */
-  private def defaultCents(numCentroids: Int, sfx: String = ""): String =
+    * vectors — C is SQL: a count literal or a scalar subquery. */
+  private[oracle] def defaultCents(numCentroids: String, sfx: String = ""): String =
     s"cents$sfx AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < $numCentroids)"
 
   /** Coarse IVF centroids, trained: trainIvfCentroidsExact replicated —
@@ -184,7 +185,7 @@ object AnnSql {
     * prnk) tags each candidate with the rank of the probe that found it,
     * so one candidate set at the largest budget serves every smaller
     * one through a prnk filter. */
-  private def ivf(nProbe: Int, sfx: String = ""): Seq[String] = Seq(
+  private[oracle] def ivf(nProbe: Int, sfx: String = ""): Seq[String] = Seq(
     s"""ac$sfx AS (
        | SELECT v.vec_id, c.cid,
        |  ${cosSql("v.e", "c.ce")} AS ccos
@@ -222,7 +223,7 @@ object AnnSql {
   /** Codes fp32 (col e of v) or int8 (col q of qv): `out` = the `keep`
     * columns of candidate rows `cand`(query_id, vec_id, ...) plus their
     * [[cosSql]] score `cos`. */
-  private def cosine(out: String, cand: String, vs: String = "v", col: String = "e",
+  private[oracle] def cosine(out: String, cand: String, vs: String = "v", col: String = "e",
              keep: String = "c.*", materialize: Boolean = false): String =
     s"""$out AS ${mat(materialize)}(
        | SELECT $keep, ${cosSql(s"a.$col", s"b.$col")} AS cos
@@ -443,7 +444,7 @@ object AnnSql {
     * query) by (cos desc, vec_id asc) into column `rnk`, kept while
     * `rnk` <= n. Scores are compared AFTER rounding, so both engines
     * rank alike. */
-  private def ranked(name: String, src: String, n: Int, keys: Seq[String] = Nil,
+  private[oracle] def ranked(name: String, src: String, n: Int, keys: Seq[String] = Nil,
              rnk: String = "rnk", materialize: Boolean = false): String =
     s"""$name AS ${mat(materialize)}(
        | SELECT * FROM (
@@ -567,19 +568,19 @@ object AnnSql {
       "band AS (SELECT * FROM sc WHERE cos >= 0.15 AND cos < 0.40)"), "band", 5),
     "ann_lsh_topk" -> topK(Seq(vectors, prefix(8)) ++ lsh(6, 1) :+
       cosine("sc", "cand"), "sc", 3),
-    "ann_ivf_topk" -> topK(Seq(vectors, prefix(8), defaultCents(16)) ++ ivf(4) :+
+    "ann_ivf_topk" -> topK(Seq(vectors, prefix(8), defaultCents("16")) ++ ivf(4) :+
       cosine("sc", "cand"), "sc", 3),
     "ann_ivf_topk_trained" -> topK(Seq(vectors, prefix(8), trainedCents(16, 2)) ++
       ivf(4) :+ cosine("sc", "cand"), "sc", 3),
     // serving from the stored IVF+int8 index: top-k straight on the
     // int8 cosine of the stored integers
-    "ann_ivf_from_index" -> topK(Seq(vectors, prefix(8), int8Codes, defaultCents(16)) ++
+    "ann_ivf_from_index" -> topK(Seq(vectors, prefix(8), int8Codes, defaultCents("16")) ++
       ivf(4) :+ cosine("sc", "cand", "qv", "q"), "sc", 3),
     "ann_int8_topk" -> topK(flatQ8 ++ Seq(int8Codes,
       cosine("sc", "cand", "qv", "q")), "sc", 5),
     "ann_rerank_topk" -> topK(flatQ8 ++ Seq(int8Codes,
       cosine("sc", "cand", "qv", "q")) ++ rerank("sc", 20), "rr", 5),
-    "ann_ivf_rerank_topk" -> topK(Seq(vectors, prefix(8), int8Codes, defaultCents(16)) ++
+    "ann_ivf_rerank_topk" -> topK(Seq(vectors, prefix(8), int8Codes, defaultCents("16")) ++
       ivf(4) ++ (cosine("sc", "cand", "qv", "q") +: rerank("sc", 12)), "rr", 3),
     "ann_pq_topk" -> topK(flatQ8 ++ (seeded("cb", raw, 0, 8, 8, 16) +:
       pq("", raw, "cb", 8, 8)), "sc", 5),
@@ -588,27 +589,27 @@ object AnnSql {
     // the ann_pq_topk chain served from int4-packed codes
     "ann_pq_int4_topk" -> topK(flatQ8 ++ (seeded("cb", raw, 0, 8, 8, 16) +:
       pq("", raw, "cb", 8, 8, int4Base = Some(0))), "sc", 5),
-    "ann_ivf_pq_topk" -> ivfPqServe(defaultCents(16), raw,
+    "ann_ivf_pq_topk" -> ivfPqServe(defaultCents("16"), raw,
       Seq(seeded("cb", raw, 0, 8, 8, 16))),
     "ann_ivf_pq_trained" -> ivfPqServe(trainedCents(16, 2), raw,
       trained("cb", raw, 8, 8, 16, 2)),
-    "ann_ivf_pq_residual" -> ivfPqServe(defaultCents(16), residual,
+    "ann_ivf_pq_residual" -> ivfPqServe(defaultCents("16"), residual,
       residuals(rawCm) :+ seeded("cb", residual, 16, 8, 8, 16)),
     "ann_ivf_pq_residual_trained" -> ivfPqServe(trainedCents(16, 2), residual,
       residuals(trainedCm) ++ trained("cb", residual, 8, 8, 16, 2)),
     // the stored-index read path must serve EXACTLY what the rebuild
     // plan serves — same replay, deliberately
-    "ann_ivf_pq_residual_index" -> ivfPqServe(defaultCents(16), residual,
+    "ann_ivf_pq_residual_index" -> ivfPqServe(defaultCents("16"), residual,
       residuals(rawCm) :+ seeded("cb", residual, 16, 8, 8, 16)),
-    "ann_ivf_pq_residual_int4" -> ivfPqServe(defaultCents(16), residual,
+    "ann_ivf_pq_residual_int4" -> ivfPqServe(defaultCents("16"), residual,
       residuals(rawCm) :+ seeded("cb", residual, 16, 8, 8, 16), int4Base = Some(16)),
     "ann_recall_eval" -> recall(Seq(vectors, prefix(8)) ++ truth(5) ++
-      (defaultCents(16) +: ivf(4)) ++ (cosine("sc", "cand") +:
+      (defaultCents("16") +: ivf(4)) ++ (cosine("sc", "cand") +:
       sweep("served", "n_probe", Seq(1, 2, 4), "sc", "prnk", 5)),
       "served", Seq("s.n_probe", "s.query_id"), 5, perQuery = true),
     // held-out queries: past the default sample and the trained init
     "ann_recall_trained" -> recall(Seq(vectors) ++ heldout(8, 16) ++ truth(5) ++
-      (defaultCents(16, "_d") +: ivf(4, "_d")) ++ (cosine("sc_d", "cand_d") +:
+      (defaultCents("16", "_d") +: ivf(4, "_d")) ++ (cosine("sc_d", "cand_d") +:
       sweep("served_d", "n_probe", Seq(1, 2, 4), "sc_d", "prnk", 5)) ++
       (trainedCents(16, 2, "_t") +: ivf(4, "_t")) ++ (cosine("sc_t", "cand_t") +:
       sweep("served_t", "n_probe", Seq(1, 2, 4), "sc_t", "prnk", 5)) :+
@@ -637,7 +638,7 @@ object AnnSql {
     // raw vs residual PQ in the same IVF candidates, top-k straight from
     // the ADC, every probe budget from one max-budget candidate set
     "pq_residual_recall" -> recall(Seq(vectors) ++ heldout(32, 32) ++ truth(5) ++
-      (defaultCents(16) +: ivf(4)) ++
+      (defaultCents("16") +: ivf(4)) ++
       (seeded("cb_raw", raw, 0, 8, 8, 16) +: pq("_raw", raw, "cb_raw", 8, 8)) ++
       sweep("top_raw", "n_probe", Seq(1, 2, 4), "sc_raw", "prnk", 5) ++
       residuals(rawCm) ++ (seeded("cb_res", residual, 16, 8, 8, 16) +:
@@ -647,7 +648,7 @@ object AnnSql {
       "served", Seq("s.encoding", "CAST(s.n_probe AS BIGINT) AS n_probe"), 5),
     // the residual chain shortlisted once at the max m, rescored once
     "rerank_budget_recall" -> recall(Seq(vectors) ++ heldout(32, 32) ++ truth(5) ++
-      (defaultCents(16) +: ivf(4)) ++ residuals(rawCm) ++
+      (defaultCents("16") +: ivf(4)) ++ residuals(rawCm) ++
       (seeded("cb", residual, 16, 8, 8, 16) +: pq("", residual, "cb", 8, 8)) ++
       rerank("sc", 40, materialize = true) ++
       sweep("served", "m", Seq(5, 10, 20, 40), "rr", "srnk", 5),

@@ -334,7 +334,7 @@ class QualityModelsSpec extends SparkSpec {
     // seen; (b,c,q) seen context + unseen t3; (q,b,c) unseen context,
     // b a seen middle; (c,q,b) q never a middle ⇒ continuation
     // unigram. Expected means hand-derived from the train stats
-    // (B=4, V=4, see trigramModelFrames).
+    // (B=4, V=4, see KnFrames).
     val d = Seq((1L, "a b c a b d"), (2L, "b c a"), (3L, "a b c q b c"))
       .toDF("doc_id", "text")
     val out = QualityModels.lmHeldoutTrigram(d)
